@@ -104,15 +104,7 @@ object Bench {
     import java.util.Locale
     def f3(v: Double): String = "%.3f".formatLocal(Locale.ROOT, v)
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
-    val sfName = new java.io.File(sfDir).getName
-    // "sf" as the bare number when the dir is named sfN.N (matches the
-    // driver's own numeric representation); the raw name otherwise
-    val sfJson = {
-      val n = sfName.stripPrefix("sf")
-      if (n.nonEmpty && n.forall(c => c.isDigit || c == '.') && n != ".")
-        n
-      else "\"" + sfName + "\""
-    }
+    val sfJson = Bench.sfJson(new java.io.File(sfDir).getName)
     val fullJson = {
       val qs = results.map { case (k, v) => "\"" + k + "\":" + f3(v) }
         .mkString("{", ",", "}")
@@ -148,7 +140,22 @@ object Bench {
     // logger or followed by sbt's "[success] Total time" line — the
     // build now forks with StdoutOutput and showSuccess := false so
     // neither happens.)
-    spark.stop()
-    println(line)
+    stopThenEmit(() => spark.stop(), println, line)
+  }
+
+  /** The `sf` value for a data dir name: the bare number when the dir is
+    * named sfN or sfN.N, the quoted raw name otherwise — so `sf01`, `sf1.` or `sf1.2.3` can never
+    * become an invalid JSON number token. */
+  private[graft] def sfJson(sfName: String): String = {
+    val n = sfName.stripPrefix("sf")
+    if (n.matches("(0|[1-9][0-9]*)(\\.[0-9]+)?")) n else "\"" + sfName + "\""
+  }
+
+  /** Stops the session, then emits the line: a throwing stop must not
+    * lose the result, and the line stays the last thing printed. */
+  private[graft] def stopThenEmit(stop: () => Unit, emit: String => Unit, line: String): Unit = {
+    try stop()
+    catch { case scala.util.control.NonFatal(e) => System.err.println(s"[bench] stop failed: $e") }
+    emit(line)
   }
 }

@@ -10,7 +10,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * `builder.withExtensions(new GraftExtensions)`), no imperative
   * registration calls needed. Injects the 48 shaper custom-type
   * functions (the `::TYPE` targets produced by
-  * graft.sqlfront.Dialect) and the codegen'd `cosine_sim`.
+  * graft.sqlfront.Dialect), their optimizer rule
+  * (graft.plans.ShaperTagRules) and the codegen'd `cosine_sim`.
   *
   * The BOXPLOT aggregate is Aggregator-based (needs a live session for
   * its encoders), so it stays on `graft.exprs.Boxplot.register` —
@@ -23,6 +24,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // the distributed percentile+join-back plan; runs post-hoc so the
     // rewritten plan still flows through the full optimizer.
     ext.injectPostHocResolutionRule(_ => graft.plans.BoxplotScaleRule)
+    // constant tag statements answered without a Spark job, tagged
+    // grouping keys grouped on the raw member value
+    ext.injectOptimizerRule(_ => graft.plans.ShaperTagRules)
     graft.types.ShaperTypes.all.foreach { td =>
       ext.injectFunction((
         FunctionIdentifier(td.name),

@@ -3,7 +3,7 @@ package graft.tasks
 import graft.render.Render
 import graft.sqlfront.{Dialect, Gate, Macros, SqlText}
 import graft.types.ShaperTypes
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.types.StructField
 
 import java.util.concurrent.{Executors, ScheduledExecutorService, ScheduledFuture, TimeUnit}
@@ -115,6 +115,24 @@ object Tasks {
       .map(_._2)
   }
 
+  private val createOrReplaceTableAs =
+    "(?is)^CREATE\\s+OR\\s+REPLACE\\s+TABLE\\s+(\\S+)\\s+AS\\s+(.+)$".r
+
+  /** `CREATE OR REPLACE TABLE t AS SELECT …`, which Spark's built-in
+    * catalog rejects as a REPLACE TABLE (UNSUPPORTED_FEATURE), run as the
+    * v1 overwrite-save: the table is dropped and re-created with the
+    * query's schema. A query reading its own target is refused before
+    * anything is dropped. Like every task statement it is not
+    * transactional (see above): a query that fails at run time leaves
+    * the target dropped. Returns the same empty result a plain
+    * `CREATE TABLE … AS` statement does. */
+  private def replaceTableAs(spark: SparkSession, name: String, query: String): DataFrame = {
+    val target = name.replace('"', '`')
+    val df = spark.sql(query)
+    df.write.mode(SaveMode.Overwrite).saveAsTable(target)
+    spark.emptyDataFrame
+  }
+
   /** Execute a task: split → gate → per-statement run, result capture,
     * early stop on single false boolean, SCHEDULE row excluded from
     * results, error stops the batch.
@@ -195,7 +213,11 @@ object Tasks {
             val expanded = Macros.expand(sqlString, macros)
             if (graft.catalog.CatalogFunctions.referenced(expanded))
               graft.catalog.CatalogFunctions.refresh(spark)
-            val df = spark.sql(Dialect.rewrite(expanded))
+            val df = expanded match {
+              case createOrReplaceTableAs(name, body) =>
+                replaceTableAs(spark, name, Dialect.rewrite(body))
+              case _ => spark.sql(Dialect.rewrite(expanded))
+            }
             val schema = df.schema.fields.toSeq
             val rows = df.limit(3001).collect().toSeq
             val duration = (System.nanoTime() - start) / 1000000

@@ -171,22 +171,30 @@ object ShaperTypes {
   val MemberKey = "shaperMember"
 
   /** Register all 48 types as SQL functions (the `::NAME` cast syntax is
-    * turned into these calls by graft.sqlfront.Dialect). Quietly:
-    * cloned sessions inherit the parent's entries, so re-registering
-    * would otherwise WARN 48 times per dashboard/task/download run. */
-  def register(spark: SparkSession): Unit = graft.exprs.RegistryQuiet.quietly {
-    all.foreach { td =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        td.name, exprs => ShaperTagged(td.name, exprs.head), "scala_udf")
+    * turned into these calls by graft.sqlfront.Dialect), and install
+    * [[graft.plans.ShaperTagRules]] once per session. Quietly: cloned
+    * sessions inherit the parent's entries, so re-registering would
+    * otherwise WARN 48 times per dashboard/task/download run. */
+  def register(spark: SparkSession): Unit = {
+    graft.exprs.RegistryQuiet.quietly {
+      all.foreach { td =>
+        spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+          td.name, exprs => ShaperTagged(td.name, exprs.head), "scala_udf")
+      }
     }
+    if (!spark.experimental.extraOptimizations.contains(graft.plans.ShaperTagRules))
+      spark.experimental.extraOptimizations =
+        spark.experimental.extraOptimizations :+ graft.plans.ShaperTagRules
   }
 }
 
 /** `expr::NAME` for a shaper custom type: wraps the (member-cast) value in
   * a single-field struct whose field metadata identifies the type + member.
-  * CodegenFallback is fine here: these expressions only ever run on
-  * dashboard-sized results (row cap 3000, ref get_dashboard.go:23), never
-  * in the 100 TB data path.
+  * CodegenFallback: it is interpreted wherever the plan evaluates it. A
+  * tag over a raw column in a plain projection runs per input row; a
+  * constant-only statement is folded during optimization and a tagged grouping
+  * key groups on [[member]] and is re-tagged per group
+  * (graft.plans.ShaperTagRules), so there it only sees result rows.
   */
 case class ShaperTagged(typeName: String, child: Expression)
     extends UnaryExpression with CodegenFallback {
@@ -202,7 +210,9 @@ case class ShaperTagged(typeName: String, child: Expression)
 
   private lazy val (memberName, targetType) = resolvedMember.get
 
-  private lazy val caster: Expression =
+  /** The value the struct holds: the child, cast to the union member's
+    * type when the member is wider (e.g. BIGINT → the double member). */
+  lazy val member: Expression =
     if (targetType == child.dataType) child else Cast(child, targetType)
 
   override def dataType: DataType = StructType(Seq(StructField(
@@ -214,7 +224,7 @@ case class ShaperTagged(typeName: String, child: Expression)
 
   override def nullable: Boolean = false
 
-  override def eval(input: InternalRow): Any = InternalRow(caster.eval(input))
+  override def eval(input: InternalRow): Any = InternalRow(member.eval(input))
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

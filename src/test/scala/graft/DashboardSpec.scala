@@ -393,6 +393,76 @@ class DashboardSpec extends AnyFunSuite {
     assert(pivot.sections.head.queries.head.rows.length == 5)
   }
 
+  /** Renders `content` twice — with the session's ShaperTagRules, and
+    * with them removed from its extraOptimizations — and returns both
+    * JSON documents. `events` is 2000 rows generated from formulas: three
+    * weeks of timestamps, 37 users, five event types. */
+  private def renderWithAndWithoutTagRules(content: String,
+      cfg: RunConfig = RunConfig()): (String, String) = {
+    def render(keepRules: Boolean): String = graft.render.Model.toJson(
+      Dashboard.run(spark, content, cfg.copy(prepare = s => {
+        if (!keepRules)
+          s.experimental.extraOptimizations =
+            s.experimental.extraOptimizations.filterNot(_ eq graft.plans.ShaperTagRules)
+        s.range(2000).selectExpr("id AS event_id",
+          "timestamp_seconds(1704067200 + id * 900) AS ts", "id % 37 AS user_id",
+          "element_at(array('click', 'error', 'purchase', 'signup', 'view'), " +
+            "CAST(id % 5 AS INT) + 1) AS event_type")
+          .createOrReplaceTempView("events")
+      })))
+    (render(keepRules = true), render(keepRules = false))
+  }
+
+  test("ShaperTagRules leave every render byte-identical: demo, widget and secure dashboards") {
+    val demo =
+      """SELECT 'Sessions per Week'::LABEL;
+        |SELECT date_trunc('week', ts)::XAXIS, event_type::CATEGORY,
+        |       count()::BARCHART_STACKED
+        |FROM events GROUP BY ALL ORDER BY ALL;""".stripMargin
+    val widgets =
+      """SELECT 'Widget Demo'::SECTION;
+        |SELECT 'click'::DROPDOWN AS evtype UNION ALL SELECT 'view'::DROPDOWN;
+        |SELECT count(*)::GAUGE AS n FROM events WHERE event_type = getvariable('evtype');
+        |SELECT 'Top users'::LABEL;
+        |SELECT user_id, count(*) AS n FROM events
+        |WHERE event_type = getvariable('evtype')
+        |GROUP BY user_id ORDER BY n DESC, user_id LIMIT 5;""".stripMargin
+    val secure =
+      """SELECT 'purchase'::DROPDOWN AS evtype UNION ALL SELECT 'click'::DROPDOWN;
+        |SELECT getvariable('evtype') AS effective, count(*) AS n
+        |FROM events WHERE event_type = getvariable('evtype') GROUP BY 1;""".stripMargin
+    Seq(
+      demo -> RunConfig(),
+      widgets -> RunConfig(queryParams = Map("evtype" -> Seq("view"))),
+      secure -> RunConfig(variables = Map("evtype" -> "error"))).foreach { case (content, cfg) =>
+      val (withRules, without) = renderWithAndWithoutTagRules(content, cfg)
+      assert(withRules == without)
+      assert(withRules.contains("\"rows\":[["), withRules)
+    }
+  }
+
+  test("ShaperTagRules leave renders identical for null keys and cast members") {
+    // NULL grouping keys: one NULL group either way, tagged as a struct
+    // holding NULL
+    val nulls =
+      """SELECT (CASE WHEN user_id % 3 = 0 THEN NULL ELSE date_trunc('month', ts) END)::XAXIS,
+        |       (CASE WHEN user_id % 2 = 0 THEN NULL ELSE event_type END)::CATEGORY,
+        |       count()::BARCHART_STACKED
+        |FROM events GROUP BY ALL ORDER BY ALL;""".stripMargin
+    val (n1, n2) = renderWithAndWithoutTagRules(nulls)
+    assert(n1 == n2)
+    assert(n1.contains("null"), n1)
+    // a BIGINT key's member is double: 2^53 and 2^53 + 1 are one double,
+    // so they must stay one group
+    val cast =
+      """SELECT (9007199254740992 + id % 2)::XAXIS, count()::BARCHART
+        |FROM range(10) GROUP BY ALL ORDER BY ALL;""".stripMargin
+    val (c1, c2) = renderWithAndWithoutTagRules(cast)
+    assert(c1 == c2)
+    val rows = Dashboard.run(spark, cast).sections.head.queries.head.rows
+    assert(rows.length == 1 && rows.head.last == 10, rows)
+  }
+
   test("JSON output is well-formed") {
     val r = Dashboard.run(spark, "SELECT 1 AS val; SELECT 'T'::SECTION;")
     val json = graft.render.Model.toJson(r)

@@ -28,6 +28,13 @@ class GraftExtensionsSpec extends AnyFunSuite {
       val field = tagged.schema.head
       assert(field.dataType.isInstanceOf[org.apache.spark.sql.types.StructType])
       assert(tagged.count() == 1)
+      // the injected ShaperTagRules answer a constant tag statement
+      // without a Spark job: its plan folds to one LocalRelation
+      val label = s.sql(graft.sqlfront.Dialect.rewrite("SELECT 'Title'::LABEL"))
+      assert(label.queryExecution.optimizedPlan
+        .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation],
+        label.queryExecution.optimizedPlan)
+      assert(label.head.getStruct(0).getString(0) == "Title")
       // the r7-injected natives: every codegen'd kernel resolves with
       // no imperative register() call
       assert(s.sql("SELECT sq_dist(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d")

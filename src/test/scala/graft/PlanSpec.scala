@@ -1585,4 +1585,122 @@ class PlanSpec extends AnyFunSuite {
       "quartile join-back must broadcast the tiny per-group frame")
     assert(!plan.contains("CartesianProduct"), "join-back degenerated to a cartesian")
   }
+
+  // ---- ShaperTagRules: type tags kept out of Spark execution ----------
+
+  /** A fresh session with the shaper types (and their rules) installed
+    * and the sf0.001 tables registered, like a render session. */
+  private lazy val tagged: SparkSession = {
+    val s = spark.newSession()
+    graft.types.ShaperTypes.register(s)
+    Tables.registerAll(s, dir)
+    s
+  }
+
+  private def taggedSql(sql: String): org.apache.spark.sql.DataFrame =
+    tagged.sql(graft.sqlfront.Dialect.rewrite(sql))
+
+  private def withoutTagRules[A](body: => A): A = {
+    val saved = tagged.experimental.extraOptimizations
+    tagged.experimental.extraOptimizations =
+      saved.filterNot(_ eq graft.plans.ShaperTagRules)
+    try body finally tagged.experimental.extraOptimizations = saved
+  }
+
+  /** Spark jobs `body` launches from this thread: counted by a listener
+    * on a unique job group, with the listener bus drained before reading. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = "plan-spec-jobs-" + java.util.UUID.randomUUID()
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(js.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          n.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, group)
+    try body
+    finally {
+      sc.clearJobGroup()
+      org.apache.spark.graftdev.ListenerDrain.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    n.get
+  }
+
+  test("constant tag statements optimize to one LocalRelation and run no Spark job (ShaperTagRules)") {
+    // LABEL / SECTION / DROPDOWN rows are constants: DuckDB answers them
+    // in-process, and so must we — Project over OneRowRelation is not
+    // folded by Spark's ConvertToLocalRelation, so each used to launch a job
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    val cases = Seq(
+      "SELECT 'Sessions per Week'::LABEL" -> Seq("[Sessions per Week]"),
+      "SELECT 'Widget Demo'::SECTION" -> Seq("[Widget Demo]"),
+      "SELECT 'click'::DROPDOWN AS evtype UNION ALL SELECT 'view'::DROPDOWN" ->
+        Seq("[click]", "[view]"),
+      "SELECT 'x'" -> Seq("x"))
+    cases.foreach { case (sql, expected) =>
+      val df = taggedSql(sql)
+      Seq(df, df.limit(3001)).foreach { d =>
+        val plan = d.queryExecution.optimizedPlan
+        assert(plan.isInstanceOf[LocalRelation] && plan.children.isEmpty,
+          s"$sql did not fold to a single LocalRelation:\n$plan")
+        var rows = Seq.empty[String]
+        assert(jobsOf { rows = d.collect().map(_.get(0).toString).toSeq } == 0,
+          s"$sql launched a Spark job")
+        assert(rows == expected)
+      }
+      // folding changes nothing observable: same schema (field metadata
+      // included) and rows as the unfolded plan
+      withoutTagRules {
+        val plain = taggedSql(sql)
+        assert(plain.queryExecution.optimizedPlan.collectFirst {
+          case l: LocalRelation => l }.isEmpty, s"$sql folds without the rules")
+        assert(plain.schema == df.schema)
+        assert(plain.collect().toSeq == df.collect().toSeq)
+      }
+    }
+  }
+
+  test("non-constant one-row statements stay unfolded: rand(), scalar subquery, ANSI 1/0") {
+    import org.apache.spark.sql.catalyst.plans.logical.OneRowRelation
+    def oneRow(sql: String): Boolean = taggedSql(sql).queryExecution.optimizedPlan
+      .collectFirst { case o: OneRowRelation => o }.isDefined
+    assert(oneRow("SELECT rand() AS r"), "a non-deterministic row must not be frozen")
+    assert(oneRow("SELECT (SELECT max(event_type) FROM events)::LABEL AS m"),
+      "a subquery must not be evaluated by the rule")
+    // the job counter sees the unfolded statement's job
+    assert(jobsOf(taggedSql("SELECT rand() AS r").collect()) >= 1)
+    // an evaluation error surfaces as it did without the rules
+    tagged.conf.set("spark.sql.ansi.enabled", "true")
+    def err(): String = intercept[Exception](taggedSql("SELECT 1/0 AS z").collect()).getMessage
+    val withRules = err()
+    assert(withRules.contains("DIVIDE_BY_ZERO"), withRules)
+    assert(withoutTagRules(err()) == withRules)
+  }
+
+  test("tagged GROUP BY keys group on the raw value: no ShaperTagged below the Aggregate") {
+    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+    import org.apache.spark.sql.types.{DoubleType, StructType}
+    def agg(sql: String): Aggregate = taggedSql(sql).queryExecution.optimizedPlan
+      .collectFirst { case a: Aggregate => a }.getOrElse(fail(s"no Aggregate in $sql"))
+    def tagsBelow(a: Aggregate): Boolean = a.child.exists(_.expressions.exists(
+      _.exists(_.isInstanceOf[graft.types.ShaperTagged])))
+    def tagsInOutput(a: Aggregate): Int = a.aggregateExpressions
+      .count(_.exists(_.isInstanceOf[graft.types.ShaperTagged]))
+    val demo = """SELECT date_trunc('week', ts)::XAXIS, event_type::CATEGORY,
+                 |       count()::BARCHART_STACKED
+                 |FROM events GROUP BY ALL ORDER BY ALL""".stripMargin
+    val a = agg(demo)
+    assert(!tagsBelow(a), s"struct keys are still computed per input row:\n$a")
+    assert(a.groupingExpressions.forall(!_.dataType.isInstanceOf[StructType]))
+    assert(tagsInOutput(a) == 3, s"output must stay tagged:\n$a")
+    // a BIGINT key's member is the double one: the key is the cast
+    val cast = agg("SELECT (9007199254740992 + id % 2)::XAXIS, count()::BARCHART " +
+      "FROM range(10) GROUP BY ALL")
+    assert(!tagsBelow(cast) && cast.groupingExpressions.map(_.dataType) == Seq(DoubleType))
+    // the plan before the rule grouped on the struct
+    withoutTagRules(assert(tagsBelow(agg(demo))))
+  }
 }

@@ -79,6 +79,42 @@ class TasksSpec extends AnyFunSuite {
     assert(select.resultRows == Seq(Seq(3L)))
   }
 
+  test("CREATE OR REPLACE TABLE … AS SELECT creates a table that does not exist yet") {
+    val t = s"task_${runId}_cor1"
+    val r = Tasks.executeTask(spark,
+      s"""CREATE OR REPLACE TABLE $t AS SELECT 1 AS a, 'x' AS b;
+        |SELECT a, b FROM $t;""".stripMargin, now)
+    assert(r.success, r.queries.flatMap(_.error))
+    assert(r.queries.head.resultColumns.isEmpty && r.queries.head.resultRows.isEmpty)
+    assert(r.queries.last.resultColumns == Seq("a", "b"))
+    assert(r.queries.last.resultRows == Seq(Seq(1, "x")))
+  }
+
+  test("CREATE OR REPLACE TABLE … AS SELECT replaces rows and schema") {
+    val t = s"task_${runId}_cor2"
+    val r = Tasks.executeTask(spark,
+      s"""CREATE TABLE $t AS SELECT 1 AS a;
+        |CREATE OR REPLACE TABLE "$t" AS SELECT 'y' AS c, CAST(n AS BIGINT) AS n
+        |FROM (VALUES (2), (3)) v(n);
+        |SELECT c, n FROM $t ORDER BY n;""".stripMargin, now)
+    assert(r.success, r.queries.flatMap(_.error))
+    assert(spark.table(t).schema.fieldNames.toSeq == Seq("c", "n"))
+    assert(r.queries.last.resultRows == Seq(Seq("y", 2L), Seq("y", 3L)))
+  }
+
+  test("CREATE OR REPLACE TABLE reading its own target fails clearly and keeps the data") {
+    val t = s"task_${runId}_cor3"
+    val r = Tasks.executeTask(spark,
+      s"""CREATE TABLE $t AS SELECT 1 AS a;
+        |CREATE OR REPLACE TABLE $t AS SELECT a + 1 AS a FROM $t;
+        |SELECT 0 AS never;""".stripMargin, now)
+    assert(!r.success)
+    assert(r.queries.length == 2) // the error stops the batch
+    val err = r.queries(1).error.getOrElse(fail("no error recorded"))
+    assert(err.contains("being read from"), err)
+    assert(spark.table(t).collect().map(_.getInt(0)).toSeq == Seq(1))
+  }
+
   test("early termination on single false boolean (run_task.go:195-199)") {
     val r = Tasks.executeTask(spark,
       s"""CREATE TABLE IF NOT EXISTS task_${runId}_t2 (x INT) USING PARQUET;
