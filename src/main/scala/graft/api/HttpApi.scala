@@ -456,7 +456,7 @@ final class HttpApi(
   private def handleSchema(ex: HttpExchange): Unit = {
     if (ex.getRequestMethod != "GET") return respond(ex, 405, jsonError("method not allowed"))
     if (!requireJwtOrApiKey(ex, Tokens.Permission.ReadSchema)) return
-    val ss = spark.newSession()
+    val ss = graft.Sessions.request(spark)
     prepare(ss)
     respond(ex, 200, graft.catalog.Catalog.schemaJson(ss, config.schemaIgnore))
   }
@@ -1363,6 +1363,12 @@ final class HttpApi(
       case ((route, method, status), count) =>
         sb ++= s"""graft_http_requests_total{route="$route",method="$method",status="$status"} ${count.sum}""" + "\n"
     }
+    // JVM-wide Janino compilations: steady-state requests reuse generated
+    // code (graft.Sessions), so a rising count under repeated traffic
+    // means per-request recompilation is back
+    sb ++= "# HELP graft_codegen_compiles_total Generated-code classes compiled by this JVM.\n"
+    sb ++= "# TYPE graft_codegen_compiles_total counter\n"
+    sb ++= s"graft_codegen_compiles_total ${graft.Sessions.codegenCompiles}\n"
     respond(ex, 200, sb.result(), contentType = "text/plain; version=0.0.4; charset=utf-8")
   }
 

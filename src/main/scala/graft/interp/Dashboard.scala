@@ -19,9 +19,12 @@ import scala.collection.mutable
   * core (ref: server/core/get_dashboard.go:38-400).
   *
   * Spark specifics:
-  *  - Each render runs in `spark.newSession()`: its own temp-view and
-  *    function namespace, the Spark analog of shaper's
-  *    fresh-connection-per-render policy (ref main.go:961-962).
+  *  - Each render runs in its own session (`graft.Sessions.request`):
+  *    its own temp-view and function namespace, SQL conf and variable
+  *    store, the Spark analog of shaper's fresh-connection-per-render
+  *    policy (ref main.go:961-962). Renders share the executor class
+  *    loader, so generated code compiled by one render is reused by the
+  *    next.
   *  - Relational execution is entirely `spark.sql` — distributed,
   *    Catalyst-optimized; the interpreter only ever touches ≤3001
   *    collected rows per statement (row cap, ref get_dashboard.go:23).
@@ -93,9 +96,8 @@ object Dashboard {
       prepare: SparkSession => Unit = _ => ())
 
   def run(spark0: SparkSession, content: String, cfg: RunConfig = RunConfig()): GetResult = {
-    // fresh namespace per render (temp views, registered functions) — the
-    // Spark analog of shaper's fresh-connection-per-render isolation
-    val spark = spark0.newSession()
+    // fresh namespace per render (temp views, registered functions)
+    val spark = graft.Sessions.request(spark0)
     ShaperTypes.register(spark)
     graft.exprs.Boxplot.register(spark)
     graft.exprs.Len.register(spark)

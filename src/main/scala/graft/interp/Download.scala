@@ -27,7 +27,7 @@ object Download {
       /** Binary sink for the xlsx writer (POI writes a zip container, so
         * a character Writer can't carry it). */
       binOut: java.io.OutputStream = null): Either[String, Unit] = {
-    val spark = spark0.newSession()
+    val spark = graft.Sessions.request(spark0)
     ShaperTypes.register(spark)
     graft.exprs.Boxplot.register(spark)
     graft.exprs.Len.register(spark)
@@ -223,7 +223,7 @@ object SqlApi {
   def runSingleToCSV(spark0: SparkSession, sql: String, out: Writer,
       variables: Map[String, Any] = Map.empty,
       prepare: SparkSession => Unit = _ => ()): Either[String, Unit] = {
-    val spark = spark0.newSession()
+    val spark = graft.Sessions.request(spark0)
     ShaperTypes.register(spark)
     graft.exprs.Len.register(spark)
     prepare(spark)

@@ -85,7 +85,7 @@ object MediaCatalogOps {
       // sink04's single-build audit (same oracle SQL verbatim) — the
       // streaming-assembled shard set IS the batch-built one.
       // StreamsSpec replays a batch and pins the audit unchanged.
-      val s = s0.newSession()
+      val s = graft.Sessions.request(s0)
       s.conf.set("spark.sql.shuffle.partitions", "2")
       import s.implicits._
       implicit val ctx = s.sqlContext
@@ -190,7 +190,7 @@ object MediaCatalogOps {
       // 100 TB this is the thumbnail gate on the media ingest path:
       // the frame index is the artifact, each batch joins only its own
       // hashes, payload bytes never cross an exchange.
-      val s = s0.newSession()
+      val s = graft.Sessions.request(s0)
       s.conf.set("spark.sql.shuffle.partitions", "2")
       import s.implicits._
       implicit val ctx = s.sqlContext
@@ -269,7 +269,7 @@ object MediaCatalogOps {
       // Runs in a child session with few shuffle partitions: stateful
       // aggregation spins up one state store per partition, and for a
       // 5k-event replay that fixed cost dominates at 32 partitions.
-      val s = s0.newSession()
+      val s = graft.Sessions.request(s0)
       s.conf.set("spark.sql.shuffle.partitions", "4")
       import s.implicits._
       implicit val ctx = s.sqlContext
@@ -305,7 +305,7 @@ object MediaCatalogOps {
       // the drop deterministic). The sink must hold exactly the 5000
       // originals — the declarative analog of JetStream's Nats-Msg-Id
       // duplicate window, with state bounded by the watermark at scale.
-      val s = s0.newSession()
+      val s = graft.Sessions.request(s0)
       // 2 partitions: dedup keeps one state store per partition and the
       // 5k-row replay is fixed-cost-dominated (measured: 4 → 2 saves
       // ~0.8 s/batch-pair at sf0.1; correctness is partition-count
@@ -349,7 +349,7 @@ object MediaCatalogOps {
       // what the oracle replays. Complete-mode per-lang rollup like
       // st01; at scale the broadcast set is d13's Bloom bit table and
       // the filter stays map-side with zero state.
-      val s = s0.newSession()
+      val s = graft.Sessions.request(s0)
       s.conf.set("spark.sql.shuffle.partitions", "2")
       import s.implicits._
       implicit val ctx = s.sqlContext
@@ -384,7 +384,7 @@ object MediaCatalogOps {
       // At scale this IS the nightly-crawl ingest: gate cost rides the
       // stream's map stage, files land partitioned by the sink, and
       // the checkpoint makes replays idempotent.
-      val s = s0.newSession()
+      val s = graft.Sessions.request(s0)
       s.conf.set("spark.sql.shuffle.partitions", "2")
       import s.implicits._
       implicit val ctx = s.sqlContext
@@ -427,7 +427,7 @@ object MediaCatalogOps {
       // ingest gate: the corpus inverted index is the stored artifact,
       // the daily slice shuffles only its own grams, and the skew
       // remedy (d15's prefix filter) drops in unchanged.
-      val s = s0.newSession()
+      val s = graft.Sessions.request(s0)
       s.conf.set("spark.sql.shuffle.partitions", "2")
       import s.implicits._
       implicit val ctx = s.sqlContext
@@ -490,7 +490,7 @@ object MediaCatalogOps {
       // no false positives. Two micro-batches prove per-batch
       // independence; verdict rows append to a checkpointed sink and
       // the read-back must equal batch d23 exactly (same oracle SQL).
-      val s = s0.newSession()
+      val s = graft.Sessions.request(s0)
       s.conf.set("spark.sql.shuffle.partitions", "2")
       import s.implicits._
       implicit val ctx = s.sqlContext
@@ -553,7 +553,7 @@ object MediaCatalogOps {
       // batch 1 RE-revises the % 18 == 4 half, so a doc carries up
       // to three generations of postings and only the newest serves.
       // Oracle replays both probes from the latest-revision corpus.
-      val s = s0.newSession()
+      val s = graft.Sessions.request(s0)
       s.conf.set("spark.sql.shuffle.partitions", "2")
       import s.implicits._
       implicit val ctx = s.sqlContext
@@ -620,7 +620,7 @@ object MediaCatalogOps {
       // prior attempt instead of double-appending postings.
       // StreamsSpec replays a batch and pins the drained index
       // row-identical; the serve plan still bucket-prunes.
-      val s = s0.newSession()
+      val s = graft.Sessions.request(s0)
       s.conf.set("spark.sql.shuffle.partitions", "2")
       import s.implicits._
       implicit val ctx = s.sqlContext
@@ -672,7 +672,7 @@ object MediaCatalogOps {
       // 100 TB this is the live mixture monitor on the ingest path —
       // per-batch work is one partial-agg shuffle of the batch, the
       // reference shares are a stored artifact.
-      val s = s0.newSession()
+      val s = graft.Sessions.request(s0)
       s.conf.set("spark.sql.shuffle.partitions", "2")
       import s.implicits._
       implicit val ctx = s.sqlContext
@@ -713,7 +713,7 @@ object MediaCatalogOps {
       // interval join — inner stream-stream joins emit exactly the
       // batch result when nothing arrives late. 55 attributed pairs at
       // sf0.01; the late-replay drill lives in StreamsSpec.
-      val s = s0.newSession()
+      val s = graft.Sessions.request(s0)
       s.conf.set("spark.sql.shuffle.partitions", "2")
       import s.implicits._
       implicit val ctx = s.sqlContext
@@ -751,7 +751,7 @@ object MediaCatalogOps {
       // result. The oracle is the equivalent BATCH left-outer interval
       // join. The exactly-once / not-before-horizon drill lives in
       // StreamsSpec.
-      val s = s0.newSession()
+      val s = graft.Sessions.request(s0)
       s.conf.set("spark.sql.shuffle.partitions", "2")
       import s.implicits._
       implicit val ctx = s.sqlContext
@@ -800,7 +800,7 @@ object MediaCatalogOps {
       // microseconds, so second-floored arithmetic would disagree).
       // At scale: state is one small object per active user, bounded
       // by the watermark; shuffle is the user_id key only.
-      val s = s0.newSession()
+      val s = graft.Sessions.request(s0)
       s.conf.set("spark.sql.shuffle.partitions", "2")
       import s.implicits._
       implicit val ctx = s.sqlContext

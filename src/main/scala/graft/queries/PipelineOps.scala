@@ -827,9 +827,9 @@ object PipelineOps {
     // removed N-row exchange dominates any per-row interpretive cost.
     // The trajectory — same elections (collected doubles re-enter as
     // exact literals, no string roundtrip), same quantized centroids —
-    // is bit-identical, oracle-pinned. At a k·dims too big for a plan
-    // constant, the same dataflow takes the centroid array as a
-    // broadcast variable instead; the contract ks are literal-sized.
+    // is bit-identical, oracle-pinned. The centroid array is a plan
+    // constant, so k·dims is bounded (requireCentroidBound): past it the
+    // kernel refuses rather than build a plan of that many literals.
     def centConst(cs: Seq[(Int, Seq[Double])]): Column =
       if (cs.isEmpty) // empty corpus: typed empty array, no elections
         array().cast("array<struct<cluster:int,ce:array<double>>>")
@@ -849,6 +849,7 @@ object PipelineOps {
     }
     var cent = collectCent(seedByRank(emb, k, "cluster")
       .select(col("cluster"), col("e").as("ce")))
+    requireCentroidBound(k, cent.headOption.fold(0)(_._2.size))
     var assigned = assign(cent)
     (2 to iters).foreach { _ =>
       cent = collectCent(meanVectors(assigned, "cluster", quantize = Some(9)))
@@ -856,6 +857,20 @@ object PipelineOps {
     }
     assigned
   }
+
+  /** kmeansAssignOf's plan-constant bound: each Lloyd iteration inlines
+    * the k·dims centroid doubles as one literal array, which analysis,
+    * optimization and every task's deserialized plan carry. 65,536
+    * doubles (512 KiB) leaves the contract entries (k = 8, 64 dims: 512)
+    * and the K-scaled production config (K = 80 at sf1: 5,120) a wide
+    * margin; a larger model needs a broadcast centroid table, which this
+    * kernel does not have, so it fails loudly instead. */
+  private[graft] val KmeansMaxCentroidValues = 65536L
+
+  private[graft] def requireCentroidBound(k: Int, dims: Int): Unit =
+    require(k.toLong * dims <= KmeansMaxCentroidValues,
+      s"kmeans inlines k*dims centroid doubles as a plan constant; " +
+        s"k=$k, dims=$dims is ${k.toLong * dims} > $KmeansMaxCentroidValues")
 
   /** d17's kernel — SemDeDup (Abbas et al. 2023, arXiv:2303.09540):
     * cluster embeddings with k-means, then look for near-duplicates
@@ -3700,6 +3715,14 @@ object PipelineOps {
     // re-evaluated the whole phase-2 join tree for numbers the bound
     // frame already determines. Values identical (oracle-pinned);
     // coalesce keeps the empty-bounds edge at 0 like count() was.
+    // CONTRACT the certificate relies on, not checked here: the doclen
+    // sidecar covers every doc_id in the postings. bm25ScoresWithLit
+    // inner-joins doclen, so a posting doc without a doclen row is
+    // silently unscored while this certificate still counts it. Both
+    // artifacts are built from the same `documents` (doc_id, text)
+    // frame (fullIndexRootOf / docLenDirOf), which makes it hold;
+    // asserting it would cost a postings-vs-doclen anti-join job per
+    // serve.
     val cert = bounds.agg(
       (lit(dfs(terms.indexOf(t0)).toLong) + coalesce(
         sum(when(col("ubsum") >= theta, 1L).otherwise(0L)),

@@ -71,7 +71,7 @@ object Tasks {
   def getNextTaskRun(spark0: SparkSession, content: String,
       nowMillis: () => Long = () => System.currentTimeMillis(),
       prepare: SparkSession => Unit = _ => ()): (Option[Long], String) = {
-    val spark = spark0.newSession()
+    val spark = graft.Sessions.request(spark0)
     ShaperTypes.register(spark)
     prepare(spark)
     val clean = SqlText.stripComments(content)
@@ -140,7 +140,7 @@ object Tasks {
   def executeTask(spark0: SparkSession, content: String,
       nowMillis: () => Long = () => System.currentTimeMillis(),
       prepare: SparkSession => Unit = _ => ()): TaskResult = {
-    val spark = spark0.newSession()
+    val spark = graft.Sessions.request(spark0)
     ShaperTypes.register(spark)
     graft.exprs.Boxplot.register(spark)
     graft.exprs.Len.register(spark)

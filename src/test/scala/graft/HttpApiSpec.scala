@@ -802,6 +802,24 @@ class HttpApiSpec extends AnyFunSuite {
     assert(r.body().contains("""graft_http_requests_total{route="/health",method="GET",status="200"}"""))
   }
 
+  test("GET /metrics exports codegen compiles; a repeated render adds none") {
+    val (_, metricsKey) = fixtureStore.tokens.createApiKey("codegen-metrics-key",
+      Seq(Tokens.Permission.ReadMetrics), Tokens.Actor(Tokens.ActorType.User, "u1"))
+    def compiles(): Long = {
+      val body = get("/metrics", Some(metricsKey)).body()
+      assert(body.contains("# TYPE graft_codegen_compiles_total counter"), body)
+      body.linesIterator.collectFirst {
+        case l if l.startsWith("graft_codegen_compiles_total ") => l.split(' ')(1).toLong
+      }.getOrElse(fail(s"no graft_codegen_compiles_total sample:\n$body"))
+    }
+    assert(get("/api/dashboards/demo", Some(jwt())).statusCode() == 200)
+    val afterFirst = compiles()
+    assert(get("/api/dashboards/demo", Some(jwt())).statusCode() == 200)
+    val afterSecond = compiles()
+    assert(afterSecond == afterFirst,
+      s"the second render compiled ${afterSecond - afterFirst} classes")
+  }
+
   test("temporary dashboards: TTL'd preview store, never journaled (create_dashboard.go:31-52)") {
     val (api, _, apiKey) = fixture
     val store = fixtureStore

@@ -1,0 +1,124 @@
+package graft
+
+import graft.interp.Dashboard.RunConfig
+import graft.interp.{Dashboard, Download}
+import graft.tasks.Tasks
+import org.apache.spark.sql.SparkSession
+import org.scalatest.funsuite.AnyFunSuite
+
+import java.io.StringWriter
+
+/** Per-request sessions (`Sessions.request`): every render, task and
+  * download gets its own namespace, yet repeating a request compiles no
+  * generated code — the executor class loader (and with it Spark's
+  * codegen cache) is shared. Compile counts are Janino compilations in
+  * this JVM, read from Spark's `CodegenMetrics`. */
+class SessionsSpec extends AnyFunSuite {
+
+  private lazy val spark: SparkSession = SparkSession.builder()
+    .master("local[4]")
+    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
+
+  /** The benchmark's events shape, as a per-request temp view. */
+  private def events(ss: SparkSession): Unit =
+    ss.range(2000).selectExpr("id AS event_id",
+      "timestamp_seconds(1704067200 + id * 900) AS ts", "id % 37 AS user_id",
+      "element_at(array('click', 'error', 'purchase', 'signup', 'view'), " +
+        "CAST(id % 5 AS INT) + 1) AS event_type")
+      .createOrReplaceTempView("events")
+
+  private val demo =
+    """SELECT 'Sessions per Week'::LABEL;
+      |SELECT date_trunc('week', ts)::XAXIS, event_type::CATEGORY,
+      |       count()::BARCHART_STACKED
+      |FROM events GROUP BY ALL ORDER BY ALL;""".stripMargin
+
+  private val widgets =
+    """SELECT 'Widget Demo'::SECTION;
+      |SELECT 'click'::DROPDOWN AS evtype UNION ALL SELECT 'view'::DROPDOWN;
+      |SELECT count(*)::GAUGE AS n FROM events WHERE event_type = getvariable('evtype');
+      |SELECT 'Top users'::LABEL;
+      |SELECT user_id, count(*) AS n FROM events
+      |WHERE event_type = getvariable('evtype')
+      |GROUP BY user_id ORDER BY n DESC, user_id LIMIT 5;""".stripMargin
+
+  /** Janino compilations during runs 2 to 4 of the same request; run 1
+    * may compile, a steady state must not. */
+  private def steadyStateCompiles(request: () => Unit): Long = {
+    request()
+    val before = Sessions.codegenCompiles
+    (2 to 4).foreach(_ => request())
+    Sessions.codegenCompiles - before
+  }
+
+  test("a request session has artifact isolation off; the parent keeps its setting") {
+    val key = "spark.sql.artifact.isolation.enabled"
+    val parent = spark.conf.get(key)
+    val s = Sessions.request(spark)
+    assert(s ne spark)
+    assert(s.conf.get(key) == "false")
+    assert(spark.conf.get(key) == parent)
+  }
+
+  test("steady-state dashboard renders compile no generated code: demo and widgets") {
+    Seq(
+      demo -> RunConfig(prepare = events),
+      widgets -> RunConfig(queryParams = Map("evtype" -> Seq("view")), prepare = events))
+      .foreach { case (content, cfg) =>
+        val n = steadyStateCompiles(() => {
+          val r = Dashboard.run(spark, content, cfg)
+          assert(r.sections.flatMap(_.queries).exists(_.rows.nonEmpty))
+        })
+        assert(n == 0, s"renders 2-4 compiled $n classes:\n$content")
+      }
+  }
+
+  test("a steady-state aggregate task compiles no generated code") {
+    val task = "SELECT event_type, count(*) AS n, max(ts) AS last FROM events " +
+      "GROUP BY event_type ORDER BY event_type;"
+    val n = steadyStateCompiles(() => {
+      val r = Tasks.executeTask(spark, task, prepare = events)
+      assert(r.success, r)
+    })
+    assert(n == 0, s"task runs 2-4 compiled $n classes")
+  }
+
+  test("a steady-state download compiles no generated code") {
+    val content =
+      """SELECT 'click'::DROPDOWN AS evtype UNION ALL SELECT 'view'::DROPDOWN;
+        |SELECT 'users.csv'::DOWNLOAD_CSV AS dl;
+        |SELECT user_id, count(*) AS n FROM events
+        |WHERE event_type = getvariable('evtype')
+        |GROUP BY user_id ORDER BY user_id;""".stripMargin
+    val n = steadyStateCompiles(() => {
+      val w = new StringWriter
+      val r = Download.run(spark, content, "csv", w, prepare = events)
+      assert(r.isRight, r)
+      assert(w.toString.linesIterator.next() == "user_id,n")
+    })
+    assert(n == 0, s"downloads 2-4 compiled $n classes")
+  }
+
+  test("a temp view created in one render is not visible to the next render") {
+    val first = Dashboard.run(spark,
+      "CREATE TEMP VIEW leak AS SELECT 41 + 1 AS x;\nSELECT x FROM leak;")
+    assert(first.sections.head.queries.head.rows == Seq(Seq(42)))
+    val e = intercept[Exception](Dashboard.run(spark, "SELECT x FROM leak;"))
+    assert(e.getMessage.contains("leak"), e.getMessage)
+    assert(!spark.catalog.tableExists("leak"))
+  }
+
+  test("a JWT variable from one render is not seen by a render without it") {
+    val content = "SELECT getvariable('tenant') AS t;"
+    val withClaim = Dashboard.run(spark, content,
+      RunConfig(variables = Map("tenant" -> "acme")))
+    assert(withClaim.sections.head.queries.head.rows == Seq(Seq("acme")))
+    assert(withClaim.unsetVariables.isEmpty)
+    val without = Dashboard.run(spark, content)
+    assert(without.unsetVariables == Seq("tenant"))
+    assert(!without.sections.flatMap(_.queries).flatMap(_.rows).flatten.contains("acme"))
+  }
+}
