@@ -1369,6 +1369,18 @@ final class HttpApi(
     sb ++= "# HELP graft_codegen_compiles_total Generated-code classes compiled by this JVM.\n"
     sb ++= "# TYPE graft_codegen_compiles_total counter\n"
     sb ++= s"graft_codegen_compiles_total ${graft.Sessions.codegenCompiles}\n"
+    // statement results reused by renders and download replays while
+    // their plan and input files are unchanged (interp.ResultCache)
+    val cache = graft.interp.ResultCache.shared
+    sb ++= "# HELP graft_result_cache_hits_total Dashboard statements answered from the result cache.\n"
+    sb ++= "# TYPE graft_result_cache_hits_total counter\n"
+    sb ++= s"graft_result_cache_hits_total ${cache.hits.get}\n"
+    sb ++= "# HELP graft_result_cache_misses_total Cacheable dashboard statements run because no result matched.\n"
+    sb ++= "# TYPE graft_result_cache_misses_total counter\n"
+    sb ++= s"graft_result_cache_misses_total ${cache.misses.get}\n"
+    sb ++= "# HELP graft_result_cache_bytes Estimated bytes held by the result cache.\n"
+    sb ++= "# TYPE graft_result_cache_bytes gauge\n"
+    sb ++= s"graft_result_cache_bytes ${cache.bytes}\n"
     respond(ex, 200, sb.result(), contentType = "text/plain; version=0.0.4; charset=utf-8")
   }
 

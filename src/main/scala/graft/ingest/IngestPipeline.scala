@@ -21,14 +21,6 @@ import scala.collection.mutable
   */
 object IngestPipeline {
 
-  private def sqlTypeToSpark(t: String): DataType = t match {
-    case TypeBoolean => BooleanType
-    case TypeDouble => DoubleType
-    case TypeTimestamp => TimestampType
-    case TypeDate => DateType
-    case _ => StringType // VARCHAR + JSON (stored as JSON text)
-  }
-
   private def quoteIdent(name: String): String =
     "`" + name.replace("`", "``") + "`"
 

@@ -28,6 +28,16 @@ import scala.collection.mutable
   *  - Relational execution is entirely `spark.sql` — distributed,
   *    Catalyst-optimized; the interpreter only ever touches ≤3001
   *    collected rows per statement (row cap, ref get_dashboard.go:23).
+  *  - A query statement's capped result is reused from [[ResultCache]]
+  *    while its optimized plan, output schema, SQL conf and every input
+  *    file (path, length, modification time) are unchanged, so a repeat
+  *    render of unchanged data runs no Spark job. Always run fresh: side
+  *    effects (SET VARIABLE, temp views and tables, macros), statements
+  *    with a nondeterministic expression, statements over a leaf other
+  *    than files, local data or `range` (e.g. a `CREATE TEMP TABLE`),
+  *    and every statement whose input files changed. `now()` and
+  *    `current_date` are folded before the key is taken, so they never
+  *    match an older run.
   *  - Variables: shaper prefixes statements with `SET VARIABLE` and
   *    reads them via `getvariable()` (ref app.go:574-595); we keep a
   *    driver-side store and substitute rendered literals at rewrite
@@ -152,10 +162,7 @@ object Dashboard {
         } else if (Gate.isSideEffect(sqlString)) {
           runSideEffect(spark, sqlString, store, macros)
         } else {
-          val df = runQuery(spark, sqlString, store, macros)
-          val schema: Seq[StructField] = df.schema.fields.toSeq
-          // reference keeps up to cap+1 rows (append-then-check loop)
-          val rows: Seq[Row] = df.limit(QueryMaxRows + 1).collect().toSeq
+          val (schema, rows) = collectCapped(runQuery(spark, sqlString, store, macros))
 
           def is1x1 = rows.length == 1 && rows.head.length == 1
 
@@ -295,6 +302,16 @@ object Dashboard {
       Model.jsonValue(k) + ":" + vs.map(Model.jsonValue).mkString("[", ",", "]")
     }.mkString("{", ",", "}")
     java.util.Base64.getEncoder.encodeToString(json.getBytes(StandardCharsets.UTF_8))
+  }
+
+  /** A query statement's schema and first `QueryMaxRows + 1` rows (the
+    * reference keeps cap+1 rows: append-then-check loop), reused from
+    * [[ResultCache]] while the plan and its input files are unchanged.
+    * Also used by Download's collect-vars-only replay. The rows may be
+    * shared with other renders: copy before changing a cell. */
+  private[interp] def collectCapped(df: DataFrame): (Seq[StructField], Seq[Row]) = {
+    val (schema, rows) = ResultCache.shared.collect(df, QueryMaxRows + 1)
+    (schema.fields.toSeq, rows)
   }
 
   /** Also used by Download's collect-vars-only replay. */

@@ -68,9 +68,8 @@ object Download {
           DashboardSideEffects.run(spark, sqlString, store, macros)
         } else {
           try {
-            val df = spark.sql(
-              Dialect.rewrite(Macros.expand(sqlString, macros), store.render))
-            val schema = df.schema.fields.toSeq
+            val (schema, rows) = Dashboard.collectCapped(spark.sql(
+              Dialect.rewrite(Macros.expand(sqlString, macros), store.render)))
             // the reference reads ALL rows here (stream_query.go:767-790
             // appends every row), but the rows feed only collectVars —
             // dropdown option/default extraction — and the render path
@@ -78,8 +77,9 @@ object Download {
             // option visible in a render fits under the cap. Cap the
             // replay collect too: a huge widget query before a download
             // button must not materialize fully in the serving process
-            // (deliberate divergence, logged when it engages).
-            val rows = df.limit(Dashboard.QueryMaxRows + 1).collect().toSeq
+            // (deliberate divergence, logged when it engages). The replay
+            // shares the render's result cache, so a download after a
+            // render replays without running these statements again.
             if (rows.length > Dashboard.QueryMaxRows)
               org.slf4j.LoggerFactory.getLogger(getClass).warn(
                 s"download var-replay truncated query $queryIndex at ${Dashboard.QueryMaxRows} rows")

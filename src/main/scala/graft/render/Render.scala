@@ -111,10 +111,6 @@ object Render {
 
   // ---- type mapping (mapDBType parity, get_dashboard.go:615-695) ------
 
-  def isTimeType(columnType: String): Boolean =
-    columnType == "year" || columnType == "month" || columnType == "date" ||
-      columnType == "hour" || columnType == "timestamp"
-
   /** Classify a timestamp column as year/month/date/hour/time/timestamp by
     * inspecting values (ref: getTimestampType, get_dashboard.go:1349-1404;
     * 1-row results ⇒ timestamp). */

@@ -802,22 +802,79 @@ class HttpApiSpec extends AnyFunSuite {
     assert(r.body().contains("""graft_http_requests_total{route="/health",method="GET",status="200"}"""))
   }
 
+  /** The value of an unlabelled sample on `/metrics`. */
+  private def metric(metricsKey: String, name: String): Long = {
+    val body = get("/metrics", Some(metricsKey)).body()
+    body.linesIterator.collectFirst {
+      case l if l.startsWith(name + " ") => l.split(' ')(1).toLong
+    }.getOrElse(fail(s"no $name sample:\n$body"))
+  }
+
+  /** A fresh ingest target and a dashboard `id` that reads it. */
+  private def liveDashboard(id: String, table: String, content: String): Unit = {
+    spark.sql(s"DROP TABLE IF EXISTS $table")
+    val loc = new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir"), table)
+    loc.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(loc, true)
+    fixtureStore.dashboards(id) = StateJournal.DashboardMeta(id, id, content, None, None, 0L, "test")
+  }
+
   test("GET /metrics exports codegen compiles; a repeated render adds none") {
     val (_, metricsKey) = fixtureStore.tokens.createApiKey("codegen-metrics-key",
       Seq(Tokens.Permission.ReadMetrics), Tokens.Actor(Tokens.ActorType.User, "u1"))
-    def compiles(): Long = {
-      val body = get("/metrics", Some(metricsKey)).body()
-      assert(body.contains("# TYPE graft_codegen_compiles_total counter"), body)
-      body.linesIterator.collectFirst {
-        case l if l.startsWith("graft_codegen_compiles_total ") => l.split(' ')(1).toLong
-      }.getOrElse(fail(s"no graft_codegen_compiles_total sample:\n$body"))
+    val (_, _, key) = fixture
+    assert(get("/metrics", Some(metricsKey)).body()
+      .contains("# TYPE graft_codegen_compiles_total counter"))
+    // an ingest before each render changes the table's files, so the
+    // repeated render misses the result cache and runs its statement again
+    liveDashboard("codegen", "http_codegen",
+      "SELECT kind, count(*) AS n, sum(v) AS total FROM http_codegen GROUP BY kind ORDER BY kind;")
+    def ingestThenRender(): Unit = {
+      assert(post("/api/data/http_codegen", """{"kind": "a", "v": 1}""", Some(key)).statusCode() == 202)
+      assert(get("/api/dashboards/codegen", Some(jwt())).statusCode() == 200)
     }
-    assert(get("/api/dashboards/demo", Some(jwt())).statusCode() == 200)
-    val afterFirst = compiles()
-    assert(get("/api/dashboards/demo", Some(jwt())).statusCode() == 200)
-    val afterSecond = compiles()
+    ingestThenRender()
+    val afterFirst = metric(metricsKey, "graft_codegen_compiles_total")
+    val missesAfterFirst = metric(metricsKey, "graft_result_cache_misses_total")
+    ingestThenRender()
+    assert(metric(metricsKey, "graft_result_cache_misses_total") > missesAfterFirst,
+      "the second render was answered from the result cache")
+    val afterSecond = metric(metricsKey, "graft_codegen_compiles_total")
     assert(afterSecond == afterFirst,
       s"the second render compiled ${afterSecond - afterFirst} classes")
+  }
+
+  test("GET /metrics exports result-cache counters: a repeat render hits, an ingest makes it miss") {
+    val (_, metricsKey) = fixtureStore.tokens.createApiKey("cache-metrics-key",
+      Seq(Tokens.Permission.ReadMetrics), Tokens.Actor(Tokens.ActorType.User, "u1"))
+    val (_, _, key) = fixture
+    val body = get("/metrics", Some(metricsKey)).body()
+    Seq("graft_result_cache_hits_total counter", "graft_result_cache_misses_total counter",
+      "graft_result_cache_bytes gauge").foreach(t => assert(body.contains(s"# TYPE $t"), body))
+    liveDashboard("cachelive", "http_cache_live",
+      "SELECT 'Live events'::LABEL;\nSELECT count(*) AS n FROM http_cache_live;")
+    def ingest(n: Int): Unit = assert(post("/api/data/http_cache_live",
+      (1 to n).map(i => s"""{"v": $i}""").mkString("[", ",", "]"), Some(key)).statusCode() == 202)
+    val rowsJson = "\"rows\":\\[\\[(\\d+)\\]\\]".r
+    def renderedCount(): Long = {
+      val r = get("/api/dashboards/cachelive", Some(jwt()))
+      assert(r.statusCode() == 200, r.body())
+      rowsJson.findFirstMatchIn(r.body()).map(_.group(1).toLong)
+        .getOrElse(fail(s"no count in ${r.body()}"))
+    }
+    def counters() = (metric(metricsKey, "graft_result_cache_hits_total"),
+      metric(metricsKey, "graft_result_cache_misses_total"))
+
+    ingest(2)
+    assert(renderedCount() == 2)
+    val (h1, m1) = counters()
+    assert(metric(metricsKey, "graft_result_cache_bytes") > 0)
+    assert(renderedCount() == 2)
+    val (h2, m2) = counters()
+    assert(h2 - h1 == 2 && m2 == m1, s"second render: +${h2 - h1} hits, +${m2 - m1} misses")
+    ingest(3)
+    assert(renderedCount() == 5)
+    val (h3, m3) = counters()
+    assert(m3 - m2 == 1 && h3 - h2 == 1, s"after ingest: +${h3 - h2} hits, +${m3 - m2} misses")
   }
 
   test("temporary dashboards: TTL'd preview store, never journaled (create_dashboard.go:31-52)") {

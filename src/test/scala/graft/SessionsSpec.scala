@@ -1,7 +1,7 @@
 package graft
 
 import graft.interp.Dashboard.RunConfig
-import graft.interp.{Dashboard, Download}
+import graft.interp.{Dashboard, Download, ResultCache}
 import graft.tasks.Tasks
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
@@ -23,12 +23,13 @@ class SessionsSpec extends AnyFunSuite {
     .getOrCreate()
 
   /** The benchmark's events shape, as a per-request temp view. */
-  private def events(ss: SparkSession): Unit =
+  private def events(ss: SparkSession): Unit = eventsFrame(ss).createOrReplaceTempView("events")
+
+  private def eventsFrame(ss: SparkSession) =
     ss.range(2000).selectExpr("id AS event_id",
       "timestamp_seconds(1704067200 + id * 900) AS ts", "id % 37 AS user_id",
       "element_at(array('click', 'error', 'purchase', 'signup', 'view'), " +
         "CAST(id % 5 AS INT) + 1) AS event_type")
-      .createOrReplaceTempView("events")
 
   private val demo =
     """SELECT 'Sessions per Week'::LABEL;
@@ -45,14 +46,34 @@ class SessionsSpec extends AnyFunSuite {
       |WHERE event_type = getvariable('evtype')
       |GROUP BY user_id ORDER BY n DESC, user_id LIMIT 5;""".stripMargin
 
-  /** Janino compilations during runs 2 to 4 of the same request; run 1
-    * may compile, a steady state must not. */
-  private def steadyStateCompiles(request: () => Unit): Long = {
-    request()
-    val before = Sessions.codegenCompiles
-    (2 to 4).foreach(_ => request())
-    Sessions.codegenCompiles - before
+  /** The same events as a parquet catalog table that grows by one
+    * identical row per call of `appendEvent`, so a render repeated over it
+    * misses the result cache (`interp.ResultCache`) and runs its
+    * statements again through the same generated code. */
+  private val EventsTable = "sessions_spec_events"
+  private lazy val eventsTable: Unit = {
+    spark.sql(s"DROP TABLE IF EXISTS $EventsTable")
+    val loc = new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir"), EventsTable)
+    loc.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(loc, true)
+    eventsFrame(spark).write.saveAsTable(EventsTable)
   }
+  private def appendEvent(): Unit = {
+    eventsTable
+    spark.sql(s"INSERT INTO $EventsTable SELECT * FROM $EventsTable WHERE event_id = 0")
+  }
+  private def growingEvents(ss: SparkSession): Unit =
+    ss.table(EventsTable).createOrReplaceTempView("events")
+
+  /** Janino compilations and result-cache misses during runs 2 to 4 of
+    * the same request; run 1 may compile, a steady state must not. */
+  private def steadyState(request: () => Unit): (Long, Long) = {
+    request()
+    val (compiles, misses) = (Sessions.codegenCompiles, ResultCache.shared.misses.get)
+    (2 to 4).foreach(_ => request())
+    (Sessions.codegenCompiles - compiles, ResultCache.shared.misses.get - misses)
+  }
+
+  private def steadyStateCompiles(request: () => Unit): Long = steadyState(request)._1
 
   test("a request session has artifact isolation off; the parent keeps its setting") {
     val key = "spark.sql.artifact.isolation.enabled"
@@ -64,14 +85,18 @@ class SessionsSpec extends AnyFunSuite {
   }
 
   test("steady-state dashboard renders compile no generated code: demo and widgets") {
+    // each render follows an append, so its statements over events miss
+    // the result cache and really run: 1 such statement in demo, 2 in widgets
     Seq(
-      demo -> RunConfig(prepare = events),
-      widgets -> RunConfig(queryParams = Map("evtype" -> Seq("view")), prepare = events))
-      .foreach { case (content, cfg) =>
-        val n = steadyStateCompiles(() => {
+      (demo, RunConfig(prepare = growingEvents), 1),
+      (widgets, RunConfig(queryParams = Map("evtype" -> Seq("view")), prepare = growingEvents), 2))
+      .foreach { case (content, cfg, overEvents) =>
+        val (n, misses) = steadyState(() => {
+          appendEvent()
           val r = Dashboard.run(spark, content, cfg)
           assert(r.sections.flatMap(_.queries).exists(_.rows.nonEmpty))
         })
+        assert(misses == 3 * overEvents, s"renders 2-4 missed $misses times:\n$content")
         assert(n == 0, s"renders 2-4 compiled $n classes:\n$content")
       }
   }
