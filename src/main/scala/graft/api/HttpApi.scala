@@ -1378,6 +1378,12 @@ final class HttpApi(
     sb ++= "# HELP graft_result_cache_misses_total Cacheable dashboard statements run because no result matched.\n"
     sb ++= "# TYPE graft_result_cache_misses_total counter\n"
     sb ++= s"graft_result_cache_misses_total ${cache.misses.get}\n"
+    sb ++= "# HELP graft_result_cache_incremental_total Dashboard statements answered from a cached aggregate state plus the table's new files.\n"
+    sb ++= "# TYPE graft_result_cache_incremental_total counter\n"
+    sb ++= s"graft_result_cache_incremental_total ${cache.incremental.get}\n"
+    sb ++= "# HELP graft_result_cache_entries Statements with a result in the result cache.\n"
+    sb ++= "# TYPE graft_result_cache_entries gauge\n"
+    sb ++= s"graft_result_cache_entries ${cache.size}\n"
     sb ++= "# HELP graft_result_cache_bytes Estimated bytes held by the result cache.\n"
     sb ++= "# TYPE graft_result_cache_bytes gauge\n"
     sb ++= s"graft_result_cache_bytes ${cache.bytes}\n"

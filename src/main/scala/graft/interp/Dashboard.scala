@@ -6,6 +6,8 @@ import graft.render.Render._
 import graft.sqlfront.{Dialect, Gate, Macros, SqlText}
 import graft.types.ShaperTypes
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.encoderFor
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.types.StructField
 
 import java.net.URLEncoder
@@ -31,13 +33,20 @@ import scala.collection.mutable
   *  - A query statement's capped result is reused from [[ResultCache]]
   *    while its optimized plan, output schema, SQL conf and every input
   *    file (path, length, modification time) are unchanged, so a repeat
-  *    render of unchanged data runs no Spark job. Always run fresh: side
-  *    effects (SET VARIABLE, temp views and tables, macros), statements
-  *    with a nondeterministic expression, statements over a leaf other
-  *    than files, local data or `range` (e.g. a `CREATE TEMP TABLE`),
-  *    and every statement whose input files changed. `now()` and
-  *    `current_date` are folded before the key is taken, so they never
-  *    match an older run.
+  *    render of unchanged data runs no Spark job. An aggregate over one
+  *    Parquet table (`count`, `count(col)`, `min`, `max`, integral `sum`;
+  *    Filter/Project below it, Filter/Project/Sort/Limit above) whose
+  *    table only gained files since its last run is answered from its
+  *    cached per-group state plus the new files, read on the driver, also
+  *    with no Spark job ([[IncrementalAggregate]]). Always run in full:
+  *    side effects (SET VARIABLE, temp views and tables, macros),
+  *    statements with a nondeterministic expression, statements over a
+  *    leaf other than files, local data or `range`, and every other
+  *    statement whose input files changed. `now()` and `current_date` are
+  *    folded before the key is taken, so they never match an older run.
+  *  - `CREATE TEMP TABLE` materializes into the render's own session as
+  *    local data, or, past a size bound, is cached in executor storage
+  *    and uncached when the render ends ([[TempTables]]).
   *  - Variables: shaper prefixes statements with `SET VARIABLE` and
   *    reads them via `getvariable()` (ref app.go:574-595); we keep a
   *    driver-side store and substitute rendered literals at rewrite
@@ -103,11 +112,19 @@ object Dashboard {
       nowMillis: () => Long = () => System.currentTimeMillis(),
       /** Runs against the fresh per-render session before any statement —
         * register tables/views here (temp views are per-session). */
-      prepare: SparkSession => Unit = _ => ())
+      prepare: SparkSession => Unit = _ => (),
+      /** Where query statements' results are reused from. */
+      cache: ResultCache = ResultCache.shared)
 
   def run(spark0: SparkSession, content: String, cfg: RunConfig = RunConfig()): GetResult = {
     // fresh namespace per render (temp views, registered functions)
     val spark = graft.Sessions.request(spark0)
+    val tempTables = new TempTables(spark)
+    try runIn(spark, content, cfg, tempTables) finally tempTables.release()
+  }
+
+  private def runIn(spark: SparkSession, content: String, cfg: RunConfig,
+      tempTables: TempTables): GetResult = {
     ShaperTypes.register(spark)
     graft.exprs.Boxplot.register(spark)
     graft.exprs.Len.register(spark)
@@ -160,9 +177,9 @@ object Dashboard {
             !canStartSection(sqlString)) {
           // skipped: inside a hidden section
         } else if (Gate.isSideEffect(sqlString)) {
-          runSideEffect(spark, sqlString, store, macros)
+          runSideEffect(spark, sqlString, store, macros, tempTables)
         } else {
-          val (schema, rows) = collectCapped(runQuery(spark, sqlString, store, macros))
+          val (schema, rows) = collectCapped(runQuery(spark, sqlString, store, macros), cfg.cache)
 
           def is1x1 = rows.length == 1 && rows.head.length == 1
 
@@ -309,18 +326,50 @@ object Dashboard {
     * [[ResultCache]] while the plan and its input files are unchanged.
     * Also used by Download's collect-vars-only replay. The rows may be
     * shared with other renders: copy before changing a cell. */
-  private[interp] def collectCapped(df: DataFrame): (Seq[StructField], Seq[Row]) = {
-    val (schema, rows) = ResultCache.shared.collect(df, QueryMaxRows + 1)
+  private[interp] def collectCapped(df: DataFrame,
+      cache: ResultCache = ResultCache.shared): (Seq[StructField], Seq[Row]) = {
+    val (schema, rows) = cache.collect(df, QueryMaxRows + 1)
     (schema.fields.toSeq, rows)
   }
 
-  /** Also used by Download's collect-vars-only replay. */
-  private[interp] def runSideEffectStatement(spark: SparkSession, sqlString: String,
-      store: VarStore, macros: Macros.MacroStore): Unit =
-    runSideEffect(spark, sqlString, store, macros)
+  /** A request's `CREATE TEMP TABLE`s. One whose rows fit in
+    * `TempTableMaxRows` and `TempTableMaxBytes` becomes local data in the
+    * request's own session, visible to nothing else and, as local data,
+    * keyed by its rows in [[ResultCache]]. A larger one is cached in
+    * executor storage, which every session's `CacheManager` shares, and
+    * `release` uncaches it when the request ends, so no request leaves
+    * data behind that another request's plan could pick up. */
+  private[interp] final class TempTables(spark: SparkSession) {
+    private val cached = mutable.ArrayBuffer.empty[String]
 
-  private def runSideEffect(spark: SparkSession, sqlString: String, store: VarStore,
-      macros: Macros.MacroStore): Unit =
+    def create(name: String, df: DataFrame): Unit = {
+      val rows = df.limit(TempTableMaxRows + 1).collect()
+      val toRow = encoderFor(df.encoder).createSerializer()
+      def bytes = rows.iterator.map(r => toRow(r).asInstanceOf[UnsafeRow].getSizeInBytes.toLong).sum
+      if (rows.length <= TempTableMaxRows && bytes <= TempTableMaxBytes)
+        spark.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema).createOrReplaceTempView(name)
+      else {
+        df.createOrReplaceTempView(name)
+        spark.catalog.cacheTable(name)
+        cached += name
+      }
+    }
+
+    def release(): Unit = cached.distinct.foreach { name =>
+      if (spark.catalog.tableExists(name) && spark.catalog.isCached(name)) spark.catalog.uncacheTable(name)
+    }
+  }
+
+  /** Rows and bytes (as `UnsafeRow`s) of a temp table kept as local data:
+    * it lives on the driver for the request and, inside statement plans,
+    * in result-cache keys, so it must stay small beside the cache's
+    * 64 MB budget. */
+  private val TempTableMaxRows = 10000
+  private val TempTableMaxBytes = 1L << 20
+
+  /** Also used by Download's collect-vars-only replay. */
+  private[interp] def runSideEffect(spark: SparkSession, sqlString: String, store: VarStore,
+      macros: Macros.MacroStore, tempTables: TempTables): Unit =
     sqlString match {
       case _ if Macros.isCreateMacro(sqlString) =>
         Macros.parseCreate(sqlString).foreach(macros.define)
@@ -339,13 +388,14 @@ object Dashboard {
       case resetVarStmt(name) =>
         store.singleVars.remove(name)
         store.multiVars.remove(name)
-      case createTempView(_, viewName, body) =>
-        // CREATE TEMP TABLE ⇒ materialized temp view (cached); TEMP VIEW ⇒ view
+      case createTempView(kind, viewName, body) =>
+        // CREATE TEMP TABLE ⇒ materialized rows; TEMP VIEW ⇒ a view,
+        // re-evaluated by every statement that reads it
         val rewritten = Dialect.rewrite(Macros.expand(body, macros), store.render)
         val df = spark.sql(rewritten)
         val clean = viewName.stripPrefix("\"").stripSuffix("\"")
-        df.createOrReplaceTempView(clean)
-        if (sqlString.toUpperCase.contains("TABLE")) spark.catalog.cacheTable(clean)
+        if (kind.equalsIgnoreCase("TABLE")) tempTables.create(clean, df)
+        else df.createOrReplaceTempView(clean)
       case _ =>
         // USE / BEGIN / COMMIT / ROLLBACK / ABORT / CALL / ATTACH:
         // transactions are a no-op on Spark (documented divergence)

@@ -28,6 +28,15 @@ object Download {
         * a character Writer can't carry it). */
       binOut: java.io.OutputStream = null): Either[String, Unit] = {
     val spark = graft.Sessions.request(spark0)
+    val tempTables = new Dashboard.TempTables(spark)
+    try download(spark, content, format, out, queryId, queryParams, variables, prepare, binOut, tempTables)
+    finally tempTables.release()
+  }
+
+  private def download(spark: SparkSession, content: String, format: String, out: Writer,
+      queryId: Option[Int], queryParams: Map[String, Seq[String]], variables: Map[String, Any],
+      prepare: SparkSession => Unit, binOut: java.io.OutputStream,
+      tempTables: Dashboard.TempTables): Either[String, Unit] = {
     ShaperTypes.register(spark)
     graft.exprs.Boxplot.register(spark)
     graft.exprs.Len.register(spark)
@@ -65,7 +74,7 @@ object Download {
           nextIsDownload = false
         } else if (Gate.isSideEffect(sqlString)) {
           // SET VARIABLE / CREATE TEMP MACRO etc. must still apply
-          DashboardSideEffects.run(spark, sqlString, store, macros)
+          Dashboard.runSideEffect(spark, sqlString, store, macros, tempTables)
         } else {
           try {
             val (schema, rows) = Dashboard.collectCapped(spark.sql(
@@ -150,14 +159,6 @@ object DownloadAuth {
         }
     })
   }
-}
-
-/** Shared side-effect execution for replay mode (SET/RESET VARIABLE,
-  * temp views) — delegates to the interpreter's handler. */
-private[interp] object DashboardSideEffects {
-  def run(spark: SparkSession, sqlString: String, store: Dashboard.VarStore,
-      macros: Macros.MacroStore): Unit =
-    Dashboard.runSideEffectStatement(spark, sqlString, store, macros)
 }
 
 /** `POST /api/download/:filename` — ad-hoc SQL download: the SQL

@@ -843,15 +843,19 @@ class HttpApiSpec extends AnyFunSuite {
       s"the second render compiled ${afterSecond - afterFirst} classes")
   }
 
-  test("GET /metrics exports result-cache counters: a repeat render hits, an ingest makes it miss") {
+  test("GET /metrics result-cache counters: a repeat render hits, an ingest merges") {
     val (_, metricsKey) = fixtureStore.tokens.createApiKey("cache-metrics-key",
       Seq(Tokens.Permission.ReadMetrics), Tokens.Actor(Tokens.ActorType.User, "u1"))
     val (_, _, key) = fixture
     val body = get("/metrics", Some(metricsKey)).body()
     Seq("graft_result_cache_hits_total counter", "graft_result_cache_misses_total counter",
-      "graft_result_cache_bytes gauge").foreach(t => assert(body.contains(s"# TYPE $t"), body))
+      "graft_result_cache_incremental_total counter", "graft_result_cache_bytes gauge",
+      "graft_result_cache_entries gauge").foreach(t => assert(body.contains(s"# TYPE $t"), body))
+    // two aggregate statements over the ingest table, each answered from
+    // its cached state plus the new file after an ingest
     liveDashboard("cachelive", "http_cache_live",
-      "SELECT 'Live events'::LABEL;\nSELECT count(*) AS n FROM http_cache_live;")
+      "SELECT 'Live events'::LABEL;\nSELECT count(*) AS n FROM http_cache_live;\n" +
+        "SELECT count(v) AS c, max(v) AS top FROM http_cache_live;")
     def ingest(n: Int): Unit = assert(post("/api/data/http_cache_live",
       (1 to n).map(i => s"""{"v": $i}""").mkString("[", ",", "]"), Some(key)).statusCode() == 202)
     val rowsJson = "\"rows\":\\[\\[(\\d+)\\]\\]".r
@@ -862,19 +866,21 @@ class HttpApiSpec extends AnyFunSuite {
         .getOrElse(fail(s"no count in ${r.body()}"))
     }
     def counters() = (metric(metricsKey, "graft_result_cache_hits_total"),
+      metric(metricsKey, "graft_result_cache_incremental_total"),
       metric(metricsKey, "graft_result_cache_misses_total"))
 
     ingest(2)
     assert(renderedCount() == 2)
-    val (h1, m1) = counters()
+    val (h1, i1, m1) = counters()
     assert(metric(metricsKey, "graft_result_cache_bytes") > 0)
+    assert(metric(metricsKey, "graft_result_cache_entries") >= 3)
     assert(renderedCount() == 2)
-    val (h2, m2) = counters()
-    assert(h2 - h1 == 2 && m2 == m1, s"second render: +${h2 - h1} hits, +${m2 - m1} misses")
+    val (h2, i2, m2) = counters()
+    assert((h2 - h1, i2 - i1, m2 - m1) == (3, 0, 0), "second render: (hits, incremental, misses)")
     ingest(3)
     assert(renderedCount() == 5)
-    val (h3, m3) = counters()
-    assert(m3 - m2 == 1 && h3 - h2 == 1, s"after ingest: +${h3 - h2} hits, +${m3 - m2} misses")
+    val (h3, i3, m3) = counters()
+    assert((h3 - h2, i3 - i2, m3 - m2) == (1, 2, 0), "after ingest: (hits, incremental, misses)")
   }
 
   test("temporary dashboards: TTL'd preview store, never journaled (create_dashboard.go:31-52)") {

@@ -10,8 +10,9 @@ import java.nio.file.Files
 
 /** The interpreter's result cache (`interp.ResultCache`): a render reuses
   * a statement's rows only while its optimized plan, output schema, SQL
-  * conf and input files are unchanged, and never reuses a result that a
-  * fresh run could answer differently. Counts are deltas of the shared
+  * conf and input files are unchanged, advances an aggregate from its
+  * state when its table only gained files, and never reuses a result that
+  * a fresh run could answer differently. Counts are deltas of the shared
   * cache's counters; every spec reads its own fresh parquet directory. */
 class ResultCacheSpec extends AnyFunSuite {
 
@@ -72,6 +73,61 @@ class ResultCacheSpec extends AnyFunSuite {
     n.get
   }
 
+  /** A render configuration that reads `dir` as `t` with a declared
+    * schema, so planning runs no schema-inference job. */
+  private def typed(dir: String, variables: Map[String, Any] = Map.empty): RunConfig =
+    RunConfig(variables = variables, prepare = ss =>
+      ss.read.schema("v BIGINT, k BIGINT, tenant STRING").parquet(dir).createOrReplaceTempView("t"))
+
+  /** Append rows `from until to` with NULL values and NULL keys mixed in. */
+  private def appendNulls(dir: String, from: Int, to: Int): Unit =
+    spark.range(from, to).selectExpr("IF(id % 4 = 0, NULL, id) AS v",
+      "IF(id % 5 = 0, NULL, id % 3) AS k",
+      "element_at(array('a', 'b', 'c'), CAST(id % 3 AS INT) + 1) AS tenant")
+      .coalesce(1).write.mode("append").parquet(dir)
+
+  /** The same render through a fresh, empty cache: a full recompute. */
+  private def recomputed(content: String, cfg: RunConfig): String =
+    Model.toJson(Dashboard.run(spark, content, cfg.copy(cache = new ResultCache(64L << 20))))
+
+  /** The render's JSON, the Spark jobs it ran and the (hits, incremental
+    * answers, misses) it added to the shared cache. */
+  private def outcome(content: String, cfg: RunConfig): (String, Int, (Long, Long, Long)) = {
+    val (h, i, m) = (cache.hits.get, cache.incremental.get, cache.misses.get)
+    var json = ""
+    val jobs = jobsOf { json = Model.toJson(Dashboard.run(spark, content, cfg)) }
+    (json, jobs, (cache.hits.get - h, cache.incremental.get - i, cache.misses.get - m))
+  }
+
+  /** The parquet files under `dir`, oldest first. */
+  private def parquetFiles(dir: String): Seq[java.nio.file.Path] = {
+    val all = Files.list(java.nio.file.Paths.get(dir))
+    try all.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.getFileName.toString.endsWith(".parquet"))
+      .sortBy(p => (Files.getLastModifiedTime(p).toMillis, p.toString))
+    finally all.close()
+  }
+
+  /** Remove a parquet file with its checksum sibling. */
+  private def remove(file: java.nio.file.Path): Unit = {
+    Files.delete(file)
+    Files.deleteIfExists(file.resolveSibling(s".${file.getFileName}.crc"))
+  }
+
+  /** Render, change the files, render again: the second render must equal
+    * a full recompute and have the given outcome; an incremental answer
+    * must run no Spark job. */
+  private def afterChange(content: String, cfg: RunConfig, expected: (Long, Long, Long))(
+      change: => Unit): String = {
+    outcome(content, cfg)
+    change
+    val (json, jobs, counts) = outcome(content, cfg)
+    assert(counts == expected, s"(hits, incremental, misses) for\n$content")
+    if (expected._2 > 0) assert(jobs == 0, s"an incremental answer ran $jobs Spark jobs")
+    assert(json == recomputed(content, cfg))
+    json
+  }
+
   test("a repeat render over unchanged files is answered from the cache with no Spark job") {
     // a catalog table: reading a parquet path as a view infers its schema
     // with a job of its own on every render
@@ -102,13 +158,14 @@ class ResultCacheSpec extends AnyFunSuite {
     assert(b.sections.head.queries.head.columns.map(_.name) == Seq("b"))
   }
 
-  test("an appended file misses and the render returns the new rows") {
+  test("an appended file is answered incrementally with the new rows") {
     val dir = table(10)
     val content = "SELECT count(*) AS n, sum(v) AS s FROM t;"
     assert(rowsOf(Dashboard.run(spark, content, over(dir))) == Seq(Seq(Seq(10, 45))))
     append(dir, 10, 12)
+    val i = cache.incremental.get
     val (r, hits, misses) = counted(Dashboard.run(spark, content, over(dir)))
-    assert((hits, misses) == (0, 1))
+    assert((hits, misses, cache.incremental.get - i) == (0, 0, 1))
     assert(rowsOf(r) == Seq(Seq(Seq(12, 66))))
   }
 
@@ -161,7 +218,7 @@ class ResultCacheSpec extends AnyFunSuite {
     assert(render(1) == Seq(Seq(Seq(3))))
   }
 
-  test("a statement over a CREATE TEMP TABLE (an in-memory relation) is not cached") {
+  test("a statement over a small CREATE TEMP TABLE is keyed on the table's rows") {
     val dir = table(20)
     val content = "CREATE TEMP TABLE hot AS SELECT * FROM t WHERE k = 1;\n" +
       "SELECT count(*) AS n FROM hot;"
@@ -169,9 +226,10 @@ class ResultCacheSpec extends AnyFunSuite {
     assert(first == Seq(Seq(Seq(7))))
     append(dir, 20, 23)
     val (second, h2, m2) = counted(rowsOf(Dashboard.run(spark, content, over(dir))))
-    assert((h1, m1, h2, m2) == (0, 0, 0, 0))
     assert(second == Seq(Seq(Seq(8))))
-    spark.catalog.clearCache()
+    val (third, h3, m3) = counted(rowsOf(Dashboard.run(spark, content, over(dir))))
+    assert(third == second)
+    assert((h1, m1, h2, m2, h3, m3) == (0, 1, 0, 1, 1, 0))
   }
 
   test("an append to a table read only by a scalar subquery invalidates the result") {
@@ -230,5 +288,161 @@ class ResultCacheSpec extends AnyFunSuite {
     assert(small.bytes <= budget)
     assert(missed(0))
     assert(!missed(fits))
+  }
+
+  test("an append with NULL keys and values is answered incrementally, equal to a full run") {
+    val dir = table(30)
+    val content = "SELECT k, count(*) AS n, count(v) AS c, sum(v) AS s, min(v) AS lo, max(v) AS hi " +
+      "FROM t GROUP BY k ORDER BY k;\nSELECT count(*) AS n, sum(v) AS s, min(tenant) AS lo FROM t;"
+    val json = afterChange(content, typed(dir), (0, 2, 0))(appendNulls(dir, 30, 45))
+    assert(json.contains("null"), json)
+  }
+
+  test("an appended empty file is answered incrementally with the same rows") {
+    val dir = table(20)
+    val content = "SELECT k, count(*) AS n, sum(v) AS s FROM t GROUP BY k ORDER BY k;"
+    val before = Model.toJson(Dashboard.run(spark, content, typed(dir)))
+    val files = parquetFiles(dir).length
+    val after = afterChange(content, typed(dir), (0, 1, 0))(append(dir, 0, 0))
+    assert(parquetFiles(dir).length == files + 1)
+    assert(after == before)
+  }
+
+  test("HAVING, ORDER BY and LIMIT above the aggregate are re-applied to the merged groups") {
+    val dir = table(40)
+    val content = "SELECT k, count(*) AS n, sum(v) AS s FROM t WHERE v % 7 <> 3 GROUP BY k " +
+      "HAVING count(*) > 5 ORDER BY n DESC, k LIMIT 2;"
+    afterChange(content, typed(dir), (0, 1, 0)) {
+      spark.range(40, 60).selectExpr("id AS v", "IF(id < 55, 2, 5) AS k", "'d' AS tenant")
+        .coalesce(1).write.mode("append").parquet(dir)
+    }
+  }
+
+  test("a JWT variable below the aggregate: two tenants never share state") {
+    val dir = table(30)
+    val content = "SELECT getvariable('tenant') AS who, count(*) AS n, sum(v) AS s " +
+      "FROM t WHERE tenant = getvariable('tenant') GROUP BY 1;"
+    def cfg(tenant: String) = typed(dir, Map("tenant" -> tenant))
+    Seq("a", "b").foreach(t => outcome(content, cfg(t)))
+    append(dir, 30, 36)
+    val results = Seq("a", "b").map { t =>
+      val (json, jobs, counts) = outcome(content, cfg(t))
+      assert(counts == (0, 1, 0) && jobs == 0, t)
+      assert(json == recomputed(content, cfg(t)), t)
+      json
+    }
+    assert(results.head.contains("[\"a\",12,") && results.last.contains("[\"b\",12,"), results)
+  }
+
+  test("now() in the filter is never answered incrementally") {
+    val dir = table(10)
+    val content = "SELECT count(*) AS n FROM t WHERE timestamp_seconds(v) < now();"
+    afterChange(content, typed(dir), (0, 0, 1))(append(dir, 10, 12))
+  }
+
+  test("a removed file falls back to a full run") {
+    val dir = table(20)
+    append(dir, 20, 25)
+    val content = "SELECT k, count(*) AS n, sum(v) AS s FROM t GROUP BY k ORDER BY k;"
+    afterChange(content, typed(dir), (0, 0, 1))(remove(parquetFiles(dir).head))
+  }
+
+  test("a rewritten file falls back to a full run") {
+    val dir = table(20)
+    append(dir, 20, 25)
+    val content = "SELECT k, count(*) AS n, sum(v) AS s FROM t GROUP BY k ORDER BY k;"
+    afterChange(content, typed(dir), (0, 0, 1)) {
+      Thread.sleep(20)
+      val replacement = parquetFiles(table(7)).head
+      val target = parquetFiles(dir).head
+      remove(target)
+      Files.move(replacement, target)
+    }
+  }
+
+  test("a schema change falls back to a full run") {
+    val dir = table(20)
+    spark.sql("DROP TABLE IF EXISTS result_cache_evolving")
+    spark.sql(s"CREATE TABLE result_cache_evolving USING parquet LOCATION '$dir'")
+    val content = "SELECT k, count(*) AS n, sum(v) AS s FROM result_cache_evolving GROUP BY k ORDER BY k;"
+    afterChange(content, RunConfig(), (0, 0, 1)) {
+      spark.sql("ALTER TABLE result_cache_evolving ADD COLUMNS (extra STRING)")
+      spark.sql("INSERT INTO result_cache_evolving SELECT 100, 1, 'z', 'x'")
+    }
+    spark.sql("DROP TABLE result_cache_evolving")
+  }
+
+  test("an append past the driver-read bound falls back to a full run") {
+    val dir = table(20)
+    val content = "SELECT k, count(*) AS n, sum(v) AS s FROM t GROUP BY k ORDER BY k;"
+    afterChange(content, typed(dir), (0, 0, 1)) {
+      spark.range(0, 200000).selectExpr("id AS v", "id % 3 AS k", "sha2(CAST(id AS STRING), 256) AS tenant")
+        .coalesce(1).write.mode("append").parquet(dir)
+      assert(Files.size(parquetFiles(dir).last) > graft.interp.IncrementalAggregate.MaxDeltaBytes)
+    }
+  }
+
+  test("a sum that overflows on merge falls back to a full run, which raises Spark's error") {
+    def rows(dir: String, v: Long, n: Int): Unit =
+      spark.range(0, n).selectExpr(s"${v}L AS v", "0L AS k", "'a' AS tenant")
+        .coalesce(1).write.mode("append").parquet(dir)
+    def fresh() = Files.createTempDirectory("result-cache-spec").resolve("t").toString
+    val content = "SELECT count(*) AS n, sum(v) AS s FROM t WHERE k = 0;"
+    val whole = fresh()
+    rows(whole, Long.MaxValue - 10, 2)
+    val e0 = intercept[Exception](Dashboard.run(spark, content, typed(whole)))
+    assert(e0.getMessage.contains("ARITHMETIC_OVERFLOW"), e0.getMessage)
+    val dir = fresh()
+    rows(dir, Long.MaxValue - 10, 1)
+    Dashboard.run(spark, content, typed(dir))
+    rows(dir, 100, 1)
+    val (i, m) = (cache.incremental.get, cache.misses.get)
+    val e = intercept[Exception](Dashboard.run(spark, content, typed(dir)))
+    assert(e.getMessage.contains("ARITHMETIC_OVERFLOW"), e.getMessage)
+    assert((cache.incremental.get - i, cache.misses.get - m) == (0, 1))
+  }
+
+  test("an aggregate past the group bound runs in full every time") {
+    val dir = Files.createTempDirectory("result-cache-spec").resolve("t").toString
+    val groups = graft.interp.IncrementalAggregate.MaxGroups + 1
+    spark.range(0, groups).selectExpr("id AS v", "id AS k", "'a' AS tenant").coalesce(1).write.parquet(dir)
+    val content = "SELECT k, count(*) AS n FROM t GROUP BY k ORDER BY n DESC, k LIMIT 3;"
+    val first = outcome(content, typed(dir))
+    assert(first._3 == (0, 0, 1))
+    assert(first._1 == recomputed(content, typed(dir)))
+    afterChange(content, typed(dir), (0, 0, 1)) {
+      spark.range(0, 3).selectExpr("id AS v", "id AS k", "'a' AS tenant")
+        .coalesce(1).write.mode("append").parquet(dir)
+    }
+  }
+
+  test("CREATE TEMP TABLE leaves nothing in the shared cache manager; its rows are unchanged") {
+    val cacheManager = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    spark.catalog.clearCache()
+    val body = "SELECT id, CAST(id AS INT) AS i, id / 3.0 AS d, timestamp_seconds(id * 3600) AS ts, " +
+      "date_add(DATE '2024-01-01', CAST(id AS INT)) AS day, CAST(id AS STRING) AS s, " +
+      "IF(id % 2 = 0, NULL, id) AS maybe, array(id, id + 1) AS xs FROM range(ROWS)"
+    Seq(3, 30, 20000).foreach { n =>
+      val content = s"CREATE TEMP TABLE hot AS ${body.replace("ROWS", n.toString)};\n" +
+        "SELECT * FROM hot ORDER BY id LIMIT 50;"
+      val rendered = Dashboard.run(spark, content).sections.head.queries.head.rows
+      val direct = Dashboard.run(spark, body.replace("ROWS", n.toString) + " ORDER BY id LIMIT 50;")
+        .sections.head.queries.head.rows
+      assert(rendered == direct, s"$n rows")
+      assert(cacheManager.isEmpty, s"after a $n-row temp table")
+    }
+    val other = Sessions.request(spark).sql("SELECT id FROM range(10)").queryExecution.withCachedData
+    assert(other.collectFirst { case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r }.isEmpty)
+  }
+
+  test("a TEMP VIEW over a *_table name is a view: it sees a later append") {
+    val dir = table(10)
+    val cfg = RunConfig(prepare = ss =>
+      ss.read.schema("v BIGINT, k BIGINT, tenant STRING").parquet(dir).createOrReplaceTempView("events_table"))
+    val content = "CREATE TEMP VIEW v AS SELECT * FROM events_table;\nSELECT count(*) AS n FROM v;"
+    assert(rowsOf(Dashboard.run(spark, content, cfg)) == Seq(Seq(Seq(10))))
+    append(dir, 10, 13)
+    assert(rowsOf(Dashboard.run(spark, content, cfg)) == Seq(Seq(Seq(13))))
   }
 }

@@ -46,9 +46,10 @@ class SessionsSpec extends AnyFunSuite {
       |WHERE event_type = getvariable('evtype')
       |GROUP BY user_id ORDER BY n DESC, user_id LIMIT 5;""".stripMargin
 
-  /** The same events as a parquet catalog table that grows by one
-    * identical row per call of `appendEvent`, so a render repeated over it
-    * misses the result cache (`interp.ResultCache`) and runs its
+  /** The same events as a parquet catalog table whose files are
+    * rewritten with the same rows per call of `rewriteEvents`, so a render
+    * repeated over it misses the result cache (`interp.ResultCache`;
+    * rewritten files are never answered incrementally) and runs its
     * statements again through the same generated code. */
   private val EventsTable = "sessions_spec_events"
   private lazy val eventsTable: Unit = {
@@ -57,9 +58,9 @@ class SessionsSpec extends AnyFunSuite {
     loc.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(loc, true)
     eventsFrame(spark).write.saveAsTable(EventsTable)
   }
-  private def appendEvent(): Unit = {
+  private def rewriteEvents(): Unit = {
     eventsTable
-    spark.sql(s"INSERT INTO $EventsTable SELECT * FROM $EventsTable WHERE event_id = 0")
+    eventsFrame(spark).write.mode("overwrite").insertInto(EventsTable)
   }
   private def growingEvents(ss: SparkSession): Unit =
     ss.table(EventsTable).createOrReplaceTempView("events")
@@ -85,14 +86,14 @@ class SessionsSpec extends AnyFunSuite {
   }
 
   test("steady-state dashboard renders compile no generated code: demo and widgets") {
-    // each render follows an append, so its statements over events miss
+    // each render follows a rewrite, so its statements over events miss
     // the result cache and really run: 1 such statement in demo, 2 in widgets
     Seq(
       (demo, RunConfig(prepare = growingEvents), 1),
       (widgets, RunConfig(queryParams = Map("evtype" -> Seq("view")), prepare = growingEvents), 2))
       .foreach { case (content, cfg, overEvents) =>
         val (n, misses) = steadyState(() => {
-          appendEvent()
+          rewriteEvents()
           val r = Dashboard.run(spark, content, cfg)
           assert(r.sections.flatMap(_.queries).exists(_.rows.nonEmpty))
         })
