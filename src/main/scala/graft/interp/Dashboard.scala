@@ -3,22 +3,26 @@ package graft.interp
 import graft.render.{Model, Render}
 import graft.render.Model._
 import graft.render.Render._
-import graft.sqlfront.{Dialect, Gate, Macros, SqlText}
-import graft.types.ShaperTypes
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.encoders.encoderFor
-import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+import graft.sqlfront.{Dialect, Gate, SqlText}
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.types.StructField
 
 import java.net.URLEncoder
 import java.nio.charset.StandardCharsets
-import java.time.format.DateTimeFormatter
 import scala.collection.mutable
 
 /** The dashboard interpreter: a fold over SQL statements with pending
   * state (nextLabel, nextMarkLines, hideNextContentSection,
   * nextIsDownload) producing a GetResult — the reference engine's actual
   * core (ref: server/core/get_dashboard.go:38-400).
+  *
+  * Every statement takes the one path renders share with downloads, tasks
+  * and `/api/sql` ([[Statements]]): a fresh per-request session, the
+  * side-effect step (macros, `SET`/`RESET VARIABLE`, `CREATE TEMP
+  * TABLE/VIEW`), the compile step and the capped collect. This fold adds
+  * only what a render means: LABEL/SECTION/RELOAD and the other tags,
+  * hidden sections, variable collection from widgets and download-URL
+  * synthesis.
   *
   * Spark specifics:
   *  - Each render runs in its own session (`graft.Sessions.request`):
@@ -40,18 +44,13 @@ import scala.collection.mutable
   *    cached per-group state plus the new files, read on the driver, also
   *    with no Spark job ([[IncrementalAggregate]]). Always run in full:
   *    side effects (SET VARIABLE, temp views and tables, macros),
-  *    statements with a nondeterministic expression, statements over a
-  *    leaf other than files, local data or `range`, and every other
-  *    statement whose input files changed. `now()` and `current_date` are
-  *    folded before the key is taken, so they never match an older run.
+  *    statements with a nondeterministic expression or one that reads
+  *    the clock (`now()`, `current_date`), statements over a leaf other
+  *    than files, local data or `range`, and every other statement whose
+  *    input files changed.
   *  - `CREATE TEMP TABLE` materializes into the render's own session as
   *    local data, or, past a size bound, is cached in executor storage
-  *    and uncached when the render ends ([[TempTables]]).
-  *  - Variables: shaper prefixes statements with `SET VARIABLE` and
-  *    reads them via `getvariable()` (ref app.go:574-595); we keep a
-  *    driver-side store and substitute rendered literals at rewrite
-  *    time — observably identical, and the substituted literal
-  *    participates in Catalyst constant folding / partition pruning.
+  *    and uncached when the render ends.
   */
 object Dashboard {
 
@@ -100,11 +99,6 @@ object Dashboard {
     canStartSectionMarkers.exists(upper.contains)
   }
 
-  private val setVarStmt = "(?is)^SET\\s+VARIABLE\\s+\"?([a-zA-Z0-9_]+)\"?\\s*=\\s*(.+)$".r
-  private val resetVarStmt = "(?is)^RESET\\s+VARIABLE\\s+\"?([a-zA-Z0-9_]+)\"?\\s*$".r
-  private val createTempView =
-    "(?is)^CREATE\\s+(?:OR\\s+REPLACE\\s+)?(?:TEMP|TEMPORARY)\\s+(TABLE|VIEW)\\s+(\\S+)\\s+AS\\s+(.+)$".r
-
   final case class RunConfig(
       dashboardId: String = "",
       queryParams: Map[String, Seq[String]] = Map.empty,
@@ -116,20 +110,10 @@ object Dashboard {
       /** Where query statements' results are reused from. */
       cache: ResultCache = ResultCache.shared)
 
-  def run(spark0: SparkSession, content: String, cfg: RunConfig = RunConfig()): GetResult = {
-    // fresh namespace per render (temp views, registered functions)
-    val spark = graft.Sessions.request(spark0)
-    val tempTables = new TempTables(spark)
-    try runIn(spark, content, cfg, tempTables) finally tempTables.release()
-  }
+  def run(spark: SparkSession, content: String, cfg: RunConfig = RunConfig()): GetResult =
+    Statements.request(spark, cfg.variables, cfg.prepare, cfg.cache)(runIn(_, content, cfg))
 
-  private def runIn(spark: SparkSession, content: String, cfg: RunConfig,
-      tempTables: TempTables): GetResult = {
-    ShaperTypes.register(spark)
-    graft.exprs.Boxplot.register(spark)
-    graft.exprs.Len.register(spark)
-    cfg.prepare(spark)
-
+  private def runIn(req: Statements.Request, content: String, cfg: RunConfig): GetResult = {
     var nextLabel = ""
     var hideNextContentSection = false
     var nextIsDownload = false
@@ -141,14 +125,8 @@ object Dashboard {
     var maxTimeValue = 0L
     val sections = mutable.ArrayBuffer.empty[Section]
 
-    val clean = SqlText.stripComments(content)
-    val sqls = SqlText.splitQueries(clean) match {
-      case Right(q) => q
-      case Left(err) => throw new IllegalArgumentException(err)
-    }
-
-    val store = tokenVars(cfg.variables)
-    val macros = new Macros.MacroStore
+    val sqls = Statements.split(content).fold(err => throw new IllegalArgumentException(err), identity)
+    val store = req.store
     val definedVars = mutable.Set.empty[String]
     definedVars ++= store.singleVars.keys
     definedVars ++= store.multiVars.keys
@@ -156,8 +134,7 @@ object Dashboard {
     val unsetVariables = mutable.ArrayBuffer.empty[String]
     val downloadLinkParams = mutable.LinkedHashMap.empty[String, Vector[String]]
 
-    for ((sqlString0, queryIndex) <- sqls.zipWithIndex) {
-      val sqlString = sqlString0.trim
+    for ((sqlString, queryIndex) <- sqls.zipWithIndex) {
       if (sqlString.nonEmpty) {
         // unset-variable detection before substitution
         Dialect.referencedVariables(sqlString).foreach { name =>
@@ -177,9 +154,12 @@ object Dashboard {
             !canStartSection(sqlString)) {
           // skipped: inside a hidden section
         } else if (Gate.isSideEffect(sqlString)) {
-          runSideEffect(spark, sqlString, store, macros, tempTables)
+          // USE / BEGIN / COMMIT / ROLLBACK / ABORT / CALL / ATTACH are not
+          // the side-effect step's: transactions are a no-op on Spark
+          // (documented divergence)
+          req.sideEffect(sqlString)
         } else {
-          val (schema, rows) = collectCapped(runQuery(spark, sqlString, store, macros), cfg.cache)
+          val (schema, rows) = req.collect(req.compile(sqlString))
 
           def is1x1 = rows.length == 1 && rows.head.length == 1
 
@@ -297,180 +277,13 @@ object Dashboard {
       unsetVariables.toSeq)
   }
 
-  /** Validation endpoint semantics: run the full dashboard, report
-    * (valid, durationMs, error) (ref: web/handler/validate.go:25-70). */
-  def validate(spark: SparkSession, content: String,
-      cfg: RunConfig = RunConfig()): (Boolean, Long, Option[String]) = {
-    val t0 = System.nanoTime()
-    try {
-      run(spark, content, cfg)
-      (true, (System.nanoTime() - t0) / 1000000, None)
-    } catch {
-      case e: Exception =>
-        (false, (System.nanoTime() - t0) / 1000000,
-          Some(Option(e.getMessage).getOrElse(e.toString)))
-    }
-  }
-
-  // ---- execution -----------------------------------------------------
+  // ---- download URLs -------------------------------------------------
 
   private def base64Json(params: Map[String, Vector[String]]): String = {
     val json = params.toSeq.sortBy(_._1).map { case (k, vs) =>
       Model.jsonValue(k) + ":" + vs.map(Model.jsonValue).mkString("[", ",", "]")
     }.mkString("{", ",", "}")
     java.util.Base64.getEncoder.encodeToString(json.getBytes(StandardCharsets.UTF_8))
-  }
-
-  /** A query statement's schema and first `QueryMaxRows + 1` rows (the
-    * reference keeps cap+1 rows: append-then-check loop), reused from
-    * [[ResultCache]] while the plan and its input files are unchanged.
-    * Also used by Download's collect-vars-only replay. The rows may be
-    * shared with other renders: copy before changing a cell. */
-  private[interp] def collectCapped(df: DataFrame,
-      cache: ResultCache = ResultCache.shared): (Seq[StructField], Seq[Row]) = {
-    val (schema, rows) = cache.collect(df, QueryMaxRows + 1)
-    (schema.fields.toSeq, rows)
-  }
-
-  /** A request's `CREATE TEMP TABLE`s. One whose rows fit in
-    * `TempTableMaxRows` and `TempTableMaxBytes` becomes local data in the
-    * request's own session, visible to nothing else and, as local data,
-    * keyed by its rows in [[ResultCache]]. A larger one is cached in
-    * executor storage, which every session's `CacheManager` shares, and
-    * `release` uncaches it when the request ends, so no request leaves
-    * data behind that another request's plan could pick up. */
-  private[interp] final class TempTables(spark: SparkSession) {
-    private val cached = mutable.ArrayBuffer.empty[String]
-
-    def create(name: String, df: DataFrame): Unit = {
-      val rows = df.limit(TempTableMaxRows + 1).collect()
-      val toRow = encoderFor(df.encoder).createSerializer()
-      def bytes = rows.iterator.map(r => toRow(r).asInstanceOf[UnsafeRow].getSizeInBytes.toLong).sum
-      if (rows.length <= TempTableMaxRows && bytes <= TempTableMaxBytes)
-        spark.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema).createOrReplaceTempView(name)
-      else {
-        df.createOrReplaceTempView(name)
-        spark.catalog.cacheTable(name)
-        cached += name
-      }
-    }
-
-    def release(): Unit = cached.distinct.foreach { name =>
-      if (spark.catalog.tableExists(name) && spark.catalog.isCached(name)) spark.catalog.uncacheTable(name)
-    }
-  }
-
-  /** Rows and bytes (as `UnsafeRow`s) of a temp table kept as local data:
-    * it lives on the driver for the request and, inside statement plans,
-    * in result-cache keys, so it must stay small beside the cache's
-    * 64 MB budget. */
-  private val TempTableMaxRows = 10000
-  private val TempTableMaxBytes = 1L << 20
-
-  /** Also used by Download's collect-vars-only replay. */
-  private[interp] def runSideEffect(spark: SparkSession, sqlString: String, store: VarStore,
-      macros: Macros.MacroStore, tempTables: TempTables): Unit =
-    sqlString match {
-      case _ if Macros.isCreateMacro(sqlString) =>
-        Macros.parseCreate(sqlString).foreach(macros.define)
-      case setVarStmt(name, expr) =>
-        val rewritten = Dialect.rewrite(Macros.expand(expr, macros), store.render)
-        val row = spark.sql(s"SELECT ($rewritten) AS v").collect().headOption
-        val v = row.map(r => r.get(0)).orNull
-        v match {
-          case s: scala.collection.Seq[_] =>
-            store.multiVars(name) = s.map(String.valueOf).toSeq
-            store.singleVars.remove(name)
-          case other =>
-            store.singleVars(name) = renderLiteral(other)
-            store.multiVars.remove(name)
-        }
-      case resetVarStmt(name) =>
-        store.singleVars.remove(name)
-        store.multiVars.remove(name)
-      case createTempView(kind, viewName, body) =>
-        // CREATE TEMP TABLE ⇒ materialized rows; TEMP VIEW ⇒ a view,
-        // re-evaluated by every statement that reads it
-        val rewritten = Dialect.rewrite(Macros.expand(body, macros), store.render)
-        val df = spark.sql(rewritten)
-        val clean = viewName.stripPrefix("\"").stripSuffix("\"")
-        if (kind.equalsIgnoreCase("TABLE")) tempTables.create(clean, df)
-        else df.createOrReplaceTempView(clean)
-      case _ =>
-        // USE / BEGIN / COMMIT / ROLLBACK / ABORT / CALL / ATTACH:
-        // transactions are a no-op on Spark (documented divergence)
-        ()
-    }
-
-  private[graft] def renderLiteral(v: Any): String = v match {
-    case null => "NULL"
-    case s: String => "'" + SqlText.escapeSQLString(s) + "'"
-    case t: java.sql.Timestamp =>
-      "TIMESTAMP '" + t.toInstant.atZone(java.time.ZoneOffset.UTC).toLocalDateTime
-        .format(DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss.SSSSSS")) + "'"
-    case d: java.sql.Date => "DATE '" + d.toLocalDate + "'"
-    case d: java.time.LocalDate => "DATE '" + d + "'"
-    case b: java.lang.Boolean => b.toString
-    case n: java.lang.Number => n.toString
-    case other => "'" + SqlText.escapeSQLString(String.valueOf(other)) + "'"
-  }
-
-  private def runQuery(spark: SparkSession, sqlString0: String, store: VarStore,
-      macros: Macros.MacroStore): DataFrame = {
-    val sqlString = Macros.expand(sqlString0, macros)
-    if (graft.catalog.CatalogFunctions.referenced(sqlString))
-      graft.catalog.CatalogFunctions.refresh(spark)
-    val upper = sqlString.toUpperCase
-    if (upper.startsWith("SUMMARIZE")) summarize(spark, sqlString, store)
-    else if (graft.sqlfront.PivotStmt.isPivotStatement(sqlString))
-      graft.sqlfront.PivotStmt.execute(spark, Dialect.rewrite(sqlString, store.render))
-    else spark.sql(Dialect.rewrite(sqlString, store.render))
-  }
-
-  /** `SUMMARIZE t` / `SUMMARIZE SELECT ...` → per-column stats, one pass
-    * over the data (single aggregate job), pivoted driver-side into the
-    * DuckDB-shaped (column_name, column_type, min, max, approx_unique,
-    * avg, std, q25, q50, q75, count, null_percentage) rows. */
-  private def summarize(spark: SparkSession, sqlString: String, store: VarStore): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val rest = sqlString.substring("SUMMARIZE".length).trim
-    val df =
-      if (rest.toUpperCase.startsWith("SELECT") || rest.toUpperCase.startsWith("FROM") ||
-          rest.startsWith("("))
-        spark.sql(Dialect.rewrite(rest, store.render))
-      else spark.table(rest)
-    val fields = df.schema.fields
-    val aggs = fields.flatMap { f =>
-      val c = col("`" + f.name + "`")
-      val isNum = f.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType]
-      Seq(
-        min(c).cast("string").as(s"${f.name}__min"),
-        max(c).cast("string").as(s"${f.name}__max"),
-        approx_count_distinct(c).as(s"${f.name}__uniq"),
-        (if (isNum) avg(c).cast("string") else lit(null).cast("string")).as(s"${f.name}__avg"),
-        (if (isNum) stddev_samp(c).cast("string") else lit(null).cast("string")).as(s"${f.name}__std"),
-        (if (isNum) expr(s"percentile(`${f.name}`, 0.25)").cast("string") else lit(null).cast("string")).as(s"${f.name}__q25"),
-        (if (isNum) expr(s"percentile(`${f.name}`, 0.5)").cast("string") else lit(null).cast("string")).as(s"${f.name}__q50"),
-        (if (isNum) expr(s"percentile(`${f.name}`, 0.75)").cast("string") else lit(null).cast("string")).as(s"${f.name}__q75"),
-        count(c).as(s"${f.name}__nonnull"),
-        count(lit(1)).as(s"${f.name}__count"))
-    }
-    val r = df.agg(aggs.head, aggs.tail: _*).collect().head
-    val out = fields.zipWithIndex.map { case (f, fi) =>
-      val base = fi * 10
-      val cnt = r.getLong(base + 9)
-      val nonnull = r.getLong(base + 8)
-      val nullPct =
-        if (cnt == 0) 0.0
-        else math.round((cnt - nonnull).toDouble / cnt * 10000).toDouble / 100
-      (f.name, f.dataType.sql, r.getString(base), r.getString(base + 1),
-        r.getLong(base + 2), r.getString(base + 3), r.getString(base + 4),
-        r.getString(base + 5), r.getString(base + 6), r.getString(base + 7),
-        cnt, nullPct)
-    }
-    import spark.implicits._
-    out.toSeq.toDF("column_name", "column_type", "min", "max", "approx_unique",
-      "avg", "std", "q25", "q50", "q75", "count", "null_percentage")
   }
 
   // ---- variable collection (ref: collectVars, get_dashboard.go:1511-1791)

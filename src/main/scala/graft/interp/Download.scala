@@ -2,8 +2,7 @@ package graft.interp
 
 import graft.export.Export
 import graft.render.Render
-import graft.sqlfront.{Dialect, Gate, Macros, SqlText}
-import graft.types.ShaperTypes
+import graft.sqlfront.Gate
 import org.apache.spark.sql.SparkSession
 
 import java.io.Writer
@@ -13,37 +12,30 @@ import java.io.Writer
   * collect-vars-only mode (so dropdown defaults and URL params populate
   * variables exactly as in a render), then stream the target through
   * the requested writer (ref: server/core/stream_query.go:69-334,
-  * 737-816 — ops #28-31).
+  * 737-816 — ops #28-31). Replayed statements and the target take the
+  * same steps as a render's ([[Statements]]), so every statement form a
+  * render accepts (SUMMARIZE, PIVOT, `duckdb_*` catalog functions,
+  * macros, variables, temp tables) downloads too.
   */
 object Download {
 
   /** Run a dashboard download end-to-end. `queryId` overrides target
     * resolution (the reference's query_id param). */
-  def run(spark0: SparkSession, content: String, format: String, out: Writer,
+  def run(spark: SparkSession, content: String, format: String, out: Writer,
       queryId: Option[Int] = None,
       queryParams: Map[String, Seq[String]] = Map.empty,
       variables: Map[String, Any] = Map.empty,
       prepare: SparkSession => Unit = _ => (),
       /** Binary sink for the xlsx writer (POI writes a zip container, so
         * a character Writer can't carry it). */
-      binOut: java.io.OutputStream = null): Either[String, Unit] = {
-    val spark = graft.Sessions.request(spark0)
-    val tempTables = new Dashboard.TempTables(spark)
-    try download(spark, content, format, out, queryId, queryParams, variables, prepare, binOut, tempTables)
-    finally tempTables.release()
-  }
+      binOut: java.io.OutputStream = null): Either[String, Unit] =
+    Statements.request(spark, variables, prepare)(
+      download(_, content, format, out, queryId, queryParams, variables, binOut))
 
-  private def download(spark: SparkSession, content: String, format: String, out: Writer,
+  private def download(req: Statements.Request, content: String, format: String, out: Writer,
       queryId: Option[Int], queryParams: Map[String, Seq[String]], variables: Map[String, Any],
-      prepare: SparkSession => Unit, binOut: java.io.OutputStream,
-      tempTables: Dashboard.TempTables): Either[String, Unit] = {
-    ShaperTypes.register(spark)
-    graft.exprs.Boxplot.register(spark)
-    graft.exprs.Len.register(spark)
-    prepare(spark)
-
-    val clean = SqlText.stripComments(content)
-    val sqls = SqlText.splitQueries(clean) match {
+      binOut: java.io.OutputStream): Either[String, Unit] = {
+    val sqls = Statements.split(content) match {
       case Right(q) => q
       case Left(err) => return Left(err)
     }
@@ -56,64 +48,57 @@ object Download {
       }
     }
 
-    val store = Dashboard.tokenVars(variables)
-    val macros = new Macros.MacroStore
     // vars-before-download replay: run the preceding statements purely to
     // collect variables, honoring the skip-after-download-button rule.
     // Every statement — replayed or skipped — must pass the SQL gate, and
     // query errors abort the download (ref: stream_query.go:752-816).
     var nextIsDownload = false
-    var queryIndex = 0
-    sqls.take(target).foreach { sqlString0 =>
-      val sqlString = sqlString0.trim
-      queryIndex += 1
-      if (sqlString.nonEmpty) {
-        if (!Gate.isAllowedStatement(sqlString))
-          return Left(s"disallowed SQL statement in query $queryIndex")
-        if (nextIsDownload) {
-          nextIsDownload = false
-        } else if (Gate.isSideEffect(sqlString)) {
-          // SET VARIABLE / CREATE TEMP MACRO etc. must still apply
-          Dashboard.runSideEffect(spark, sqlString, store, macros, tempTables)
-        } else {
-          try {
-            val (schema, rows) = Dashboard.collectCapped(spark.sql(
-              Dialect.rewrite(Macros.expand(sqlString, macros), store.render)))
-            // the reference reads ALL rows here (stream_query.go:767-790
-            // appends every row), but the rows feed only collectVars —
-            // dropdown option/default extraction — and the render path
-            // caps the same statements at QueryMaxRows anyway, so any
-            // option visible in a render fits under the cap. Cap the
-            // replay collect too: a huge widget query before a download
-            // button must not materialize fully in the serving process
-            // (deliberate divergence, logged when it engages). The replay
-            // shares the render's result cache, so a download after a
-            // render replays without running these statements again.
-            if (rows.length > Dashboard.QueryMaxRows)
-              org.slf4j.LoggerFactory.getLogger(getClass).warn(
-                s"download var-replay truncated query $queryIndex at ${Dashboard.QueryMaxRows} rows")
-            val rInfo = Render.getRenderInfo(schema, rows, "", Nil,
-              () => System.currentTimeMillis())
-            if (rInfo.download == "csv" || rInfo.download == "xlsx" || rInfo.download == "json")
-              nextIsDownload = true
-            val columns = schema.zipWithIndex.map { case (f, i) =>
-              graft.render.Model.ColumnSpec(f.name, Render.mapColType(f, rows, i),
-                f.nullable, Render.mapTag(i, rInfo))
-            }
-            Dashboard.collectVars(store, variables, rInfo.tpe, queryParams,
-              columns, schema, rows)
-          } catch {
-            case e: Exception =>
-              return Left(s"error in query $queryIndex: ${e.getMessage}")
+    for ((sqlString, i) <- sqls.take(target).zipWithIndex if sqlString.nonEmpty) {
+      val queryIndex = i + 1
+      if (!Gate.isAllowedStatement(sqlString))
+        return Left(s"disallowed SQL statement in query $queryIndex")
+      if (nextIsDownload) {
+        nextIsDownload = false
+      } else if (Gate.isSideEffect(sqlString)) {
+        // SET VARIABLE / CREATE TEMP MACRO etc. must still apply
+        req.sideEffect(sqlString)
+      } else {
+        try {
+          val (schema, rows) = req.collect(req.compile(sqlString))
+          // the reference reads ALL rows here (stream_query.go:767-790
+          // appends every row), but the rows feed only collectVars —
+          // dropdown option/default extraction — and the render path
+          // caps the same statements at QueryMaxRows anyway, so any
+          // option visible in a render fits under the cap. Cap the
+          // replay collect too: a huge widget query before a download
+          // button must not materialize fully in the serving process
+          // (deliberate divergence, logged when it engages). The replay
+          // shares the render's result cache, so a download after a
+          // render replays without running these statements again.
+          if (rows.length > Dashboard.QueryMaxRows)
+            org.slf4j.LoggerFactory.getLogger(getClass).warn(
+              s"download var-replay truncated query $queryIndex at ${Dashboard.QueryMaxRows} rows")
+          val rInfo = Render.getRenderInfo(schema, rows, "", Nil,
+            () => System.currentTimeMillis())
+          if (rInfo.download == "csv" || rInfo.download == "xlsx" || rInfo.download == "json")
+            nextIsDownload = true
+          val columns = schema.zipWithIndex.map { case (f, i) =>
+            graft.render.Model.ColumnSpec(f.name, Render.mapColType(f, rows, i),
+              f.nullable, Render.mapTag(i, rInfo))
           }
+          Dashboard.collectVars(req.store, variables, rInfo.tpe, queryParams,
+            columns, schema, rows)
+        } catch {
+          case e: Exception =>
+            return Left(s"error in query $queryIndex: ${e.getMessage}")
         }
       }
     }
 
-    val targetSql = sqls(target).trim
+    val targetSql = sqls(target)
     if (!Gate.isAllowedStatement(targetSql))
       return Left(s"disallowed SQL statement in query ${target + 1}")
-    val df = spark.sql(Dialect.rewrite(Macros.expand(targetSql, macros), store.render))
+    val df = req.compile(targetSql)
     format match {
       case "csv" => Export.toCSV(df, out); Right(())
       case "json" => Export.toJSON(df, out); Right(())
@@ -219,27 +204,17 @@ object ValidateApi {
 }
 
 /** `POST /api/sql`: single-statement enforcement + gate + CSV stream
-  * (ref: server/web/handler/sql.go:14-80). */
+  * (ref: server/web/handler/sql.go:14-80). The statement is compiled as
+  * a render's is ([[Statements]]). */
 object SqlApi {
-  def runSingleToCSV(spark0: SparkSession, sql: String, out: Writer,
+  def runSingleToCSV(spark: SparkSession, sql: String, out: Writer,
       variables: Map[String, Any] = Map.empty,
-      prepare: SparkSession => Unit = _ => ()): Either[String, Unit] = {
-    val spark = graft.Sessions.request(spark0)
-    ShaperTypes.register(spark)
-    graft.exprs.Len.register(spark)
-    prepare(spark)
-    val clean = SqlText.stripComments(sql)
-    SqlText.splitQueries(clean) match {
-      case Left(err) => Left(err)
-      case Right(stmts) =>
-        val nonEmpty = stmts.map(_.trim).filter(_.nonEmpty)
-        if (nonEmpty.length != 1) Left("exactly one SQL statement required")
-        else if (!Gate.isAllowedStatement(nonEmpty.head)) Left("Disallowed SQL statement")
-        else {
-          val store = Dashboard.tokenVars(variables)
-          Export.toCSV(spark.sql(Dialect.rewrite(nonEmpty.head, store.render)), out)
-          Right(())
-        }
+      prepare: SparkSession => Unit = _ => ()): Either[String, Unit] =
+    Statements.request(spark, variables, prepare) { req =>
+      Statements.split(sql).flatMap(_.filter(_.nonEmpty) match {
+        case Seq(one) if Gate.isAllowedStatement(one) => Right(Export.toCSV(req.compile(one), out))
+        case Seq(_) => Left("Disallowed SQL statement")
+        case _ => Left("exactly one SQL statement required")
+      })
     }
-  }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.catalog.BucketSpec
 import org.apache.spark.sql.catalyst.encoders.encoderFor
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LocalRelation, LogicalPlan, OneRowRelation, Range}
+import org.apache.spark.sql.catalyst.trees.TreePattern.CURRENT_LIKE
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.SizeEstimator
@@ -26,9 +27,8 @@ import scala.util.Try
   * An entry is keyed on the statement's *stem*:
   *  - the canonicalized *optimized* plan of the capped query, with each
   *    file relation reduced to what it reads and how (not its listing).
-  *    The optimizer folds `now()`/`current_date` into literals, so a
-  *    time-dependent statement never matches an older run; variables are
-  *    literals by then too (`Dialect.rewrite`), so tenants never share;
+  *    Variables are literals by then (`Dialect.rewrite`), so tenants
+  *    never share;
   *  - the output schema, because canonicalization erases alias names;
   *  - the session's SQL conf.
   *
@@ -58,8 +58,12 @@ import scala.util.Try
   * on the allow-list (local data, `Range`, a file relation over a listed
   * index) are cached; anything else (`CACHE TABLE` `InMemoryRelation`s,
   * RDD or V2 sources, an unpruned partitioned catalog table) runs every
-  * time. Cached rows and states are shared between renders and must not
-  * be mutated. The cache is bounded by estimated bytes, evicting least
+  * time. So does a statement that reads the clock (`now()`,
+  * `current_date` and the rest of what `ComputeCurrentTime` folds): its
+  * optimized plan holds that run's time as a literal, so its stem would
+  * never be seen again and its entry would only push reusable ones out.
+  * Cached rows and states are shared between renders and must not be
+  * mutated. The cache is bounded by estimated bytes, evicting least
   * recently used entries first.
   */
 final class ResultCache(maxBytes: Long) {
@@ -140,7 +144,7 @@ object ResultCache {
   /** Budget for all cached keys and results (estimated bytes). */
   private val MaxBytes: Long = 64L << 20
 
-  /** The cache every render and download shares. */
+  /** The cache every request shares. */
   val shared = new ResultCache(MaxBytes)
 
   /** What a statement computes, whatever its files hold. */
@@ -177,8 +181,12 @@ object ResultCache {
 
   /** The statement's stem and the listing of each relation it reads. */
   private def keyOf(capped: DataFrame, schema: StructType): Option[(Stem, Seq[Files])] = {
-    val plan = capped.queryExecution.optimizedPlan
-    if (plan.collectFirstWithSubqueries { case n if !allowed(n) => n }.isDefined) None
+    val qe = capped.queryExecution
+    val plan = qe.optimizedPlan
+    if (plan.collectFirstWithSubqueries { case n if !allowed(n) => n }.isDefined ||
+        qe.analyzed.collectFirstWithSubqueries {
+          case n if n.expressions.exists(_.containsPattern(CURRENT_LIKE)) => n
+        }.isDefined) None
     else {
       val files = Seq.newBuilder[Files]
       val stemPlan = plan.canonicalized.transformUpWithSubqueries {
@@ -190,7 +198,7 @@ object ResultCache {
             fs.fileFormat.getClass.getName, fs.dataSchema, fs.partitionSchema,
             fs.bucketSpec, fs.options)
       }
-      Some((Stem(stemPlan, schema, capped.queryExecution.sparkSession.sessionState.conf.getAllConfs),
+      Some((Stem(stemPlan, schema, qe.sparkSession.sessionState.conf.getAllConfs),
         files.result()))
     }
   }

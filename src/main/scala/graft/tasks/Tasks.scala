@@ -1,13 +1,14 @@
 package graft.tasks
 
+import graft.interp.Statements
 import graft.render.Render
-import graft.sqlfront.{Dialect, Gate, Macros, SqlText}
-import graft.types.ShaperTypes
+import graft.sqlfront.Gate
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
-import org.apache.spark.sql.types.StructField
+import org.apache.spark.sql.types.{LongType, StructField}
 
 import java.util.concurrent.{Executors, ScheduledExecutorService, ScheduledFuture, TimeUnit}
 import scala.collection.mutable
+import scala.util.Try
 
 /** SQL task engine: SCHEDULE extraction, the per-statement executor with
   * early stop on a single false boolean, and a single-node scheduler
@@ -19,6 +20,18 @@ import scala.collection.mutable
   * execution is sequential with stop-on-error — a documented divergence
   * (SURVEY.md §7 hard part 6); `needsNoTransaction` is kept for parity
   * of the no-TX classification itself.
+  *
+  * A task takes the statement path renders take (`graft.interp.Statements`):
+  * a fresh request session, the side-effect step, the compile step and the
+  * capped collect through the result cache. So a task honours `SET` and
+  * `RESET VARIABLE` (read back with `getvariable`), `CREATE TEMP MACRO`,
+  * `CREATE TEMP TABLE/VIEW … AS` (gone when the task ends), SUMMARIZE,
+  * PIVOT and the `duckdb_*` catalog functions as a render does. The task's
+  * own fold adds the task gate, the `needsNoTransaction` no-ops,
+  * UPDATE/DELETE ([[Mutations]], with the task's macros and variables
+  * bound first), `CREATE OR REPLACE TABLE … AS`,
+  * SCHEDULE and stop-on-false; every other statement (DDL, INSERT, `USE`)
+  * Spark runs.
   */
 object Tasks {
 
@@ -67,31 +80,25 @@ object Tasks {
 
   /** Run SCHEDULE-candidate statements read-only to compute the next run.
     * Returns (nextRunAtMillis or None, scheduleType: single|all|init).
+    * A candidate that fails is skipped.
     * (ref: getNextTaskRun, schedule_task.go:74-142) */
-  def getNextTaskRun(spark0: SparkSession, content: String,
+  def getNextTaskRun(spark: SparkSession, content: String,
       nowMillis: () => Long = () => System.currentTimeMillis(),
-      prepare: SparkSession => Unit = _ => ()): (Option[Long], String) = {
-    val spark = graft.Sessions.request(spark0)
-    ShaperTypes.register(spark)
-    prepare(spark)
-    val clean = SqlText.stripComments(content)
-    val sqls = SqlText.splitQueries(clean).getOrElse(return (None, "single"))
-    val candidates = sqls.filter(isScheduleQueryCandidate).map(_.trim)
-    candidates.foreach { sql =>
-      try {
-        val df = spark.sql(Dialect.rewrite(sql))
-        val schema = df.schema.fields.toSeq
-        val rows = df.limit(2).collect().toSeq
-        getScheduleColumn(schema, rows).foreach { scheduleType =>
-          val t = Render.getScheduleTime(rows, nowMillis)
-          if (t == -1) return (None, "init")
-          if (t <= 0) return (None, scheduleType)
-          return (Some(t), scheduleType)
-        }
-      } catch { case _: Exception => () } // candidate failed: try the next
+      prepare: SparkSession => Unit = _ => ()): (Option[Long], String) =
+    Statements.request(spark, prepare = prepare) { req =>
+      Statements.split(content).getOrElse(Nil).filter(isScheduleQueryCandidate).iterator
+        .flatMap(sql => Try {
+          // getScheduleColumn accepts at most one row: two rows are enough
+          val (schema, rows) = req.collect(req.compile(sql).limit(2))
+          getScheduleColumn(schema, rows).map { scheduleType =>
+            val t = Render.getScheduleTime(rows, nowMillis)
+            if (t == -1) (None, "init")
+            else if (t <= 0) (None, scheduleType)
+            else (Some(t), scheduleType)
+          }
+        }.toOption.flatten)
+        .nextOption().getOrElse((None, "single"))
     }
-    (None, "single")
-  }
 
   /** Boot-time init-task selection (ref: GetInitTasks,
     * schedule_task.go:37-63): tasks whose last journaled run left
@@ -124,142 +131,99 @@ object Tasks {
     * query's schema. A query reading its own target is refused before
     * anything is dropped. Like every task statement it is not
     * transactional (see above): a query that fails at run time leaves
-    * the target dropped. Returns the same empty result a plain
-    * `CREATE TABLE … AS` statement does. */
-  private def replaceTableAs(spark: SparkSession, name: String, query: String): DataFrame = {
-    val target = name.replace('"', '`')
-    val df = spark.sql(query)
-    df.write.mode(SaveMode.Overwrite).saveAsTable(target)
-    spark.emptyDataFrame
-  }
+    * the target dropped. */
+  private def replaceTableAs(df: DataFrame, name: String): Unit =
+    df.write.mode(SaveMode.Overwrite).saveAsTable(name.replace('"', '`'))
 
   /** Execute a task: split → gate → per-statement run, result capture,
     * early stop on single false boolean, SCHEDULE row excluded from
     * results, error stops the batch.
     * (ref: executeTaskOnDB, run_task.go:67-258) */
-  def executeTask(spark0: SparkSession, content: String,
+  def executeTask(spark: SparkSession, content: String,
       nowMillis: () => Long = () => System.currentTimeMillis(),
-      prepare: SparkSession => Unit = _ => ()): TaskResult = {
-    val spark = graft.Sessions.request(spark0)
-    ShaperTypes.register(spark)
-    graft.exprs.Boxplot.register(spark)
-    graft.exprs.Len.register(spark)
-    prepare(spark)
+      prepare: SparkSession => Unit = _ => ()): TaskResult =
+    Statements.request(spark, prepare = prepare)(executeIn(_, content, nowMillis))
 
+  private def executeIn(req: Statements.Request, content: String,
+      nowMillis: () => Long): TaskResult = {
     val startedAt = nowMillis()
-    val clean = SqlText.stripComments(content)
-    val sqls = SqlText.splitQueries(clean) match {
+    val sqls = Statements.split(content) match {
       case Right(q) => q
       case Left(err) => return TaskResult(startedAt,
         Seq(TaskQueryResult(content, Nil, Nil, 0, Some(err), stopExecution = false)),
         0, 0, "", success = false)
     }
     var totalQueries = sqls.length
-    val macros = new Macros.MacroStore
     val queries = mutable.ArrayBuffer.empty[TaskQueryResult]
     var nextRunAt = 0L
     var scheduleType = ""
     var success = true
-    var stopped = false
 
-    for (sqlString0 <- sqls if !stopped) {
-      val sqlString = sqlString0.trim
-      if (sqlString.nonEmpty) {
-        if (!Gate.isAllowedTaskStatement(sqlString)) {
-          queries += TaskQueryResult(sqlString, Nil, Nil, 0,
-            Some("Statement not allowed in tasks (e.g., PRAGMA, SET configuration)"),
-            stopExecution = false)
-          success = false
-          stopped = true
-        } else if (needsNoTransaction(sqlString)) {
-          // ATTACH/INSTALL/LOAD/CREATE SECRET: no-op on Spark (documented)
-          queries += TaskQueryResult(sqlString, Nil, Nil, 0, None, stopExecution = false)
-        } else if (Mutations.isMutation(sqlString)) {
-          // UPDATE/DELETE: rewrite-on-write over the parquet warehouse;
-          // result is DuckDB's affected-row Count shape (run_task.go
-          // records it like any query result)
-          val start = System.nanoTime()
-          try {
-            val n = Mutations.execute(spark, Macros.expand(sqlString, macros))
-            queries += TaskQueryResult(sqlString, Seq("Count"), Seq(Seq(n)),
-              (System.nanoTime() - start) / 1000000, None, stopExecution = false)
-          } catch {
-            case e: Exception =>
-              queries += TaskQueryResult(sqlString, Nil, Nil,
-                (System.nanoTime() - start) / 1000000,
-                Some(Option(e.getMessage).getOrElse(e.toString)), stopExecution = false)
-              success = false
-              stopped = true
+    /** A statement's schema and rows: the task's own forms first, then
+      * the side-effect step, then a query through the shared collect. */
+    def run(sqlString: String): (Seq[StructField], Seq[Row]) =
+      if (needsNoTransaction(sqlString)) (Nil, Nil) // ATTACH/INSTALL/LOAD/CREATE SECRET: no-op on Spark (documented)
+      else if (Mutations.isMutation(sqlString))
+        // UPDATE/DELETE: rewrite-on-write over the parquet warehouse;
+        // result is DuckDB's affected-row Count shape (run_task.go
+        // records it like any query result)
+        (Seq(StructField("Count", LongType)),
+          Seq(Row(Mutations.execute(req.spark, req.bind(sqlString)))))
+      else if (req.sideEffect(sqlString)) (Nil, Nil)
+      else sqlString match {
+        case createOrReplaceTableAs(name, body) => replaceTableAs(req.compile(body), name); (Nil, Nil)
+        case _ => req.collect(req.compile(sqlString))
+      }
+
+    var stopped = false
+    for (sqlString <- sqls if sqlString.nonEmpty && !stopped) {
+      if (!Gate.isAllowedTaskStatement(sqlString)) {
+        queries += TaskQueryResult(sqlString, Nil, Nil, 0,
+          Some("Statement not allowed in tasks (e.g., PRAGMA, SET configuration)"),
+          stopExecution = false)
+        success = false
+      } else {
+        val start = System.nanoTime()
+        def duration = (System.nanoTime() - start) / 1000000
+        try {
+          val (schema, rows) = run(sqlString)
+          val serRows = rows.map(r =>
+            schema.indices.map(i => Render.plainify(Render.unwrap(r.get(i)))))
+          val stopExecution = serRows.length == 1 && serRows.head.length == 1 &&
+            (serRows.head.head match {
+              case b: Boolean => !b
+              case b: java.lang.Boolean => !b.booleanValue()
+              case _ => false
+            })
+          val qr = TaskQueryResult(sqlString, schema.map(_.name), serRows,
+            duration, None, stopExecution)
+          getScheduleColumn(schema, rows) match {
+            case Some(st) =>
+              if (nextRunAt != 0) {
+                queries += qr.copy(error = Some("Multiple SCHEDULE queries in task"))
+                success = false
+              } else {
+                val t = Render.getScheduleTime(rows, nowMillis)
+                // 'init' is recorded as its own next_run_type so the
+                // next boot's GetInitTasks selection re-runs it
+                // (schedule_task.go:37-63); execution-wise it behaves
+                // like 'all' (every node, TaskNode.fire)
+                scheduleType = if (t == -1) "init" else st
+                nextRunAt = t
+                totalQueries = sqls.length - 1 // SCHEDULE row excluded
+              }
+            case None =>
+              queries += qr
           }
-        } else if (Macros.isCreateMacro(sqlString)) {
-          val start = System.nanoTime()
-          try {
-            Macros.parseCreate(sqlString).foreach(macros.define)
-            queries += TaskQueryResult(sqlString, Nil, Nil,
-              (System.nanoTime() - start) / 1000000, None, stopExecution = false)
-          } catch {
-            case e: Exception =>
-              queries += TaskQueryResult(sqlString, Nil, Nil,
-                (System.nanoTime() - start) / 1000000,
-                Some(Option(e.getMessage).getOrElse(e.toString)), stopExecution = false)
-              success = false
-              stopped = true
-          }
-        } else {
-          val start = System.nanoTime()
-          try {
-            // expand macros FIRST: a duckdb_* reference hidden inside a
-            // macro body must still trigger the catalog refresh
-            val expanded = Macros.expand(sqlString, macros)
-            if (graft.catalog.CatalogFunctions.referenced(expanded))
-              graft.catalog.CatalogFunctions.refresh(spark)
-            val df = expanded match {
-              case createOrReplaceTableAs(name, body) =>
-                replaceTableAs(spark, name, Dialect.rewrite(body))
-              case _ => spark.sql(Dialect.rewrite(expanded))
-            }
-            val schema = df.schema.fields.toSeq
-            val rows = df.limit(3001).collect().toSeq
-            val duration = (System.nanoTime() - start) / 1000000
-            val serRows = rows.map(r =>
-              schema.indices.map(i => Render.plainify(Render.unwrap(r.get(i)))))
-            val stopExecution = serRows.length == 1 && serRows.head.length == 1 &&
-              (serRows.head.head match {
-                case b: Boolean => !b
-                case b: java.lang.Boolean => !b.booleanValue()
-                case _ => false
-              })
-            val qr = TaskQueryResult(sqlString, schema.map(_.name), serRows,
-              duration, None, stopExecution)
-            getScheduleColumn(schema, rows) match {
-              case Some(st) =>
-                if (nextRunAt != 0) {
-                  queries += qr.copy(error = Some("Multiple SCHEDULE queries in task"))
-                  success = false
-                } else {
-                  val t = Render.getScheduleTime(rows, nowMillis)
-                  // 'init' is recorded as its own next_run_type so the
-                  // next boot's GetInitTasks selection re-runs it
-                  // (schedule_task.go:37-63); execution-wise it behaves
-                  // like 'all' (every node, TaskNode.fire)
-                  scheduleType = if (t == -1) "init" else st
-                  nextRunAt = t
-                  totalQueries = sqls.length - 1 // SCHEDULE row excluded
-                }
-              case None =>
-                queries += qr
-            }
-            if (!success || stopExecution) stopped = true
-          } catch {
-            case e: Exception =>
-              queries += TaskQueryResult(sqlString, Nil, Nil,
-                (System.nanoTime() - start) / 1000000,
-                Some(Option(e.getMessage).getOrElse(e.toString)), stopExecution = false)
-              success = false
-              stopped = true
-          }
+          stopped = stopExecution
+        } catch {
+          case e: Exception =>
+            queries += TaskQueryResult(sqlString, Nil, Nil, duration,
+              Some(Option(e.getMessage).getOrElse(e.toString)), stopExecution = false)
+            success = false
         }
       }
+      if (!success) stopped = true
     }
     TaskResult(startedAt, queries.toSeq, totalQueries, nextRunAt, scheduleType, success)
   }

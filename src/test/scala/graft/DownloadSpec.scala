@@ -1,6 +1,7 @@
 package graft
 
-import graft.interp.{Download, DownloadApi, SqlApi, ValidateApi}
+import graft.export.Export
+import graft.interp.{Dashboard, Download, DownloadApi, SqlApi, ValidateApi}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -165,6 +166,54 @@ class DownloadSpec extends AnyFunSuite {
     assert(ValidateApi.validate(spark, "task", "SELECT 1")
       == Left("Task validation is currently not supported"))
     assert(ValidateApi.validate(spark, "invalid", "SELECT 1").isLeft)
+  }
+
+  /** `t(id, g)`: six rows in two groups. */
+  private def sixRows(ss: SparkSession): Unit =
+    ss.range(6).selectExpr("id", "id % 2 AS g").createOrReplaceTempView("t")
+
+  /** A render's last query as CSV lines: header, then its rows. */
+  private def rendered(content: String): Seq[String] = {
+    val q = Dashboard.run(spark, content, Dashboard.RunConfig(prepare = sixRows))
+      .sections.flatMap(_.queries).last
+    (q.columns.map(_.name) +: q.rows.map(_.map(Export.formatValue))).map(_.mkString(","))
+  }
+
+  /** The CSV lines of `content`'s download. */
+  private def downloaded(content: String): Seq[String] = {
+    val w = new StringWriter
+    val r = Download.run(spark, content, "csv", w, prepare = sixRows)
+    assert(r == Right(()), r)
+    w.toString.split("\n").toSeq
+  }
+
+  private val catalogTable = "download_spec_catalog"
+  private lazy val catalogTableCreated: Unit = {
+    spark.sql(s"DROP TABLE IF EXISTS $catalogTable")
+    val loc = new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir"), catalogTable)
+    loc.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(loc, true)
+    spark.sql(s"CREATE TABLE $catalogTable USING parquet AS SELECT 1 AS x")
+  }
+
+  test("a download target of SUMMARIZE, PIVOT or a duckdb_* catalog function gives the rendered rows") {
+    catalogTableCreated
+    Seq("SUMMARIZE t",
+      "PIVOT t ON g USING count(id)",
+      s"SELECT table_name, database_name FROM duckdb_tables() WHERE table_name = '$catalogTable'")
+      .foreach { target =>
+        val shown = rendered(s"$target;")
+        assert(shown.length > 1, s"$target rendered no rows")
+        assert(downloaded(s"SELECT 'x.csv'::DOWNLOAD_CSV AS dl;\n$target;") == shown, target)
+      }
+  }
+
+  test("a replayed duckdb_* statement before the download button sets its variable as in a render") {
+    catalogTableCreated
+    val widget = s"SELECT table_name::DROPDOWN AS tbl FROM duckdb_tables() WHERE table_name = '$catalogTable';"
+    val target = "SELECT getvariable('tbl') AS chosen;"
+    val shown = rendered(s"$widget\n$target")
+    assert(shown == Seq("chosen", catalogTable))
+    assert(downloaded(s"$widget\nSELECT 'x.csv'::DOWNLOAD_CSV AS dl;\n$target") == shown)
   }
 
   test("SqlApi: exactly one statement enforced (handler/sql_test.go:19-137)") {

@@ -337,7 +337,12 @@ class ResultCacheSpec extends AnyFunSuite {
   test("now() in the filter is never answered incrementally") {
     val dir = table(10)
     val content = "SELECT count(*) AS n FROM t WHERE timestamp_seconds(v) < now();"
-    afterChange(content, typed(dir), (0, 0, 1))(append(dir, 10, 12))
+    afterChange(content, typed(dir), (0, 0, 0))(append(dir, 10, 12))
+    // a statement that reads the clock is not stored: its stem holds the
+    // run's time and would never be seen again
+    val fresh = new ResultCache(64L << 20)
+    Dashboard.run(spark, content, typed(dir).copy(cache = fresh))
+    assert(fresh.size == 0)
   }
 
   test("a removed file falls back to a full run") {

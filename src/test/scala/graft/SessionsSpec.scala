@@ -103,12 +103,16 @@ class SessionsSpec extends AnyFunSuite {
   }
 
   test("a steady-state aggregate task compiles no generated code") {
+    // each run follows a rewrite, so the task's one statement misses the
+    // result cache and really runs
     val task = "SELECT event_type, count(*) AS n, max(ts) AS last FROM events " +
       "GROUP BY event_type ORDER BY event_type;"
-    val n = steadyStateCompiles(() => {
-      val r = Tasks.executeTask(spark, task, prepare = events)
+    val (n, misses) = steadyState(() => {
+      rewriteEvents()
+      val r = Tasks.executeTask(spark, task, prepare = growingEvents)
       assert(r.success, r)
     })
+    assert(misses == 3, s"task runs 2-4 missed $misses times")
     assert(n == 0, s"task runs 2-4 compiled $n classes")
   }
 

@@ -115,6 +115,49 @@ class TasksSpec extends AnyFunSuite {
     assert(spark.table(t).collect().map(_.getInt(0)).toSeq == Seq(1))
   }
 
+  test("SET VARIABLE in a task is read back by getvariable") {
+    val r = Tasks.executeTask(spark, "SET VARIABLE x = 5;\nSELECT getvariable('x') AS v;", now)
+    assert(r.success, r.queries.flatMap(_.error))
+    assert(r.queries.map(_.error) == Seq(None, None))
+    assert(r.queries.last.resultRows == Seq(Seq(5)))
+  }
+
+  test("a task's CREATE TEMP TABLE is readable in the task and gone after it") {
+    val tt = s"task_${runId}_temp"
+    val r = Tasks.executeTask(spark, s"CREATE TEMP TABLE $tt AS SELECT 1 AS a;\nSELECT a FROM $tt;", now)
+    assert(r.success, r.queries.flatMap(_.error))
+    assert(r.queries.last.resultRows == Seq(Seq(1)))
+    val next = Tasks.executeTask(spark, s"SELECT a FROM $tt;", now)
+    assert(!next.success)
+    assert(next.queries.head.error.exists(_.contains(tt)), next.queries.head.error)
+    val e = intercept[Exception](graft.interp.Dashboard.run(spark, s"SELECT a FROM $tt;"))
+    assert(e.getMessage.contains(tt), e.getMessage)
+    assert(!spark.catalog.tableExists(tt))
+  }
+
+  test("SUMMARIZE in a task gives one row per column") {
+    val r = Tasks.executeTask(spark, "SUMMARIZE t;", now,
+      prepare = ss => ss.range(4).selectExpr("id", "id % 2 AS g").createOrReplaceTempView("t"))
+    assert(r.success, r.queries.flatMap(_.error))
+    assert(r.queries.head.resultColumns.take(2) == Seq("column_name", "column_type"))
+    assert(r.queries.head.resultRows.map(_.head) == Seq("id", "g"))
+  }
+
+  test("a task's reads through the result cache see each INSERT of the task before") {
+    val t = s"task_${runId}_appended"
+    spark.sql(s"CREATE TABLE $t (x INT) USING PARQUET")
+    val cache = graft.interp.ResultCache.shared
+    val task = s"INSERT INTO $t VALUES (1);\nSELECT count(*) AS n FROM $t;"
+    def run(): (Seq[Seq[Any]], Long) = {
+      val (h, i, m) = (cache.hits.get, cache.incremental.get, cache.misses.get)
+      val r = Tasks.executeTask(spark, task, now)
+      assert(r.success, r.queries.flatMap(_.error))
+      (r.queries.last.resultRows, cache.hits.get - h + cache.incremental.get - i + cache.misses.get - m)
+    }
+    assert(run() == (Seq(Seq(1L)), 1L))
+    assert(run() == (Seq(Seq(2L)), 1L))
+  }
+
   test("early termination on single false boolean (run_task.go:195-199)") {
     val r = Tasks.executeTask(spark,
       s"""CREATE TABLE IF NOT EXISTS task_${runId}_t2 (x INT) USING PARQUET;
@@ -214,6 +257,22 @@ class TasksSpec extends AnyFunSuite {
     assert(res.queries(3).resultRows.length == 7)
     // updated row visible with its cast-back type
     assert(res.queries(3).resultRows.last == Seq(9L, 10))
+  }
+
+  test("UPDATE and DELETE in a task read the task's SET VARIABLE values") {
+    val t = s"mutvar_$runId"
+    val res = Tasks.executeTask(spark,
+      s"""CREATE TABLE $t AS SELECT id, CAST(0 AS INT) AS a FROM range(10);
+         |SET VARIABLE x = 5;
+         |SET VARIABLE lim = 8;
+         |UPDATE $t SET a = getvariable('x') WHERE id < getvariable('lim');
+         |DELETE FROM $t WHERE id = getvariable('x');
+         |SELECT id, a FROM $t ORDER BY id;""".stripMargin)
+    assert(res.success, res.queries.flatMap(_.error).mkString("; "))
+    assert(res.queries(3).resultRows == Seq(Seq(8L))) // id 0..7
+    assert(res.queries(4).resultRows == Seq(Seq(1L))) // id 5
+    assert(res.queries(5).resultRows ==
+      Seq(0L, 1L, 2L, 3L, 4L, 6L, 7L).map(i => Seq(i, 5)) ++ Seq(Seq(8L, 0), Seq(9L, 0)))
   }
 
   test("UPDATE without WHERE touches every row; DELETE without WHERE truncates") {
