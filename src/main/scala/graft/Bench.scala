@@ -2,28 +2,24 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import scala.util.{Failure, Success, Try}
+
 /** Per-round benchmark main (driver contract): runs every SparkEntry
   * query on SPARK_GRAFT_SF_DIR and prints ONE JSON line. A warmup
   * action runs first so the first measured query doesn't absorb
   * JVM/codegen/session initialization, and queries run in sorted name
   * order for run-to-run comparability.
+  *
+  * It also owns the measuring protocol the other timing mains (Profile,
+  * ScaleProbe, SkewBench) share: [[warmUp]] once, then per measured piece
+  * of work [[measure]] — one untimed pass, then two timed passes, the
+  * [[best]] of which is reported.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // warmup: initialize codegen, shuffle machinery, parquet reader
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    Tables.t(spark, sfDir, "lineitem").selectExpr("count(*)").collect()
+    val spark = Sessions.root()
+    warmUp(spark, sfDir)
 
     // optional comma-separated name filter for local isolation runs
     // (unset for the driver's full-suite run)
@@ -31,12 +27,8 @@ object Bench {
     val sorted = SparkEntry.queries.toSeq
       .filter { case (n, _) => only.forall(_.contains(n)) }
       .sortBy(_._1)
-    // steady-state measurement: one untimed pass per query first, so the
-    // timed pass reports execution cost, not first-run plan compilation
-    // and codegen (cold runs measured ~2x warm across the suite)
-    sorted.foreach { case (_, fn) =>
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => () }
-    }
+    // every entry's untimed pass runs before any timed one
+    sorted.foreach { case (_, fn) => warm(() => fn(spark, sfDir).count()) }
     // Prior-run per-query history (the committed BENCH_FULL.json, read
     // before this run overwrites it): entries whose measured min still
     // exceeds 5x their history get one extra post-GC pass — a full-GC
@@ -61,38 +53,26 @@ object Bench {
       System.gc()
     }
 
-    // min of the timed passes: single-pass numbers swung up to ~20% on
-    // an idle machine (GC/JIT), drowning real regressions in noise. A
-    // failed pass must never win the min — a fast throw would otherwise
-    // report a bogus near-zero time and mask the failure.
     val retried = collection.mutable.ArrayBuffer[String]()
     val results = sorted.map { case (name, fn) =>
-      def timed(): (Double, Boolean) = {
-        val t0 = System.nanoTime()
-        val ok = try { fn(spark, sfDir).count(); true } catch { case _: Throwable => false }
-        ((System.nanoTime() - t0) / 1e9, ok)
-      }
-      var passes = List(timed(), timed())
-      def best: (Double, Boolean) = {
-        val good = passes.filter(_._2)
-        if (good.nonEmpty) (good.map(_._1).min, true)
-        else (passes.map(_._1).max, false) // all failed: report, don't flatter
-      }
+      val run = () => fn(spark, sfDir).count()
+      var passes = Seq(pass(run), pass(run))
       // poisoned-pass detection: two successful passes of the same plan
       // diverging >3x means one absorbed a GC storm / co-tenant stall,
       // not execution cost — retry once after shedding state. Skip for
       // sub-half-second entries where scheduler jitter alone spans 3x.
-      val ps = passes.map(_._1)
-      if (passes.forall(_._2) && ps.max > 0.5 && ps.max / math.max(ps.min, 1e-9) > 3.0) {
-        shed(); retried += name; passes = passes :+ timed()
+      val ps = passes.map(_.seconds)
+      if (passes.forall(_.ok) && ps.max > 0.5 && ps.max / math.max(ps.min, 1e-9) > 3.0) {
+        shed(); retried += name; passes :+= pass(run)
       }
       // history check: a min still 5x above this entry's committed
       // prior-run cost (and >1 s absolute) is environmental until
       // proven otherwise — one more post-GC pass before we report it.
-      if (best._2 && history.get(name).exists(h => best._1 > 5 * h && best._1 > 1.0)) {
-        shed(); retried += name; passes = passes :+ timed()
+      val b = best(passes)
+      if (b.ok && history.get(name).exists(h => b.seconds > 5 * h && b.seconds > 1.0)) {
+        shed(); retried += name; passes :+= pass(run)
       }
-      val v = best._1
+      val v = best(passes).seconds
       shed()
       name -> v
     }
@@ -141,6 +121,49 @@ object Bench {
     // build now forks with StdoutOutput and showSuccess := false so
     // neither happens.)
     stopThenEmit(() => spark.stop(), println, line)
+  }
+
+  /** Untimed warm-up of codegen, the shuffle machinery and the parquet
+    * reader, so the first measured entry does not absorb session start. */
+  def warmUp(spark: SparkSession, sfDir: String): Unit = {
+    spark.range(1000000).selectExpr("sum(id)").collect()
+    Tables.t(spark, sfDir, "lineitem").selectExpr("count(*)").collect()
+  }
+
+  /** One timed pass: its wall seconds, and the rows it counted or what it
+    * threw. */
+  final case class Pass(seconds: Double, rows: Try[Long]) {
+    def ok: Boolean = rows.isSuccess
+  }
+
+  /** Runs `run` once, timed. Whatever it throws makes a failed pass; it is
+    * not rethrown, so one failing entry cannot end a sweep. */
+  def pass(run: () => Long): Pass = {
+    val t0 = System.nanoTime()
+    val rows = try Success(run()) catch { case t: Throwable => Failure(t) }
+    Pass((System.nanoTime() - t0) / 1e9, rows)
+  }
+
+  /** The untimed pass: plan compilation and codegen happen here, so the
+    * timed passes report execution cost (cold runs measured ~2x warm
+    * across the suite). Its failure is left to the timed passes to show. */
+  def warm(run: () => Long): Unit = { pass(run); () }
+
+  /** The pass to report: the fastest successful one — single passes swung
+    * up to ~20% on an idle machine (GC/JIT), so the min of several is
+    * taken. A failed pass never wins: a fast throw would report a bogus
+    * near-zero time and mask the failure. When every pass failed, the
+    * slowest is reported, as a failure. */
+  def best(passes: Seq[Pass]): Pass = {
+    val good = passes.filter(_.ok)
+    if (good.nonEmpty) good.minBy(_.seconds) else passes.maxBy(_.seconds)
+  }
+
+  /** The whole protocol for one piece of work: [[warm]], then two timed
+    * passes, both returned ([[best]] picks the one to report). */
+  def measure(run: () => Long): Seq[Pass] = {
+    warm(run)
+    Seq(pass(run), pass(run))
   }
 
   /** The `sf` value for a data dir name: the bare number when the dir is

@@ -1,31 +1,24 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** One-off kernel-level scaling probe for BENCH_SF1.json measurements
   * where the oracled entry's fixed parameters deliberately do NOT model
   * production (e.g. d17 pins K=8 for the oracle; SemDeDup at scale
   * grows K with the corpus so per-cluster pair cost stays flat). Runs a
-  * named kernel through the PUBLIC facade with caller parameters,
-  * min-of-2 timed passes after one untimed warmup — the same protocol
-  * as the SPARK_GRAFT_ONLY Bench runs it is compared against.
+  * named kernel through the PUBLIC facade with caller parameters, under
+  * Bench's measuring protocol (min of two timed passes after one untimed
+  * pass) — the same as the SPARK_GRAFT_ONLY Bench runs it is compared
+  * against.
   *
-  * Usage: ScaleProbe <sfDir> semdedup <k> <tau>
+  * Usage: SPARK_GRAFT_CPUS=32 graft.ScaleProbe <sfDir> semdedup <k> <tau>
+  * (the BENCH_SF1.json probes ran on 32 cores; the default is 4)
   */
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000000).selectExpr("sum(id)").collect()
+    val spark = Sessions.root()
+    Bench.warmUp(spark, sfDir)
 
     def run(): Long = args(1) match {
       case "semdedup" =>
@@ -56,13 +49,11 @@ object ScaleProbe {
           .count()
       case other => sys.error(s"unknown kernel: $other")
     }
-    run() // warmup pass: plan compilation + codegen
-    val times = (1 to 2).map { _ =>
-      val t0 = System.nanoTime(); val n = run()
-      ((System.nanoTime() - t0) / 1e9, n)
-    }
-    println(f"[probe] ${args.mkString(" ")}: min=${times.map(_._1).min}%.3f s " +
-      f"(passes ${times.map(t => f"${t._1}%.3f").mkString(", ")}; rows=${times.head._2})")
+    val passes = Bench.measure(() => run())
+    val b = Bench.best(passes)
+    println(f"[probe] ${args.mkString(" ")}: min=${b.seconds}%.3f s " +
+      f"(passes ${passes.map(p => f"${p.seconds}%.3f" + (if (p.ok) "" else " failed")).mkString(", ")}; " +
+      s"rows=${b.rows.fold(e => s"FAILED: $e", _.toString)})")
     spark.stop()
   }
 }

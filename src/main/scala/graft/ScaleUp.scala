@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scales an sf directory by an integer factor for larger-scale bench
@@ -28,14 +27,7 @@ object ScaleUp {
     val Array(src, out, factorStr) = args.take(3)
     val factor = factorStr.toInt
     require(factor >= 1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.root()
 
     val IdStride = 10000000L
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.api.HttpApi
 import graft.state.StateJournal
 import graft.tasks.{TaskScheduler, Tasks}
@@ -30,15 +28,7 @@ import graft.tasks.{TaskScheduler, Tasks}
   */
 object Serve {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.root()
 
     // Hadoop Path, not java.io.File: the warehouse may be s3a://…/hdfs://…
     // and File.getPath folds the authority into the path

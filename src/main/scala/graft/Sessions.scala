@@ -3,8 +3,10 @@ package graft
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 
-/** The one place a per-request Spark session is made — the Spark analog
-  * of shaper's fresh DuckDB connection per render (ref main.go:961-962).
+/** The one place a Spark session is made: the root session every main
+  * builds at start-up, and the per-request session cut from it — the
+  * Spark analog of shaper's fresh DuckDB connection per render (ref
+  * main.go:961-962).
   *
   * Each request session gets its own temp-view namespace, function
   * registry and SQL conf, so nothing a request defines is seen by the
@@ -29,6 +31,24 @@ import org.apache.spark.sql.SparkSession
 object Sessions {
 
   private val ArtifactIsolation = "spark.sql.artifact.isolation.enabled"
+
+  /** The process's root session: `local[SPARK_GRAFT_CPUS]` (default 4)
+    * with one shuffle partition per core, AQE on, UTC session time, no
+    * UI, and WARN logging. Every main starts from this one, so the
+    * timings and outputs of Bench, Verify, Serve and the dev mains are
+    * taken under the same settings. */
+  def root(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 
   /** A fresh session for one request. The conf is set before anything
     * touches the session's `ArtifactManager`, which reads it once, on

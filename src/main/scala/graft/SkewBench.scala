@@ -1,7 +1,7 @@
 package graft
 
 import graft.queries.{PipelineOps, SkewLab}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Measures the dedup skew crossover SKEW.md documents: d03 (direct
   * inverted-index jaccard) vs d09 (PPJoin prefix filter) vs d10
@@ -13,8 +13,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Corpora are written to parquet first so every measurement starts
   * from a real scan (not an in-memory local relation). Each cell is
-  * the min of two timed passes after one untimed warmup, the same
-  * discipline as Bench. Prints one JSON line.
+  * measured under Bench's protocol: the min of two timed passes after one
+  * untimed pass. Prints one JSON line.
   *
   * Usage: SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32
   *        java … graft.SkewBench
@@ -22,16 +22,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object SkewBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000000).selectExpr("sum(id)").collect()
+    val spark = Sessions.root()
+    Bench.warmUp(spark, sfDir)
 
     val base = java.nio.file.Files.createTempDirectory("graft-skew").toString
     val docs = Tables.t(spark, sfDir, "documents")
@@ -58,16 +50,10 @@ object SkewBench {
       .filter { case (n, _) => corporaFilter.forall(_.contains(n)) }
       .map { case (n, mk) => n -> writeCorpus(n, mk()) }
 
+    // a cell whose every pass failed ends the sweep with that failure
     def timed(fn: => Long): (Double, Long) = {
-      fn // warmup (untimed): plan compilation + codegen
-      def pass(): (Double, Long) = {
-        val t0 = System.nanoTime()
-        val n = fn
-        ((System.nanoTime() - t0) / 1e9, n)
-      }
-      val (ta, na) = pass()
-      val (tb, _) = pass()
-      (math.min(ta, tb), na)
+      val b = Bench.best(Bench.measure(() => fn))
+      (b.seconds, b.rows.get)
     }
 
     import java.util.Locale

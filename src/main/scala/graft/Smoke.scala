@@ -1,18 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Local t1-smoke replica: runs SparkEntry.entry exactly as the driver
   * does (rows > 0 on sf0.001) and prints the result. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.root()
     val df = SparkEntry.entry(spark)
     val n = df.count()
     println(s"entry rows=$n")

@@ -1,5 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,24 +11,10 @@ object Verify {
     // iteration only (the driver always passes exactly two args)
     val only: Set[String] =
       if (args.length > 2) args(2).split(",").toSet else Set.empty
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.root()
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-    }
+    dump(spark, sfDir,
+      SparkEntry.queries.filter { case (name, _) => only.isEmpty || only(name) }, outDir)
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -45,4 +32,20 @@ object Verify {
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }
+
+  /** Writes each entry's result to `outDir/<name>` as parquet. An entry's
+    * directory is deleted before it runs, so a failing entry leaves no
+    * output at all — never the previous run's, which the compare would
+    * read as this run's and pass. */
+  private[graft] def dump(spark: SparkSession, sfDir: String,
+      queries: Iterable[(String, (SparkSession, String) => DataFrame)],
+      outDir: String): Unit =
+    queries.foreach { case (name, fn) =>
+      val dir = new Path(outDir, name)
+      dir.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(dir, true)
+      try fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(dir.toString)
+      catch { case e: Throwable =>
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      }
+    }
 }

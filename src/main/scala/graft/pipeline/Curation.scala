@@ -79,7 +79,19 @@ object Curation {
     * verified-fixpoint rounds regardless of cluster DIAMETER — prefer
     * this when duplicate chains may be deeper than a few hops (long
     * boilerplate chains defeat any fixed propagation unrolling).
-    * Returns (cluster_id, n_members, members). */
+    * Returns (cluster_id, n_members, members).
+    *
+    * `maxRounds` is the runaway backstop above the verified fixpoint
+    * (the paper's round bound grows with graph size — raise it for a
+    * very large or adversarial duplicate graph); `membersCap` truncates
+    * the members-csv review rollup (n_members stays the true count).
+    * `checkpointDir` picks the per-round barrier: None (default) is
+    * localCheckpoint — executor-cached, zero cluster-storage traffic,
+    * but losing ONE executor mid-run kills the job since the truncated
+    * lineage lives only in those executors' block managers; a reliable
+    * dir (HDFS/S3 at scale) writes each round through the Hadoop FS so
+    * any replacement executor rebuilds, at the price of one FS write
+    * per round. Results are identical either way (spec-pinned). */
   def dupClustersAlternating(docs: DataFrame, minJaccard: Double,
       idCol: String = "doc_id", textCol: String = "text",
       maxRounds: Int = 16, membersCap: Int = 10000,
@@ -87,37 +99,6 @@ object Curation {
     PipelineOps.ccAlternatingOf(
       nearDupPairs(docs, minJaccard, idCol, textCol).select(col("d1"), col("d2")),
       maxRounds, membersCap, checkpointDir)
-
-  /** [[dupClustersAlternating]] over a caller-supplied edge set
-    * `(d1, d2)` — any pair source composes. `maxRounds` is the
-    * runaway backstop above the verified fixpoint (the paper's round
-    * bound grows with graph size — raise it for a very large or
-    * adversarial duplicate graph); `membersCap` truncates the
-    * members-csv review rollup (n_members stays the true count).
-    *
-    * `checkpointDir` picks the per-round barrier: None (default) is
-    * localCheckpoint — executor-cached, zero cluster-storage traffic,
-    * but losing ONE executor mid-run kills the job since the
-    * truncated lineage lives only in those executors' block managers;
-    * a reliable dir (HDFS/S3 at scale) writes each round through the
-    * Hadoop FS so any replacement executor rebuilds — the production
-    * setting for long iterative jobs, at the price of one FS write
-    * per round. Results are identical either way (spec-pinned). */
-  def dupClustersAlternatingFromEdges(edges: DataFrame,
-      maxRounds: Int = 16, membersCap: Int = 10000,
-      checkpointDir: Option[String] = None): DataFrame =
-    PipelineOps.ccAlternatingOf(edges.select(col("d1"), col("d2")),
-      maxRounds, membersCap, checkpointDir)
-
-  /** The member-level (v, lbl) cluster assignment — the PRIMARY
-    * artifact behind [[dupClustersAlternating]]'s review rollup;
-    * downstream joins (keep decisions, weighting) consume this table,
-    * never the members-csv. */
-  def dupLabelsAlternatingFromEdges(edges: DataFrame,
-      maxRounds: Int = 16,
-      checkpointDir: Option[String] = None): DataFrame =
-    PipelineOps.ccLabelsOf(edges.select(col("d1"), col("d2")), maxRounds,
-      checkpointDir)
 
   /** The dedup keep decision (d19's kernel): per duplicate cluster of
     * the ≥ `minJaccard` graph, elect the HIGHEST-quality member (t14's
@@ -409,34 +390,6 @@ object Curation {
       idCol: String = "doc_id", textCol: String = "text"): DataFrame =
     PipelineOps.trainingOrderManifestOf(canon(docs, idCol, textCol), epochs, shards)
 
-  /** Annealed curriculum schedule (samp06's kernel — Bengio et al.
-    * 2009; production "data annealing"): quality terciles via t14's
-    * score and exact percentiles, 3 epochs annealing hi → hi+mid →
-    * all, deterministic md5 order keys (p08's contract). Returns the
-    * per-(epoch, bin) audit (n_docs, n_tokens, id_checksum,
-    * key_checksum, first_key). */
-  def curriculumSchedule(docs: DataFrame,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    PipelineOps.curriculumScheduleOf(canon(docs, idCol, textCol))
-
-  /** Right-to-be-forgotten deletion drill (u06's kernel): rebuild the
-    * tar-shard artifact from the survivors of `isDeleted` and certify
-    * the erasure — the absence proof parses the REBUILT bytes (member
-    * ids semi-join the deletion set; leak_count must be 0). Returns
-    * one row (n_total, n_deleted, n_remaining, id_checksum,
-    * leak_count). */
-  def deletionDrill(docs: DataFrame, isDeleted: Column, path: String,
-      shards: Int = 8, idCol: String = "doc_id", langCol: String = "lang",
-      sourceCol: String = "source", textCol: String = "text"): DataFrame =
-    PipelineOps.deletionDrillOf(
-      docs.select(col(idCol).cast("long").as("doc_id"),
-        col(langCol).cast("string").as("lang"),
-        col(sourceCol).cast("string").as("source"),
-        col(textCol).cast("string").as("text"),
-        coalesce(isDeleted.cast("boolean"), lit(false)).as("_del"))
-        .filter(col("doc_id").isNotNull && col("text").isNotNull),
-      col("_del"), path, shards)
-
   /** WebDataset-style tar training shards (sink04's kernels): write
     * `shards` deterministic md5-sharded tar files (each sample a
     * `<key>.json` + `<key>.txt` member pair, doc_id order, epoch
@@ -458,76 +411,6 @@ object Curation {
       path: String): DataFrame =
     PipelineOps.tarShardAudit(spark, path)
 
-  /** Zipf rank-frequency corpus-health audit (t24's kernel): log-log
-    * least-squares slope/intercept over the top-`v` terms plus exact
-    * head-coverage shares — boilerplate flooding or a broken
-    * tokenizer shows as a slope far from −1 or a degenerate head.
-    * Returns one row (v, total_tokens, distinct_terms, zipf_slope,
-    * zipf_intercept, top10_share, top100_share). */
-  def zipfAudit(docs: DataFrame, v: Int = 1000,
-      textCol: String = "text"): DataFrame =
-    PipelineOps.zipfAuditOf(
-      docs.select(col(textCol).cast("string").as("text"))
-        .filter(col("text").isNotNull), v)
-
-  /** Source-concentration audit (cur05's kernel): exact-integer Gini
-    * of token mass across sources plus top-1/top-5 shares — the "one
-    * provenance wearing twenty names" red flag. Returns one row
-    * (n_sources, total_tokens, gini, top1_share, top5_share). */
-  def sourceConcentration(docs: DataFrame, sourceCol: String = "source",
-      textCol: String = "text"): DataFrame =
-    PipelineOps.sourceConcentrationOf(
-      docs.select(col(sourceCol).cast("string").as("source"),
-          col(textCol).cast("string").as("text"))
-        .filter(col("source").isNotNull && col("text").isNotNull))
-
-  /** MinHash-LSH banding calibration (d25's kernel): the S-curve
-    * audit over the corpus's own candidate-pair similarity
-    * distribution — per 16-hash (bands, rows) factorization, its s50
-    * threshold, true/background pair counts at `tau`, and the
-    * expected detections on each side (p = 1 − (1 − J^r)^b). Run on a
-    * hash-sample (d08) at scale. Returns (bands, rows_per_band, s50,
-    * n_true, n_background, exp_true_detected, exp_false_candidates). */
-  def lshCalibration(docs: DataFrame, tau: Double = 0.5,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    PipelineOps.lshCalibrationOf(canon(docs, idCol, textCol), tau)
-
-  /** Cross-source duplicate overlap matrix (cur04's kernel): per
-    * unordered source pair, the distinct d02 content fingerprints
-    * present in both and the doc mass each side commits to them — the
-    * release audit that catches mirrored/rescraped sources before
-    * they double-count mixture mass. Returns (src_a, src_b,
-    * n_shared_fps, docs_a, docs_b). */
-  def sourceOverlap(docs: DataFrame, sourceCol: String = "source",
-      textCol: String = "text"): DataFrame =
-    PipelineOps.sourceOverlapOf(
-      docs.select(col(sourceCol).cast("string").as("source"),
-          col(textCol).cast("string").as("text"))
-        .filter(col("source").isNotNull && col("text").isNotNull))
-
-  /** Differentially-private release statistics (u05's kernel — Dwork
-    * et al. 2006 Laplace mechanism): per-(lang, source) doc and token
-    * counts with calibrated noise, token contributions clipped at
-    * `clip` before the sum so the sensitivity (and therefore ε) is
-    * real. The draw is keyed-hash deterministic for replayability —
-    * swap in a secret seed for an actual private release. Returns
-    * (lang, source, eps, released_docs, released_tokens). */
-  def dpRelease(docs: DataFrame, eps: Double = 1.0, clip: Long = 2000L,
-      langCol: String = "lang", sourceCol: String = "source",
-      textCol: String = "text"): DataFrame =
-    PipelineOps.dpReleaseOf(
-      docs.select(col(langCol).cast("string").as("lang"),
-          col(sourceCol).cast("string").as("source"),
-          col(textCol).cast("string").as("text"))
-        .filter(col("lang").isNotNull && col("source").isNotNull &&
-          col("text").isNotNull),
-      eps, clip)
-
-  /** Temperature-grid mixture design table (samp08's kernel): per
-    * candidate τ and language, the mixture share mass^τ/Σ and its
-    * uniform-share delta — the audit read before committing a
-    * temperature to [[temperatureMixture]]/[[tokenBudgetMixture]].
-    * Returns (tau, lang, n_tokens, share, vs_uniform). */
   /** Best-fit-decreasing sequence packing (samp10's kernel — Ding et
     * al. 2024 "Fewer Truncations Improve Language Modeling"): docs
     * sort decreasing within (source, doc_id-mod-`shards`) sub-streams
@@ -547,30 +430,6 @@ object Curation {
           col(textCol).cast("string").as("text"))
         .filter(col("doc_id").isNotNull && col("text").isNotNull),
       budget, shards, cap)
-
-  def temperatureGrid(docs: DataFrame,
-      taus: Seq[Double] = Seq(0.3, 0.5, 0.7, 1.0),
-      langCol: String = "lang", textCol: String = "text"): DataFrame =
-    PipelineOps.temperatureGridOf(
-      docs.select(col(langCol).cast("string").as("lang"),
-          col(textCol).cast("string").as("text"))
-        .filter(col("lang").isNotNull && col("text").isNotNull),
-      taus)
-
-  /** DoReMi-style domain reweighting (samp07's kernel — Xie et al.
-    * 2023): one exponentiated group-DRO step from the token-share
-    * prior toward domains with excess proxy loss (t14's quality-score
-    * complement vs the corpus mean), normalized into the mixture the
-    * samplers consume. `eta` is the group-DRO step size. Returns the
-    * per-domain mixture table (source, n_docs, n_tokens, mean_loss,
-    * excess, weight). */
-  def doremiWeights(docs: DataFrame, eta: Double = 10.0,
-      sourceCol: String = "source", textCol: String = "text"): DataFrame =
-    PipelineOps.doremiWeightsOf(
-      docs.select(col(sourceCol).cast("string").as("source"),
-          col(textCol).cast("string").as("text"))
-        .filter(col("source").isNotNull && col("text").isNotNull),
-      eta)
 
   /** Soft dedup (d21's kernel): duplicate-aware DOWNWEIGHTING instead
     * of removal — every doc survives with weight 1/|near-dup cluster|
@@ -824,53 +683,6 @@ object Curation {
       window: Int): DataFrame =
     PipelineOps.proximitySearchOf(index, terms, window)
 
-  /** Tombstoned view of a stored positional index (idx12's delete
-    * half, the Lucene lifecycle): deletions are an O(|deletes|)
-    * tombstone write; this applies them as a broadcast anti-join on
-    * the pruned postings — compose with [[phraseSearch]] /
-    * [[proximitySearch]]. */
-  def tombstonedIndex(spark: SparkSession, indexPath: String,
-      tombstonesPath: String): DataFrame =
-    PipelineOps.tombstonedIndexOf(spark, indexPath, tombstonesPath)
-
-  /** Compact a tombstoned index into a new generation without the
-    * deleted postings (idx12's compaction half): one filtered scan,
-    * bucket-in = bucket-out, serve pruning unchanged; clear the
-    * tombstones after. */
-  def compactIndex(spark: SparkSession, indexPath: String,
-      tombstonesPath: String, outPath: String): Unit =
-    PipelineOps.indexCompactOf(spark, indexPath, tombstonesPath, outPath)
-
-  /** Impact-sidecar build (idx13's build half — Block-Max WAND's
-    * per-term bound table): per term, df and a strict integer
-    * micro-unit upper bound on any single document's BM25 score
-    * contribution from it. Vocabulary-sized; one pass over the
-    * postings joined to the doclen sidecar. */
-  def buildImpactSidecar(index: DataFrame, doclen: DataFrame,
-      path: String, k1: Double = 1.2, b: Double = 0.75): Unit =
-    PipelineOps.impactSidecarBuild(index, doclen, path, k1, b)
-
-  /** MaxScore safe-pruned BM25 top-k over stored artifacts (idx13's
-    * serve kernel, Turtle & Flood 1995): the exhaustive idx04 ranking
-    * served while scoring only the docs whose impact-sidecar bound
-    * can reach the phase-1 threshold. Returns (doc_id, score,
-    * n_scored, n_pruned) — the last two certify the serve cost. */
-  def maxScoreTopK(spark: SparkSession, indexPath: String,
-      doclenPath: String, impactPath: String, terms: Seq[String],
-      k: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame =
-    PipelineOps.maxScoreServeOf(spark, indexPath, doclenPath,
-      impactPath, terms, k, k1, b)
-
-  /** Persist the interpolated-Kneser-Ney bigram LM as a parquet
-    * artifact (lm04's build half): four vocabulary-sized tables off
-    * one seed aggregation — the KenLM binary of a CCNet deployment,
-    * in columnar form. Seed slice = doc_id % 10 == 0 (lm03's split). */
-  def buildKnModel(docs: DataFrame, path: String,
-      idCol: String = "doc_id", textCol: String = "text"): Unit =
-    PipelineOps.knModelPersist(
-      docs.select(col(idCol).cast("long").as("doc_id"),
-        col(textCol).cast("string").as("text")), path)
-
   /** Score documents against a STORED KN model (lm04's serve half):
     * byte-for-byte lm03's scoring dataflow with the model tables read
     * cold — a scoring session never re-aggregates the seed. */
@@ -879,57 +691,6 @@ object Curation {
     PipelineOps.knScoreFrom(docs.sparkSession,
       docs.select(col(idCol).cast("long").as("doc_id"),
         col(textCol).cast("string").as("text")), modelPath)
-
-  /** Corpus-vs-index freshness audit (idx16's kernel — the trust gate
-    * in front of every index serve mode): MISSING docs (ingest lag),
-    * GHOST postings (uncompacted deletes) and length mismatches
-    * (partial generations), with id checksums of the defect sets.
-    * One full-outer join of two narrow count streams. */
-  def indexFreshness(docs: DataFrame, index: DataFrame,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    PipelineOps.indexFreshnessOf(
-      docs.select(col(idCol).cast("long").as("doc_id"),
-        col(textCol).cast("string").as("text")), index)
-
-  /** Composed incremental corpus refresh (p15's kernel): the incoming
-    * batch near-dedups against the standing corpus (d14's
-    * batch-vs-corpus join), survivors gate on the STORED quality
-    * model at `modelPath` (exact-integer w·x ≥ 0), and the kept docs
-    * land as a new index generation at `gen2Path`. Returns the
-    * one-row refresh card, with `postings_written` read back from the
-    * written generation as the round-trip certificate. */
-  def incrementalRefresh(batch: DataFrame, corpus: DataFrame,
-      modelPath: String, gen2Path: String, minJaccard: Double = 0.5,
-      idCol: String = "doc_id", textCol: String = "text",
-      langCol: String = "lang"): DataFrame =
-    PipelineOps.incrementalRefreshOf(
-      Canon.docs(batch, idCol, textCol,
-        extra = Seq("lang" -> col(langCol).cast("string"))),
-      Canon.docs(corpus, idCol, textCol,
-        extra = Seq("lang" -> col(langCol).cast("string"))),
-      PipelineOps.qualityModelLoad(batch.sparkSession, modelPath),
-      gen2Path, minJaccard)
-
-  /** Document-update serve view over index generations (idx15's
-    * kernel — Lucene's update = delete + reinsert with a
-    * GENERATION-scoped tombstone): generations list in build order,
-    * tombstones carry (doc_id, asof_gen), and each posting survives
-    * unless its doc re-indexed at a LATER generation. Feed the view
-    * to any index serve kernel. */
-  def updatedIndexView(spark: SparkSession, generationDirs: Seq[String],
-      tombstonesPath: String): DataFrame =
-    PipelineOps.updatedIndexViewOf(spark, generationDirs, tombstonesPath)
-
-  /** Federated BM25 top-k across index generations (idx14's kernel —
-    * Lucene's multi-segment search): each dir holds an `index` +
-    * `doclen` artifact pair over a disjoint corpus slice; the serve
-    * unions the pruned per-term scans and computes df/N/avgdl
-    * GLOBALLY, so the ranking is bit-identical to a single merged
-    * build — no compaction needed to answer queries. */
-  def federatedBm25TopK(spark: SparkSession, generationDirs: Seq[String],
-      terms: Seq[String], k: Int, k1: Double = 1.2,
-      b: Double = 0.75): DataFrame =
-    PipelineOps.federatedBm25TopKOf(spark, generationDirs, terms, k, k1, b)
 
   /** Term-dictionary build (idx10/idx11's build half): the (term, df,
     * cf) vocabulary artifact written to `path` range-partitioned by
@@ -957,45 +718,6 @@ object Curation {
   def fuzzyCorrect(spark: SparkSession, dictPath: String,
       queries: Seq[String], k: Int = 3): DataFrame =
     PipelineOps.fuzzyCorrectOf(spark, dictPath, queries, k)
-
-  /** Neyman variance-optimal stratified allocation (samp11's kernel):
-    * a fixed audit budget splits across language strata ∝ N_h·S_h of
-    * the token count (the survey-sampling optimum — high-variance
-    * strata get more budget), each quota filled by the deterministic
-    * md5-rank draw. Returns (lang, n_docs, sq_micro, alloc, n_drawn,
-    * drawn_checksum). */
-  def neymanAllocation(docs: DataFrame, budget: Int,
-      idCol: String = "doc_id", textCol: String = "text",
-      langCol: String = "lang"): DataFrame =
-    PipelineOps.neymanAllocOf(
-      docs.select(col(idCol).cast("long").as("doc_id"),
-        col(langCol).cast("string").as("lang"),
-        col(textCol).cast("string").as("text")), budget)
-
-  /** Schema and column-health drift between two snapshots (guard04's
-    * kernel — the Deequ-class monitor): per column, presence
-    * (kept/added/removed), null counts, exact distinct counts, and
-    * null-rate drift in integer micro-units. Column-generic: works on
-    * any pair of frames. One multi-aggregate scan per snapshot. */
-  def schemaDrift(oldSnapshot: DataFrame, newSnapshot: DataFrame): DataFrame =
-    PipelineOps.schemaDriftOf(oldSnapshot, newSnapshot)
-
-  /** License taint propagation through duplicate clusters (u08's
-    * kernel — the governance audit dedup makes necessary): a doc whose
-    * near-dup cluster contains a copy under a more restrictive license
-    * escalates to the cluster's max license rank. `licenses`:
-    * (source, license, lrank), higher rank = more restrictive. Returns
-    * the (license, eff_license, n_docs, id_checksum, tainted) matrix;
-    * off-diagonal rows are the mass a release must pull or
-    * re-license. */
-  def licenseTaint(docs: DataFrame, licenses: DataFrame,
-      minJaccard: Double = 0.5, rounds: Int = 3, idCol: String = "doc_id",
-      textCol: String = "text", sourceCol: String = "source"): DataFrame =
-    PipelineOps.licenseTaintOf(
-      docs.select(col(idCol).cast("long").as("doc_id"),
-        col(sourceCol).cast("string").as("source"),
-        col(textCol).cast("string").as("text")),
-      licenses, minJaccard, rounds)
 
   /** Corpus distribution drift monitor (guard02's kernel — the release
     * gate next to [[corpusDiff]]: diff answers WHICH docs changed,

@@ -113,14 +113,6 @@ object Similarity {
       canon(emb, vecIdCol, vecCol), canon(queriesEmb, vecIdCol, vecCol),
       r, k, rrfK)
 
-  /** The lexical half alone (distinct-token Jaccard top-`r` per query
-    * doc) — the BM25-free overlap ranking [[hybridTopK]] fuses with
-    * the dense side. Returns (qid, rk, nid, j). */
-  def lexicalTopK(docs: DataFrame, queries: DataFrame, r: Int = 20,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    PipelineOps.lexicalTopKOf(
-      Canon.docs(docs, idCol, textCol), Canon.docs(queries, idCol, textCol), r)
-
   /** IVF-PQ search (s14's kernel — Jégou et al. 2011, the FAISS
     * workhorse): coarse IVF pruning to `probes` of the `bucketCol`
     * cells, then asymmetric distance computation over the
@@ -325,77 +317,4 @@ object Similarity {
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
     PipelineOps.mmrRerankOf(canon(emb, idCol, vecCol),
       canon(queries, idCol, vecCol), poolK, k, lamTimes10)
-
-  /** Greedy k-center coreset selection (sel02's kernel, Gonzalez
-    * farthest-first — the max-min diversity pick data-pruning runs):
-    * k maximally-spread vectors plus the coverage-radius curve.
-    * Returns (rk, vec_id, radius_micro), radius strictly
-    * decreasing. */
-  def kcenterSelect(emb: DataFrame, k: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    PipelineOps.kcenterSelectOf(canon(emb, idCol, vecCol), k)
-
-  /** k-means|| init-quality audit (s25's kernel, Bahmani et al. 2012):
-    * `rounds` oversampling passes drawing ~`l` candidates each by the
-    * deterministic D²-hash-race, weighted farthest-first reduction to
-    * k, and BOTH inits' inertias (kmeans|| vs the k-lowest-ids rank
-    * baseline) over one shared corpus pass. Returns (method, k,
-    * n_candidates, inertia_micro). */
-  def kmeansParallelInit(emb: DataFrame, k: Int, l: Int = 8,
-      rounds: Int = 3, idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame =
-    PipelineOps.kmeansParallelInitOf(canon(emb, idCol, vecCol), k, l, rounds)
-
-  /** Tombstone-aware postings view of a stored IVF index (s26's
-    * delete half — FAISS `remove_ids` semantics): the postings at
-    * `postingsPath` minus the vec-id tombstones at `tombstonesPath`,
-    * applied as a broadcast anti-join so partition pruning still
-    * reaches the postings scan. Feed to the probe in place of the
-    * raw postings; the coarse quantizer (centroids) stays untouched. */
-  def tombstonedPostings(spark: SparkSession, postingsPath: String,
-      tombstonesPath: String): DataFrame =
-    PipelineOps.tombstonedPostingsOf(spark, postingsPath, tombstonesPath)
-
-  /** Compact a stored IVF postings generation (s26's compaction
-    * half): rewrite `postingsPath` minus the tombstones into
-    * `outPath`, same label-partitioned layout, tombstones clear. */
-  def compactPostings(spark: SparkSession, postingsPath: String,
-      tombstonesPath: String, outPath: String): Unit =
-    PipelineOps.ivfCompactOf(spark, postingsPath, tombstonesPath, outPath)
-
-  /** IVF staleness audit over stored artifacts (s27's kernel — the
-    * rebuild gate the tombstone-and-serve trade defers to): per cell,
-    * total/live/deleted postings counts, live vectors now nearer
-    * another stored centroid than their own, and live mean
-    * own-centroid cosine in integer micro-units. One pass over the
-    * index; the corpus is never read. */
-  def ivfStaleness(spark: SparkSession, postingsPath: String,
-      tombstonesPath: String, centroidsPath: String): DataFrame =
-    PipelineOps.ivfStalenessOf(spark, postingsPath, tombstonesPath,
-      centroidsPath)
-
-  /** Embeddings-vs-postings freshness audit (s29's kernel — idx16's
-    * trust gate on the vector side, plus the IVF-specific defect
-    * classes): missing vectors, ghost postings, multi-cell vectors
-    * (one vec under >1 label) and duplicate copies, with id checksums
-    * of the missing/ghost sets. `emb` needs vec_id; `postings` needs
-    * (vec_id, label). */
-  def vectorIndexFreshness(emb: DataFrame, postings: DataFrame): DataFrame =
-    PipelineOps.ivfFreshnessOf(emb.select("vec_id"), postings)
-
-  /** Assign vectors to their nearest STORED centroid (s28's build
-    * half — the stale coarse quantizer): the step a re-embedded batch
-    * runs before landing as a new postings generation. `vecs` needs
-    * (vec_id, e); centroids artifact needs (clabel, ce). */
-  def reassignToCentroids(vecs: DataFrame, centroids: DataFrame): DataFrame =
-    PipelineOps.reassignToCentroidsOf(vecs, centroids)
-
-  /** Generation-scoped tombstone view over vector postings (s28's
-    * serve half — idx15's update model on the vector side): union the
-    * postings generations, keep a vector unless it re-embedded at a
-    * LATER generation. Feed to the probe in place of raw postings. */
-  def updatedPostingsView(spark: SparkSession, generationDirs: Seq[String],
-      tombstonesPath: String): DataFrame =
-    PipelineOps.generationViewOf(spark, generationDirs, tombstonesPath,
-      "vec_id")
 }

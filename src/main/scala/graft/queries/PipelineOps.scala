@@ -575,28 +575,6 @@ object PipelineOps {
       .orderBy("lang")
   }
 
-  /** t18's kernel: [[bpeTokenizeOf]] with the TRAINED TOKENIZER AS A
-    * STORED ARTIFACT — train and encode are separate jobs in
-    * production (the tokenizer trains once, then ships to every
-    * preprocessing run): the learned merge table (merge_rank, pair,
-    * merged, n — t16's exact output) is written to parquet, read back
-    * COLD, and the corpus encodes under the STORED ranks without
-    * relearning. Returns t17's exact shape (doc_id, n_words,
-    * n_tokens); the verdict must be bit-identical to the
-    * learn-and-apply path (t17's oracle verbatim), pinning that the
-    * round trip through the artifact is loss-free. The apply side is
-    * [[bpeTokenizeWith]], shared with the in-session path. */
-  private[graft] def bpeTokenizePersistOf(docs: DataFrame, merges: Int,
-      artifactDir: String): DataFrame = {
-    val spark = docs.sparkSession
-    bpeMergeLoopOf(docs, merges)
-      .write.mode("overwrite").parquet(s"$artifactDir/merges")
-    val stored = spark.read.parquet(s"$artifactDir/merges")
-      .orderBy("merge_rank").collect()
-      .map(r => { val Array(a, b) = r.getString(1).split(" ", 2); (a, b) })
-    bpeTokenizeWith(docs, stored)
-  }
-
   /** Encode `docs` under an already-learned merge list (rank order) —
     * t18's serve half, stage-identical to [[bpeTokenizeOf]]'s apply
     * side (same vocab build, same [[bpeApplyMerge]] fold per merge,

@@ -3,7 +3,7 @@ package org.apache.spark.graftdev
 import org.apache.spark.SparkContext
 
 /** Dev-tool escape hatch: SparkContext.listenerBus is private[spark],
-  * but graft.JobProfile needs a deterministic drain before reading its
+  * but graft.Profile needs a deterministic drain before reading its
   * listener counters (a fixed sleep raced on slow buses and
   * under-counted stages). Used only by the profiling main, never by a
   * query path. */

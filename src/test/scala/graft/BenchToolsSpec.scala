@@ -1,10 +1,15 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+
 /** The dev mains' output guards: the bench line's `sf` token, its
-  * survival of a failing session stop, and JobProfile's pass reporting
-  * when the listener drain times out. */
+  * survival of a failing session stop, the shared measuring protocol,
+  * Profile's pass reporting when the listener drain times out, Verify's
+  * per-entry output, and the one place a root session is built. */
 class BenchToolsSpec extends AnyFunSuite {
 
   test("Bench.sfJson: a bare number only for sfN / sfN.N without a leading zero") {
@@ -22,13 +27,72 @@ class BenchToolsSpec extends AnyFunSuite {
     assert(events == Seq("stop", "{\"metric\":\"total\"}"))
   }
 
-  test("JobProfile.timedPass: a drain timeout keeps the pass, a query failure does not") {
-    val p = JobProfile.timedPass(() => 42L,
+  private def ok(s: Double, rows: Long) = Bench.Pass(s, scala.util.Success(rows))
+  private def failed(s: Double) = Bench.Pass(s, scala.util.Failure(new IllegalStateException("x")))
+
+  test("Bench.best: the fastest successful pass; a fast failed pass never wins") {
+    assert(Bench.best(Seq(ok(2.0, 5), ok(1.5, 5))) == ok(1.5, 5))
+    val b = Bench.best(Seq(failed(0.01), ok(3.0, 7), failed(0.02)))
+    assert(b.ok && b.seconds == 3.0 && b.rows.get == 7L)
+  }
+
+  test("Bench.best: when every pass fails, the slowest is reported, as a failure") {
+    val b = Bench.best(Seq(failed(0.5), failed(2.0), failed(1.0)))
+    assert(!b.ok && b.seconds == 2.0)
+  }
+
+  test("Bench.measure: one untimed pass, then two timed passes; a throw is a failed pass") {
+    var calls = 0
+    val passes = Bench.measure { () =>
+      calls += 1
+      if (calls == 2) throw new IllegalStateException("first timed pass fails")
+      Thread.sleep(20); calls.toLong
+    }
+    assert(calls == 3)
+    assert(passes.map(_.ok) == Seq(false, true))
+    val b = Bench.best(passes)
+    assert(b.ok && b.rows.get == 3L && b.seconds >= 0.02)
+    // an untimed pass that throws is not rethrown and is not reported
+    var n = 0
+    assert(Bench.measure { () => n += 1; if (n == 1) sys.error("warm"); 1L }.forall(_.ok))
+  }
+
+  test("Profile.timedPass: a drain timeout keeps the pass, a query failure does not") {
+    val p = Profile.timedPass(() => 42L,
       () => throw new java.util.concurrent.TimeoutException("slow bus"))
     assert(p.rows == 42L && !p.drained && p.wallS >= 0)
-    assert(JobProfile.timedPass(() => 7L, () => ()).drained)
+    assert(Profile.timedPass(() => 7L, () => ()).drained)
     intercept[IllegalStateException] {
-      JobProfile.timedPass(() => throw new IllegalStateException("query failed"), () => ())
+      Profile.timedPass(() => throw new IllegalStateException("query failed"), () => ())
     }
+  }
+
+  test("Verify.dump: a failing entry leaves no output, not the previous run's") {
+    val spark = SparkSession.builder()
+      .master("local[4]")
+      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    val out = Files.createTempDirectory("verify-dump")
+    val stale = out.resolve("broken")
+    Files.createDirectories(stale)
+    Files.writeString(stale.resolve("part-00000.parquet"), "a previous run's output")
+    Verify.dump(spark, "unused", Seq(
+      "good" -> ((s: SparkSession, _: String) => s.range(3).toDF("id")),
+      "broken" -> ((_: SparkSession, _: String) => sys.error("analysis failed"))), out.toString)
+    assert(!Files.exists(stale))
+    assert(spark.read.parquet(out.resolve("good").toString).count() == 3)
+  }
+
+  test("only graft.Sessions builds a SparkSession in main code") {
+    val root = Paths.get("src/main/scala")
+    val builders = Files.walk(root).iterator.asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filterNot(_.endsWith(Paths.get("graft/Sessions.scala")))
+      .filter(p => Files.readString(p).contains("SparkSession.builder"))
+      .map(root.relativize(_: Path).toString).toSeq.sorted
+    assert(Files.isRegularFile(root.resolve("graft/Sessions.scala")))
+    assert(builders.isEmpty, s"build the session through Sessions.root(): $builders")
   }
 }

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Physical-plan guards: the scale-critical plan shapes must not
   * regress (filter pushdown, column pruning, broadcast dimension joins,
   * bucketed co-located joins with no shuffle). These assert on
-  * `.explain` output — the same audit `graft.Plans` prints for review.
+  * `.explain` output — the same audit `graft.Profile --explain` prints for review.
   */
 class PlanSpec extends AnyFunSuite {
 
