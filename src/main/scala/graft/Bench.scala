@@ -35,9 +35,10 @@ object Bench {
     // storm inherited from a neighboring entry poisons BOTH timed
     // passes, so min-of-two alone cannot recover (r4: identical code
     // measured 51 s isolated vs 284 s in one suite sweep).
+    // BENCH_FULL.json of the checkout Bench runs from (its working directory)
+    val fullPath = java.nio.file.Paths.get("BENCH_FULL.json").toAbsolutePath
     val history: Map[String, Double] = try {
-      val txt = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/root/repo/BENCH_FULL.json")), "UTF-8")
+      val txt = new String(java.nio.file.Files.readAllBytes(fullPath), "UTF-8")
       val re = """"([A-Za-z0-9_]+)":([0-9]+\.[0-9]+)""".r
       re.findAllMatchIn(txt)
         .map(m => m.group(1) -> m.group(2).toDouble)
@@ -80,7 +81,7 @@ object Bench {
     // full-precision line and round 2's 2.2 KB line both head-truncated
     // (BENCH_r01/r02 parsed:null). Emit an adaptive line that always fits —
     // every query ranked by cost, cheapest dropped first — and write the
-    // complete per-query map to BENCH_FULL.json in the repo for the judge.
+    // complete per-query map to BENCH_FULL.json in the checkout.
     import java.util.Locale
     def f3(v: Double): String = "%.3f".formatLocal(Locale.ROOT, v)
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
@@ -93,8 +94,7 @@ object Bench {
     }
     if (only.isEmpty) { // filtered isolation runs must not clobber the full map
       try {
-        val out = java.nio.file.Paths.get("/root/repo/BENCH_FULL.json")
-        java.nio.file.Files.write(out, fullJson.getBytes("UTF-8"))
+        java.nio.file.Files.write(fullPath, fullJson.getBytes("UTF-8"))
       } catch { case _: Exception => () }
     }
     // line budget 1700 bytes: keep the slowest queries (the regression

@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Session-extensions injector: enables the engine's SQL surface on any
@@ -11,11 +12,13 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * registration calls needed. Injects the 48 shaper custom-type
   * functions (the `::TYPE` targets produced by
   * graft.sqlfront.Dialect), their optimizer rule
-  * (graft.plans.ShaperTagRules) and the codegen'd `cosine_sim`.
+  * (graft.plans.ShaperTagRules), the codegen'd natives, `len`, and the
+  * `BOXPLOT`/`boxplot_info` aggregates with the rule that routes them
+  * (graft.plans.BoxplotScaleRule).
   *
-  * The BOXPLOT aggregate is Aggregator-based (needs a live session for
-  * its encoders), so it stays on `graft.exprs.Boxplot.register` —
-  * the interpreter calls it per render session.
+  * `graft.Sessions.request` applies it once to the root session's shared
+  * extensions, so every request session is born with all of this; the
+  * per-kernel `register` calls only matter on a session built without it.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -27,49 +30,53 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // constant tag statements answered without a Spark job, tagged
     // grouping keys grouped on the raw member value
     ext.injectOptimizerRule(_ => graft.plans.ShaperTagRules)
-    graft.types.ShaperTypes.all.foreach { td =>
-      ext.injectFunction((
-        FunctionIdentifier(td.name),
-        new ExpressionInfo(classOf[graft.types.ShaperTagged].getName, td.name),
-        (exprs: Seq[Expression]) => graft.types.ShaperTagged(td.name, exprs.head)))
-    }
-    ext.injectFunction((
-      FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[graft.exprs.CosineSim].getName, "cosine_sim"),
-      (exprs: Seq[Expression]) => graft.exprs.CosineSim(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("len"),
-      new ExpressionInfo(classOf[graft.exprs.Len].getName, "len"),
-      (exprs: Seq[Expression]) => graft.exprs.Len(exprs.head)))
-    // the full native-expression surface, so a spark-submit deployment
-    // gets every codegen'd kernel without imperative register() calls
-    ext.injectFunction((
-      FunctionIdentifier("sq_dist"),
-      new ExpressionInfo(classOf[graft.exprs.SqDist].getName, "sq_dist"),
-      (exprs: Seq[Expression]) => graft.exprs.SqDist(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("nfc_normalize"),
-      new ExpressionInfo(classOf[graft.exprs.NfcNormalize].getName, "nfc_normalize"),
-      (exprs: Seq[Expression]) => graft.exprs.NfcNormalize(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("shingles3"),
-      new ExpressionInfo(classOf[graft.exprs.Shingles3].getName, "shingles3"),
-      (exprs: Seq[Expression]) => graft.exprs.Shingles3(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("word_pairs"),
-      new ExpressionInfo(classOf[graft.exprs.WordPairs].getName, "word_pairs"),
-      (exprs: Seq[Expression]) => graft.exprs.WordPairs(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("md5_bits60"),
-      new ExpressionInfo(classOf[graft.exprs.Md5Bits60].getName, "md5_bits60"),
-      (exprs: Seq[Expression]) => graft.exprs.Md5Bits60(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("quality_score"),
-      new ExpressionInfo(classOf[graft.exprs.QualityScore].getName, "quality_score"),
-      (exprs: Seq[Expression]) => graft.exprs.QualityScore(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("jl_project"),
-      new ExpressionInfo(classOf[graft.exprs.JlProject].getName, "jl_project"),
-      (exprs: Seq[Expression]) => graft.exprs.JlProject.fromExprs(exprs)))
+    GraftExtensions.functions.foreach(ext.injectFunction)
   }
+}
+
+object GraftExtensions {
+
+  type Function = (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
+
+  private def fn(name: String, cls: Class[_], builder: Seq[Expression] => Expression): Function =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), builder)
+
+  /** Every function the extension injects, made once per JVM: a registry
+    * holding one of these `ExpressionInfo`s holds this engine's function. */
+  val functions: Seq[Function] =
+    graft.types.ShaperTypes.all.map(td => fn(td.name, classOf[graft.types.ShaperTagged],
+      exprs => graft.types.ShaperTagged(td.name, exprs.head))) ++ Seq(
+      fn("cosine_sim", classOf[graft.exprs.CosineSim], exprs => graft.exprs.CosineSim(exprs(0), exprs(1))),
+      fn("len", classOf[graft.exprs.Len], exprs => graft.exprs.Len(exprs.head)),
+      fn("sq_dist", classOf[graft.exprs.SqDist], exprs => graft.exprs.SqDist(exprs(0), exprs(1))),
+      fn("nfc_normalize", classOf[graft.exprs.NfcNormalize], exprs => graft.exprs.NfcNormalize(exprs.head)),
+      fn("shingles3", classOf[graft.exprs.Shingles3], exprs => graft.exprs.Shingles3(exprs.head)),
+      fn("word_pairs", classOf[graft.exprs.WordPairs], exprs => graft.exprs.WordPairs(exprs.head)),
+      fn("md5_bits60", classOf[graft.exprs.Md5Bits60], exprs => graft.exprs.Md5Bits60(exprs.head)),
+      fn("quality_score", classOf[graft.exprs.QualityScore], exprs => graft.exprs.QualityScore(exprs.head)),
+      fn("jl_project", classOf[graft.exprs.JlProject], graft.exprs.JlProject.fromExprs),
+      fn("BOXPLOT", classOf[graft.exprs.Boxplot.BoxplotAgg], graft.exprs.Boxplot.plain),
+      fn("boxplot_info", classOf[graft.exprs.Boxplot.BoxplotInfoAgg], graft.exprs.Boxplot.info))
+
+  private val byName: Map[String, Function] = functions.map(f => f._1.funcName -> f).toMap
+
+  /** Put the named functions into `spark`'s registry, skipping any it
+    * already holds (a session born with this extension holds them all),
+    * so no call replaces a function and none logs Spark's
+    * "replaced a previously registered function" warning. */
+  def register(spark: SparkSession, names: String*): Unit =
+    put(spark.sessionState.functionRegistry, names.map(byName))
+
+  /** Spark's builtin registry, which every new session's registry is
+    * cloned from, holding this engine's version of each builtin name it
+    * overrides (`len`, whose Spark form is the string-only half). A
+    * session born with the extension then overrides its own entry, and
+    * logs no replace warning per session. Once per JVM. */
+  private[graft] lazy val overrideBuiltins: Unit =
+    put(FunctionRegistry.builtin, functions.filter(f => FunctionRegistry.builtin.functionExists(f._1)))
+
+  private def put(registry: FunctionRegistry, fns: Seq[Function]): Unit =
+    fns.foreach { case (id, info, builder) =>
+      if (!registry.lookupFunction(id).contains(info)) registry.registerFunction(id, info, builder)
+    }
 }

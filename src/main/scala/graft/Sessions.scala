@@ -1,7 +1,12 @@
 package graft
 
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.graftsession.SessionHooks
+
+import java.util.concurrent.atomic.AtomicLong
 
 /** The one place a Spark session is made: the root session every main
   * builds at start-up, and the per-request session cut from it — the
@@ -10,7 +15,11 @@ import org.apache.spark.sql.SparkSession
   *
   * Each request session gets its own temp-view namespace, function
   * registry and SQL conf, so nothing a request defines is seen by the
-  * next one.
+  * next one. It is born with the engine's functions and rules: the
+  * first request applies [[GraftExtensions]] to the extensions the root
+  * session shares with every `newSession()`, whose registry Spark builds
+  * as the builtins plus the injected functions. A request then registers
+  * nothing.
   *
   * What it shares with every other request is the executor class loader.
   * On Spark 4.x a `newSession()` has its own session UUID, and while
@@ -54,9 +63,45 @@ object Sessions {
     * touches the session's `ArtifactManager`, which reads it once, on
     * first use (a lazy val), and keeps that answer for its lifetime. */
   def request(spark: SparkSession): SparkSession = {
+    rooted(spark)
     val s = spark.newSession()
     s.conf.set(ArtifactIsolation, "false")
     s
+  }
+
+  /** Per set of shared extensions, the functions a session born from
+    * them holds; weak, so a stopped root's state is not pinned. */
+  private val born = new java.util.WeakHashMap[SparkSessionExtensions, Map[FunctionIdentifier, ExpressionInfo]]
+  private val listened = java.util.Collections.newSetFromMap(
+    new java.util.WeakHashMap[AnyRef, java.lang.Boolean])
+  private val generation = new AtomicLong
+
+  /** Once per root: the extension injected into its shared extensions and
+    * a listener on its shared catalog. */
+  private def rooted(spark: SparkSession): Unit = synchronized {
+    val ext = SessionHooks.extensions(spark)
+    if (!born.containsKey(ext)) {
+      GraftExtensions.overrideBuiltins
+      if (!SessionHooks.injects(ext, spark, graft.plans.ShaperTagRules)) new GraftExtensions()(ext)
+      born.put(ext, SessionHooks.bornFunctions(ext))
+    }
+    if (listened.add(spark.sharedState.externalCatalog))
+      SessionHooks.onCatalogEvent(spark)(_ => generation.incrementAndGet())
+  }
+
+  /** Changes to any request root's catalog so far: databases, tables,
+    * views and functions created, dropped, renamed or altered. A change
+    * is counted before the statement that made it returns. */
+  def catalogGeneration: Long = generation.get
+
+  /** Whether `s` holds exactly the functions it was born with: a function
+    * added or replaced since has a new `ExpressionInfo`. */
+  def holdsBornFunctions(s: SparkSession): Boolean = {
+    val expected = synchronized(born.get(SessionHooks.extensions(s)))
+    val registry = s.sessionState.functionRegistry
+    val ids = registry.listFunction()
+    expected != null && ids.size == expected.size &&
+      ids.forall(id => registry.lookupFunction(id).exists(info => expected.get(id).exists(_ eq info)))
   }
 
   /** Generated-code classes Janino has compiled in this JVM so far (driver

@@ -134,6 +134,12 @@ final class HttpApi(
 
   /** Start on the given port (0 = ephemeral); returns the bound port. */
   def start(port: Int = 0): Int = {
+    // The JDK server writes a response's headers and its body as two
+    // segments. With Nagle's algorithm on, the body waits for the
+    // client's delayed ACK of the headers, 40 ms on Linux, on every
+    // response. The server reads this once, when the first one is made.
+    if (System.getProperty("sun.net.httpserver.nodelay") == null)
+      System.setProperty("sun.net.httpserver.nodelay", "true")
     server = HttpServer.create(new InetSocketAddress(port), 0)
     server.createContext("/health", exchange(handleHealth))
     server.createContext("/api/sql", exchange(handleSql))
@@ -1375,6 +1381,9 @@ final class HttpApi(
     sb ++= "# HELP graft_result_cache_hits_total Dashboard statements answered from the result cache.\n"
     sb ++= "# TYPE graft_result_cache_hits_total counter\n"
     sb ++= s"graft_result_cache_hits_total ${cache.hits.get}\n"
+    sb ++= "# HELP graft_result_cache_text_hits_total Of the hits, statements answered from their text before Spark parsed them.\n"
+    sb ++= "# TYPE graft_result_cache_text_hits_total counter\n"
+    sb ++= s"graft_result_cache_text_hits_total ${cache.textHits.get}\n"
     sb ++= "# HELP graft_result_cache_misses_total Cacheable dashboard statements run because no result matched.\n"
     sb ++= "# TYPE graft_result_cache_misses_total counter\n"
     sb ++= s"graft_result_cache_misses_total ${cache.misses.get}\n"

@@ -1,6 +1,9 @@
 package graft.exprs
 
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, SparkSession, functions}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.encoderFor
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.aggregate.ScalaAggregator
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
@@ -18,8 +21,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale note: the UDAF buffers collect values, which is fine for the
   * dashboard path (≤3000-row results, reference row cap) — but SQL is
-  * not row-capped on the task path, so `register` (and
-  * GraftExtensions) also installs [[graft.plans.BoxplotScaleRule]],
+  * not row-capped on the task path, so GraftExtensions (and
+  * `register`) also installs [[graft.plans.BoxplotScaleRule]],
   * which rewrites BOTH registered forms: boxplot_info into [[tukey]]'s
   * percentile + broadcast join-back plan, and the 1-arg BOXPLOT in
   * place into native max/min/percentile (no join-back — the ELSE
@@ -64,8 +67,8 @@ object Boxplot {
           Some(quantileCont(sorted, 0.75)))
       }
     }
-    def bufferEncoder: Encoder[List[Double]] = Encoders.kryo[List[Double]]
-    def outputEncoder: Encoder[BoxplotResult] = Encoders.product[BoxplotResult]
+    def bufferEncoder: Encoder[List[Double]] = plainBuffer
+    def outputEncoder: Encoder[BoxplotResult] = result
   }
 
   final case class BoxplotInfoIn(value: java.lang.Double, info: Map[String, String])
@@ -109,10 +112,30 @@ object Boxplot {
           Some(q1), Some(q2), Some(q3))
       }
     }
-    def bufferEncoder: Encoder[List[(Double, Map[String, String])]] =
-      Encoders.kryo[List[(Double, Map[String, String])]]
-    def outputEncoder: Encoder[BoxplotResult] = Encoders.product[BoxplotResult]
+    def bufferEncoder: Encoder[List[(Double, Map[String, String])]] = infoBuffer
+    def outputEncoder: Encoder[BoxplotResult] = result
   }
+
+  // Encoders.product reflects over the case class each time it is called;
+  // every aggregate expression shares these
+  private lazy val plainBuffer = encoderFor(Encoders.kryo[List[Double]])
+  private lazy val infoBuffer = encoderFor(Encoders.kryo[List[(Double, Map[String, String])]])
+  private lazy val result = Encoders.product[BoxplotResult]
+  private lazy val plainAgg = new BoxplotAgg
+  private lazy val infoAgg = new BoxplotInfoAgg
+  private lazy val plainIn = encoderFor(Encoders.DOUBLE)
+  private lazy val infoIn = encoderFor(Encoders.product[BoxplotInfoIn])
+
+  /** `BOXPLOT(v)` as `spark.udf.register("BOXPLOT", udaf(…))` builds it,
+    * over one aggregator and encoders made once per JVM. */
+  val plain: Seq[Expression] => Expression = children =>
+    ScalaAggregator(children, plainAgg, plainIn, plainBuffer, nullable = true,
+      isDeterministic = true, aggregatorName = Some("BOXPLOT"))
+
+  /** `boxplot_info(v, info)`, likewise. */
+  val info: Seq[Expression] => Expression = children =>
+    ScalaAggregator(children, infoAgg, infoIn, infoBuffer, nullable = true,
+      isDeterministic = true, aggregatorName = Some("boxplot_info"))
 
   /** The outlier_info branch at SCALE — the oracle CTE's own two-pass
     * shape instead of the UDAF's collect-every-value buffer: exact
@@ -173,10 +196,10 @@ object Boxplot {
         .as(outCol)): _*)
   }
 
-  def register(spark: SparkSession): Unit = RegistryQuiet.quietly {
-    spark.udf.register("BOXPLOT", functions.udaf(new BoxplotAgg, Encoders.DOUBLE))
-    spark.udf.register("boxplot_info",
-      functions.udaf(new BoxplotInfoAgg, Encoders.product[BoxplotInfoIn]))
+  /** The two aggregates and [[graft.plans.BoxplotScaleRule]] on a
+    * session built without GraftExtensions. */
+  def register(spark: SparkSession): Unit = {
+    graft.GraftExtensions.register(spark, "BOXPLOT", "boxplot_info")
     // SQL-reachable boxplot_info routes through the distributed
     // percentile+join-back plan (task SQL has no row cap, and the UDAF
     // would Kryo-collect whole groups); the UDAF stays registered as

@@ -114,8 +114,5 @@ object CosineSim {
 
   /** Register `cosine_sim` in the session's function registry so both
     * SQL text and Column expressions can use it. */
-  def register(spark: SparkSession): Unit = RegistryQuiet.quietly {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim", exprs => CosineSim(exprs(0), exprs(1)), "scala_udf")
-  }
+  def register(spark: SparkSession): Unit = graft.GraftExtensions.register(spark, "cosine_sim")
 }

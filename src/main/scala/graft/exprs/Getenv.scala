@@ -9,7 +9,7 @@ import org.apache.spark.sql.SparkSession
 object Getenv {
   @volatile private var enabled = false
 
-  def register(spark: SparkSession): Unit = RegistryQuiet.quietly {
+  def register(spark: SparkSession): Unit = {
     spark.udf.register("getenv", (name: String) =>
       if (enabled) Option(System.getenv(name)).getOrElse("") else "")
   }

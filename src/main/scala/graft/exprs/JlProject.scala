@@ -137,8 +137,5 @@ object JlProject {
   def fromExprs(exprs: Seq[Expression]): JlProject =
     JlProject(exprs.head, intLit(exprs(1), "inDims"), intLit(exprs(2), "outDims"))
 
-  def register(spark: SparkSession): Unit = RegistryQuiet.quietly {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "jl_project", fromExprs, "scala_udf")
-  }
+  def register(spark: SparkSession): Unit = graft.GraftExtensions.register(spark, "jl_project")
 }

@@ -25,21 +25,7 @@ case class Len(child: Expression) extends UnaryExpression with RuntimeReplaceabl
 }
 
 object Len {
-  // once per session: re-registering on every dashboard/bench call spams
-  // "function len replaced a previously registered function" WARNs.
-  // WeakHashMap so discarded sessions don't pin registry state.
-  private val registered = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
-
-  // newSession()/cloned sessions INHERIT the parent's registry entry, so
-  // their own (needed) registration still logs "replaced a previously
-  // registered function" — a deliberate override, not drift. Quiet the
-  // registry logger only around OUR registration (RegistryQuiet), so
-  // unrelated createOrReplaceTempFunction warnings in the JVM stay live.
-  def register(spark: SparkSession): Unit =
-    if (registered.put(spark, java.lang.Boolean.TRUE) == null)
-      RegistryQuiet.quietly {
-        spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-          "len", exprs => Len(exprs.head), "scala_udf")
-      }
+  /** `len` on a session built without `graft.GraftExtensions`; it
+    * replaces Spark's own `len`, the string-only half. */
+  def register(spark: SparkSession): Unit = graft.GraftExtensions.register(spark, "len")
 }

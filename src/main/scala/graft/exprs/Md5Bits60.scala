@@ -64,8 +64,5 @@ object Md5Bits60 {
     (v << 4) | ((d(7) & 0xF0L) >> 4)
   }
 
-  def register(spark: SparkSession): Unit = RegistryQuiet.quietly {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "md5_bits60", exprs => Md5Bits60(exprs.head), "scala_udf")
-  }
+  def register(spark: SparkSession): Unit = graft.GraftExtensions.register(spark, "md5_bits60")
 }

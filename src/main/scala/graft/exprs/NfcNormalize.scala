@@ -65,8 +65,5 @@ object NfcNormalize {
     else UTF8String.fromString(Normalizer.normalize(s, Normalizer.Form.NFC))
   }
 
-  def register(spark: SparkSession): Unit = RegistryQuiet.quietly {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "nfc_normalize", exprs => NfcNormalize(exprs.head), "scala_udf")
-  }
+  def register(spark: SparkSession): Unit = graft.GraftExtensions.register(spark, "nfc_normalize")
 }

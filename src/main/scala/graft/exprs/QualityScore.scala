@@ -66,8 +66,5 @@ object QualityScore {
       .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
   }
 
-  def register(spark: SparkSession): Unit = RegistryQuiet.quietly {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "quality_score", exprs => QualityScore(exprs.head), "scala_udf")
-  }
+  def register(spark: SparkSession): Unit = graft.GraftExtensions.register(spark, "quality_score")
 }

@@ -69,8 +69,5 @@ object Shingles3 {
     new GenericArrayData(out)
   }
 
-  def register(spark: SparkSession): Unit = RegistryQuiet.quietly {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "shingles3", exprs => Shingles3(exprs.head), "scala_udf")
-  }
+  def register(spark: SparkSession): Unit = graft.GraftExtensions.register(spark, "shingles3")
 }

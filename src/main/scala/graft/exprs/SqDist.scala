@@ -86,8 +86,5 @@ object SqDist {
     java.lang.Double.valueOf(acc)
   }
 
-  def register(spark: SparkSession): Unit = RegistryQuiet.quietly {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sq_dist", exprs => SqDist(exprs(0), exprs(1)), "scala_udf")
-  }
+  def register(spark: SparkSession): Unit = graft.GraftExtensions.register(spark, "sq_dist")
 }

@@ -58,8 +58,5 @@ object WordPairs {
     new GenericArrayData(out)
   }
 
-  def register(spark: SparkSession): Unit = RegistryQuiet.quietly {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "word_pairs", exprs => WordPairs(exprs.head), "scala_udf")
-  }
+  def register(spark: SparkSession): Unit = graft.GraftExtensions.register(spark, "word_pairs")
 }

@@ -42,7 +42,13 @@ import scala.collection.mutable
   *    Filter/Project below it, Filter/Project/Sort/Limit above) whose
   *    table only gained files since its last run is answered from its
   *    cached per-group state plus the new files, read on the driver, also
-  *    with no Spark job ([[IncrementalAggregate]]). Always run in full:
+  *    with no Spark job ([[IncrementalAggregate]]). A statement over
+  *    unpartitioned catalog tables (or none) whose rewritten text was seen
+  *    before skips Spark's parse, analysis and optimization too: it is
+  *    answered from its text while the catalog is unchanged, the render's
+  *    session holds no temp view, cached data or added function, and
+  *    its tables list the same files. Otherwise it falls back to analysis
+  *    and takes the plan-keyed path. Always run in full:
   *    side effects (SET VARIABLE, temp views and tables, macros),
   *    statements with a nondeterministic expression or one that reads
   *    the clock (`now()`, `current_date`), statements over a leaf other
@@ -159,7 +165,7 @@ object Dashboard {
           // (documented divergence)
           req.sideEffect(sqlString)
         } else {
-          val (schema, rows) = req.collect(req.compile(sqlString))
+          val (schema, rows) = req.query(sqlString)
 
           def is1x1 = rows.length == 1 && rows.head.length == 1
 

@@ -64,7 +64,7 @@ object Download {
         req.sideEffect(sqlString)
       } else {
         try {
-          val (schema, rows) = req.collect(req.compile(sqlString))
+          val (schema, rows) = req.query(sqlString)
           // the reference reads ALL rows here (stream_query.go:767-790
           // appends every row), but the rows feed only collectVars —
           // dropdown option/default extraction — and the render path

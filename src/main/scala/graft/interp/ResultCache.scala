@@ -1,17 +1,18 @@
 package graft.interp
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.BucketSpec
 import org.apache.spark.sql.catalyst.encoders.encoderFor
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LocalRelation, LogicalPlan, OneRowRelation, Range}
 import org.apache.spark.sql.catalyst.trees.TreePattern.CURRENT_LIKE
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex, LogicalRelation, PartitioningAwareFileIndex}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.SizeEstimator
 
 import java.util.concurrent.atomic.AtomicLong
 import scala.collection.immutable.ArraySeq
+import scala.collection.mutable
 import scala.util.Try
 
 /** An in-process LRU of capped statement results, reused while a
@@ -65,15 +66,40 @@ import scala.util.Try
   * Cached rows and states are shared between renders and must not be
   * mutated. The cache is bounded by estimated bytes, evicting least
   * recently used entries first.
+  *
+  * A stem costs Spark's whole front end: parse, analysis (which resolves
+  * and lists every table again in each new session) and optimization.
+  * [[query]] puts a *text* entry in front of it, keyed on the statement's
+  * SQL after `Dialect.rewrite`, the SQL conf, the row cap, and the
+  * current catalog and namespace. A text entry points at a stem entry
+  * and answers, with no parse, analysis or optimization, only when:
+  *  - the catalog generation (`graft.Sessions.catalogGeneration`, read
+  *    before the entry's analysis) is unchanged: no table, view, function
+  *    or database was created, dropped, renamed or altered since;
+  *  - the session is clean: no local or global temp view, no data cached
+  *    by any session, and only the functions it was born with;
+  *  - every table the statement reads lists, by Spark's own
+  *    `InMemoryFileIndex`, as the stem entry's files (each table at most
+  *    once per request, until the request runs anything else).
+  * A text entry is recorded only for a cacheable statement whose every
+  * file relation is an unpartitioned catalog table: a path or glob read
+  * can gain files outside its stored root paths, and adding a partition
+  * changes no catalog generation. Any other statement, or a text entry
+  * that does not answer, takes the stem path above unchanged (hit,
+  * incremental or miss). Text entries count against the byte budget and
+  * are evicted with their stem.
   */
 final class ResultCache(maxBytes: Long) {
 
   private val entries =
     new java.util.LinkedHashMap[ResultCache.Stem, ResultCache.Entry](16, 0.75f, true)
+  private val texts = new java.util.HashMap[ResultCache.TextKey, ResultCache.Text]
   private var usedBytes = 0L
 
   /** Statements answered from the cache. */
   val hits = new AtomicLong
+  /** Of the hits, those answered from the statement's text, before parse. */
+  val textHits = new AtomicLong
   /** Statements answered from a cached aggregate state plus new files. */
   val incremental = new AtomicLong
   /** Cacheable statements run in full because no entry answered them. */
@@ -85,16 +111,50 @@ final class ResultCache(maxBytes: Long) {
   /** Statements with an entry. */
   def size: Int = synchronized(entries.size)
 
+  /** `sql`'s schema and at most `maxRows` of its rows, run in `spark`.
+    * Answered from its text with no parse, analysis or optimization when
+    * the text entry's catalog generation is current, `spark` is clean
+    * ([[ResultCache.Checks]]) and every table the statement reads lists
+    * as the stem entry's files do; otherwise the statement takes
+    * [[collect]]'s path. `checks` holds what the caller's request has
+    * checked since it last ran anything but a text hit. */
+  def query(spark: SparkSession, sql: String, maxRows: Int,
+      checks: ResultCache.Checks): (StructType, Seq[Row]) = {
+    // read before analysis: a catalog change after this point makes an
+    // entry recorded with it stale
+    val generation = graft.Sessions.catalogGeneration
+    val text = Option.when(checks.clean(spark))(ResultCache.TextKey(sql,
+      spark.sessionState.conf.getAllConfs, maxRows, spark.catalog.currentCatalog(),
+      spark.catalog.currentDatabase))
+    text.flatMap(answer(spark, _, generation, checks)).getOrElse {
+      checks.clear()
+      collect(spark.sql(sql), maxRows, text.map(_ -> generation))
+    }
+  }
+
+  private def answer(spark: SparkSession, key: ResultCache.TextKey, generation: Long,
+      checks: ResultCache.Checks): Option[(StructType, Seq[Row])] =
+    synchronized(Option(texts.get(key)).filter(_.generation == generation)
+        .flatMap(t => Option(entries.get(t.stem)).map(t -> _)))
+      .collect { case (t, e) if t.sources.map(checks.files(spark, _)) == e.files =>
+        hits.incrementAndGet()
+        textHits.incrementAndGet()
+        (e.schema, e.rows)
+      }
+
   /** `df`'s schema and at most `maxRows` of its rows. */
-  def collect(df: DataFrame, maxRows: Int): (StructType, Seq[Row]) = {
+  def collect(df: DataFrame, maxRows: Int): (StructType, Seq[Row]) = collect(df, maxRows, None)
+
+  private def collect(df: DataFrame, maxRows: Int,
+      text: Option[(ResultCache.TextKey, Long)]): (StructType, Seq[Row]) = {
     val schema = df.schema
     val capped = df.limit(maxRows)
     def run() = ArraySeq.unsafeWrapArray(capped.collect())
     ResultCache.keyOf(capped, schema) match {
       case None => (schema, run())
-      case Some((stem, files)) =>
+      case Some(ResultCache.Key(stem, files, sources)) =>
         val old = synchronized(Option(entries.get(stem)))
-        old match {
+        val answer = old match {
           case Some(e) if e.files == files =>
             hits.incrementAndGet()
             (e.schema, e.rows)
@@ -124,19 +184,49 @@ final class ResultCache(maxBytes: Long) {
               SizeEstimator.estimate(Array[AnyRef](stem, files, schema, rows, state))))
             (schema, rows)
         }
+        for ((key, generation) <- text; s <- sources)
+          remember(key, ResultCache.Text(stem, generation, s, SizeEstimator.estimate(Array[AnyRef](key, s))))
+        answer
     }
   }
 
   private def put(stem: ResultCache.Stem, entry: ResultCache.Entry): Unit =
     if (entry.bytes <= maxBytes) synchronized {
-      Option(entries.put(stem, entry)).foreach(old => usedBytes -= old.bytes)
+      val old = Option(entries.get(stem))
+      entries.put(stem, entry.copy(texts = old.fold(Set.empty[ResultCache.TextKey])(_.texts)))
+      old.foreach(o => usedBytes -= o.bytes)
       usedBytes += entry.bytes
-      val lru = entries.values.iterator
-      while (usedBytes > maxBytes) {
-        usedBytes -= lru.next().bytes
-        lru.remove()
-      }
+      evict()
     }
+
+  /** Point `key` at its stem's entry, while that entry is held. */
+  private def remember(key: ResultCache.TextKey, text: ResultCache.Text): Unit = synchronized {
+    Option(entries.get(text.stem)).foreach { e =>
+      Option(texts.put(key, text)).foreach(old => usedBytes -= old.bytes)
+      usedBytes += text.bytes
+      entries.put(text.stem, e.copy(texts = e.texts + key))
+      evict()
+    }
+  }
+
+  /** Drop least recently used entries, with the text entries pointing at
+    * them, until the cache fits its budget. */
+  private def evict(): Unit = {
+    val lru = entries.entrySet.iterator
+    while (usedBytes > maxBytes) {
+      val next = lru.next()
+      val (stem, e) = (next.getKey, next.getValue)
+      usedBytes -= e.bytes
+      e.texts.foreach { k =>
+        val t = texts.get(k)
+        if (t != null && t.stem == stem) {
+          usedBytes -= t.bytes
+          texts.remove(k)
+        }
+      }
+      lru.remove()
+    }
+  }
 }
 
 object ResultCache {
@@ -156,9 +246,70 @@ object ResultCache {
   /** A statement's last result: the listing it was computed from (one per
     * file relation), its rows and, for an incremental aggregate, its
     * per-group state. `overCap` marks an aggregate whose groups exceeded
-    * the state's bound; it always runs in full. */
+    * the state's bound; it always runs in full. `texts` are the text
+    * entries recorded against it. */
   private final case class Entry(files: Seq[Files], schema: StructType, rows: Seq[Row],
-      state: Option[IncrementalAggregate.State], overCap: Boolean, bytes: Long)
+      state: Option[IncrementalAggregate.State], overCap: Boolean, bytes: Long,
+      texts: Set[TextKey] = Set.empty)
+
+  /** What a statement's text means in a session: the SQL after
+    * `Dialect.rewrite`, the SQL conf, the row cap, and the current
+    * catalog and namespace that resolve its unqualified names. */
+  private final case class TextKey(sql: String, conf: Map[String, String], maxRows: Int,
+      catalog: String, namespace: String)
+
+  /** A text's stem, the catalog generation read before its analysis, and
+    * the tables it reads, in the order of the stem entry's listings. */
+  private final case class Text(stem: Stem, generation: Long, sources: Seq[Source], bytes: Long)
+
+  /** A file relation's root paths, options and schema: enough to list it
+    * again the way its scan did. */
+  final case class Source(rootPaths: Seq[org.apache.hadoop.fs.Path], options: Map[String, String],
+      schema: StructType)
+
+  /** A statement's stem, the listing of each relation it reads, and the
+    * relations themselves when each is an unpartitioned catalog table. */
+  private final case class Key(stem: Stem, files: Seq[Files], sources: Option[Seq[Source]])
+
+  /** What one request has checked since it last ran anything but a text
+    * hit, which may have written a table or made a function: the files
+    * of each table it listed, and that its session holds only the
+    * functions it was born with. Not thread-safe: a request runs on one
+    * thread. */
+  final class Checks {
+    private val listed = mutable.HashMap.empty[Source, Files]
+    private var bornFunctions: Option[Boolean] = None
+
+    /** The files `source` lists, as a relation over it would read them:
+      * Spark's own `InMemoryFileIndex`, with the relation's options and
+      * schema and no shared listing cache. */
+    private[ResultCache] def files(spark: SparkSession, source: Source): Files =
+      listed.getOrElseUpdate(source, filesOf(
+        new InMemoryFileIndex(spark, source.rootPaths, source.options, Some(source.schema))))
+
+    /** Whether `spark` holds no temp view, the process no global temp view
+      * or cached data, and the session exactly its born functions. */
+    private[ResultCache] def clean(spark: SparkSession): Boolean = {
+      val catalog = spark.sessionState.catalog
+      catalog.getTempViewNames().isEmpty && spark.sharedState.cacheManager.isEmpty &&
+        catalog.globalTempViewManager.listViewNames("*").isEmpty &&
+        bornFunctions.getOrElse {
+          val born = graft.Sessions.holdsBornFunctions(spark)
+          bornFunctions = Some(born)
+          born
+        }
+    }
+
+    /** Forget every check: the caller may have written a table or made a
+      * function since. */
+    def clear(): Unit = {
+      listed.clear()
+      bornFunctions = None
+    }
+  }
+
+  private def filesOf(index: PartitioningAwareFileIndex): Files =
+    index.allFiles().map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).sortBy(_._1)
 
   /** A file-source relation in a stem: what it reads and how, without the
     * index (which holds a session) or its listing. */
@@ -179,8 +330,16 @@ object ResultCache {
       case _ => true
     })
 
+  /** Whether a text may stand for this plan while the catalog is
+    * unchanged: every relation is an unpartitioned catalog table. A path
+    * or glob read can gain files outside its stored root paths, and a
+    * partition added to a table changes no catalog generation. */
+  private def catalogTablesOnly(plan: LogicalPlan): Boolean =
+    plan.collectWithSubqueries { case r: LogicalRelation => r }.forall(r =>
+      r.catalogTable.isDefined && r.relation.asInstanceOf[HadoopFsRelation].partitionSchema.isEmpty)
+
   /** The statement's stem and the listing of each relation it reads. */
-  private def keyOf(capped: DataFrame, schema: StructType): Option[(Stem, Seq[Files])] = {
+  private def keyOf(capped: DataFrame, schema: StructType): Option[Key] = {
     val qe = capped.queryExecution
     val plan = qe.optimizedPlan
     if (plan.collectFirstWithSubqueries { case n if !allowed(n) => n }.isDefined ||
@@ -189,17 +348,18 @@ object ResultCache {
         }.isDefined) None
     else {
       val files = Seq.newBuilder[Files]
+      val sources = Seq.newBuilder[Source]
       val stemPlan = plan.canonicalized.transformUpWithSubqueries {
         case r @ LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
           val index = fs.location.asInstanceOf[PartitioningAwareFileIndex]
-          files += index.allFiles().map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
-            .sortBy(_._1)
+          files += filesOf(index)
+          sources += Source(index.rootPaths, fs.options, fs.schema)
           FileScan(r.output, index.rootPaths.map(_.toString).sorted,
             fs.fileFormat.getClass.getName, fs.dataSchema, fs.partitionSchema,
             fs.bucketSpec, fs.options)
       }
-      Some((Stem(stemPlan, schema, qe.sparkSession.sessionState.conf.getAllConfs),
-        files.result()))
+      Some(Key(Stem(stemPlan, schema, qe.sparkSession.sessionState.conf.getAllConfs),
+        files.result(), Option.when(catalogTablesOnly(plan))(sources.result())))
     }
   }
 

@@ -2,7 +2,6 @@ package graft.interp
 
 import graft.interp.Dashboard.{QueryMaxRows, VarStore}
 import graft.sqlfront.{Dialect, Macros, PivotStmt, SqlText}
-import graft.types.ShaperTypes
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.encoderFor
 import org.apache.spark.sql.catalyst.expressions.UnsafeRow
@@ -18,16 +17,20 @@ import scala.collection.mutable
   * same thing wherever it appears; here each caller keeps only its own
   * fold over the statements (sections and labels, the download target,
   * the task gate and SCHEDULE) and takes these steps from one place:
-  *  - [[request]]: a fresh session (`graft.Sessions.request`) with the
-  *    shaper types, `BOXPLOT` and `len` registered and the caller's
-  *    `prepare` run, a variable store, a macro store and the request's
-  *    temp tables, released when the request ends;
+  *  - [[request]]: a fresh session (`graft.Sessions.request`, born
+  *    with the shaper types, `BOXPLOT`, `len` and the engine's rules)
+  *    with the caller's `prepare` run, a variable store, a macro store
+  *    and the request's temp tables, released when the request ends;
   *  - [[split]]: comments stripped, statements split and trimmed;
   *  - [[Request.sideEffect]]: `CREATE MACRO`, `SET`/`RESET VARIABLE` and
   *    `CREATE TEMP TABLE/VIEW … AS`, applied to the request's state;
   *  - [[Request.compile]]: macro expansion, the `duckdb_*` catalog views,
   *    then `SUMMARIZE`, `PIVOT` or the dialect rewrite with the request's
   *    variables substituted as literals;
+  *  - [[Request.query]]: compile and collect in one step. A statement's
+  *    rewritten text is looked up in [[ResultCache]] before Spark parses
+  *    it; `SUMMARIZE`, `PIVOT`, or a text the cache cannot answer, is
+  *    compiled and collected;
   *  - [[Request.collect]]: a statement's schema and first
   *    `QueryMaxRows + 1` rows, reused from [[ResultCache]] while its plan
   *    and input files are unchanged.
@@ -45,9 +48,6 @@ object Statements {
       body: Request => A): A = {
     val req = new Request(graft.Sessions.request(spark), Dashboard.tokenVars(variables), cache)
     try {
-      ShaperTypes.register(req.spark)
-      graft.exprs.Boxplot.register(req.spark)
-      graft.exprs.Len.register(req.spark)
       prepare(req.spark)
       body(req)
     } finally req.tempTables.release()
@@ -67,6 +67,10 @@ object Statements {
       cache: ResultCache) {
     val macros = new Macros.MacroStore
     private[Statements] val tempTables = new TempTables(spark)
+    /** What text lookups checked since the request last compiled or
+      * bound a statement, which may have written a table or made a
+      * function. */
+    private val checks = new ResultCache.Checks
 
     /** Apply a statement this step owns to the request's state; false for
       * any other statement, which the caller handles. */
@@ -105,19 +109,40 @@ object Statements {
       * `duckdb_*` reference inside a macro body still refreshes the
       * catalog views. */
     def compile(sql: String): DataFrame = {
-      val expanded = Macros.expand(sql, macros)
+      checks.clear()
+      compiled(Macros.expand(sql, macros)).fold(identity, spark.sql)
+    }
+
+    /** [[collect]] of [[compile]], except that a plain query's rewritten
+      * text is looked up before Spark parses it ([[ResultCache.query]]). */
+    def query(sql: String): (Seq[StructField], Seq[Row]) = {
+      val (schema, rows) = compiled(Macros.expand(sql, macros)) match {
+        case Left(df) =>
+          checks.clear()
+          cache.collect(df, QueryMaxRows + 1)
+        case Right(text) => cache.query(spark, text, QueryMaxRows + 1, checks)
+      }
+      (schema.fields.toSeq, rows)
+    }
+
+    /** `SUMMARIZE` or `PIVOT` as its DataFrame, any other statement as the
+      * rewritten text Spark runs, with the `duckdb_*` views refreshed
+      * first when it reads them. */
+    private def compiled(expanded: String): Either[DataFrame, String] = {
       if (graft.catalog.CatalogFunctions.referenced(expanded))
         graft.catalog.CatalogFunctions.refresh(spark)
-      if (expanded.toUpperCase.startsWith("SUMMARIZE")) summarize(expanded)
-      else if (PivotStmt.isPivotStatement(expanded)) PivotStmt.execute(spark, rewrite(expanded))
-      else spark.sql(rewrite(expanded))
+      if (expanded.toUpperCase.startsWith("SUMMARIZE")) Left(summarize(expanded))
+      else if (PivotStmt.isPivotStatement(expanded)) Left(PivotStmt.execute(spark, rewrite(expanded)))
+      else Right(rewrite(expanded))
     }
 
     /** `sql` with the request's macros expanded and its variables
       * substituted as literals, for a statement the caller runs itself
       * rather than through [[compile]] (a task's UPDATE/DELETE). */
-    def bind(sql: String): String =
+    def bind(sql: String): String = {
+      checks.clear()
       Dialect.substituteVariables(Macros.expand(sql, macros), store.render)
+    }
 
     /** A query's schema and first `QueryMaxRows + 1` rows (the reference
       * keeps cap+1 rows: append-then-check loop, get_dashboard.go:23). The

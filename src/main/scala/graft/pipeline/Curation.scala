@@ -673,16 +673,6 @@ object Curation {
   def phraseSearch(index: DataFrame, phrase: Seq[String]): DataFrame =
     PipelineOps.phraseSearchOf(index, phrase)
 
-  /** Unordered proximity ("NEAR") search over a stored positional
-    * index (idx06's kernel): docs where every term falls inside a
-    * `window`-token span in any order, reported with the minimal
-    * span — between [[phraseSearch]]'s strict adjacency and ranked
-    * bag-of-words. Same pruned df(term)-sized scans. Returns
-    * (doc_id, min_span). */
-  def proximitySearch(index: DataFrame, terms: Seq[String],
-      window: Int): DataFrame =
-    PipelineOps.proximitySearchOf(index, terms, window)
-
   /** Score documents against a STORED KN model (lm04's serve half):
     * byte-for-byte lm03's scoring dataflow with the model tables read
     * cold — a scoring session never re-aggregates the seed. */

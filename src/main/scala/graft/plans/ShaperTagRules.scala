@@ -32,9 +32,10 @@ import scala.util.control.NonFatal
   *     keeping the output attributes' ids. Exact: a single-field struct
   *     is injective in its field, so the groups are the same groups.
   *
-  * Output rows, schema and field metadata are unchanged. Installed by
-  * `ShaperTypes.register` (the interpreter's sessions) and injected by
-  * `GraftExtensions` (spark-submit sessions). Idempotent.
+  * Output rows, schema and field metadata are unchanged. Injected by
+  * `GraftExtensions` (request sessions and spark-submit sessions) and
+  * installed by `ShaperTypes.register` (sessions built without it).
+  * Idempotent.
   */
 object ShaperTagRules extends Rule[LogicalPlan] {
 

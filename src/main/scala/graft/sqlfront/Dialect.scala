@@ -10,7 +10,7 @@ import scala.util.matching.Regex
   *
   * Rewrites:
   *  - `expr::NAME` for the 48 shaper types → `NAME(expr)` (the functions
-  *    are registered by ShaperTypes.register); cast chains like
+  *    are injected by graft.GraftExtensions); cast chains like
   *    `'x'::TIMESTAMP::XAXIS` resolve outside-in.
   *  - `::TIMESTAMPTZ` → `::TIMESTAMP` (Spark TIMESTAMP is tz-aware).
   *  - zero-arg `count()` → `count(*)` (README.md:16 uses it).

@@ -172,7 +172,7 @@ object Tasks {
       else if (req.sideEffect(sqlString)) (Nil, Nil)
       else sqlString match {
         case createOrReplaceTableAs(name, body) => replaceTableAs(req.compile(body), name); (Nil, Nil)
-        case _ => req.collect(req.compile(sqlString))
+        case _ => req.query(sqlString)
       }
 
     var stopped = false

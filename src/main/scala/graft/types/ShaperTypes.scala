@@ -172,16 +172,11 @@ object ShaperTypes {
 
   /** Register all 48 types as SQL functions (the `::NAME` cast syntax is
     * turned into these calls by graft.sqlfront.Dialect), and install
-    * [[graft.plans.ShaperTagRules]] once per session. Quietly: cloned
-    * sessions inherit the parent's entries, so re-registering would
-    * otherwise WARN 48 times per dashboard/task/download run. */
+    * [[graft.plans.ShaperTagRules]] once per session, on a session built
+    * without `graft.GraftExtensions` (request sessions are born with
+    * both). */
   def register(spark: SparkSession): Unit = {
-    graft.exprs.RegistryQuiet.quietly {
-      all.foreach { td =>
-        spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-          td.name, exprs => ShaperTagged(td.name, exprs.head), "scala_udf")
-      }
-    }
+    graft.GraftExtensions.register(spark, all.map(_.name): _*)
     if (!spark.experimental.extraOptimizations.contains(graft.plans.ShaperTagRules))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ graft.plans.ShaperTagRules

@@ -848,7 +848,8 @@ class HttpApiSpec extends AnyFunSuite {
       Seq(Tokens.Permission.ReadMetrics), Tokens.Actor(Tokens.ActorType.User, "u1"))
     val (_, _, key) = fixture
     val body = get("/metrics", Some(metricsKey)).body()
-    Seq("graft_result_cache_hits_total counter", "graft_result_cache_misses_total counter",
+    Seq("graft_result_cache_hits_total counter", "graft_result_cache_text_hits_total counter",
+      "graft_result_cache_misses_total counter",
       "graft_result_cache_incremental_total counter", "graft_result_cache_bytes gauge",
       "graft_result_cache_entries gauge").foreach(t => assert(body.contains(s"# TYPE $t"), body))
     // two aggregate statements over the ingest table, each answered from
@@ -881,6 +882,29 @@ class HttpApiSpec extends AnyFunSuite {
     assert(renderedCount() == 5)
     val (h3, i3, m3) = counters()
     assert((h3 - h2, i3 - i2, m3 - m2) == (1, 2, 0), "after ingest: (hits, incremental, misses)")
+
+    // The fixture's prepare hook gives every request temp views, so its
+    // statements are never answered from text. A server without one
+    // answers a repeat of an unchanged render before Spark parses it.
+    val plain = new HttpApi(spark, fixtureStore, secret)
+    val plainPort = plain.start()
+    def textHits() = metric(metricsKey, "graft_result_cache_text_hits_total")
+    def renderPlain(): String = {
+      val r = client.send(HttpRequest.newBuilder(
+          URI.create(s"http://127.0.0.1:$plainPort/api/dashboards/cachelive"))
+        .header("Authorization", s"Bearer ${jwt()}").GET().build(), HttpResponse.BodyHandlers.ofString())
+      assert(r.statusCode() == 200, r.body())
+      r.body()
+    }
+    try {
+      val first = renderPlain()
+      val (h4, i4, m4) = counters()
+      val t4 = textHits()
+      assert(renderPlain() == first)
+      val (h5, i5, m5) = counters()
+      assert((h5 - h4, i5 - i4, m5 - m4) == (3, 0, 0), "unchanged render: (hits, incremental, misses)")
+      assert(textHits() - t4 == 3, "unchanged render: text hits")
+    } finally plain.stop()
   }
 
   test("temporary dashboards: TTL'd preview store, never journaled (create_dashboard.go:31-52)") {

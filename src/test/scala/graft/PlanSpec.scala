@@ -1600,11 +1600,15 @@ class PlanSpec extends AnyFunSuite {
   private def taggedSql(sql: String): org.apache.spark.sql.DataFrame =
     tagged.sql(graft.sqlfront.Dialect.rewrite(sql))
 
+  /** `body` with ShaperTagRules excluded from `tagged`'s optimizer, both
+    * where `ShaperTypes.register` installs it and where a session is born
+    * with it (`graft.Sessions.request` gives the root's every new session
+    * the GraftExtensions rules). */
   private def withoutTagRules[A](body: => A): A = {
-    val saved = tagged.experimental.extraOptimizations
-    tagged.experimental.extraOptimizations =
-      saved.filterNot(_ eq graft.plans.ShaperTagRules)
-    try body finally tagged.experimental.extraOptimizations = saved
+    val key = "spark.sql.optimizer.excludedRules"
+    val saved = tagged.conf.getOption(key)
+    tagged.conf.set(key, graft.plans.ShaperTagRules.ruleName)
+    try body finally saved.fold(tagged.conf.unset(key))(tagged.conf.set(key, _))
   }
 
   /** Spark jobs `body` launches from this thread: counted by a listener

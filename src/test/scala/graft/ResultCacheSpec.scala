@@ -450,4 +450,186 @@ class ResultCacheSpec extends AnyFunSuite {
     append(dir, 10, 13)
     assert(rowsOf(Dashboard.run(spark, content, cfg)) == Seq(Seq(Seq(13))))
   }
+
+  // ---- the text-keyed front: a render, a change, the render again ----
+
+  /** `body`'s result with the text hits it added. */
+  private def textHitsOf[A](body: => A): (A, Long) = {
+    val t = cache.textHits.get
+    val a = body
+    (a, cache.textHits.get - t)
+  }
+
+  /** A catalog table `name` in `db` over a fresh directory of `n` rows;
+    * the directory. */
+  private def catalogTable(name: String, n: Int, db: String = "default"): String = {
+    val dir = table(n)
+    spark.sql(s"DROP TABLE IF EXISTS $db.$name")
+    spark.sql(s"CREATE TABLE $db.$name USING parquet LOCATION '$dir'")
+    dir
+  }
+
+  /** Render `content` twice with `cfg`, apply `change`, render with
+    * `after`: that render must equal one through a fresh, empty cache.
+    * Its JSON and the text hits of the repeat render before the change. */
+  private def textCase(content: String, cfg: RunConfig = RunConfig(), after: Option[RunConfig] = None)(
+      change: => Unit): (String, Long) = {
+    Dashboard.run(spark, content, cfg)
+    val (_, before) = textHitsOf(Dashboard.run(spark, content, cfg))
+    change
+    val cfg2 = after.getOrElse(cfg)
+    val json = Model.toJson(Dashboard.run(spark, content, cfg2))
+    assert(json == recomputed(content, cfg2), content)
+    (json, before)
+  }
+
+  test("text front: an unchanged catalog-table render is answered from text, hits counted once") {
+    catalogTable("rc_text_plain", 12)
+    val content = "SELECT 'Per key'::LABEL;\n" +
+      "SELECT k, count(*) AS n FROM rc_text_plain GROUP BY k ORDER BY k;"
+    val first = Model.toJson(Dashboard.run(spark, content))
+    val ((second, hits, misses), text) = textHitsOf(counted(Model.toJson(Dashboard.run(spark, content))))
+    assert((hits, misses, text) == (2, 0, 2))
+    assert(second == first)
+    spark.sql("DROP TABLE rc_text_plain")
+  }
+
+  test("text front: ALTER TABLE ADD COLUMNS is seen by the next SELECT *") {
+    catalogTable("rc_text_alter", 5)
+    val (json, before) = textCase("SELECT * FROM rc_text_alter ORDER BY v;")(
+      spark.sql("ALTER TABLE rc_text_alter ADD COLUMNS (extra STRING)"))
+    assert(before == 1)
+    assert(json.contains("extra"), json)
+    spark.sql("DROP TABLE rc_text_alter")
+  }
+
+  test("text front: DROP then CREATE of the same name with other rows") {
+    catalogTable("rc_text_recreate", 5)
+    val (_, before) = textCase("SELECT count(*) AS n, sum(v) AS s FROM rc_text_recreate;")(
+      catalogTable("rc_text_recreate", 7))
+    assert(before == 1)
+    assert(rowsOf(Dashboard.run(spark, "SELECT count(*) AS n, sum(v) AS s FROM rc_text_recreate;")) ==
+      Seq(Seq(Seq(7, 21))))
+    spark.sql("DROP TABLE rc_text_recreate")
+  }
+
+  test("text front: CREATE OR REPLACE VIEW") {
+    catalogTable("rc_text_view_t", 9)
+    spark.sql("CREATE OR REPLACE VIEW rc_text_view AS SELECT v FROM rc_text_view_t WHERE k = 0")
+    val content = "SELECT count(*) AS n, sum(v) AS s FROM rc_text_view;"
+    val (_, before) = textCase(content)(
+      spark.sql("CREATE OR REPLACE VIEW rc_text_view AS SELECT v FROM rc_text_view_t WHERE k = 1"))
+    assert(before == 1)
+    assert(rowsOf(Dashboard.run(spark, content)) == Seq(Seq(Seq(3, 12))))
+    spark.sql("DROP VIEW rc_text_view")
+    spark.sql("DROP TABLE rc_text_view_t")
+  }
+
+  test("text front: a prepare hook's temp view shadows the catalog table") {
+    catalogTable("rc_text_shadow", 5)
+    val content = "SELECT count(*) AS n FROM rc_text_shadow;"
+    val shadow = RunConfig(prepare = ss => ss.range(3).selectExpr("id AS v").createOrReplaceTempView("rc_text_shadow"))
+    val (_, before) = textCase(content, after = Some(shadow))(())
+    assert(before == 1)
+    assert(rowsOf(Dashboard.run(spark, content, shadow)) == Seq(Seq(Seq(3))))
+    spark.sql("DROP TABLE rc_text_shadow")
+  }
+
+  test("text front: a global temp view replaced between renders") {
+    spark.sql("CREATE OR REPLACE GLOBAL TEMP VIEW rc_text_gv AS SELECT 1 AS x")
+    try {
+      val content = "SELECT x FROM global_temp.rc_text_gv;"
+      val (_, before) = textCase(content)(
+        spark.sql("CREATE OR REPLACE GLOBAL TEMP VIEW rc_text_gv AS SELECT 2 AS x"))
+      assert(before == 0, "a global temp view exists: no statement is answered from text")
+      assert(rowsOf(Dashboard.run(spark, content)) == Seq(Seq(Seq(2))))
+    } finally spark.catalog.dropGlobalTempView("rc_text_gv")
+  }
+
+  test("text front: CACHE TABLE, then the table gains a file") {
+    val dir = catalogTable("rc_text_cached", 5)
+    val content = "SELECT count(*) AS n FROM rc_text_cached;"
+    try {
+      val (_, before) = textCase(content) {
+        spark.sql("CACHE TABLE rc_text_cached")
+        append(dir, 5, 8)
+      }
+      assert(before == 1)
+    } finally spark.sql("UNCACHE TABLE IF EXISTS rc_text_cached")
+    spark.sql("DROP TABLE rc_text_cached")
+  }
+
+  test("text front: a glob path read that gains a file") {
+    val dir = table(5)
+    val content = s"SELECT count(*) AS n FROM parquet.`$dir/*.parquet`;"
+    val (_, before) = textCase(content)(append(dir, 5, 9))
+    assert(before == 0, "a path read gets no text entry")
+    assert(rowsOf(Dashboard.run(spark, content)) == Seq(Seq(Seq(9))))
+  }
+
+  test("text front: a partitioned table that gains a partition") {
+    spark.sql("DROP TABLE IF EXISTS rc_text_parts")
+    spark.sql("CREATE TABLE rc_text_parts (v BIGINT, p INT) USING parquet PARTITIONED BY (p)")
+    spark.sql("INSERT INTO rc_text_parts VALUES (1, 1), (2, 1)")
+    val content = "SELECT p, count(*) AS n FROM rc_text_parts GROUP BY p ORDER BY p;"
+    val (_, before) = textCase(content)(spark.sql("INSERT INTO rc_text_parts VALUES (3, 2)"))
+    assert(before == 0, "a partitioned table gets no text entry")
+    assert(rowsOf(Dashboard.run(spark, content)) == Seq(Seq(Seq(1, 2), Seq(2, 1))))
+    spark.sql("DROP TABLE rc_text_parts")
+  }
+
+  test("text front: a task that runs USE other_db reads that database's table") {
+    spark.sql("CREATE DATABASE IF NOT EXISTS rc_text_db")
+    catalogTable("rc_text_use", 5)
+    catalogTable("rc_text_use", 7, db = "rc_text_db")
+    val plain = "SELECT count(*) AS n FROM rc_text_use;"
+    def counts(task: String): Seq[String] = {
+      val r = graft.tasks.Tasks.executeTask(spark, task)
+      assert(r.success, r)
+      r.queries.flatMap(_.resultRows).flatten.map(String.valueOf)
+    }
+    assert(counts(plain) == Seq("5"))
+    val (again, text) = textHitsOf(counts(plain))
+    assert((again, text) == (Seq("5"), 1))
+    assert(counts("USE rc_text_db;\n" + plain) == Seq("7"))
+    assert(counts(plain) == Seq("5"))
+    spark.sql("DROP TABLE rc_text_db.rc_text_use")
+    spark.sql("DROP TABLE rc_text_use")
+  }
+
+  test("text front: a spark.sql.ansi.enabled change") {
+    catalogTable("rc_text_ansi", 3)
+    val content = "SELECT CAST(tenant AS INT) AS x FROM rc_text_ansi ORDER BY v;"
+    def ansi(on: Boolean) = RunConfig(prepare = _.conf.set("spark.sql.ansi.enabled", on.toString))
+    Dashboard.run(spark, content, ansi(false))
+    val (off, text) = textHitsOf(rowsOf(Dashboard.run(spark, content, ansi(false))))
+    assert((off, text) == (Seq(Seq(Seq(null), Seq(null), Seq(null))), 1))
+    // ANSI casts fail on 'a' in a fresh session, and so here
+    val fresh = intercept[Exception](recomputed(content, ansi(true)))
+    val here = intercept[Exception](Dashboard.run(spark, content, ansi(true)))
+    assert(here.getClass == fresh.getClass, here)
+    spark.sql("DROP TABLE rc_text_ansi")
+  }
+
+  test("text front: two JWT claims each get their own rows") {
+    catalogTable("rc_text_jwt", 30)
+    val content = "SELECT getvariable('tenant') AS who, count(*) AS n, sum(v) AS s " +
+      "FROM rc_text_jwt WHERE tenant = getvariable('tenant');"
+    def claim(t: String) = RunConfig(variables = Map("tenant" -> t))
+    val (b, before) = textCase(content, claim("a"), Some(claim("b")))(())
+    assert(before == 1)
+    assert(rowsOf(Dashboard.run(spark, content, claim("b"))) == Seq(Seq(Seq("b", 10, 145))))
+    val (a, text) = textHitsOf(Model.toJson(Dashboard.run(spark, content, claim("a"))))
+    assert(text == 1)
+    assert(a == recomputed(content, claim("a")) && a != b)
+    spark.sql("DROP TABLE rc_text_jwt")
+  }
+
+  test("text front: an append to a catalog table is still answered incrementally") {
+    val dir = catalogTable("rc_text_append", 10)
+    val content = "SELECT k, count(*) AS n, sum(v) AS s FROM rc_text_append GROUP BY k ORDER BY k;"
+    Dashboard.run(spark, content)
+    afterChange(content, RunConfig(), (0, 1, 0))(append(dir, 10, 12))
+    spark.sql("DROP TABLE rc_text_append")
+  }
 }

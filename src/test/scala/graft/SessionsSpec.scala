@@ -151,4 +151,24 @@ class SessionsSpec extends AnyFunSuite {
     assert(without.unsetVariables == Seq("tenant"))
     assert(!without.sections.flatMap(_.queries).flatMap(_.rows).flatten.contains("acme"))
   }
+
+  test("a request session is born with every engine function and BOXPLOT; nothing registers") {
+    val s = Sessions.request(spark)
+    val registry = s.sessionState.functionRegistry
+    GraftExtensions.functions.foreach { case (id, info, _) =>
+      assert(registry.lookupFunction(id).exists(_ eq info), id)
+    }
+    assert(Sessions.holdsBornFunctions(s))
+    val row = s.sql("SELECT len(array(1, 2, 3)) AS n, len('abcd') AS c, " +
+      "BOXPLOT(CAST(id AS DOUBLE)).q2 AS median, " +
+      "cosine_sim(array(3.0D, 4.0D), array(3.0D, 4.0D)) AS cos FROM range(5)").head
+    assert((row.getInt(0), row.getInt(1), row.getDouble(2), row.getDouble(3)) == (3, 4, 2.0, 1.0))
+    val tagged = s.sql(graft.sqlfront.Dialect.rewrite("SELECT 'Title'::LABEL"))
+    assert(tagged.queryExecution.optimizedPlan
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    // a function made in the session is not one it was born with
+    s.udf.register("rc_plus_one", (x: Long) => x + 1)
+    assert(!Sessions.holdsBornFunctions(s))
+    assert(Sessions.holdsBornFunctions(Sessions.request(spark)))
+  }
 }
