@@ -71,7 +71,9 @@ object GraftExtensions {
     * cloned from, holding this engine's version of each builtin name it
     * overrides (`len`, whose Spark form is the string-only half). A
     * session born with the extension then overrides its own entry, and
-    * logs no replace warning per session. Once per JVM. */
+    * logs no replace warning per session. Once per JVM, and seen by
+    * every session the JVM makes afterwards, not only those built with
+    * the extension. */
   private[graft] lazy val overrideBuiltins: Unit =
     put(FunctionRegistry.builtin, functions.filter(f => FunctionRegistry.builtin.functionExists(f._1)))
 

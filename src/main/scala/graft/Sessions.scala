@@ -19,7 +19,11 @@ import java.util.concurrent.atomic.AtomicLong
   * first request applies [[GraftExtensions]] to the extensions the root
   * session shares with every `newSession()`, whose registry Spark builds
   * as the builtins plus the injected functions. A request then registers
-  * nothing.
+  * nothing. The first request also puts the engine's `len` into Spark's
+  * builtin registry, which is shared by the whole JVM, so every session
+  * made afterwards, request or not, resolves `len` to it: on strings and
+  * binary it is Spark's `len` (`SessionsSpec`), and on arrays and maps
+  * it counts elements where Spark's raises an analysis error.
   *
   * What it shares with every other request is the executor class loader.
   * On Spark 4.x a `newSession()` has its own session UUID, and while

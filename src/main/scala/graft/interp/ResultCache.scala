@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LocalRelation, LogicalPlan, OneRowRelation, Range}
 import org.apache.spark.sql.catalyst.trees.TreePattern.CURRENT_LIKE
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex, LogicalRelation, PartitioningAwareFileIndex}
+import org.apache.spark.sql.graftsession.SessionHooks
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.SizeEstimator
 
@@ -76,11 +77,12 @@ import scala.util.Try
   *  - the catalog generation (`graft.Sessions.catalogGeneration`, read
   *    before the entry's analysis) is unchanged: no table, view, function
   *    or database was created, dropped, renamed or altered since;
-  *  - the session is clean: no local or global temp view, no data cached
-  *    by any session, and only the functions it was born with;
+  *  - the session is clean: no local or global temp view, no session
+  *    variable, no experimental optimizer rule or strategy, no data
+  *    cached by any session, and only the functions it was born with;
   *  - every table the statement reads lists, by Spark's own
   *    `InMemoryFileIndex`, as the stem entry's files (each table at most
-  *    once per request, until the request runs anything else).
+  *    once per request, until the request runs Spark SQL again).
   * A text entry is recorded only for a cacheable statement whose every
   * file relation is an unpartitioned catalog table: a path or glob read
   * can gain files outside its stored root paths, and adding a partition
@@ -111,25 +113,24 @@ final class ResultCache(maxBytes: Long) {
   /** Statements with an entry. */
   def size: Int = synchronized(entries.size)
 
-  /** `sql`'s schema and at most `maxRows` of its rows, run in `spark`.
+  /** `sql`'s schema and at most `maxRows` of its rows in `spark`.
     * Answered from its text with no parse, analysis or optimization when
     * the text entry's catalog generation is current, `spark` is clean
     * ([[ResultCache.Checks]]) and every table the statement reads lists
-    * as the stem entry's files do; otherwise the statement takes
-    * [[collect]]'s path. `checks` holds what the caller's request has
-    * checked since it last ran anything but a text hit. */
-  def query(spark: SparkSession, sql: String, maxRows: Int,
-      checks: ResultCache.Checks): (StructType, Seq[Row]) = {
+    * as the stem entry's files do; otherwise `run` makes its DataFrame
+    * and the statement takes [[collect]]'s path. `checks` holds what the
+    * caller's request has checked since it last ran Spark SQL; the caller
+    * forgets them when `run` is called. */
+  def query(spark: SparkSession, sql: String, maxRows: Int, checks: ResultCache.Checks)(
+      run: String => DataFrame): (StructType, Seq[Row]) = {
     // read before analysis: a catalog change after this point makes an
     // entry recorded with it stale
     val generation = graft.Sessions.catalogGeneration
     val text = Option.when(checks.clean(spark))(ResultCache.TextKey(sql,
       spark.sessionState.conf.getAllConfs, maxRows, spark.catalog.currentCatalog(),
       spark.catalog.currentDatabase))
-    text.flatMap(answer(spark, _, generation, checks)).getOrElse {
-      checks.clear()
-      collect(spark.sql(sql), maxRows, text.map(_ -> generation))
-    }
+    text.flatMap(answer(spark, _, generation, checks))
+      .getOrElse(collect(run(sql), maxRows, text.map(_ -> generation)))
   }
 
   private def answer(spark: SparkSession, key: ResultCache.TextKey, generation: Long,
@@ -271,10 +272,11 @@ object ResultCache {
     * relations themselves when each is an unpartitioned catalog table. */
   private final case class Key(stem: Stem, files: Seq[Files], sources: Option[Seq[Source]])
 
-  /** What one request has checked since it last ran anything but a text
-    * hit, which may have written a table or made a function: the files
-    * of each table it listed, and that its session holds only the
-    * functions it was born with. Not thread-safe: a request runs on one
+  /** What one request has checked since it last ran Spark SQL, which
+    * may have written a table or made a function: the files of each
+    * table it listed, and that its session holds only the functions it
+    * was born with. The request owns the rule for forgetting them
+    * (`Statements.Request`). Not thread-safe: a request runs on one
     * thread. */
   final class Checks {
     private val listed = mutable.HashMap.empty[Source, Files]
@@ -287,12 +289,16 @@ object ResultCache {
       listed.getOrElseUpdate(source, filesOf(
         new InMemoryFileIndex(spark, source.rootPaths, source.options, Some(source.schema))))
 
-    /** Whether `spark` holds no temp view, the process no global temp view
-      * or cached data, and the session exactly its born functions. */
+    /** Whether `spark` holds no temp view, session variable or
+      * experimental optimizer rule or strategy, the process no global
+      * temp view or cached data, and the session exactly its born
+      * functions. */
     private[ResultCache] def clean(spark: SparkSession): Boolean = {
       val catalog = spark.sessionState.catalog
       catalog.getTempViewNames().isEmpty && spark.sharedState.cacheManager.isEmpty &&
         catalog.globalTempViewManager.listViewNames("*").isEmpty &&
+        SessionHooks.holdsNoVariables(spark) &&
+        spark.experimental.extraOptimizations.isEmpty && spark.experimental.extraStrategies.isEmpty &&
         bornFunctions.getOrElse {
           val born = graft.Sessions.holdsBornFunctions(spark)
           bornFunctions = Some(born)
@@ -300,8 +306,7 @@ object ResultCache {
         }
     }
 
-    /** Forget every check: the caller may have written a table or made a
-      * function since. */
+    /** Forget every check. */
     def clear(): Unit = {
       listed.clear()
       bornFunctions = None

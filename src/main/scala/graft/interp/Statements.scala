@@ -29,8 +29,8 @@ import scala.collection.mutable
   *    variables substituted as literals;
   *  - [[Request.query]]: compile and collect in one step. A statement's
   *    rewritten text is looked up in [[ResultCache]] before Spark parses
-  *    it; `SUMMARIZE`, `PIVOT`, or a text the cache cannot answer, is
-  *    compiled and collected;
+  *    it; `SUMMARIZE`, `PIVOT`, a read of the `duckdb_*` views, or a text
+  *    the cache cannot answer, is compiled and collected;
   *  - [[Request.collect]]: a statement's schema and first
   *    `QueryMaxRows + 1` rows, reused from [[ResultCache]] while its plan
   *    and input files are unchanged.
@@ -67,10 +67,16 @@ object Statements {
       cache: ResultCache) {
     val macros = new Macros.MacroStore
     private[Statements] val tempTables = new TempTables(spark)
-    /** What text lookups checked since the request last compiled or
-      * bound a statement, which may have written a table or made a
-      * function. */
+    /** What text lookups have checked since the request last ran Spark
+      * SQL; see [[running]]. */
     private val checks = new ResultCache.Checks
+
+    /** `step`, which runs Spark SQL in the request's session or hands the
+      * caller a statement to run there, then forget what text lookups
+      * have checked: the statement may have written a table or made a
+      * function. Every step of a request but a text hit goes through
+      * here, so a check is only reused between text hits. */
+    private def running[A](step: => A): A = try step finally checks.clear()
 
     /** Apply a statement this step owns to the request's state; false for
       * any other statement, which the caller handles. */
@@ -79,8 +85,8 @@ object Statements {
         Macros.parseCreate(sql).foreach(macros.define)
         true
       case setVarStmt(name, expr) =>
-        val v = spark.sql(s"SELECT (${rewrite(Macros.expand(expr, macros))}) AS v")
-          .collect().headOption.map(_.get(0)).orNull
+        val v = running(spark.sql(s"SELECT (${rewrite(Macros.expand(expr, macros))}) AS v")
+          .collect().headOption.map(_.get(0)).orNull)
         v match {
           case s: scala.collection.Seq[_] =>
             store.multiVars(name) = s.map(String.valueOf).toSeq
@@ -94,7 +100,7 @@ object Statements {
         store.singleVars.remove(name)
         store.multiVars.remove(name)
         true
-      case createTemp(kind, name, body) =>
+      case createTemp(kind, name, body) => running {
         // TEMP TABLE ⇒ materialized rows; TEMP VIEW ⇒ a view, re-evaluated
         // by every statement that reads it
         val df = spark.sql(rewrite(Macros.expand(body, macros)))
@@ -102,47 +108,47 @@ object Statements {
         if (kind.equalsIgnoreCase("TABLE")) tempTables.create(clean, df)
         else df.createOrReplaceTempView(clean)
         true
+      }
       case _ => false
     }
 
     /** The statement's DataFrame. Macros are expanded first, so a
       * `duckdb_*` reference inside a macro body still refreshes the
       * catalog views. */
-    def compile(sql: String): DataFrame = {
-      checks.clear()
-      compiled(Macros.expand(sql, macros)).fold(identity, spark.sql)
-    }
+    def compile(sql: String): DataFrame = running(dataFrame(Macros.expand(sql, macros)))
 
     /** [[collect]] of [[compile]], except that a plain query's rewritten
       * text is looked up before Spark parses it ([[ResultCache.query]]). */
     def query(sql: String): (Seq[StructField], Seq[Row]) = {
-      val (schema, rows) = compiled(Macros.expand(sql, macros)) match {
-        case Left(df) =>
-          checks.clear()
-          cache.collect(df, QueryMaxRows + 1)
-        case Right(text) => cache.query(spark, text, QueryMaxRows + 1, checks)
-      }
+      val expanded = Macros.expand(sql, macros)
+      val (schema, rows) =
+        if (plain(expanded))
+          cache.query(spark, rewrite(expanded), QueryMaxRows + 1, checks)(text => running(spark.sql(text)))
+        else running(cache.collect(dataFrame(expanded), QueryMaxRows + 1))
       (schema.fields.toSeq, rows)
     }
 
-    /** `SUMMARIZE` or `PIVOT` as its DataFrame, any other statement as the
-      * rewritten text Spark runs, with the `duckdb_*` views refreshed
+    /** Whether Spark runs the statement as its rewritten text: anything
+      * but `SUMMARIZE`, `PIVOT` or a read of the `duckdb_*` views. */
+    private def plain(expanded: String): Boolean =
+      !graft.catalog.CatalogFunctions.referenced(expanded) &&
+        !expanded.toUpperCase.startsWith("SUMMARIZE") && !PivotStmt.isPivotStatement(expanded)
+
+    /** The statement's DataFrame, with the `duckdb_*` views refreshed
       * first when it reads them. */
-    private def compiled(expanded: String): Either[DataFrame, String] = {
+    private def dataFrame(expanded: String): DataFrame = {
       if (graft.catalog.CatalogFunctions.referenced(expanded))
         graft.catalog.CatalogFunctions.refresh(spark)
-      if (expanded.toUpperCase.startsWith("SUMMARIZE")) Left(summarize(expanded))
-      else if (PivotStmt.isPivotStatement(expanded)) Left(PivotStmt.execute(spark, rewrite(expanded)))
-      else Right(rewrite(expanded))
+      if (expanded.toUpperCase.startsWith("SUMMARIZE")) summarize(expanded)
+      else if (PivotStmt.isPivotStatement(expanded)) PivotStmt.execute(spark, rewrite(expanded))
+      else spark.sql(rewrite(expanded))
     }
 
     /** `sql` with the request's macros expanded and its variables
       * substituted as literals, for a statement the caller runs itself
       * rather than through [[compile]] (a task's UPDATE/DELETE). */
-    def bind(sql: String): String = {
-      checks.clear()
-      Dialect.substituteVariables(Macros.expand(sql, macros), store.render)
-    }
+    def bind(sql: String): String =
+      running(Dialect.substituteVariables(Macros.expand(sql, macros), store.render))
 
     /** A query's schema and first `QueryMaxRows + 1` rows (the reference
       * keeps cap+1 rows: append-then-check loop, get_dashboard.go:23). The

@@ -11,7 +11,8 @@ import org.apache.spark.sql.catalyst.rules.Rule
 /** The `private[sql]`/`private[spark]` members graft.Sessions needs
   * to give request sessions their functions at birth and to see catalog
   * changes, as `org.apache.spark.graftdev.ListenerDrain` does for the
-  * listener bus. Only `extensions` runs while requests are served. */
+  * listener bus. Only `extensions` and `holdsNoVariables` run while
+  * requests are served. */
 object SessionHooks {
 
   /** The extensions `spark` and every `newSession()` of it share: a new
@@ -31,6 +32,12 @@ object SessionHooks {
     val born = ext.registerFunctions(FunctionRegistry.builtin.clone())
     born.listFunction().map(id => id -> born.lookupFunction(id).get).toMap
   }
+
+  /** Whether `spark` holds no session variable (`DECLARE VARIABLE`).
+    * A variable's value is folded into every plan that reads it, so a
+    * statement's text alone does not say what it computes. */
+  def holdsNoVariables(spark: SparkSession): Boolean =
+    spark.sessionState.catalogManager.tempVariableManager.isEmpty
 
   /** Run `f` on every change to `spark`'s catalog (databases, tables,
     * views, functions), synchronously, in the thread that made it. */

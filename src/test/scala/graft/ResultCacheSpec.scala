@@ -1,6 +1,6 @@
 package graft
 
-import graft.interp.{Dashboard, ResultCache}
+import graft.interp.{Dashboard, ResultCache, Statements}
 import graft.interp.Dashboard.RunConfig
 import graft.render.Model
 import org.apache.spark.sql.SparkSession
@@ -631,5 +631,28 @@ class ResultCacheSpec extends AnyFunSuite {
     Dashboard.run(spark, content)
     afterChange(content, RunConfig(), (0, 1, 0))(append(dir, 10, 12))
     spark.sql("DROP TABLE rc_text_append")
+  }
+
+  test("text front: two tasks that DECLARE the same variable with other values") {
+    catalogTable("rc_text_var", 10)
+    val select = "SELECT count(*) AS n FROM rc_text_var WHERE v > m;"
+    def task(m: Int) = s"DECLARE VARIABLE m BIGINT DEFAULT $m;\n$select"
+    def counts(content: String): Seq[String] = {
+      val r = graft.tasks.Tasks.executeTask(spark, content)
+      assert(r.success, r)
+      r.queries.flatMap(_.resultRows).flatten.map(String.valueOf)
+    }
+    def fresh(content: String): Seq[String] =
+      Statements.request(spark, cache = new ResultCache(64L << 20)) { req =>
+        Statements.split(content).toOption.get.filter(_.nonEmpty).map(req.query).last._2
+          .flatMap(_.toSeq).map(String.valueOf)
+      }
+    for (m <- Seq(2, 7, 2)) {
+      val (n, text) = textHitsOf(counts(task(m)))
+      assert(n == fresh(task(m)), s"m = $m")
+      assert(n == Seq(String.valueOf(9 - m)), s"m = $m")
+      assert(text == 0, "a session holding a variable answers nothing from text")
+    }
+    spark.sql("DROP TABLE rc_text_var")
   }
 }

@@ -171,4 +171,13 @@ class SessionsSpec extends AnyFunSuite {
     assert(!Sessions.holdsBornFunctions(s))
     assert(Sessions.holdsBornFunctions(Sessions.request(spark)))
   }
+
+  test("a plain newSession made after a request gives Spark's len on strings and binary") {
+    Sessions.request(spark)
+    val plain = spark.newSession()
+    def lengths(fn: String) = plain.sql(s"SELECT $fn('héllo') AS s, $fn('') AS e, " +
+      s"$fn(X'0102FF') AS b, $fn(CAST(NULL AS STRING)) AS n, $fn(CAST(NULL AS BINARY)) AS nb").head.toSeq
+    assert(lengths("len") == Seq(5, 0, 3, null, null))
+    assert(lengths("len") == lengths("length"))
+  }
 }
