@@ -134,6 +134,12 @@ final class HttpApi(
 
   /** Start on the given port (0 = ephemeral); returns the bound port. */
   def start(port: Int = 0): Int = {
+    // The JDK server writes a response's headers and its body as two
+    // segments. With Nagle's algorithm on, the body waits for the
+    // client's delayed ACK of the headers, 40 ms on Linux, on every
+    // response. The server reads this once, when the first one is made.
+    if (System.getProperty("sun.net.httpserver.nodelay") == null)
+      System.setProperty("sun.net.httpserver.nodelay", "true")
     server = HttpServer.create(new InetSocketAddress(port), 0)
     server.createContext("/health", exchange(handleHealth))
     server.createContext("/api/sql", exchange(handleSql))
