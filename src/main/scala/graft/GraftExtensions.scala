@@ -69,7 +69,7 @@ object GraftExtensions {
 
   /** Spark's builtin registry, which every new session's registry is
     * cloned from, holding this engine's version of each builtin name it
-    * overrides (`len`, whose Spark form is the string-only half). A
+    * overrides (`len`, whose Spark form counts only strings and binary). A
     * session born with the extension then overrides its own entry, and
     * logs no replace warning per session. Once per JVM, and seen by
     * every session the JVM makes afterwards, not only those built with

@@ -26,6 +26,6 @@ case class Len(child: Expression) extends UnaryExpression with RuntimeReplaceabl
 
 object Len {
   /** `len` on a session built without `graft.GraftExtensions`; it
-    * replaces Spark's own `len`, the string-only half. */
+    * replaces Spark's own `len`, which counts only strings and binary. */
   def register(spark: SparkSession): Unit = graft.GraftExtensions.register(spark, "len")
 }
