@@ -1,36 +1,41 @@
 package graft
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions, SparkSessionExtensionsProvider}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** Session-extensions injector: enables the engine's SQL surface on any
-  * SparkSession via the standard mechanism —
-  * `--conf spark.sql.extensions=graft.GraftExtensions` (or
-  * `builder.withExtensions(new GraftExtensions)`), no imperative
-  * registration calls needed. Injects the 48 shaper custom-type
-  * functions (the `::TYPE` targets produced by
+/** The one way the engine's SQL surface reaches a session. Injects the
+  * 48 shaper custom-type functions (the `::TYPE` targets produced by
   * graft.sqlfront.Dialect), their optimizer rule
   * (graft.plans.ShaperTagRules), the codegen'd natives, `len`, and the
   * `BOXPLOT`/`boxplot_info` aggregates with the rule that routes them
   * (graft.plans.BoxplotScaleRule).
   *
-  * `graft.Sessions.request` applies it once to the root session's shared
-  * extensions, so every request session is born with all of this; the
-  * per-kernel `register` calls only matter on a session built without it.
+  * It is a `SparkSessionExtensionsProvider` named in
+  * `META-INF/services/org.apache.spark.sql.SparkSessionExtensionsProvider`,
+  * so Spark's builder applies it to every root session it makes on a
+  * classpath holding this engine, and every `newSession()` of that root
+  * shares it: `graft.Sessions.root()`, request sessions, test sessions and
+  * an embedding app's sessions are all born with the engine, and nothing
+  * registers per session. `spark.sql.extensions=graft.GraftExtensions` and
+  * `builder.withExtensions(new GraftExtensions)` still work and add
+  * nothing more: an extensions object is applied to once.
   */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
+class GraftExtensions extends SparkSessionExtensionsProvider {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    // Route boxplot_info aggregates (task SQL has no row cap) through
-    // the distributed percentile+join-back plan; runs post-hoc so the
-    // rewritten plan still flows through the full optimizer.
-    ext.injectPostHocResolutionRule(_ => graft.plans.BoxplotScaleRule)
-    // constant tag statements answered without a Spark job, tagged
-    // grouping keys grouped on the raw member value
-    ext.injectOptimizerRule(_ => graft.plans.ShaperTagRules)
-    GraftExtensions.functions.foreach(ext.injectFunction)
+    GraftExtensions.overrideBuiltins
+    if (GraftExtensions.firstApplication(ext)) {
+      // Route boxplot_info aggregates (task SQL has no row cap) through
+      // the distributed percentile+join-back plan; runs post-hoc so the
+      // rewritten plan still flows through the full optimizer.
+      ext.injectPostHocResolutionRule(_ => graft.plans.BoxplotScaleRule)
+      // constant tag statements answered without a Spark job, tagged
+      // grouping keys grouped on the raw member value
+      ext.injectOptimizerRule(_ => graft.plans.ShaperTagRules)
+      GraftExtensions.functions.foreach(ext.injectFunction)
+    }
   }
 }
 
@@ -60,6 +65,16 @@ object GraftExtensions {
 
   private val byName: Map[String, Function] = functions.map(f => f._1.funcName -> f).toMap
 
+  /** Extensions objects already applied to; weak, so a stopped root's are
+    * not pinned. The builder applies the provider after
+    * `withExtensions`/`spark.sql.extensions` have applied to the same
+    * object, and injecting twice would run each rule twice. */
+  private val applied = java.util.Collections.newSetFromMap(
+    new java.util.WeakHashMap[SparkSessionExtensions, java.lang.Boolean])
+
+  private def firstApplication(ext: SparkSessionExtensions): Boolean =
+    applied.synchronized(applied.add(ext))
+
   /** Put the named functions into `spark`'s registry, skipping any it
     * already holds (a session born with this extension holds them all),
     * so no call replaces a function and none logs Spark's
@@ -71,10 +86,10 @@ object GraftExtensions {
     * cloned from, holding this engine's version of each builtin name it
     * overrides (`len`, whose Spark form counts only strings and binary). A
     * session born with the extension then overrides its own entry, and
-    * logs no replace warning per session. Once per JVM, and seen by
-    * every session the JVM makes afterwards, not only those built with
-    * the extension. */
-  private[graft] lazy val overrideBuiltins: Unit =
+    * logs no replace warning per session. Once per JVM, when the first
+    * root session is built, and seen by every session the JVM makes
+    * afterwards. */
+  private lazy val overrideBuiltins: Unit =
     put(FunctionRegistry.builtin, functions.filter(f => FunctionRegistry.builtin.functionExists(f._1)))
 
   private def put(registry: FunctionRegistry, fns: Seq[Function]): Unit =

@@ -15,15 +15,16 @@ import java.util.concurrent.atomic.AtomicLong
   *
   * Each request session gets its own temp-view namespace, function
   * registry and SQL conf, so nothing a request defines is seen by the
-  * next one. It is born with the engine's functions and rules: the
-  * first request applies [[GraftExtensions]] to the extensions the root
-  * session shares with every `newSession()`, whose registry Spark builds
-  * as the builtins plus the injected functions. A request then registers
-  * nothing. The first request also puts the engine's `len` into Spark's
-  * builtin registry, which is shared by the whole JVM, so every session
-  * made afterwards, request or not, resolves `len` to it: on strings and
-  * binary it is Spark's `len` (`SessionsSpec`), and on arrays and maps
-  * it counts elements where Spark's raises an analysis error.
+  * next one. It is born with the engine's functions and rules: Spark's
+  * builder applies [[GraftExtensions]], a `SparkSessionExtensionsProvider`,
+  * to the extensions of every root session, which every `newSession()`
+  * shares, and builds a new session's registry as the builtins plus the
+  * injected functions. A request then registers nothing. Building the
+  * first root also puts the engine's `len` into Spark's builtin registry,
+  * which is shared by the whole JVM, so every session made afterwards
+  * resolves `len` to it: on strings and binary it is Spark's `len`
+  * (`SessionsSpec`), and on arrays and maps it counts elements where
+  * Spark's raises an analysis error.
   *
   * What it shares with every other request is the executor class loader.
   * On Spark 4.x a `newSession()` has its own session UUID, and while
@@ -80,15 +81,11 @@ object Sessions {
     new java.util.WeakHashMap[AnyRef, java.lang.Boolean])
   private val generation = new AtomicLong
 
-  /** Once per root: the extension injected into its shared extensions and
-    * a listener on its shared catalog. */
+  /** Once per root: the functions its new sessions are born with and a
+    * listener on its shared catalog. */
   private def rooted(spark: SparkSession): Unit = synchronized {
     val ext = SessionHooks.extensions(spark)
-    if (!born.containsKey(ext)) {
-      GraftExtensions.overrideBuiltins
-      if (!SessionHooks.injects(ext, spark, graft.plans.ShaperTagRules)) new GraftExtensions()(ext)
-      born.put(ext, SessionHooks.bornFunctions(ext))
-    }
+    if (!born.containsKey(ext)) born.put(ext, SessionHooks.bornFunctions(ext))
     if (listened.add(spark.sharedState.externalCatalog))
       SessionHooks.onCatalogEvent(spark)(_ => generation.incrementAndGet())
   }

@@ -21,9 +21,9 @@ import org.apache.spark.sql.functions._
   *
   * Scale note: the UDAF buffers collect values, which is fine for the
   * dashboard path (≤3000-row results, reference row cap) — but SQL is
-  * not row-capped on the task path, so GraftExtensions (and
-  * `register`) also installs [[graft.plans.BoxplotScaleRule]],
-  * which rewrites BOTH registered forms: boxplot_info into [[tukey]]'s
+  * not row-capped on the task path, so GraftExtensions also injects
+  * [[graft.plans.BoxplotScaleRule]] into every session, which
+  * rewrites BOTH registered forms: boxplot_info into [[tukey]]'s
   * percentile + broadcast join-back plan, and the 1-arg BOXPLOT in
   * place into native max/min/percentile (no join-back — the ELSE
   * branch has no outlier list). The UDAFs remain the reference
@@ -196,18 +196,10 @@ object Boxplot {
         .as(outCol)): _*)
   }
 
-  /** The two aggregates and [[graft.plans.BoxplotScaleRule]] on a
-    * session built without GraftExtensions. */
-  def register(spark: SparkSession): Unit = {
+  /** `BOXPLOT` and `boxplot_info` in `spark`'s registry; a no-op on a
+    * session born with [[graft.GraftExtensions]], which every session is
+    * on a classpath holding this engine. The extension also gives every
+    * session [[graft.plans.BoxplotScaleRule]]. */
+  def register(spark: SparkSession): Unit =
     graft.GraftExtensions.register(spark, "BOXPLOT", "boxplot_info")
-    // SQL-reachable boxplot_info routes through the distributed
-    // percentile+join-back plan (task SQL has no row cap, and the UDAF
-    // would Kryo-collect whole groups); the UDAF stays registered as
-    // the reference implementation BoxplotTukeySpec pins against.
-    // Sessions built with spark.sql.extensions=graft.GraftExtensions
-    // get the same rule at post-hoc resolution instead.
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.BoxplotScaleRule))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.BoxplotScaleRule
-  }
 }

@@ -1,6 +1,5 @@
 package graft.exprs
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
@@ -111,8 +110,4 @@ object CosineSim {
     while (i < y.length) { nb += y(i) * y(i); i += 1 }
     dot / (math.sqrt(na) * math.sqrt(nb))
   }
-
-  /** Register `cosine_sim` in the session's function registry so both
-    * SQL text and Column expressions can use it. */
-  def register(spark: SparkSession): Unit = graft.GraftExtensions.register(spark, "cosine_sim")
 }

@@ -1,6 +1,5 @@
 package graft.exprs
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
@@ -131,11 +130,9 @@ object JlProject {
       s"jl_project $what must be an integer literal, got $other")
   }
 
-  /** Builder from raw call-site expressions (shared by register() and
+  /** `jl_project`'s builder from raw call-site expressions (used by
     * GraftExtensions): dims must be integer literals — the sign matrix
     * is derived at plan build. */
   def fromExprs(exprs: Seq[Expression]): JlProject =
     JlProject(exprs.head, intLit(exprs(1), "inDims"), intLit(exprs(2), "outDims"))
-
-  def register(spark: SparkSession): Unit = graft.GraftExtensions.register(spark, "jl_project")
 }

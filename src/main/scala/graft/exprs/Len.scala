@@ -25,7 +25,9 @@ case class Len(child: Expression) extends UnaryExpression with RuntimeReplaceabl
 }
 
 object Len {
-  /** `len` on a session built without `graft.GraftExtensions`; it
-    * replaces Spark's own `len`, which counts only strings and binary. */
+  /** `len` in `spark`'s registry; a no-op on a session born with
+    * `graft.GraftExtensions`, which every session is on a classpath
+    * holding this engine. It replaces Spark's own `len`, which counts
+    * only strings and binary. */
   def register(spark: SparkSession): Unit = graft.GraftExtensions.register(spark, "len")
 }

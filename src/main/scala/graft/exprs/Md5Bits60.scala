@@ -1,6 +1,5 @@
 package graft.exprs
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -63,6 +62,4 @@ object Md5Bits60 {
     while (i < 7) { v = (v << 8) | (d(i) & 0xFFL); i += 1 }
     (v << 4) | ((d(7) & 0xF0L) >> 4)
   }
-
-  def register(spark: SparkSession): Unit = graft.GraftExtensions.register(spark, "md5_bits60")
 }

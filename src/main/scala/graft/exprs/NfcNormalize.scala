@@ -2,7 +2,6 @@ package graft.exprs
 
 import java.text.Normalizer
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -64,6 +63,4 @@ object NfcNormalize {
     if (Normalizer.isNormalized(s, Normalizer.Form.NFC)) text
     else UTF8String.fromString(Normalizer.normalize(s, Normalizer.Form.NFC))
   }
-
-  def register(spark: SparkSession): Unit = graft.GraftExtensions.register(spark, "nfc_normalize")
 }

@@ -1,6 +1,5 @@
 package graft.exprs
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -65,6 +64,4 @@ object QualityScore {
     java.math.BigDecimal.valueOf(sig)
       .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
   }
-
-  def register(spark: SparkSession): Unit = graft.GraftExtensions.register(spark, "quality_score")
 }

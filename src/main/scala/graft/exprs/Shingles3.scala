@@ -1,6 +1,5 @@
 package graft.exprs
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -68,6 +67,4 @@ object Shingles3 {
     while (it.hasNext) { out(j) = UTF8String.fromString(it.next()); j += 1 }
     new GenericArrayData(out)
   }
-
-  def register(spark: SparkSession): Unit = graft.GraftExtensions.register(spark, "shingles3")
 }

@@ -1,6 +1,5 @@
 package graft.exprs
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
@@ -85,6 +84,4 @@ object SqDist {
     }
     java.lang.Double.valueOf(acc)
   }
-
-  def register(spark: SparkSession): Unit = graft.GraftExtensions.register(spark, "sq_dist")
 }

@@ -1,6 +1,5 @@
 package graft.exprs
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -57,6 +56,4 @@ object WordPairs {
     }
     new GenericArrayData(out)
   }
-
-  def register(spark: SparkSession): Unit = graft.GraftExtensions.register(spark, "word_pairs")
 }

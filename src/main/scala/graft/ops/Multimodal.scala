@@ -493,8 +493,6 @@ object Multimodal {
   private[graft] def mediaReleaseCard(spark: SparkSession, dir: String,
       textEmb: DataFrame, tau: Double, shards: Int): DataFrame = {
     import spark.implicits._
-    graft.exprs.CosineSim.register(spark)
-    graft.exprs.Md5Bits60.register(spark)
     val feats = mediaTable(spark, dir)
       .filter(_.media_type == "image")
       .mapPartitions { rows =>
@@ -612,7 +610,6 @@ object Multimodal {
   def imageTextAlignment(spark: SparkSession, dir: String,
       textEmb: DataFrame, tau: Double): DataFrame = {
     import spark.implicits._
-    graft.exprs.CosineSim.register(spark)
     val imgVec = mediaTable(spark, dir)
       .filter(_.media_type == "image")
       .mapPartitions { rows =>
@@ -643,7 +640,6 @@ object Multimodal {
   def audioTextAlignment(spark: SparkSession, dir: String,
       textEmb: DataFrame, tau: Double): DataFrame = {
     import spark.implicits._
-    graft.exprs.CosineSim.register(spark)
     val audVec = mediaTable(spark, dir)
       .filter(_.media_type == "audio")
       .mapPartitions { rows =>
@@ -687,7 +683,6 @@ object Multimodal {
   def videoTextAlignment(spark: SparkSession, dir: String,
       textEmb: DataFrame, tau: Double): DataFrame = {
     import spark.implicits._
-    graft.exprs.CosineSim.register(spark)
     val vidVec = mediaTable(spark, dir)
       .filter(_.media_type == "video")
       .mapPartitions { rows =>

@@ -295,7 +295,6 @@ object Curation {
     * all-ASCII fast path) — the mandatory first pass before any
     * hash-keyed dedup on crawled text. */
   def nfcNormalized(docs: DataFrame, textCol: String = "text"): DataFrame = {
-    graft.exprs.NfcNormalize.register(docs.sparkSession)
     // the caller's column name is spliced into SQL text — double any
     // backtick (Spark's quoted-identifier escape) so a name containing
     // one still parses, like every other facade's canonicalization

@@ -44,11 +44,10 @@ import org.apache.spark.sql.types._
   * which remains registered as the reference implementation
   * (BoxplotTukeySpec pins kernel == UDAF on every branch).
   *
-  * Injected both via `GraftExtensions` (post-hoc resolution, so the
-  * output then flows through the full optimizer — request sessions and
-  * the spark-submit deployment path) and `Boxplot.register`
-  * (experimental optimizer rule — sessions built without it). Idempotent:
-  * after one application no `boxplot_info` ScalaAggregator remains.
+  * Injected into every session by `GraftExtensions` as a post-hoc
+  * resolution rule, so the output then flows through the full
+  * optimizer. Idempotent: after one application no `boxplot_info`
+  * ScalaAggregator remains.
   */
 object BoxplotScaleRule extends Rule[LogicalPlan] {
 

@@ -32,10 +32,8 @@ import scala.util.control.NonFatal
   *     keeping the output attributes' ids. Exact: a single-field struct
   *     is injective in its field, so the groups are the same groups.
   *
-  * Output rows, schema and field metadata are unchanged. Injected by
-  * `GraftExtensions` (request sessions and spark-submit sessions) and
-  * installed by `ShaperTypes.register` (sessions built without it).
-  * Idempotent.
+  * Output rows, schema and field metadata are unchanged. Injected into
+  * every session by `GraftExtensions`. Idempotent.
   */
 object ShaperTagRules extends Rule[LogicalPlan] {
 

@@ -395,7 +395,7 @@ object MediaCatalogOps {
       val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[graft.streaming.Streams.Doc]
       val base = EngineOps.tempDir("graft-st05") // removed on JVM exit
       val gated = input.toDF()
-        .withColumn("score", graft.queries.PipelineOps.qualityScoreCol(s))
+        .withColumn("score", graft.queries.PipelineOps.qualityScoreCol)
         .filter(col("score") >= 0.45)
       val q = gated.writeStream.outputMode("append")
         .format("parquet").option("path", s"$base/out")
@@ -869,7 +869,6 @@ object MediaCatalogOps {
   private[graft] def mediaTarWrite(media: DataFrame, dir: String,
       shards: Int): Unit = {
     require(shards >= 1, s"shards must be at least 1, got $shards")
-    graft.exprs.Md5Bits60.register(media.sparkSession)
     media.select(col("doc_id"),
         to_json(struct(col("doc_id"), col("media_type"), col("format")))
           .as("meta"),

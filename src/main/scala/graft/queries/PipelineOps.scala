@@ -119,7 +119,6 @@ object PipelineOps {
     * notes at the d18 entry. */
   private[graft] def exactSubstringDedupOf(docs: DataFrame, runLen: Int): DataFrame = {
     require(runLen >= 1, s"runLen must be >= 1, got $runLen")
-    graft.exprs.Md5Bits60.register(docs.sparkSession)
     val toks = docs.select(col("doc_id"), split(col("text"), " ").as("ts"))
     // gram HASHES are built map-side inside the token array, so every
     // gram-keyed exchange below carries (doc_id, pos, 60-bit long)
@@ -170,7 +169,6 @@ object PipelineOps {
   private[graft] def spanDecontaminateOf(docs: DataFrame, evalPred: Column,
       runLen: Int, carry: Seq[String] = Nil): DataFrame = {
     require(runLen >= 1, s"runLen must be >= 1, got $runLen")
-    graft.exprs.Md5Bits60.register(docs.sparkSession)
     // `carry` columns (constant per doc_id) ride the token frame so
     // composed pipelines (p06) don't need a corpus-keyed join-back
     val keyCols = col("doc_id") +: carry.map(col)
@@ -216,7 +214,6 @@ object PipelineOps {
     * one partial-agg rollup. Returns (lang, n_raw, n_gate, n_final,
     * tokens_out, id_checksum). */
   private[graft] def curationV4Of(batch: DataFrame, corpus: DataFrame): DataFrame = {
-    graft.exprs.Md5Bits60.register(batch.sparkSession)
     val s1 = batch.select(col("doc_id"), col("lang"), split(col("text"), " ").as("w"))
       .withColumn("w1", expr(
         "split(array_join(array_distinct(" +
@@ -308,7 +305,6 @@ object PipelineOps {
       clip: Long): DataFrame = {
     require(eps > 0, s"eps must be positive, got $eps")
     require(clip >= 1, s"clip must be at least 1, got $clip")
-    graft.exprs.Md5Bits60.register(docs.sparkSession)
     // seed encoding is length-prefixed (len:lang len:source stat) so
     // a '|' (or any delimiter) inside lang/source can never make two
     // distinct cells share a seed and draw identical noise
@@ -351,7 +347,6 @@ object PipelineOps {
     * (broadcast eval grams, map-side cover); the audit rollup is one
     * partial-agg shuffle over the two planted classes only. */
   private[graft] def canaryAuditOf(docs: DataFrame, runLen: Int = 3): DataFrame = {
-    graft.exprs.Md5Bits60.register(docs.sparkSession)
     val tagged = docs.select(col("doc_id"), col("text"),
         expr("pmod(md5_bits60(concat('g3:', doc_id)), 100)").as("bk"),
         expr("substring(md5(cast(doc_id as string)), 1, 8)").as("h"))
@@ -429,7 +424,6 @@ object PipelineOps {
     * entry. */
   private[graft] def randomProjectionOf(emb: DataFrame, inDims: Int,
       outDims: Int): DataFrame = {
-    graft.exprs.JlProject.register(emb.sparkSession)
     emb.select(col("vec_id"),
       expr(s"jl_project(CAST(e AS ARRAY<DOUBLE>), $inDims, $outDims)").as("proj"))
   }
@@ -438,7 +432,6 @@ object PipelineOps {
     * candidate scan), top `k` by count desc / pair asc. Scale notes at
     * the t13 entry. */
   private[graft] def bpePairCountsOf(docs: DataFrame, k: Int): DataFrame = {
-    graft.exprs.WordPairs.register(docs.sparkSession)
     docs
       .select(explode(expr("word_pairs(text)")).as("pair"))
       .groupBy("pair").agg(count(lit(1)).as("n"))
@@ -613,7 +606,6 @@ object PipelineOps {
     * pair asc) — one partial-agg shuffle over the word table, pairs
     * via the native word_pairs expression. */
   private[graft] def bpePairCount(words: DataFrame): DataFrame = {
-    graft.exprs.WordPairs.register(words.sparkSession)
     words
       .select(explode(expr("word_pairs(s)")).as("p"), col("cnt"))
       .groupBy("p").agg(sum("cnt").as("n"))
@@ -778,7 +770,6 @@ object PipelineOps {
     * (vec_id, e, cluster, dist) after `iters` assignment passes. Scale
     * notes at the s04 entry. */
   private[graft] def kmeansAssignOf(emb: DataFrame, k: Int, iters: Int): DataFrame = {
-    graft.exprs.SqDist.register(emb.sparkSession)
     // Centroids are DRIVER-RESIDENT between iterations (MLlib KMeans'
     // shape — k·dims doubles, bounded by contract) and the
     // nearest-centroid election is IN-ROW (guide §8's "decide with
@@ -861,7 +852,6 @@ object PipelineOps {
     * constant. Scale notes at the d17 entry. */
   private[graft] def semDedupOf(emb: DataFrame, k: Int, iters: Int,
       tau: Double): DataFrame = {
-    graft.exprs.CosineSim.register(emb.sparkSession)
     // the pair join puts the SAME Lloyd-trajectory lineage on both
     // sides — deliberately NOT checkpointed: the final assignment's
     // window exchange dedups through ReuseExchange, and forcing a
@@ -937,7 +927,6 @@ object PipelineOps {
     * Returns (vec_id, rk, nbr_id, cos). */
   private[graft] def knnGraphOf(emb: DataFrame, k: Int, iters: Int,
       topK: Int): DataFrame = {
-    graft.exprs.CosineSim.register(emb.sparkSession)
     // ONE exchange serves both sides of the within-cell self-join
     // (guide §2.4): both join inputs derive from the same
     // repartition(cluster), so the shuffle materializes once (runtime
@@ -993,8 +982,6 @@ object PipelineOps {
     require(rounds >= 1, s"rounds must be at least 1, got $rounds")
     require(bridgeBuckets >= 1,
       s"bridgeBuckets must be at least 1, got $bridgeBuckets")
-    graft.exprs.CosineSim.register(emb.sparkSession)
-    graft.exprs.Md5Bits60.register(emb.sparkSession)
     val vecs = emb.select(col("vec_id"), col("e"))
     val wSeed = Window.partitionBy("vec_id")
       .orderBy(col("cos").desc, col("nbr_id").asc)
@@ -1119,7 +1106,6 @@ object PipelineOps {
     * ship symmetric) so serve reads the edges as-is — the cold serve
     * plan is artifact scan + id lookups, nothing else. */
   private[graft] def nnGraphPersist(graph: DataFrame, dir: String): Unit = {
-    graft.exprs.Md5Bits60.register(graph.sparkSession)
     clusteredArtifactWrite(
       graph.select(col("vec_id").as("a"), col("nbr_id").as("b"))
         .union(graph.select(col("nbr_id").as("a"), col("vec_id").as("b")))
@@ -1145,7 +1131,6 @@ object PipelineOps {
       queries: DataFrame, entries: Int, beam: Int, rounds: Int,
       k: Int): DataFrame = {
     requireServeParams(entries, beam, rounds, k)
-    graft.exprs.CosineSim.register(emb.sparkSession)
     val vecs = emb.select(col("vec_id").as("nid"), col("e").as("ne"))
     val qs = queries.select(col("vec_id").as("qid"), col("e").as("qe"))
       .localCheckpoint() // bounded by contract; checkpoint so every
@@ -1195,8 +1180,6 @@ object PipelineOps {
     * rows out. The schedule artifact itself writes partitionBy(epoch,
     * shard) sorted by okey exactly like p08. */
   private[graft] def curriculumScheduleOf(docs: DataFrame): DataFrame = {
-    graft.exprs.Md5Bits60.register(docs.sparkSession)
-    graft.exprs.QualityScore.register(docs.sparkSession)
     // checkpointed: scored feeds the threshold pass AND the main
     // pass — without the barrier the corpus text is read and
     // quality_score evaluated twice (samp07's frame-reuse lesson)
@@ -1258,7 +1241,6 @@ object PipelineOps {
   private[graft] def doremiWeightsOf(docs: DataFrame, eta: Double)
       : DataFrame = {
     require(eta > 0, s"eta must be positive, got $eta")
-    graft.exprs.QualityScore.register(docs.sparkSession)
     val scored = docs.select(col("source"),
       size(split(col("text"), " ")).cast("long").as("n_tok"),
       expr("round(1 - quality_score(text), 4)").as("loss"))
@@ -1347,7 +1329,6 @@ object PipelineOps {
     // loudly instead (the sibling kernels' require discipline)
     require(epochs >= 1, s"epochs must be at least 1, got $epochs")
     require(shards >= 1, s"shards must be at least 1, got $shards")
-    graft.exprs.Md5Bits60.register(docs.sparkSession)
     docs.select(col("doc_id"),
         size(split(col("text"), " ")).cast("long").as("n_tok"))
       .withColumn("epoch", explode(expr(s"sequence(0, ${epochs - 1})")))
@@ -1481,10 +1462,7 @@ object PipelineOps {
     * class in SqDistSpec.scala, pins it) without the per-token HOF
     * lambda frames; the model-gate
     * Column five operators ride (t14, sel01, p03, p04, st05). */
-  private[graft] def qualityScoreCol(spark: SparkSession): Column = {
-    graft.exprs.QualityScore.register(spark)
-    expr("quality_score(text)")
-  }
+  private[graft] def qualityScoreCol: Column = expr("quality_score(text)")
 
   /** t14's kernel — fastText-shaped linear quality classifier: each
     * token's weight is hash-derived in [-1, 1] with an exactly
@@ -1497,7 +1475,7 @@ object PipelineOps {
   private[graft] def qualityScoreOf(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
       size(split(col("text"), " ")).cast("long").as("n_tokens"),
-      qualityScoreCol(docs.sparkSession).as("score"))
+      qualityScoreCol.as("score"))
 
   /** t25's feature frame — the training half t14's scaladoc defers to.
     * Per doc: a silver label `y` (t10's full Gopher gate — the CCNet /
@@ -1815,7 +1793,6 @@ object PipelineOps {
   private[graft] def pqCodesWith(emb: DataFrame, cb: DataFrame, dims: Int,
       subs: Int): DataFrame = {
     require(dims % subs == 0, s"dims=$dims not divisible by subs=$subs")
-    graft.exprs.SqDist.register(emb.sparkSession)
     val w = dims / subs
     val sub = emb.select(col("vec_id"), posexplode(expr(
       s"transform(sequence(0, ${subs - 1}), k -> slice(e, k * $w + 1, $w))"))
@@ -1850,7 +1827,6 @@ object PipelineOps {
     * association-order-free, ties break on codeword/label/nid asc. */
   private[graft] def ivfPqSearchOf(emb: DataFrame, queries: DataFrame,
       dims: Int, subs: Int, cbSize: Int, k: Int, probes: Int): DataFrame = {
-    graft.exprs.SqDist.register(emb.sparkSession)
     val w = dims / subs
     val base = emb.select(col("vec_id"), col("e"))
     val cent = meanVectors(emb.select(col("label"), col("e")), "label", Some(9))
@@ -2102,7 +2078,6 @@ object PipelineOps {
 
   /** Fixed-window chunk hashes per doc: (doc_id, hs: array<long>). */
   private def bloomChunked(df: DataFrame, chunkWords: Int): DataFrame = {
-    graft.exprs.Md5Bits60.register(df.sparkSession)
     df.select(col("doc_id"), split(col("text"), " ").as("w"))
       .select(col("doc_id"), expr(
         s"transform(sequence(0, cast(ceil(size(w) / ${chunkWords}.0) as int) - 1), " +
@@ -2203,7 +2178,6 @@ object PipelineOps {
     * n_outliers, id_checksum, max_dist) — scale notes at the s16
     * entry. */
   private[graft] def embeddingOutliersOf(emb: DataFrame, p: Double): DataFrame = {
-    graft.exprs.SqDist.register(emb.sparkSession)
     val cent = meanVectors(emb.select(col("label"), col("e")), "label",
       Some(9)).select(col("label").as("clabel"), col("ce"))
     val dist = emb.join(broadcast(cent), col("label") === col("clabel"))
@@ -2330,7 +2304,6 @@ object PipelineOps {
   private[graft] def pqRerankOf(emb: DataFrame, queries: DataFrame,
       dims: Int, subs: Int, cbSize: Int, k: Int, kShort: Int,
       probes: Int): DataFrame = {
-    graft.exprs.SqDist.register(emb.sparkSession)
     val shortlist = ivfPqSearchOf(emb, queries, dims, subs, cbSize,
         kShort, probes)
       .select(col("qid"), col("nid"))
@@ -2356,7 +2329,6 @@ object PipelineOps {
   private[graft] def dsirResampleOf(docs: DataFrame, n: Int, buckets: Int): DataFrame = {
     require(buckets >= 1, s"buckets must be >= 1, got $buckets")
     require(n >= 0, s"n must be >= 0, got $n")
-    graft.exprs.Md5Bits60.register(docs.sparkSession)
     val toks = docs
       .select(col("doc_id"), col("is_tgt"),
         explode(split(col("text"), " ")).as("tok"))
@@ -2393,7 +2365,6 @@ object PipelineOps {
     * single-pass native Shingles3 expression (the HOF chain it replaced
     * ran as CodegenFallback and built three intermediate arrays/row). */
   private[graft] def shingles(docs: DataFrame): DataFrame = {
-    graft.exprs.Shingles3.register(docs.sparkSession)
     docs.select(col("doc_id"), explode(expr("shingles3(text)")).as("sh"))
   }
 
@@ -2405,7 +2376,6 @@ object PipelineOps {
     * entry (broadcast eval block, one native-cosine corpus pass). */
   private[graft] def semanticContaminationOf(emb: DataFrame,
       evalPred: Column, tau: Double): DataFrame = {
-    graft.exprs.CosineSim.register(emb.sparkSession)
     val ev = emb.filter(evalPred)
       .select(col("vec_id").as("eval_id"), col("e").as("qe"))
     val train = emb.filter(!evalPred)
@@ -2595,7 +2565,7 @@ object PipelineOps {
   private[graft] def qualityFloorSelectOf(docs: DataFrame, floorPerLang: Int,
       totalN: Int): DataFrame = {
     val scored = docs.select(col("doc_id"), col("lang"), col("text"))
-      .withColumn("score", qualityScoreCol(docs.sparkSession))
+      .withColumn("score", qualityScoreCol)
     val perLang = Window.partitionBy("lang")
       .orderBy(col("score").desc, col("doc_id"))
     val floorSet = scored
@@ -2660,7 +2630,6 @@ object PipelineOps {
     * (Neyman is undefined there; fall back to proportional). */
   private[graft] def neymanAllocOf(docs: DataFrame, budget: Int): DataFrame = {
     require(budget >= 1, s"budget must be at least 1, got $budget")
-    graft.exprs.Md5Bits60.register(docs.sparkSession)
     val x = docs.select(col("doc_id"), col("lang"),
       size(split(col("text"), " ")).cast("long").as("x"))
     // moments in DecimalType(38,0): sx*sx over a multi-billion-token
@@ -2792,7 +2761,6 @@ object PipelineOps {
     * term-clustered, (term, doc_id, pos)-sorted files so a serve scan
     * pays df(term) rows, not hundreds of file opens (guide §6). */
   private[graft] def positionalIndexBuild(docs: DataFrame, dir: String): Unit = {
-    graft.exprs.Md5Bits60.register(docs.sparkSession)
     clusteredArtifactWrite(
       docs.select(col("doc_id"),
           posexplode(split(col("text"), " ")).as(Seq("pos", "term")))
@@ -2809,7 +2777,6 @@ object PipelineOps {
     * generations (the ingest contract; a replay dedup composes via
     * diff01 upstream). */
   private[graft] def positionalIndexAppend(docs: DataFrame, dir: String): Unit = {
-    graft.exprs.Md5Bits60.register(docs.sparkSession)
     clusteredArtifactWrite(
       docs.select(col("doc_id"),
           posexplode(split(col("text"), " ")).as(Seq("pos", "term")))
@@ -2916,7 +2883,6 @@ object PipelineOps {
     * build is gen=-1 by convention. */
   private[graft] def positionalIndexWriteGen(docs: DataFrame, dir: String,
       batchId: Long): Unit = {
-    graft.exprs.Md5Bits60.register(docs.sparkSession)
     clusteredArtifactWrite(
       docs.select(col("doc_id"),
           posexplode(split(col("text"), " ")).as(Seq("pos", "term")))
@@ -3263,7 +3229,6 @@ object PipelineOps {
     * text by bucket instead of scanning the live corpus. Built once at
     * index time alongside [[positionalIndexBuild]]. */
   private[graft] def docStoreBuild(docs: DataFrame, dir: String): Unit = {
-    graft.exprs.Md5Bits60.register(docs.sparkSession)
     clusteredArtifactWrite(
       docs.select(col("doc_id"), col("text"))
         .withColumn("bucket",
@@ -3286,7 +3251,6 @@ object PipelineOps {
   private[graft] def snippetsServeOf(spark: SparkSession, indexDir: String,
       storeDir: String, terms: Seq[String], window: Int,
       pad: Int): DataFrame = {
-    graft.exprs.Md5Bits60.register(spark)
     val hits = proximityHitsOf(spark.read.parquet(indexDir), terms, window)
       .withColumn("bucket",
         pmod(expr("md5_bits60(cast(doc_id as string))"), lit(16L)))
@@ -3980,7 +3944,6 @@ object PipelineOps {
     * sources-count rows out at any corpus size; nothing joins the
     * corpus to anything. */
   private[graft] def sourceDatasheetOf(docs: DataFrame): DataFrame = {
-    graft.exprs.QualityScore.register(docs.sparkSession)
     val base = docs.select(col("doc_id"), col("source"), col("lang"),
       size(split(col("text"), " ")).cast("long").as("n_tok"),
       expr("quality_score(text)").as("score"),
@@ -4296,7 +4259,6 @@ object PipelineOps {
     * aggregation shuffled 16 copies of every embedding — this computes
     * the same buckets with zero exchanges before the bucket join. */
   private def lshChunkSignatures(emb: DataFrame): DataFrame = {
-    graft.exprs.CosineSim.register(emb.sparkSession)
     def litVec(v: Seq[Double]): Column = array(v.map(lit): _*)
     val byChunk = lshProjections.groupBy(_._3).toSeq.sortBy(_._1)
     val chunkCols = byChunk.map { case (cIdx, bits) =>
@@ -4381,7 +4343,6 @@ object PipelineOps {
     * AllPairs size filter + exact verification) — SKEW.md measures it
     * against [[exactJaccardPairsOf]] on a hot-shingle corpus. */
   private[graft] def prefixFilterJaccardOf(docs: DataFrame, thr: Double): DataFrame = {
-    graft.exprs.Md5Bits60.register(docs.sparkSession)
     val sh = shingles(docs)
     // The CANDIDATE stages run on 60-bit shingle hashes, not strings:
     // the df window, the prefix rank, and the self-join all shuffle
@@ -4579,7 +4540,6 @@ object PipelineOps {
     * max(struct), no window over candidates. Plan-pinned. */
   private[graft] def bitextMineOf(a: DataFrame, b: DataFrame, k: Int,
       tau: Double): DataFrame = {
-    graft.exprs.CosineSim.register(a.sparkSession)
     val p = b.crossJoin(broadcast(a))
       .select(col("a_id"), col("b_id"),
         floor(expr("cosine_sim(ae, be)") * lit(1000000d) + lit(0.5))
@@ -4630,7 +4590,6 @@ object PipelineOps {
     * `a` = (a_id, ae, alabel), `b` = (b_id, be, blabel). */
   private[graft] def bitextMineAnnOf(a: DataFrame, b: DataFrame, k: Int,
       tau: Double, probes: Int): DataFrame = {
-    graft.exprs.CosineSim.register(a.sparkSession)
     def candidates(q: DataFrame, qid: String, qe: String,
         post: DataFrame, pid: String, pe: String, plabel: String) = {
       val cent = meanVectors(
@@ -5058,7 +5017,6 @@ object PipelineOps {
       s"dims must be non-empty positive, got $dims")
     require(dims.distinct.size == dims.size, s"duplicate dims in $dims")
     require(k >= 1, s"k must be at least 1, got $k")
-    graft.exprs.CosineSim.register(emb.sparkSession)
     val full = dims.max
     // the recall reference is the dims.max prefix — it is only the
     // honest "full-dimension exact top-k" if dims.max IS the true
@@ -5161,7 +5119,6 @@ object PipelineOps {
       poolK: Int, k: Int, lamTimes10: Int = 7): DataFrame = {
     require(poolK >= 1, s"poolK must be at least 1, got $poolK")
     val s = emb.sparkSession
-    graft.exprs.CosineSim.register(s)
     val q = queries.select(col("vec_id").as("qid"), col("e").as("qe"))
     val pool = emb.select(col("vec_id").as("nid"), col("e"))
       .crossJoin(broadcast(q))
@@ -5190,7 +5147,6 @@ object PipelineOps {
       s"lambda must be in (0,1] tenths, got $lamTimes10/10")
     val s = vecs.sparkSession
     import s.implicits._
-    graft.exprs.CosineSim.register(s)
     val lam = lamTimes10.toLong; val mu = 10L - lamTimes10
     // pool vectors by broadcast point-lookup, then localCheckpoint the
     // BOUNDED (queries x poolK) frame — s21's discipline — so the
@@ -5264,7 +5220,6 @@ object PipelineOps {
     require(k >= 1, s"k must be at least 1, got $k")
     val s = emb.sparkSession
     import s.implicits._
-    graft.exprs.CosineSim.register(s)
     val chain = new BarrierChain(checkpointDir)
     val seed = emb.agg(min("vec_id")).first.getLong(0)
     val out = scala.collection.mutable.ArrayBuffer((1, seed, 20000L))
@@ -5438,7 +5393,6 @@ object PipelineOps {
       lamTimes10: Int, probes: Int, previewChars: Int): DataFrame = {
     require(previewChars >= 1,
       s"previewChars must be at least 1, got $previewChars")
-    graft.exprs.Md5Bits60.register(spark)
     val cent = spark.read.parquet(s"$ivfDir/centroids")
     val post = spark.read.parquet(s"$ivfDir/postings")
     val queries = post.filter(queryFilter)
@@ -5608,7 +5562,6 @@ object PipelineOps {
     * parquet) and prove the round trip is loss-free. */
   private[graft] def ivfProbeOf(cent: DataFrame, emb: DataFrame,
       queries: DataFrame, k: Int, probes: Int): DataFrame = {
-    graft.exprs.CosineSim.register(emb.sparkSession)
     val wc = Window.partitionBy("qid").orderBy(col("cc").desc, col("clabel").asc)
     val probed = queries.crossJoin(broadcast(cent))
       .select(col("qid"), col("qe"), col("clabel"),
@@ -5708,7 +5661,6 @@ object PipelineOps {
     * back to one row per vector by partial aggregation. */
   private[graft] def reassignToCentroidsOf(vecs: DataFrame,
       cent: DataFrame): DataFrame = {
-    graft.exprs.CosineSim.register(vecs.sparkSession)
     vecs.crossJoin(broadcast(cent))
       .select(col("vec_id"), col("e"), col("clabel"),
         round(expr("cosine_sim(e, ce)"), 6).as("cc"))
@@ -5777,7 +5729,6 @@ object PipelineOps {
     * corpus is never touched. */
   private[graft] def ivfStalenessOf(spark: SparkSession,
       postingsDir: String, tombDir: String, centDir: String): DataFrame = {
-    graft.exprs.CosineSim.register(spark)
     val cent = spark.read.parquet(centDir)
     val tomb = spark.read.parquet(tombDir)
       .select(col("vec_id"), lit(1).as("tombed"))
@@ -5827,7 +5778,6 @@ object PipelineOps {
       s"probe counts must be positive, got $probesList")
     require(probesList.distinct.size == probesList.size,
       s"duplicate probe counts in $probesList")
-    graft.exprs.CosineSim.register(emb.sparkSession)
     val maxP = probesList.max
     val cent = meanVectors(emb.select(col("label"), col("e")), "label")
       .select(col("label").as("clabel"), col("ce"))
@@ -5887,7 +5837,6 @@ object PipelineOps {
     * exact jaccard — output identical to [[crossJaccardPairsOf]]. */
   private[graft] def crossJaccardPairsSkewRobustOf(batch: DataFrame,
       corpus: DataFrame, thr: Double): DataFrame = {
-    graft.exprs.Md5Bits60.register(batch.sparkSession)
     val bsh = shingles(batch)
     val csh = shingles(corpus)
     // candidate stages on 60-bit hashes (the d09 argument verbatim:
@@ -6161,7 +6110,7 @@ object PipelineOps {
   private[graft] def qualityKeepOf(docs: DataFrame, edges: DataFrame,
       rounds: Int): DataFrame = {
     val scored = docs.select(col("doc_id").as("v"),
-      qualityScoreCol(docs.sparkSession).as("score"))
+      qualityScoreCol.as("score"))
     dupLabelsOf(edges, rounds)
       .join(scored, Seq("v"))
       .groupBy(col("lbl").as("cluster_id"))
@@ -6201,7 +6150,6 @@ object PipelineOps {
   private[graft] def tarShardWrite(docs: DataFrame, dir: String,
       shards: Int): Unit = {
     require(shards >= 1, s"shards must be at least 1, got $shards")
-    graft.exprs.Md5Bits60.register(docs.sparkSession)
     docs.select(col("doc_id"),
         to_json(struct(col("doc_id"), col("lang"), col("source"))).as("meta"),
         col("text"),
@@ -6411,8 +6359,6 @@ object PipelineOps {
             "a - (x.cnt / cast(n as double)) * log2(x.cnt / cast(n as double)))"),
           4).as("entropy"))
 
-  /** docs-parameterized form of d03's pipeline — SKEW.md measures it
-    * against [[prefixFilterJaccardOf]] on a hot-shingle corpus. */
   /** d26's kernel — the dedup THRESHOLD SWEEP (the decision table a
     * team reads before committing a minJaccard: FineWeb/CCNet-style
     * ablations pick the threshold off exactly this curve): for each
@@ -6547,6 +6493,8 @@ object PipelineOps {
       ORDER BY thr_bp"""
   }
 
+  /** docs-parameterized form of d03's pipeline — SKEW.md measures it
+    * against [[prefixFilterJaccardOf]] on a hot-shingle corpus. */
   private[graft] def exactJaccardPairsOf(docs: DataFrame, minJ: Double): DataFrame = {
     val sh = shingles(docs)
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
@@ -6790,7 +6738,7 @@ object PipelineOps {
       // re-executing the jaccard lineage — measured 2x without it)
       val labels = dupLabelsOf(edges, rounds = 3).localCheckpoint()
       val scored = docs.select(col("doc_id").as("v"),
-        qualityScoreCol(s).as("score"))
+        qualityScoreCol.as("score"))
       val keep = labels.join(scored, Seq("v"))
         .groupBy(col("lbl").as("cid"))
         .agg(max(struct(col("score"), (-col("v")).as("nv"),
@@ -6972,7 +6920,6 @@ object PipelineOps {
       // conv(substring(md5(..))) chain but with zero intermediate hex
       // strings — this is the engine's hottest hash site (every shingle
       // of every doc)
-      graft.exprs.Md5Bits60.register(s)
       val toks = shingles(t(s, d, "documents"))
         .select(col("doc_id"), expr("md5_bits60(sh)").as("h"))
       // one groupBy, bit-votes SIMD-packed: 3 x 16-bit set-bit counters
@@ -7278,7 +7225,6 @@ object PipelineOps {
       // fraction — the spec pins that served results equal a live
       // recompute over corpus ∪ assigned batch, i.e. the artifact path
       // loses nothing).
-      graft.exprs.CosineSim.register(s)
       val emb = t(s, d, "embeddings")
         .select(col("vec_id"), col("label"),
           col("embedding").cast("array<double>").as("e"))
@@ -7328,7 +7274,6 @@ object PipelineOps {
       // the oracle hashes both against ONE stale-centroid purged
       // replay — tombstoned == compacted == purged recompute IS the
       // hash match. Scale notes on the kernel scaladocs.
-      graft.exprs.CosineSim.register(s)
       val root = s26ArtifactsOf(s, d)
       val cent = s.read.parquet(s"$root/centroids")
       val queries = t(s, d, "embeddings").filter(col("vec_id") < 10)
@@ -7357,7 +7302,6 @@ object PipelineOps {
       // postings. s02's query set probes the view; the oracle replays
       // re-embed, re-quantize and probe from the raw table. Builds
       // memoized. Scale notes on the kernel scaladocs.
-      graft.exprs.CosineSim.register(s)
       // centroids + the g1 postings generation are s26's artifacts
       // verbatim — one shared build serves s26/s27/s28 (delete,
       // staleness audit, update), like a real index deployment
@@ -7518,7 +7462,6 @@ object PipelineOps {
       // structure is engine-independent. Scale path: signatures are a
       // broadcast map-side pass; the chunk join shuffles only
       // (vec_id, chunk) pairs — candidates ≈ corpus/16 per chunk.
-      graft.exprs.CosineSim.register(s)
       val emb = t(s, d, "embeddings")
         .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
       val chunks = lshChunkSignatures(emb).select("vec_id", "c_idx", "chunk")
@@ -7631,7 +7574,6 @@ object PipelineOps {
       // tables in the oracle. 100 TB: three broadcast anti-joins and
       // two bounded probes — deletion cost is O(|request|) writes,
       // the certificate costs two pruned serves plus count rollups.
-      graft.exprs.CosineSim.register(s)
       val vroot = s26ArtifactsOf(s, d)
       val root = graphArtifacts.computeIfAbsent(s"$d|u09", _ => {
         val out = EngineOps.tempDir("graft-u09")
@@ -8524,7 +8466,6 @@ object PipelineOps {
       // whose absence proof parses the REBUILT tar bytes (leak_count
       // must equal the oracle's constant 0). Kernel scaladoc has the
       // scale and control-class notes.
-      graft.exprs.Md5Bits60.register(s)
       deletionDrillOf(
         t(s, d, "documents").select("doc_id", "lang", "source", "text"),
         expr("md5_bits60(concat(cast(doc_id as string), ':del')) % 20 = 0"),
@@ -9084,7 +9025,6 @@ object PipelineOps {
       // the rare hit-position rows (broadcastable by rarity), and
       // every other stage is broadcast or in-row. The p03/p04/p05
       // discipline extended across the r8 governance ops.
-      graft.exprs.QualityScore.register(s)
       val rules = Seq("src3.example.com", "h7.src7.example.com")
       val sfx = expr("transform(sequence(1, size(hl)), " +
         "i -> array_join(slice(hl, i, size(hl) - i + 1), '.'))")
@@ -9125,7 +9065,7 @@ object PipelineOps {
       val train = docs.filter(col("doc_id") % 50 =!= 0)
       val gated = train
         .select(col("doc_id"), col("lang"), col("text"))
-        .withColumn("score", qualityScoreCol(s))
+        .withColumn("score", qualityScoreCol)
         .filter(col("score") >= 0.45)
       val lmScored = lmScoreOf(gated.select("doc_id", "text"))
       val scored = gated
@@ -9163,7 +9103,7 @@ object PipelineOps {
       // two-scan anti-filter shape, and the final stats aggregate is
       // 5 rows.
       val kept = t(s, d, "documents")
-        .withColumn("score", qualityScoreCol(s))
+        .withColumn("score", qualityScoreCol)
         .filter(col("score") >= 0.45)
         .select("doc_id", "lang", "text")
       chunkDedupOf(kept, chunkWords = 10, carry = Seq("lang"))
@@ -9863,7 +9803,6 @@ object PipelineOps {
       // composition — and both engines must agree codepoint-for-
       // codepoint with DuckDB's nfc_normalize. 100 TB: pure map at scan
       // speed with an allocation-free all-ASCII fast path.
-      graft.exprs.NfcNormalize.register(s)
       import s.implicits._
       Seq(
         (1, "cafe\u0301"),           // e + COMBINING ACUTE -> U+00E9

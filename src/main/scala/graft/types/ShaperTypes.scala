@@ -170,17 +170,13 @@ object ShaperTypes {
   val TypeKey = "shaperType"
   val MemberKey = "shaperMember"
 
-  /** Register all 48 types as SQL functions (the `::NAME` cast syntax is
-    * turned into these calls by graft.sqlfront.Dialect), and install
-    * [[graft.plans.ShaperTagRules]] once per session, on a session built
-    * without `graft.GraftExtensions` (request sessions are born with
-    * both). */
-  def register(spark: SparkSession): Unit = {
+  /** The 48 types as SQL functions in `spark`'s registry (the `::NAME`
+    * cast syntax is turned into these calls by graft.sqlfront.Dialect); a
+    * no-op on a session born with `graft.GraftExtensions`, which every
+    * session is on a classpath holding this engine. The extension also
+    * gives every session [[graft.plans.ShaperTagRules]]. */
+  def register(spark: SparkSession): Unit =
     graft.GraftExtensions.register(spark, all.map(_.name): _*)
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.ShaperTagRules))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.ShaperTagRules
-  }
 }
 
 /** `expr::NAME` for a shaper custom type: wraps the (member-cast) value in

@@ -5,11 +5,9 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.catalog.{ExternalCatalogEvent, ExternalCatalogEventListener}
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.catalyst.rules.Rule
 
-/** The `private[sql]`/`private[spark]` members graft.Sessions needs
-  * to give request sessions their functions at birth and to see catalog
+/** The `private[sql]`/`private[spark]` members graft.Sessions needs to
+  * know the functions request sessions are born with and to see catalog
   * changes, as `org.apache.spark.graftdev.ListenerDrain` does for the
   * listener bus. Only `extensions` and `holdsNoVariables` run while
   * requests are served. */
@@ -20,11 +18,6 @@ object SessionHooks {
     * `registerFunctions(FunctionRegistry.builtin.clone())`. */
   def extensions(spark: SparkSession): SparkSessionExtensions =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].extensions
-
-  /** Whether `ext` already injects `rule`: a root built with an
-    * extension through `spark.sql.extensions` or `withExtensions`. */
-  def injects(ext: SparkSessionExtensions, spark: SparkSession, rule: Rule[LogicalPlan]): Boolean =
-    ext.buildOptimizerRules(spark).contains(rule)
 
   /** Each function in the registry a `newSession()` of `ext` starts with,
     * by its `ExpressionInfo` (a registration makes a new one). */

@@ -95,4 +95,28 @@ class BenchToolsSpec extends AnyFunSuite {
     assert(Files.isRegularFile(root.resolve("graft/Sessions.scala")))
     assert(builders.isEmpty, s"build the session through Sessions.root(): $builders")
   }
+
+  test("engine functions and rules reach a session only through GraftExtensions") {
+    val root = Paths.get("src/main/scala")
+    // GraftExtensions itself and the three function forwarders kept for
+    // callers outside main code
+    val forwarders = Set("graft/GraftExtensions.scala", "graft/types/ShaperTypes.scala",
+      "graft/exprs/Boxplot.scala", "graft/exprs/Len.scala")
+    val engine = Set("GraftExtensions", "ShaperTypes") ++ GraftExtensions.functions
+      .map(_._2.getClassName.split('.').last.takeWhile(_ != '$'))
+    val register = """\b(\w+)\.register\(""".r
+    val install = """extraOptimizations\s*=[^=]|\.inject\w+\(""".r
+    val offenders = Files.walk(root).iterator.asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => root.relativize(p: Path).toString -> Files.readString(p))
+      .flatMap { case (file, text) =>
+        val calls = register.findAllMatchIn(text).map(_.group(1)).filter(engine)
+          .filterNot(o => forwarders(file) && o == "GraftExtensions")
+        val installs = if (file == "graft/GraftExtensions.scala") Iterator.empty
+          else install.findAllIn(text)
+        (calls ++ installs).map(c => s"$file: $c")
+      }.toSeq.sorted
+    assert(engine.contains("CosineSim") && engine.contains("Boxplot"), engine)
+    assert(offenders.isEmpty, s"sessions are born with the engine; nothing registers: $offenders")
+  }
 }

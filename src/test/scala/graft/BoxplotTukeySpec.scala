@@ -1,6 +1,9 @@
 package graft
 
+import graft.exprs.Boxplot
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Percentile}
+import org.apache.spark.sql.execution.aggregate.ScalaAggregator
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -48,14 +51,28 @@ class BoxplotTukeySpec extends AnyFunSuite {
     }.toDF("g", "v", "i")
   }
 
-  /** Runs `body` with BoxplotScaleRule removed from the session, so a
-    * SQL boxplot_info call genuinely executes the UDAF — the
-    * reference implementation these parity pins are against. */
-  private def viaUdaf[A](body: => A): A = {
-    val saved = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations =
-      saved.filterNot(_ eq graft.plans.BoxplotScaleRule)
-    try body finally spark.experimental.extraOptimizations = saved
+  private val boxplotCall = """(?i)\b(?:boxplot_info|boxplot)\((?:[^()]|\([^()]*\))*\)""".r
+
+  /** `sql` with every `BOXPLOT`/`boxplot_info` call marked
+    * `FILTER (WHERE true)`: the same rows reach the aggregate, and
+    * BoxplotScaleRule leaves FILTERed calls alone, so the plan genuinely
+    * executes the UDAF — the reference implementation these parity pins
+    * are against. Every session is born with the rule, so this is the
+    * only way SQL reaches the UDAF; the plan is checked to hold it. */
+  private def viaUdaf(sql: String): DataFrame = {
+    val df = spark.sql(boxplotCall.replaceAllIn(sql,
+      m => scala.util.matching.Regex.quoteReplacement(m.matched + " FILTER (WHERE true)")))
+    val fns = df.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
+      case ax: AggregateExpression => ax.aggregateFunction
+    }))
+    assert(fns.exists {
+      case sa: ScalaAggregator[_, _, _] =>
+        sa.agg.isInstanceOf[Boxplot.BoxplotAgg] || sa.agg.isInstanceOf[Boxplot.BoxplotInfoAgg]
+      case _ => false
+    }, s"no boxplot UDAF in the reference plan:\n${df.queryExecution.optimizedPlan}")
+    assert(!fns.exists(_.isInstanceOf[Percentile]),
+      s"the reference plan was routed:\n${df.queryExecution.optimizedPlan}")
+    df
   }
 
   private def canon(df: DataFrame): Seq[String] = {
@@ -74,22 +91,20 @@ class BoxplotTukeySpec extends AnyFunSuite {
   }
 
   test("tukey kernel agrees with the boxplot_info UDAF on every branch") {
-    graft.exprs.Boxplot.register(spark)
     val df = sampleDf()
     df.createOrReplaceTempView("bp_tukey_src")
-    val udaf = spark.sql(
+    val udaf = viaUdaf(
       """SELECT g, boxplot_info(CAST(v AS DOUBLE), map('k', i)) AS bp
         |FROM bp_tukey_src GROUP BY g""".stripMargin)
     val kernel = graft.exprs.Boxplot.tukey(
       df, Seq("g"), "v", map(lit("k"), col("i")))
-    assert(canon(kernel) === viaUdaf(canon(udaf)))
+    assert(canon(kernel) === canon(udaf))
   }
 
   test("tukey kernel keeps the NULL group key row (null-safe join-back)") {
     // GROUP BY emits a row for the NULL group; a plain equi-join-back
     // would silently drop it (r7 advice). Pin tukey == UDAF on a frame
     // where one group key is null.
-    graft.exprs.Boxplot.register(spark)
     import spark.implicits._
     val df = Seq(
       (Option("a"), 1.0, "x"), (Option("a"), 2.0, "y"),
@@ -98,24 +113,23 @@ class BoxplotTukeySpec extends AnyFunSuite {
       (Option.empty[String], 13.0, "n4"))
       .toDF("g", "v", "i")
     df.createOrReplaceTempView("bp_nullkey_src")
-    val udaf = spark.sql(
+    val udaf = viaUdaf(
       """SELECT g, boxplot_info(CAST(v AS DOUBLE), map('k', i)) AS bp
         |FROM bp_nullkey_src GROUP BY g""".stripMargin)
     val kernel = graft.exprs.Boxplot.tukey(
       df, Seq("g"), "v", map(lit("k"), col("i")))
     assert(kernel.filter(col("g").isNull).count() == 1,
       "null group key must survive the join-back")
-    assert(canon(kernel) === viaUdaf(canon(udaf)))
+    assert(canon(kernel) === canon(udaf))
   }
 
   test("plain BOXPLOT(x) rewrite (builtin aggregates) matches the UDAF ELSE branch") {
-    graft.exprs.Boxplot.register(spark)
     sampleDf().createOrReplaceTempView("bp_plain_src")
-    val viaUdaf = spark.sql(
+    val reference = viaUdaf(
       "SELECT g, BOXPLOT(CAST(v AS DOUBLE)) AS bp FROM bp_plain_src GROUP BY g")
     val viaRewrite = spark.sql(graft.sqlfront.Dialect.rewrite(
       "SELECT g, BOXPLOT(v) AS bp FROM bp_plain_src GROUP BY g"))
-    assert(canon(viaRewrite) === canon(viaUdaf))
+    assert(canon(viaRewrite) === canon(reference))
     // and the rewritten form must be builtins: no UDAF in the plan
     val plan = viaRewrite.queryExecution.executedPlan.toString
     assert(!plan.toLowerCase.contains("boxplot"), s"UDAF still in plan:\n$plan")
@@ -128,7 +142,6 @@ class BoxplotTukeySpec extends AnyFunSuite {
     // carry percentile + collect_list instead of the ScalaAggregator,
     // and agree with the genuine UDAF on every branch — including
     // riding alongside other aggregates and a non-attribute group key.
-    graft.exprs.Boxplot.register(spark)
     sampleDf().createOrReplaceTempView("bp_rule_src")
     val sql =
       """SELECT upper(g) AS gu, count(*) AS n, avg(v) AS m,
@@ -144,22 +157,21 @@ class BoxplotTukeySpec extends AnyFunSuite {
       canon(df.withColumnRenamed("gu", "g")
         .selectExpr("g", "bp", "n", "m").withColumn("m", round(col("m"), 6)))
         .sorted
-    assert(canonG(routed) === viaUdaf(canonG(spark.sql(sql))))
+    assert(canonG(routed) === canonG(viaUdaf(sql)))
   }
 
   test("BoxplotScaleRule: global aggregate (no GROUP BY) and empty input keep UDAF row semantics") {
-    graft.exprs.Boxplot.register(spark)
     sampleDf().createOrReplaceTempView("bp_glob_src")
     val sql = "SELECT boxplot_info(CAST(v AS DOUBLE), map('k', i)) AS bp FROM bp_glob_src"
     def one(df: DataFrame): String =
       df.selectExpr("round(bp.q1,6) q1", "round(bp.max,6) mx",
           "size(bp.outliers) no").collect().map(_.toString).mkString("|")
-    assert(one(spark.sql(sql)) === viaUdaf(one(spark.sql(sql))))
+    assert(one(spark.sql(sql)) === one(viaUdaf(sql)))
     // empty input: global aggregate still emits exactly ONE row with
     // null scalars and an EMPTY (not null) outlier list, like finish(zero)
     val emptySql = sql.replace("bp_glob_src", "bp_glob_src WHERE v > 1e18")
     val rows = spark.sql(emptySql).collect()
-    val udafRows = viaUdaf(spark.sql(emptySql).collect())
+    val udafRows = viaUdaf(emptySql).collect()
     assert(rows.length == 1 && udafRows.length == 1)
     val (r, u) = (rows.head.getStruct(0), udafRows.head.getStruct(0))
     assert(r.isNullAt(3) && u.isNullAt(3), "q1 must be null on empty input")
@@ -172,7 +184,6 @@ class BoxplotTukeySpec extends AnyFunSuite {
     // the registered 1-arg UDAF in place for builtin max/min/percentile
     // (no join-back), including alongside other aggregates, a mixed
     // query with the 2-arg form, and the empty-input global aggregate.
-    graft.exprs.Boxplot.register(spark)
     sampleDf().createOrReplaceTempView("bp_plain_rule_src")
     val sql =
       """SELECT g, count(*) AS n, BOXPLOT(CAST(v AS DOUBLE)) AS bp
@@ -186,7 +197,7 @@ class BoxplotTukeySpec extends AnyFunSuite {
     assert(!plan.contains("ScalaAggregator") && !plan.contains("BoxplotAgg"),
       s"1-arg UDAF still in routed plan:\n$plan")
     assert(plan.contains("percentile"), s"native quartiles missing:\n$plan")
-    assert(canon(routed) === viaUdaf(canon(spark.sql(sql))))
+    assert(canon(routed) === canon(viaUdaf(sql)))
     // mixed 1-arg + 2-arg in one SELECT: both route, both agree
     val mixed =
       """SELECT g, BOXPLOT(CAST(v AS DOUBLE)) AS bp,
@@ -198,7 +209,7 @@ class BoxplotTukeySpec extends AnyFunSuite {
     def canonM(df: DataFrame): Seq[String] =
       canon(df.select(col("g"), col("bp"))) ++
         canon(df.select(col("g"), col("bpi").as("bp")))
-    assert(canonM(routedM) === viaUdaf(canonM(spark.sql(mixed))))
+    assert(canonM(routedM) === canonM(viaUdaf(mixed)))
     // empty input: one row, null scalars, EMPTY (not null) outliers
     val empty = spark.sql(
       "SELECT BOXPLOT(CAST(v AS DOUBLE)) AS bp FROM bp_plain_rule_src WHERE v > 1e18")
@@ -208,7 +219,6 @@ class BoxplotTukeySpec extends AnyFunSuite {
   }
 
   test("BoxplotScaleRule: FILTERed calls stay on the UDAF (unsupported shape)") {
-    graft.exprs.Boxplot.register(spark)
     sampleDf().createOrReplaceTempView("bp_filt_src")
     val df = spark.sql(
       """SELECT g, boxplot_info(CAST(v AS DOUBLE), map('k', i))

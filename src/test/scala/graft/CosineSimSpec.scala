@@ -9,16 +9,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * null propagation, and codegen execution (no CodegenFallback). */
 class CosineSimSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    CosineSim.register(s)
-    s
-  }
+  private lazy val spark: SparkSession = SparkSession.builder()
+    .master("local[4]")
+    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
 
   private val hof =
     """aggregate(zip_with(a, b, (x, y) -> x * y), 0D, (acc, z) -> acc + z)
@@ -57,7 +53,6 @@ class CosineSimSpec extends AnyFunSuite {
   }
 
   test("len() dispatches on type like DuckDB (string chars, list size)") {
-    graft.exprs.Len.register(spark)
     val r = spark.sql(
       "SELECT len('hello') AS ls, len(array(1, 2, 3)) AS la, len(map('a', 1)) AS lm")
       .head
@@ -97,7 +92,6 @@ class CosineSimSpec extends AnyFunSuite {
     // inputs) is the regression case: nullSafeCodeGen swaps ev.isNull
     // to FalseLiteral, so result code writing `ev.isNull = true`
     // referenced an undeclared variable and failed Janino.
-    graft.exprs.Len.register(spark)
     spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
     spark.conf.set("spark.sql.codegen.fallback", "false")
     try {

@@ -1687,7 +1687,6 @@ class CurationOpsSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val docs = (1L to 40L).map(i =>
       (i, "en", "src", s"doc $i body")).toDF("doc_id", "lang", "source", "text")
-    graft.exprs.Md5Bits60.register(spark)
     val isDel = col("doc_id") % 5 === 0 // 8 of 40
     val out = java.nio.file.Files.createTempDirectory("u06spec").toString
     val cert = graft.queries.PipelineOps.deletionDrillOf(docs, isDel, out, shards = 4)
@@ -2900,7 +2899,6 @@ class CurationOpsSpec extends AnyFunSuite {
     // independent replay of the vector evidence: live probe counts
     // with and without the subject
     import graft.queries.PipelineOps.ivfProbeOf
-    graft.exprs.CosineSim.register(spark)
     val emb = Tables.t(spark, dir, "embeddings")
       .select(col("vec_id"), col("label"),
         col("embedding").cast("array<double>").as("e"))

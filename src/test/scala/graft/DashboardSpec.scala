@@ -393,17 +393,16 @@ class DashboardSpec extends AnyFunSuite {
     assert(pivot.sections.head.queries.head.rows.length == 5)
   }
 
-  /** Renders `content` twice — with the session's ShaperTagRules, and
-    * with them removed from its extraOptimizations — and returns both
-    * JSON documents. `events` is 2000 rows generated from formulas: three
-    * weeks of timestamps, 37 users, five event types. */
+  /** Renders `content` twice — with the ShaperTagRules the request
+    * session is born with, and with them excluded from its optimizer —
+    * and returns both JSON documents. `events` is 2000 rows generated
+    * from formulas: three weeks of timestamps, 37 users, five event types. */
   private def renderWithAndWithoutTagRules(content: String,
       cfg: RunConfig = RunConfig()): (String, String) = {
     def render(keepRules: Boolean): String = graft.render.Model.toJson(
       Dashboard.run(spark, content, cfg.copy(prepare = s => {
         if (!keepRules)
-          s.experimental.extraOptimizations =
-            s.experimental.extraOptimizations.filterNot(_ eq graft.plans.ShaperTagRules)
+          s.conf.set("spark.sql.optimizer.excludedRules", graft.plans.ShaperTagRules.ruleName)
         s.range(2000).selectExpr("id AS event_id",
           "timestamp_seconds(1704067200 + id * 900) AS ts", "id % 37 AS user_id",
           "element_at(array('click', 'error', 'purchase', 'signup', 'view'), " +

@@ -814,7 +814,6 @@ class PlanSpec extends AnyFunSuite {
     // GROUP BY must not reach the Kryo-collect UDAF — the rule routes
     // it to the percentile + broadcast join-back plan, and only true
     // Tukey outliers are ever collected
-    graft.exprs.Boxplot.register(spark)
     graft.Tables.t(spark, dir, "lineitem").createOrReplaceTempView("lineitem")
     val sql = graft.sqlfront.Dialect.rewrite(
       """SELECT l_returnflag,
@@ -835,7 +834,6 @@ class PlanSpec extends AnyFunSuite {
     // the 1-arg BoxplotAgg UDAF — the rule now substitutes the call
     // in place for builtin max/min/percentile (no join-back needed),
     // so neither registered name can reach a collect-per-group buffer
-    graft.exprs.Boxplot.register(spark)
     graft.Tables.t(spark, dir, "lineitem").createOrReplaceTempView("lineitem_bp1")
     val df = spark.sql(
       "SELECT l_returnflag, BOXPLOT(CAST(l_quantity AS DOUBLE)) AS bp " +
@@ -1588,11 +1586,10 @@ class PlanSpec extends AnyFunSuite {
 
   // ---- ShaperTagRules: type tags kept out of Spark execution ----------
 
-  /** A fresh session with the shaper types (and their rules) installed
-    * and the sf0.001 tables registered, like a render session. */
+  /** A new session of the root, born with the shaper types and their
+    * rules, with the sf0.001 tables registered, like a render session. */
   private lazy val tagged: SparkSession = {
     val s = spark.newSession()
-    graft.types.ShaperTypes.register(s)
     Tables.registerAll(s, dir)
     s
   }
@@ -1600,10 +1597,8 @@ class PlanSpec extends AnyFunSuite {
   private def taggedSql(sql: String): org.apache.spark.sql.DataFrame =
     tagged.sql(graft.sqlfront.Dialect.rewrite(sql))
 
-  /** `body` with ShaperTagRules excluded from `tagged`'s optimizer, both
-    * where `ShaperTypes.register` installs it and where a session is born
-    * with it (`graft.Sessions.request` gives the root's every new session
-    * the GraftExtensions rules). */
+  /** `body` with ShaperTagRules, which `tagged` is born with, excluded
+    * from its optimizer. */
   private def withoutTagRules[A](body: => A): A = {
     val key = "spark.sql.optimizer.excludedRules"
     val saved = tagged.conf.getOption(key)

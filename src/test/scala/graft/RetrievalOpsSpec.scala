@@ -236,7 +236,6 @@ class RetrievalOpsSpec extends AnyFunSuite {
   }
 
   test("word_pairs: non-distinct, ordered, codegen with no fallback") {
-    graft.exprs.WordPairs.register(spark)
     spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
     spark.conf.set("spark.sql.codegen.fallback", "false")
     try {
@@ -293,7 +292,6 @@ class RetrievalOpsSpec extends AnyFunSuite {
   }
 
   test("t12: null in, null out; idempotent on already-normalized text") {
-    graft.exprs.NfcNormalize.register(spark)
     import spark.implicits._
     val out = Seq(Option("caf\u00E9"), None).toDF("s")
       .selectExpr("nfc_normalize(s) as n").collect()
@@ -302,7 +300,6 @@ class RetrievalOpsSpec extends AnyFunSuite {
   }
 
   test("t12: no interpreted fallback on any shape (CODEGEN_ONLY)") {
-    graft.exprs.NfcNormalize.register(spark)
     spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
     spark.conf.set("spark.sql.codegen.fallback", "false")
     try {
@@ -1350,7 +1347,6 @@ class RetrievalOpsSpec extends AnyFunSuite {
     // ids under the SAME stale full-corpus centroids (deletion changes
     // who is served, never how cells are probed)
     import graft.queries.PipelineOps.ivfProbeOf
-    graft.exprs.CosineSim.register(spark)
     val emb = Tables.t(spark, dir, "embeddings")
       .select(col("vec_id"), col("label"),
         col("embedding").cast("array<double>").as("e"))
@@ -1378,7 +1374,6 @@ class RetrievalOpsSpec extends AnyFunSuite {
     import spark.implicits._
     import graft.queries.PipelineOps.{reassignToCentroidsOf,
       generationViewOf, ivfProbeOf}
-    graft.exprs.CosineSim.register(spark)
     // crafted re-quantization: v2 re-embeds from cell 0's direction to
     // cell 1's — it must land in cell 1, not keep its stale label
     val cent = Seq((0L, Seq(1.0, 0.0)), (1L, Seq(0.0, 1.0)))

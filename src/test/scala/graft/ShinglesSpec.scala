@@ -8,15 +8,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * replaced (split -> transform over sequence -> array_distinct). */
 class ShinglesSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.exprs.Shingles3.register(s)
-    s
-  }
+  private lazy val spark: SparkSession = SparkSession.builder()
+    .master("local[4]")
+    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
 
   private val hofChain =
     """CASE WHEN size(split(text, ' ')) >= 3 THEN

@@ -10,16 +10,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * semantics, and codegen execution. */
 class SqDistSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    SqDist.register(s)
-    s
-  }
+  private lazy val spark: SparkSession = SparkSession.builder()
+    .master("local[4]")
+    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
 
   private val hof =
     "aggregate(zip_with(a, b, (x, y) -> (x - y) * (x - y)), 0D, (acc, v) -> acc + v)"
@@ -92,16 +88,12 @@ class SqDistSpec extends AnyFunSuite {
   * execution. */
 class Md5Bits60Spec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.exprs.Md5Bits60.register(s)
-    s
-  }
+  private lazy val spark: SparkSession = SparkSession.builder()
+    .master("local[4]")
+    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
 
   test("bit-exact vs conv(substring(md5, 1, 15)) across ascii/unicode/empty") {
     import spark.implicits._
@@ -131,16 +123,12 @@ class Md5Bits60Spec extends AnyFunSuite {
   * (qualityScoreExpr) across tokenization edge cases, plus codegen. */
 class QualityScoreSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.exprs.QualityScore.register(s)
-    s
-  }
+  private lazy val spark: SparkSession = SparkSession.builder()
+    .master("local[4]")
+    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
 
   test("bit-exact vs the HOF reference across edge tokenizations") {
     import spark.implicits._

@@ -134,7 +134,6 @@ class UnicodeCorpusSpec extends AnyFunSuite {
   }
 
   test("t13: word_pairs yields exactly words-1 adjacent pairs on multilingual text") {
-    graft.exprs.WordPairs.register(spark)
     val n = nfc(corpus())
       .select(col("doc_id"), size(expr("word_pairs(text)")).as("np"),
         (size(split(col("text"), " ")) - 1).as("expect"))
