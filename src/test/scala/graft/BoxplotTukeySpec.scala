@@ -57,8 +57,8 @@ class BoxplotTukeySpec extends AnyFunSuite {
     * `FILTER (WHERE true)`: the same rows reach the aggregate, and
     * BoxplotScaleRule leaves FILTERed calls alone, so the plan genuinely
     * executes the UDAF — the reference implementation these parity pins
-    * are against. Every session is born with the rule, so this is the
-    * only way SQL reaches the UDAF; the plan is checked to hold it. */
+    * are against. Every session is born with the rule, so the plan is
+    * checked to hold the UDAF. */
   private def viaUdaf(sql: String): DataFrame = {
     val df = spark.sql(boxplotCall.replaceAllIn(sql,
       m => scala.util.matching.Regex.quoteReplacement(m.matched + " FILTER (WHERE true)")))
