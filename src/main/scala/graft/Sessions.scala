@@ -38,6 +38,14 @@ import java.util.concurrent.atomic.AtomicLong
   * given up is per-session jar/file/archive artifacts, which no request
   * path adds.
   *
+  * A request session is made with no session state (SQL conf, catalog,
+  * function registry, analyzer): Spark builds it on the session's first
+  * use of any of them, and then it costs about a quarter of a
+  * millisecond. A request whose every statement is answered from the
+  * result cache's text uses none of them and never builds it; its text
+  * keys use the conf, catalog and namespace that one built request
+  * session of the same root read once ([[textParts]]).
+  *
   * Do not pool or reuse request sessions instead: a temp view or
   * JWT-derived state leaking between tenants is a security bug, and the
   * isolation itself is cheap — the recompilation was the cost.
@@ -64,31 +72,70 @@ object Sessions {
     spark
   }
 
-  /** A fresh session for one request. The conf is set before anything
-    * touches the session's `ArtifactManager`, which reads it once, on
-    * first use (a lazy val), and keeps that answer for its lifetime. */
+  /** A fresh session for one request, with artifact isolation off. The
+    * setting is one of the session's initial options, which its SQL conf
+    * starts from when its state is built, so making the session builds
+    * no state and a request answered wholly from
+    * [[interp.ResultCache]]'s text front never builds it. The state is
+    * built on first need: a side effect, a compile, or a text lookup
+    * that does not answer. The session's `ArtifactManager`, a lazy val,
+    * reads the setting from that conf. */
   def request(spark: SparkSession): SparkSession = {
-    rooted(spark)
-    val s = spark.newSession()
-    s.conf.set(ArtifactIsolation, "false")
-    s
+    val options = SessionHooks.initialOptions(spark) + (ArtifactIsolation -> "false")
+    rooted(spark, options)
+    SessionHooks.newSession(spark, options)
   }
+
+  /** What gives a statement's text its meaning in a session: the SQL
+    * conf, and the current catalog and namespace that resolve its
+    * unqualified names. */
+  final case class TextParts(conf: Map[String, String], catalog: String, namespace: String)
+
+  private def textPartsOf(s: SparkSession): TextParts =
+    TextParts(s.sessionState.conf.getAllConfs, s.catalog.currentCatalog(), s.catalog.currentDatabase)
+
+  /** `s`'s [[TextParts]]. A request session whose state is not built
+    * gets those its root's request sessions start with, read once from
+    * one whose state was built, and builds none; any other session reads
+    * its own. */
+  def textParts(s: SparkSession): TextParts =
+    if (SessionHooks.stateBuilt(s)) textPartsOf(s)
+    else synchronized(Option(parts.get(s.sharedState)).flatMap(_.get(SessionHooks.initialOptions(s))))
+      .getOrElse(textPartsOf(s))
 
   /** Per set of shared extensions, the functions a session born from
     * them holds; weak, so a stopped root's state is not pinned. */
   private val born = new java.util.WeakHashMap[SparkSessionExtensions, Map[FunctionIdentifier, ExpressionInfo]]
+  /** Per shared state and set of initial options, the text parts of a
+    * request session made with them: its SQL conf is the shared Spark
+    * conf with those options over it. */
+  private val parts = new java.util.WeakHashMap[AnyRef, Map[Map[String, String], TextParts]]
   private val listened = java.util.Collections.newSetFromMap(
     new java.util.WeakHashMap[AnyRef, java.lang.Boolean])
   private val generation = new AtomicLong
+  private val statesBuilt = new AtomicLong
 
-  /** Once per root: the functions its new sessions are born with and a
-    * listener on its shared catalog. */
-  private def rooted(spark: SparkSession): Unit = synchronized {
+  /** Once per root: the functions its new sessions are born with, the
+    * text parts of a request session made with `options`, and a listener
+    * on its shared catalog. */
+  private def rooted(spark: SparkSession, options: Map[String, String]): Unit = synchronized {
     val ext = SessionHooks.extensions(spark)
     if (!born.containsKey(ext)) born.put(ext, SessionHooks.bornFunctions(ext))
+    val known = Option(parts.get(spark.sharedState)).getOrElse(Map.empty)
+    if (!known.contains(options))
+      parts.put(spark.sharedState, known + (options -> textPartsOf(SessionHooks.newSession(spark, options))))
     if (listened.add(spark.sharedState.externalCatalog))
       SessionHooks.onCatalogEvent(spark)(_ => generation.incrementAndGet())
   }
+
+  /** Ends request session `s`: counts it in [[requestStatesBuilt]] when
+    * its state was built. */
+  def ended(s: SparkSession): Unit = if (SessionHooks.stateBuilt(s)) statesBuilt.incrementAndGet()
+
+  /** Ended request sessions whose state was built; a request answered
+    * wholly from text adds none. Exported as
+    * `graft_request_session_states_total` on `/metrics`. */
+  def requestStatesBuilt: Long = statesBuilt.get
 
   /** Changes to any request root's catalog so far: databases, tables,
     * views and functions created, dropped, renamed or altered. A change

@@ -1375,6 +1375,11 @@ final class HttpApi(
     sb ++= "# HELP graft_codegen_compiles_total Generated-code classes compiled by this JVM.\n"
     sb ++= "# TYPE graft_codegen_compiles_total counter\n"
     sb ++= s"graft_codegen_compiles_total ${graft.Sessions.codegenCompiles}\n"
+    // a render, task, download or /api/sql request answered wholly from
+    // the result cache's text never builds its session's state
+    sb ++= "# HELP graft_request_session_states_total Sessions of renders, downloads, tasks and /api/sql requests whose session state was built.\n"
+    sb ++= "# TYPE graft_request_session_states_total counter\n"
+    sb ++= s"graft_request_session_states_total ${graft.Sessions.requestStatesBuilt}\n"
     // statement results reused by renders and download replays while
     // their plan and input files are unchanged (interp.ResultCache)
     val cache = graft.interp.ResultCache.shared

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.encoders.encoderFor
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LocalRelation, LogicalPlan, OneRowRelation, Range}
 import org.apache.spark.sql.catalyst.trees.TreePattern.CURRENT_LIKE
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex, LogicalRelation, PartitioningAwareFileIndex}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
 import org.apache.spark.sql.graftsession.SessionHooks
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.SizeEstimator
@@ -80,9 +80,20 @@ import scala.util.Try
   *  - the session is clean: no local or global temp view, no session
   *    variable, no experimental optimizer rule or strategy, no data
   *    cached by any session, and only the functions it was born with;
-  *  - every table the statement reads lists, by Spark's own
-  *    `InMemoryFileIndex`, as the stem entry's files (each table at most
-  *    once per request, until the request runs Spark SQL again).
+  *  - every table the statement reads lists as the stem entry's files
+  *    (each table at most once per request, until the request runs Spark
+  *    SQL again). [[FileListing]] lists it by `InMemoryFileIndex`'s rules
+  *    through the root's shared Hadoop configuration; a table with an
+  *    option other than `path`, a SQL conf setting outside `spark.`, a
+  *    Hadoop path filter, or a file below a subdirectory is listed by an
+  *    `InMemoryFileIndex` instead.
+  * A text lookup in a request session whose state was never built (see
+  * `graft.Sessions.request`) keeps it unbuilt: such a session is clean
+  * by construction, so only the process's global temp views and cached
+  * data are read, and the key's conf, catalog and namespace are those
+  * every request session of the root starts with
+  * (`graft.Sessions.textParts`). A text hit then costs the key, one map
+  * lookup and one directory listing per table.
   * A text entry is recorded only for a cacheable statement whose every
   * file relation is an unpartitioned catalog table: a path or glob read
   * can gain files outside its stored root paths, and adding a partition
@@ -126,9 +137,10 @@ final class ResultCache(maxBytes: Long) {
     // read before analysis: a catalog change after this point makes an
     // entry recorded with it stale
     val generation = graft.Sessions.catalogGeneration
-    val text = Option.when(checks.clean(spark))(ResultCache.TextKey(sql,
-      spark.sessionState.conf.getAllConfs, maxRows, spark.catalog.currentCatalog(),
-      spark.catalog.currentDatabase))
+    val text = Option.when(checks.clean(spark)) {
+      val parts = graft.Sessions.textParts(spark)
+      ResultCache.TextKey(sql, parts.conf, maxRows, parts.catalog, parts.namespace)
+    }
     text.flatMap(answer(spark, _, generation, checks))
       .getOrElse(collect(run(sql), maxRows, text.map(_ -> generation)))
   }
@@ -137,7 +149,7 @@ final class ResultCache(maxBytes: Long) {
       checks: ResultCache.Checks): Option[(StructType, Seq[Row])] =
     synchronized(Option(texts.get(key)).filter(_.generation == generation)
         .flatMap(t => Option(entries.get(t.stem)).map(t -> _)))
-      .collect { case (t, e) if t.sources.map(checks.files(spark, _)) == e.files =>
+      .collect { case (t, e) if t.sources.map(checks.files(spark, _, key.conf)) == e.files =>
         hits.incrementAndGet()
         textHits.incrementAndGet()
         (e.schema, e.rows)
@@ -242,7 +254,7 @@ object ResultCache {
   private final case class Stem(plan: LogicalPlan, schema: StructType, conf: Map[String, String])
 
   /** (path, length, modification time) of every file a relation reads. */
-  private type Files = Seq[(String, Long, Long)]
+  private type Files = FileListing.Files
 
   /** A statement's last result: the listing it was computed from (one per
     * file relation), its rows and, for an incremental aggregate, its
@@ -282,29 +294,32 @@ object ResultCache {
     private val listed = mutable.HashMap.empty[Source, Files]
     private var bornFunctions: Option[Boolean] = None
 
-    /** The files `source` lists, as a relation over it would read them:
-      * Spark's own `InMemoryFileIndex`, with the relation's options and
-      * schema and no shared listing cache. */
-    private[ResultCache] def files(spark: SparkSession, source: Source): Files =
-      listed.getOrElseUpdate(source, filesOf(
-        new InMemoryFileIndex(spark, source.rootPaths, source.options, Some(source.schema))))
+    /** The files `source` lists, as a relation over it would read them
+      * in a session whose SQL conf is `conf`: [[FileListing]] through the
+      * root's shared Hadoop configuration, or, where that gives no answer,
+      * Spark's own `InMemoryFileIndex` with the relation's options and
+      * schema. */
+    private[ResultCache] def files(spark: SparkSession, source: Source, conf: Map[String, String]): Files =
+      listed.getOrElseUpdate(source,
+        FileListing.files(spark, source.rootPaths, source.options, source.schema, conf))
 
-    /** Whether `spark` holds no temp view, session variable or
-      * experimental optimizer rule or strategy, the process no global
-      * temp view or cached data, and the session exactly its born
-      * functions. */
-    private[ResultCache] def clean(spark: SparkSession): Boolean = {
-      val catalog = spark.sessionState.catalog
-      catalog.getTempViewNames().isEmpty && spark.sharedState.cacheManager.isEmpty &&
-        catalog.globalTempViewManager.listViewNames("*").isEmpty &&
-        SessionHooks.holdsNoVariables(spark) &&
-        spark.experimental.extraOptimizations.isEmpty && spark.experimental.extraStrategies.isEmpty &&
-        bornFunctions.getOrElse {
-          val born = graft.Sessions.holdsBornFunctions(spark)
-          bornFunctions = Some(born)
-          born
-        }
-    }
+    /** Whether the process holds no global temp view or cached data and
+      * `spark` no temp view, session variable or experimental optimizer
+      * rule or strategy, and exactly its born functions. A session whose
+      * state was never built holds none of its own by construction, so
+      * only the process's are read, and its state stays unbuilt. */
+    private[ResultCache] def clean(spark: SparkSession): Boolean =
+      spark.sharedState.cacheManager.isEmpty &&
+        spark.sharedState.globalTempViewManager.listViewNames("*").isEmpty &&
+        (!SessionHooks.stateBuilt(spark) || {
+          spark.sessionState.catalog.getTempViewNames().isEmpty && SessionHooks.holdsNoVariables(spark) &&
+            spark.experimental.extraOptimizations.isEmpty && spark.experimental.extraStrategies.isEmpty &&
+            bornFunctions.getOrElse {
+              val born = graft.Sessions.holdsBornFunctions(spark)
+              bornFunctions = Some(born)
+              born
+            }
+        })
 
     /** Forget every check. */
     def clear(): Unit = {
@@ -312,9 +327,6 @@ object ResultCache {
       bornFunctions = None
     }
   }
-
-  private def filesOf(index: PartitioningAwareFileIndex): Files =
-    index.allFiles().map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).sortBy(_._1)
 
   /** A file-source relation in a stem: what it reads and how, without the
     * index (which holds a session) or its listing. */
@@ -357,7 +369,7 @@ object ResultCache {
       val stemPlan = plan.canonicalized.transformUpWithSubqueries {
         case r @ LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
           val index = fs.location.asInstanceOf[PartitioningAwareFileIndex]
-          files += filesOf(index)
+          files += FileListing.of(index)
           sources += Source(index.rootPaths, fs.options, fs.schema)
           FileScan(r.output, index.rootPaths.map(_.toString).sorted,
             fs.fileFormat.getClass.getName, fs.dataSchema, fs.partitionSchema,

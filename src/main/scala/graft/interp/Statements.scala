@@ -20,7 +20,11 @@ import scala.collection.mutable
   *  - [[request]]: a fresh session (`graft.Sessions.request`, born
   *    with the shaper types, `BOXPLOT`, `len` and the engine's rules)
   *    with the caller's `prepare` run, a variable store, a macro store
-  *    and the request's temp tables, released when the request ends;
+  *    and the request's temp tables, released when the request ends.
+  *    The session's state (SQL conf, catalog, registry) is built on first
+  *    need: by `prepare` if it touches the session, a side effect, a
+  *    compile, or a text lookup that does not answer. A request whose
+  *    every statement is a text hit builds none;
   *  - [[split]]: comments stripped, statements split and trimmed;
   *  - [[Request.sideEffect]]: `CREATE MACRO`, `SET`/`RESET VARIABLE` and
   *    `CREATE TEMP TABLE/VIEW … AS`, applied to the request's state;
@@ -50,7 +54,10 @@ object Statements {
     try {
       prepare(req.spark)
       body(req)
-    } finally req.tempTables.release()
+    } finally {
+      req.tempTables.release()
+      graft.Sessions.ended(req.spark)
+    }
   }
 
   private val setVarStmt = "(?is)^SET\\s+VARIABLE\\s+\"?([a-zA-Z0-9_]+)\"?\\s*=\\s*(.+)$".r

@@ -851,7 +851,7 @@ class HttpApiSpec extends AnyFunSuite {
     Seq("graft_result_cache_hits_total counter", "graft_result_cache_text_hits_total counter",
       "graft_result_cache_misses_total counter",
       "graft_result_cache_incremental_total counter", "graft_result_cache_bytes gauge",
-      "graft_result_cache_entries gauge").foreach(t => assert(body.contains(s"# TYPE $t"), body))
+      "graft_result_cache_entries gauge", "graft_request_session_states_total counter").foreach(t => assert(body.contains(s"# TYPE $t"), body))
     // two aggregate statements over the ingest table, each answered from
     // its cached state plus the new file after an ingest
     liveDashboard("cachelive", "http_cache_live",
@@ -885,10 +885,12 @@ class HttpApiSpec extends AnyFunSuite {
 
     // The fixture's prepare hook gives every request temp views, so its
     // statements are never answered from text. A server without one
-    // answers a repeat of an unchanged render before Spark parses it.
+    // answers a repeat of an unchanged render before Spark parses it,
+    // and builds no session state for it.
     val plain = new HttpApi(spark, fixtureStore, secret)
     val plainPort = plain.start()
     def textHits() = metric(metricsKey, "graft_result_cache_text_hits_total")
+    def statesBuilt() = metric(metricsKey, "graft_request_session_states_total")
     def renderPlain(): String = {
       val r = client.send(HttpRequest.newBuilder(
           URI.create(s"http://127.0.0.1:$plainPort/api/dashboards/cachelive"))
@@ -900,10 +902,12 @@ class HttpApiSpec extends AnyFunSuite {
       val first = renderPlain()
       val (h4, i4, m4) = counters()
       val t4 = textHits()
+      val s4 = statesBuilt()
       assert(renderPlain() == first)
       val (h5, i5, m5) = counters()
       assert((h5 - h4, i5 - i4, m5 - m4) == (3, 0, 0), "unchanged render: (hits, incremental, misses)")
       assert(textHits() - t4 == 3, "unchanged render: text hits")
+      assert(statesBuilt() - s4 == 0, "unchanged render: session states built")
     } finally plain.stop()
   }
 

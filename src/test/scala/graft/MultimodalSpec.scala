@@ -1,7 +1,6 @@
 package graft
 
 import graft.catalog.Catalog
-import graft.exprs.Getenv
 import graft.ops.Multimodal
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
@@ -526,17 +525,5 @@ class MultimodalSpec extends AnyFunSuite {
       s2.sql(s"DROP VIEW IF EXISTS $vw")
       s2.sql(s"DROP TABLE IF EXISTS $tbl")
     }
-  }
-
-  test("getenv UDF gated by init window (util/duckdb.go:14-57)") {
-    val s2 = spark.newSession()
-    Getenv.register(s2)
-    // outside init: empty
-    assert(s2.sql("SELECT getenv('PATH') AS v").collect().head.getString(0) == "")
-    // inside init: real value
-    val v = Getenv.withEnabled {
-      s2.sql("SELECT getenv('PATH') AS v").collect().head.getString(0)
-    }
-    assert(v.nonEmpty)
   }
 }

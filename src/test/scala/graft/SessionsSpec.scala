@@ -4,6 +4,7 @@ import graft.interp.Dashboard.RunConfig
 import graft.interp.{Dashboard, Download, ResultCache}
 import graft.tasks.Tasks
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftsession.SessionHooks
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.io.StringWriter
@@ -83,6 +84,28 @@ class SessionsSpec extends AnyFunSuite {
     assert(s ne spark)
     assert(s.conf.get(key) == "false")
     assert(spark.conf.get(key) == parent)
+  }
+
+  test("a request session is made with no state; its text parts are those of a built one") {
+    val key = "spark.sql.artifact.isolation.enabled"
+    val s = Sessions.request(spark)
+    // no conf.set: isolation is an initial option, and nothing built the state
+    assert(!SessionHooks.stateBuilt(s))
+    assert(SessionHooks.initialOptions(s).get(key).contains("false"))
+    val parts = Sessions.textParts(s)
+    assert(!SessionHooks.stateBuilt(s), "reading the text parts built the state")
+    assert(parts.conf.get(key).contains("false"))
+    // a fresh request session whose state is built reads the same parts
+    val built = Sessions.request(spark)
+    assert(built.conf.get(key) == "false")
+    assert(SessionHooks.stateBuilt(built))
+    assert(Sessions.textParts(built) == parts)
+    assert((parts.catalog, parts.namespace) == (built.catalog.currentCatalog(), built.catalog.currentDatabase))
+    built.sql("SELECT count(*) FROM range(10)").collect()
+    assert(Sessions.textParts(built) == parts, "running a query changed the text parts")
+    // and the unbuilt one, once built, reads them too
+    assert(s.conf.get(key) == "false")
+    assert(SessionHooks.stateBuilt(s) && Sessions.textParts(s) == parts)
   }
 
   test("steady-state dashboard renders compile no generated code: demo and widgets") {

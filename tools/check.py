@@ -3,7 +3,7 @@
 
 Usage: python3 tools/check.py [sfdir] [outdir] [query...]
 
-1. Runs graft.Verify (compiled classes + /opt/spark/jars) at sfdir -> outdir
+1. Runs graft.Verify (this checkout's compiled classes + /opt/spark/jars) at sfdir -> outdir
 2. Runs each oracle_sql.json entry in DuckDB over the same parquet tables
 3. Compares: schema (sorted col names), row count, values (sorted rows,
    floats rounded to 6 sig places)
@@ -16,6 +16,10 @@ ONLY = set(sys.argv[3:])
 SKIP_VERIFY = "--no-verify" in ONLY
 ONLY.discard("--no-verify")
 
+# this checkout's compiled classes, wherever it is
+CLASSES = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                       "target", "scala-2.13", "classes")
+
 ADD_OPENS = [
     "java.base/java.lang", "java.base/java.lang.invoke",
     "java.base/java.lang.reflect", "java.base/java.io", "java.base/java.net",
@@ -26,7 +30,7 @@ ADD_OPENS = [
 ]
 
 def run_verify():
-    cp = "/root/repo/target/scala-2.13/classes:" + ":".join(
+    cp = CLASSES + ":" + ":".join(
         glob.glob("/opt/spark/jars/*.jar"))
     cmd = ["java"] + [a for p in ADD_OPENS for a in ("--add-opens", p + "=ALL-UNNAMED")] + [
         "-Xmx8g", "-Dspark.ui.enabled=false",

@@ -10,13 +10,14 @@ Reads the `jdk.ExecutionSample` events of threads whose name starts with
 `--thread` (the HTTP API's pool by default) and puts each sample in the
 first bucket, in the order below, that has a frame anywhere on its stack:
 
-    session       building a request session or its session state
+    session       making a request session or building its session state
     registration  registering functions into a session's registry
     parse         Spark's SQL parser
     analysis      Spark's analyzer (table resolution and its listing too)
     optimize      Spark's optimizer
     execute       physical planning and execution
-    listing       listing a table's files outside analysis
+    listing       listing a table's files outside analysis (the text check's
+                  FileListing, or its InMemoryFileIndex fallback)
     cache         the result cache's own work (keys, sizes, lookups)
     rewrite       the dialect and macro rewrite
     json          rendering the response
@@ -33,6 +34,8 @@ import sys
 BUCKETS = [
     ("session", (
         "graft.Sessions$.request",
+        "org.apache.spark.sql.graftsession.SessionHooks$.newSession",
+        "org.apache.spark.sql.classic.SparkSession.<init>",
         "org.apache.spark.sql.classic.SparkSession.newSession",
         "org.apache.spark.sql.classic.SparkSession.sessionState",
         "org.apache.spark.sql.internal.BaseSessionStateBuilder",
@@ -47,7 +50,7 @@ BUCKETS = [
         "org.apache.logging.log4j.core.config.Configurator.setLevel",
     ) + tuple(f"graft.exprs.{k}$.register" for k in (
         "Boxplot", "Len", "CosineSim", "SqDist", "NfcNormalize", "Shingles3",
-        "WordPairs", "Md5Bits60", "QualityScore", "JlProject", "Getenv"))),
+        "WordPairs", "Md5Bits60", "QualityScore", "JlProject"))),
     ("parse", (
         "org.apache.spark.sql.catalyst.parser.",
         "org.apache.spark.sql.execution.SparkSqlParser",
@@ -71,7 +74,7 @@ BUCKETS = [
     )),
     ("listing", (
         "org.apache.spark.sql.execution.datasources.InMemoryFileIndex",
-        "graft.interp.ResultCache$Listings",
+        "graft.interp.FileListing",
     )),
     ("cache", (
         "graft.interp.ResultCache",
