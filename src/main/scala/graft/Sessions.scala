@@ -40,11 +40,11 @@ import java.util.concurrent.atomic.AtomicLong
   *
   * A request session is made with no session state (SQL conf, catalog,
   * function registry, analyzer): Spark builds it on the session's first
-  * use of any of them, and then it costs about a quarter of a
-  * millisecond. A request whose every statement is answered from the
-  * result cache's text uses none of them and never builds it; its text
-  * keys use the conf, catalog and namespace that one built request
-  * session of the same root read once ([[textParts]]).
+  * use of any of them, at a cost larger than the rest of a text hit. A
+  * request whose every statement is answered from the result cache's
+  * text uses none of them and never builds it; its text keys use the
+  * conf, catalog and namespace that one built request session of the
+  * same root read once ([[textParts]]).
   *
   * Do not pool or reuse request sessions instead: a temp view or
   * JWT-derived state leaking between tenants is a security bug, and the

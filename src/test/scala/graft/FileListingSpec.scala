@@ -126,6 +126,7 @@ class FileListingSpec extends AnyFunSuite {
       }
       true
     })
+    org.apache.hadoop.fs.FileUtil.fullyDelete(base.toFile)
     assert(result.passed, result.status)
     assert(direct > 20, s"only $direct of $n directories listed files without the index")
     assert(viaLocal > 10, s"only $viaLocal of $n directories listed files through java.nio")
@@ -142,5 +143,6 @@ class FileListingSpec extends AnyFunSuite {
     val filtered = new org.apache.hadoop.conf.Configuration(hadoop)
     filtered.set("mapreduce.input.pathFilter.class", classOf[org.apache.hadoop.fs.GlobFilter].getName)
     assert(FileListing.direct(filtered, Seq(root), Map.empty, sqlConf).isEmpty)
+    org.apache.hadoop.fs.FileUtil.fullyDelete(rootDir.toFile)
   }
 }
