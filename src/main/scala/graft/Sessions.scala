@@ -96,20 +96,21 @@ object Sessions {
 
   /** `s`'s [[TextParts]]. A request session whose state is not built
     * gets those its root's request sessions start with, read once from
-    * one whose state was built, and builds none; any other session reads
-    * its own. */
+    * one whose state was built, and builds none; any other session, or
+    * one made with other initial options, reads its own. */
   def textParts(s: SparkSession): TextParts =
     if (SessionHooks.stateBuilt(s)) textPartsOf(s)
-    else synchronized(Option(parts.get(s.sharedState)).flatMap(_.get(SessionHooks.initialOptions(s))))
+    else synchronized(Option(parts.get(s.sharedState)))
+      .collect { case (options, p) if options == SessionHooks.initialOptions(s) => p }
       .getOrElse(textPartsOf(s))
 
   /** Per set of shared extensions, the functions a session born from
     * them holds; weak, so a stopped root's state is not pinned. */
   private val born = new java.util.WeakHashMap[SparkSessionExtensions, Map[FunctionIdentifier, ExpressionInfo]]
-  /** Per shared state and set of initial options, the text parts of a
-    * request session made with them: its SQL conf is the shared Spark
-    * conf with those options over it. */
-  private val parts = new java.util.WeakHashMap[AnyRef, Map[Map[String, String], TextParts]]
+  /** Per shared state, the initial options of its first request session
+    * and the text parts of a request session made with them: its SQL
+    * conf is the shared Spark conf with those options over it. */
+  private val parts = new java.util.WeakHashMap[AnyRef, (Map[String, String], TextParts)]
   private val listened = java.util.Collections.newSetFromMap(
     new java.util.WeakHashMap[AnyRef, java.lang.Boolean])
   private val generation = new AtomicLong
@@ -121,9 +122,8 @@ object Sessions {
   private def rooted(spark: SparkSession, options: Map[String, String]): Unit = synchronized {
     val ext = SessionHooks.extensions(spark)
     if (!born.containsKey(ext)) born.put(ext, SessionHooks.bornFunctions(ext))
-    val known = Option(parts.get(spark.sharedState)).getOrElse(Map.empty)
-    if (!known.contains(options))
-      parts.put(spark.sharedState, known + (options -> textPartsOf(SessionHooks.newSession(spark, options))))
+    if (!parts.containsKey(spark.sharedState))
+      parts.put(spark.sharedState, options -> textPartsOf(SessionHooks.newSession(spark, options)))
     if (listened.add(spark.sharedState.externalCatalog))
       SessionHooks.onCatalogEvent(spark)(_ => generation.incrementAndGet())
   }

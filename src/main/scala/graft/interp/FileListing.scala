@@ -1,42 +1,42 @@
 package graft.interp
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, FileSystem, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.datasources.{InMemoryFileIndex, PartitioningAwareFileIndex}
 import org.apache.spark.sql.graftsession.SessionHooks
 import org.apache.spark.sql.types.StructType
 
-import java.io.{FileNotFoundException, IOException}
+import java.io.IOException
 import java.nio.file.{Files, NoSuchFileException, Paths}
 import java.nio.file.attribute.BasicFileAttributes
 import scala.jdk.CollectionConverters._
 
 /** Lists a file relation's root paths as `InMemoryFileIndex.allFiles()`
-  * would, straight through the shared Hadoop configuration and Hadoop's
-  * cached `FileSystem`, without building an index. An index copies the
-  * session's Hadoop configuration twice (its own, then a `JobConf`)
-  * before it lists one directory, which costs about four times the
-  * listing.
+  * would, without building an index, where the roots are plain
+  * directories on the local file system. An index copies the session's
+  * Hadoop configuration twice (its own, then a `JobConf`) before it
+  * lists one directory, which costs about twenty times the listing
+  * here: one `java.nio` stat per entry.
   *
   * The rules are the index's own:
   *  - names `HadoopFSUtils.shouldFilterOutPathName` drops (`_SUCCESS`,
   *    `_temporary`, hidden and `._COPYING_` names) are dropped, files and
   *    directories alike, so no `.crc` checksum is ever returned;
-  *  - subdirectories are listed recursively;
   *  - a missing root lists as empty.
   *
-  * An unpartitioned index returns the files directly under its roots,
-  * and partition discovery over the subdirectories that hold files
-  * decides whether it is unpartitioned. So a listing that finds a file
-  * below a subdirectory, or a root that is itself a file, gives no
-  * answer here. Neither does one whose result depends on more than
-  * these rules: a relation option other than `path` (the index reads
-  * options such as `recursiveFileLookup` and `pathGlobFilter`, and
-  * copies every option into its Hadoop configuration), a SQL conf
-  * setting outside `spark.` (copied there too), or a Hadoop path filter
-  * (`mapreduce.input.pathFilter.class`). [[files]] then builds the
-  * index. */
+  * Anything else gives no answer here, and [[files]] builds the index:
+  *  - a root not on Hadoop's local file system, or a root or entry name
+  *    with characters Hadoop would render otherwise in a path;
+  *  - a root that is a file, or that holds a kept subdirectory (the
+  *    index walks it, and partition discovery over it decides what
+  *    `allFiles()` returns);
+  *  - a result that depends on more than these rules: a relation option
+  *    other than `path` (the index reads options such as
+  *    `recursiveFileLookup` and `pathGlobFilter`, and copies every
+  *    option into its Hadoop configuration), a SQL conf setting outside
+  *    `spark.` (copied there too), or a Hadoop path filter
+  *    (`mapreduce.input.pathFilter.class`). */
 object FileListing {
 
   /** (path, length, modification time) of each file, sorted by path. */
@@ -46,9 +46,9 @@ object FileListing {
   private val PathFilter = "mapreduce.input.pathFilter.class"
 
   /** The files an index over `roots` with `options` and `schema`
-    * returns in `spark`, whose SQL conf is `sqlConf`: [[direct]] through
-    * the shared Hadoop configuration, or else the index itself, built
-    * with no shared listing cache. */
+    * returns in `spark`, whose SQL conf is `sqlConf`: [[direct]] where it
+    * answers, or else the index itself, built with no shared listing
+    * cache. */
   def files(spark: SparkSession, roots: Seq[Path], options: Map[String, String], schema: StructType,
       sqlConf: Map[String, String]): Files =
     direct(SessionHooks.hadoopConf(spark), roots, options, sqlConf)
@@ -60,7 +60,8 @@ object FileListing {
 
   /** The files the index over `roots` with `options` would return in a
     * session whose SQL conf is `sqlConf` and whose shared Hadoop
-    * configuration is `hadoop`, or None where only the index can say. */
+    * configuration is `hadoop`: each root's [[local]] listing, or None
+    * where one of them gives no answer. */
   def direct(hadoop: Configuration, roots: Seq[Path], options: Map[String, String],
       sqlConf: Map[String, String]): Option[Files] =
     if (!options.keysIterator.forall(_.equalsIgnoreCase("path")) ||
@@ -68,23 +69,10 @@ object FileListing {
     else {
       val listed = roots.map { root =>
         val fs = root.getFileSystem(hadoop)
-        val path = fs.makeQualified(root)
-        local(fs, path).getOrElse(listRoot(fs, path))
+        local(fs, fs.makeQualified(root))
       }
       Option.when(listed.forall(_.isDefined))(listed.flatten.flatten.sortBy(_._1))
     }
-
-  /** The files directly under `root` that the index returns, or None
-    * when a kept file lies below a subdirectory or `root` is a file. */
-  private def listRoot(fs: FileSystem, root: Path): Option[Files] = {
-    val kept = try listKept(fs, root) catch { case _: FileNotFoundException => Array.empty[FileStatus] }
-    val (dirs, leaves) = kept.partition(_.isDirectory)
-    Option.when(!leaves.exists(_.getPath == root) && dirs.forall(d => holdsNoFile(fs, d.getPath))) {
-      // the index returns the files whose parent is the root as given:
-      // none for a root spelled with a trailing slash
-      leaves.toSeq.filter(_.getPath.getParent == root).map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
-    }
-  }
 
   /** Names Hadoop's local file system renders unchanged in a path. */
   private val Plain = "[A-Za-z0-9._=+-]+".r
@@ -95,13 +83,12 @@ object FileListing {
   private val LocalFileSystems = Set(classOf[LocalFileSystem].getName, classOf[RawLocalFileSystem].getName,
     "org.apache.hadoop.hive.ql.io.ProxyLocalFileSystem")
 
-  /** [[listRoot]] on the local file system, through `java.nio`: one stat
-    * per entry, where Hadoop's listing makes three `Path`s and five
-    * stats per entry. Hadoop names an entry `root/name`, as this does;
-    * a root or entry name with other characters, a root that is not a
-    * readable directory, or a subdirectory, is left to [[listRoot]]
-    * (None). */
-  private[graft] def local(fs: FileSystem, root: Path): Option[Option[Files]] =
+  /** The files directly under `root` that the index returns, listed
+    * through `java.nio`: Hadoop names an entry `root/name`, as this does.
+    * None for a root off the local file system, a root or entry name
+    * with other characters, a root that is not a readable directory, or
+    * a root holding a kept subdirectory. */
+  private[graft] def local(fs: FileSystem, root: Path): Option[Files] =
     if (!LocalFileSystems(fs.getClass.getName) || root.toUri.getScheme != "file" || root.toUri.getAuthority != null ||
         !PlainPath.matches(root.toUri.getPath)) None
     else {
@@ -117,22 +104,13 @@ object FileListing {
             try Some(name -> Files.readAttributes(dir.resolve(name), classOf[BasicFileAttributes]))
             catch { case _: NoSuchFileException => None } // gone since the listing, as Hadoop skips it
           }
-          Option.when(!stats.exists(_._2.isDirectory))(Some(stats.map { case (name, a) =>
+          Option.when(!stats.exists(_._2.isDirectory))(stats.map { case (name, a) =>
             (prefix + name, a.size, a.lastModifiedTime.toMillis)
-          }))
+          })
         }
       } catch {
-        case _: NoSuchFileException => Some(Some(Seq.empty))
+        case _: NoSuchFileException => Some(Seq.empty)
         case _: IOException => None
       }
     }
-
-  private def listKept(fs: FileSystem, dir: Path): Array[FileStatus] =
-    fs.listStatus(dir).filterNot(s => SessionHooks.listingDrops(s.getPath.getName))
-
-  /** Whether no file the index keeps lies anywhere below `dir`; a
-    * directory that vanishes meanwhile counts as holding one. */
-  private def holdsNoFile(fs: FileSystem, dir: Path): Boolean =
-    try listKept(fs, dir).forall(s => s.isDirectory && holdsNoFile(fs, s.getPath))
-    catch { case _: FileNotFoundException => false }
 }

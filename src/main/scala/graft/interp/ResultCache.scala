@@ -82,10 +82,11 @@ import scala.util.Try
   *    cached by any session, and only the functions it was born with;
   *  - every table the statement reads lists as the stem entry's files
   *    (each table at most once per request, until the request runs Spark
-  *    SQL again). [[FileListing]] lists it by `InMemoryFileIndex`'s rules
-  *    through the root's shared Hadoop configuration; a table with an
-  *    option other than `path`, a SQL conf setting outside `spark.`, a
-  *    Hadoop path filter, or a file below a subdirectory is listed by an
+  *    SQL again). [[FileListing]] lists a plain directory on the local
+  *    file system by `InMemoryFileIndex`'s rules, one `java.nio` stat per
+  *    entry; a table elsewhere, one whose directory holds a kept
+  *    subdirectory, one with an option other than `path`, a SQL conf
+  *    setting outside `spark.` or a Hadoop path filter is listed by an
   *    `InMemoryFileIndex` instead.
   * A text lookup in a request session whose state was never built (see
   * `graft.Sessions.request`) keeps it unbuilt: such a session is clean
@@ -295,8 +296,8 @@ object ResultCache {
     private var bornFunctions: Option[Boolean] = None
 
     /** The files `source` lists, as a relation over it would read them
-      * in a session whose SQL conf is `conf`: [[FileListing]] through the
-      * root's shared Hadoop configuration, or, where that gives no answer,
+      * in a session whose SQL conf is `conf`: [[FileListing]]'s `java.nio`
+      * listing of a plain local directory, or, where that gives no answer,
       * Spark's own `InMemoryFileIndex` with the relation's options and
       * schema. */
     private[ResultCache] def files(spark: SparkSession, source: Source, conf: Map[String, String]): Files =

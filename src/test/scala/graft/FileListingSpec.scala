@@ -17,9 +17,10 @@ import scala.util.Try
   * instead of an `InMemoryFileIndex`. Over random directories holding
   * `_SUCCESS`, checksum, `_temporary`, hidden, `._COPYING_`, metadata,
   * partition-named, escaped and nested entries, its listing is the index's
-  * `allFiles()` as (path, length, modification time); a directory with no
-  * kept file below a subdirectory is listed without the index, and any
-  * option other than `path` takes the index. */
+  * `allFiles()` as (path, length, modification time); a directory of
+  * plain-named files and no kept subdirectory is listed through
+  * `java.nio` without the index, and anything else, or any option other
+  * than `path`, takes the index. */
 class FileListingSpec extends AnyFunSuite {
 
   private lazy val spark: SparkSession = SparkSession.builder()
@@ -64,14 +65,17 @@ class FileListingSpec extends AnyFunSuite {
 
   private val dropped = Set("_SUCCESS", ".hidden", "f._COPYING_", "_temporary", ".staging")
 
-  /** Whether a kept file lies below a kept subdirectory of the root. */
-  private def nested(es: Seq[Entry]): Boolean = {
-    def holdsFile(d: Dir): Boolean = d.entries.exists {
-      case f: File => !dropped(f.name)
-      case sub: Dir => !dropped(sub.name) && holdsFile(sub)
-    }
-    es.exists { case d: Dir => !dropped(d.name) && holdsFile(d); case _ => false }
-  }
+  private val plain = "[A-Za-z0-9._=+-]+".r
+
+  /** Whether the `java.nio` listing answers for `root` holding `t`: a
+    * root spelled without a trailing slash that is missing or holds, of
+    * what the index keeps, only plain-named files. */
+  private def listsLocally(root: Path, t: Option[Seq[Entry]]): Boolean =
+    !root.toString.endsWith("/") && t.forall(_.forall {
+      case e if dropped(e.name) => true
+      case f: File => plain.matches(f.name)
+      case _: Dir => false
+    })
 
   private def write(root: java.nio.file.Path, es: Seq[Entry]): Unit = {
     val fs = FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
@@ -93,7 +97,6 @@ class FileListingSpec extends AnyFunSuite {
     val sqlConf = Sessions.textParts(Sessions.request(spark)).conf
     val hadoop = SessionHooks.hadoopConf(spark)
     var n = 0
-    var direct = 0
     var viaLocal = 0
     val params = Test.Parameters.default.withMinSuccessfulTests(100).withInitialSeed(Seed(20261019L))
     val result = Test.check(params, Prop.forAllNoShrink(tree) { t =>
@@ -108,15 +111,13 @@ class FileListingSpec extends AnyFunSuite {
         val listed = Try(FileListing.files(spark, Seq(root), options, schema, sqlConf))
         assert(listed.toOption == index.toOption && listed.isSuccess == index.isSuccess,
           s"$root $t\n$listed\n$index")
+        // without the index exactly where the java.nio listing answers
         val fast = FileListing.direct(hadoop, Seq(root), options, sqlConf)
         fast.foreach(f => assert(index.toOption.contains(f), s"$root $t\n$f\n$index"))
-        assert(fast.isDefined == !t.exists(nested), s"fast path for $root $t: $fast")
-        if (fast.exists(_.nonEmpty)) direct += 1
-        // the local file system's own listing, where it answers
         val fs = root.getFileSystem(hadoop)
-        val local = FileListing.local(fs, fs.makeQualified(root))
-        local.flatten.foreach(f => assert(index.toOption.contains(f.sortBy(_._1)), s"$root $t\n$f\n$index"))
-        if (local.flatten.exists(_.nonEmpty)) viaLocal += 1
+        assert(fast == FileListing.local(fs, fs.makeQualified(root)).map(_.sortBy(_._1)), s"$root $t: $fast")
+        assert(fast.isDefined == listsLocally(root, t), s"fast path for $root $t: $fast")
+        if (fast.exists(_.nonEmpty)) viaLocal += 1
         // no checksum or other hidden file
         assert(listed.toOption.forall(_.forall(f => !new Path(f._1).getName.startsWith("."))), s"$t\n$listed")
         // any option but path takes the index
@@ -128,8 +129,7 @@ class FileListingSpec extends AnyFunSuite {
     })
     org.apache.hadoop.fs.FileUtil.fullyDelete(base.toFile)
     assert(result.passed, result.status)
-    assert(direct > 20, s"only $direct of $n directories listed files without the index")
-    assert(viaLocal > 10, s"only $viaLocal of $n directories listed files through java.nio")
+    assert(viaLocal > 10, s"only $viaLocal of $n directories listed files without the index")
   }
 
   test("a SQL conf setting outside spark. or a Hadoop path filter takes the index") {
