@@ -1380,6 +1380,12 @@ final class HttpApi(
     sb ++= "# HELP graft_request_session_states_total Sessions of renders, downloads, tasks and /api/sql requests whose session state was built.\n"
     sb ++= "# TYPE graft_request_session_states_total counter\n"
     sb ++= s"graft_request_session_states_total ${graft.Sessions.requestStatesBuilt}\n"
+    // statement texts whose dialect passes ran (sqlfront.Dialect's
+    // template memo misses): flat under repeated renders of the same
+    // dashboards
+    sb ++= "# HELP graft_dialect_rewrites_total Statement texts whose dialect rewrite passes ran.\n"
+    sb ++= "# TYPE graft_dialect_rewrites_total counter\n"
+    sb ++= s"graft_dialect_rewrites_total ${graft.sqlfront.Dialect.templates.rewrites.get}\n"
     // statement results reused by renders and download replays while
     // their plan and input files are unchanged (interp.ResultCache)
     val cache = graft.interp.ResultCache.shared

@@ -142,7 +142,8 @@ object Dashboard {
 
     for ((sqlString, queryIndex) <- sqls.zipWithIndex) {
       if (sqlString.nonEmpty) {
-        // unset-variable detection before substitution
+        // unset-variable detection before substitution (from the
+        // statement text's memoized entry)
         Dialect.referencedVariables(sqlString).foreach { name =>
           if (!definedVars.contains(name) && !unsetVarsSeen.contains(name)) {
             unsetVarsSeen += name
@@ -154,12 +155,12 @@ object Dashboard {
         if (!Gate.isAllowedStatement(sqlString))
           throw new IllegalArgumentException(s"Disallowed SQL statement in query ${queryIndex + 1}")
 
+        val sideEffect = Gate.isSideEffect(sqlString)
         if (nextIsDownload) {
           nextIsDownload = false
-        } else if (hideNextContentSection && !Gate.isSideEffect(sqlString) &&
-            !canStartSection(sqlString)) {
+        } else if (hideNextContentSection && !sideEffect && !canStartSection(sqlString)) {
           // skipped: inside a hidden section
-        } else if (Gate.isSideEffect(sqlString)) {
+        } else if (sideEffect) {
           // USE / BEGIN / COMMIT / ROLLBACK / ABORT / CALL / ATTACH are not
           // the side-effect step's: transactions are a no-op on Spark
           // (documented divergence)

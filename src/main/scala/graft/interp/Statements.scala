@@ -30,7 +30,9 @@ import scala.collection.mutable
   *    `CREATE TEMP TABLE/VIEW … AS`, applied to the request's state;
   *  - [[Request.compile]]: macro expansion, the `duckdb_*` catalog views,
   *    then `SUMMARIZE`, `PIVOT` or the dialect rewrite with the request's
-  *    variables substituted as literals;
+  *    variables substituted as literals (the rewrite's passes run once
+  *    per statement text; a request binds its variables into the
+  *    memoized template, `Dialect.Templates`);
   *  - [[Request.query]]: compile and collect in one step. A statement's
   *    rewritten text is looked up in [[ResultCache]] before Spark parses
   *    it; `SUMMARIZE`, `PIVOT`, a read of the `duckdb_*` views, or a text

@@ -23,18 +23,63 @@ object Dashboards {
       |       count()::BARCHART_STACKED
       |FROM events GROUP BY ALL ORDER BY ALL;""".stripMargin
 
+  private val downloadContent =
+    """SELECT 'click'::DROPDOWN AS evtype UNION ALL SELECT 'view'::DROPDOWN;
+      |SELECT 'evts.csv'::DOWNLOAD_CSV AS dl;
+      |SELECT getvariable('evtype') AS evtype, CAST(count(*) AS BIGINT) AS n
+      |FROM events WHERE event_type = getvariable('evtype') GROUP BY 1;""".stripMargin
+
+  private val pngContent =
+    """SELECT 'Overview'::SECTION;
+      |SELECT 'Sessions per Week'::LABEL;
+      |SELECT date_trunc('week', ts)::XAXIS, event_type::CATEGORY,
+      |       count()::BARCHART_STACKED
+      |FROM events GROUP BY ALL ORDER BY ALL;
+      |SELECT 'Monthly order volume'::LABEL;
+      |SELECT date_trunc('month', o_orderdate)::XAXIS,
+      |       round(sum(o_totalprice))::LINECHART
+      |FROM orders GROUP BY ALL ORDER BY ALL;
+      |SELECT count(*) AS customers FROM customer;
+      |SELECT n_name, n_regionkey FROM nation ORDER BY n_name LIMIT 10;""".stripMargin
+
+  private val secureContent =
+    """SELECT 'purchase'::DROPDOWN AS evtype UNION ALL SELECT 'click'::DROPDOWN;
+      |SELECT getvariable('evtype') AS effective, count(*) AS n
+      |FROM events WHERE event_type = getvariable('evtype') GROUP BY 1;""".stripMargin
+
+  private val widgetsContent =
+    """SELECT 'Widget Demo'::SECTION;
+      |SELECT 'click'::DROPDOWN AS evtype UNION ALL SELECT 'view'::DROPDOWN;
+      |SELECT count(*)::GAUGE AS n FROM events WHERE event_type = getvariable('evtype');
+      |SELECT 'Top users'::LABEL;
+      |SELECT user_id, count(*) AS n FROM events
+      |WHERE event_type = getvariable('evtype')
+      |GROUP BY user_id ORDER BY n DESC, user_id LIMIT 5;""".stripMargin
+
+  private val goldenContent =
+    """SELECT '2026-08-04 10:00:00+00'::TIMESTAMPTZ::XLINE;
+      |SELECT
+      |  '2026-08-04 12:00:00+00'::TIMESTAMPTZ::XAXIS AS ts_xaxis,
+      |  10.0::LINECHART AS val;
+      |SELECT '2026-08-04 10:00:00+00'::TIMESTAMPTZ::YLINE;
+      |SELECT
+      |  5.0::BARCHART AS bval,
+      |  '2026-08-04 12:00:00+00'::TIMESTAMPTZ::YAXIS AS ts_yaxis;
+      |SELECT '2026-08-04 12:00:00+00'::TIMESTAMPTZ AS standalone_tz;
+      |SELECT '2026-08-04 12:00:00+00'::TIMESTAMPTZ::DATEPICKER AS dp;
+      |SELECT '2026-08-04 12:00:00+00'::TIMESTAMPTZ::RELOAD;""".stripMargin
+
+  /** Every dashboard the entries below render. */
+  private[graft] val contents: Seq[String] =
+    Seq(demoContent, downloadContent, pngContent, secureContent, widgetsContent, goldenContent)
+
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     "dl01_download_flow" -> ((s, d) => {
       // full download path: dropdown default replayed into the variable,
       // CSV streamed, parsed back for the oracle
-      val content =
-        """SELECT 'click'::DROPDOWN AS evtype UNION ALL SELECT 'view'::DROPDOWN;
-          |SELECT 'evts.csv'::DOWNLOAD_CSV AS dl;
-          |SELECT getvariable('evtype') AS evtype, CAST(count(*) AS BIGINT) AS n
-          |FROM events WHERE event_type = getvariable('evtype') GROUP BY 1;""".stripMargin
       val w = new java.io.StringWriter
-      graft.interp.Download.run(s, content, "csv", w,
+      graft.interp.Download.run(s, downloadContent, "csv", w,
         prepare = ss => Tables.registerAll(ss, d))
         .left.foreach(err => throw new IllegalStateException(err))
       import s.implicits._
@@ -123,19 +168,7 @@ object Dashboards {
       // page dimensions plus exact-palette pixel counts, which depend on
       // chart geometry but never on font rasterization, so the oracle
       // can pin them as golden constants
-      val content =
-        """SELECT 'Overview'::SECTION;
-          |SELECT 'Sessions per Week'::LABEL;
-          |SELECT date_trunc('week', ts)::XAXIS, event_type::CATEGORY,
-          |       count()::BARCHART_STACKED
-          |FROM events GROUP BY ALL ORDER BY ALL;
-          |SELECT 'Monthly order volume'::LABEL;
-          |SELECT date_trunc('month', o_orderdate)::XAXIS,
-          |       round(sum(o_totalprice))::LINECHART
-          |FROM orders GROUP BY ALL ORDER BY ALL;
-          |SELECT count(*) AS customers FROM customer;
-          |SELECT n_name, n_regionkey FROM nation ORDER BY n_name LIMIT 10;""".stripMargin
-      val r = Dashboard.run(s, content,
+      val r = Dashboard.run(s, pngContent,
         RunConfig(dashboardId = "png", prepare = ss => Tables.registerAll(ss, d)))
       val png = graft.render.Png.render(r)
       val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(png))
@@ -164,11 +197,7 @@ object Dashboards {
       val token = graft.auth.Auth.sign(claims, "demo-secret")
       val verified = graft.auth.Auth.verify(token, "demo-secret")
         .getOrElse(throw new IllegalStateException("token verification failed"))
-      val content =
-        """SELECT 'purchase'::DROPDOWN AS evtype UNION ALL SELECT 'click'::DROPDOWN;
-          |SELECT getvariable('evtype') AS effective, count(*) AS n
-          |FROM events WHERE event_type = getvariable('evtype') GROUP BY 1;""".stripMargin
-      val r = Dashboard.run(s, content, RunConfig(
+      val r = Dashboard.run(s, secureContent, RunConfig(
         dashboardId = "secure-demo",
         queryParams = Map("evtype" -> Seq("click")), // attack attempt
         variables = verified.variables,
@@ -187,15 +216,7 @@ object Dashboards {
 
     "sh03_dashboard_widgets" -> ((s, d) => {
       // widgets + variables + sections + gauge in one dashboard
-      val content =
-        """SELECT 'Widget Demo'::SECTION;
-          |SELECT 'click'::DROPDOWN AS evtype UNION ALL SELECT 'view'::DROPDOWN;
-          |SELECT count(*)::GAUGE AS n FROM events WHERE event_type = getvariable('evtype');
-          |SELECT 'Top users'::LABEL;
-          |SELECT user_id, count(*) AS n FROM events
-          |WHERE event_type = getvariable('evtype')
-          |GROUP BY user_id ORDER BY n DESC, user_id LIMIT 5;""".stripMargin
-      val r = Dashboard.run(s, content,
+      val r = Dashboard.run(s, widgetsContent,
         RunConfig(dashboardId = "widgets", prepare = ss => Tables.registerAll(ss, d)))
       // golden widget contract asserted in-entry: the SECTION retitles
       // the content section, the dropdown lands in a header section,
@@ -351,19 +372,7 @@ object Dashboards {
       // round: XLINE markline = 2026-08-04 10:00 UTC as epoch ms on the
       // following linechart, YLINE flagged as y-axis on the vertical
       // barchart, RELOAD = 2026-08-04 12:00 UTC epoch ms.
-      val content =
-        """SELECT '2026-08-04 10:00:00+00'::TIMESTAMPTZ::XLINE;
-          |SELECT
-          |  '2026-08-04 12:00:00+00'::TIMESTAMPTZ::XAXIS AS ts_xaxis,
-          |  10.0::LINECHART AS val;
-          |SELECT '2026-08-04 10:00:00+00'::TIMESTAMPTZ::YLINE;
-          |SELECT
-          |  5.0::BARCHART AS bval,
-          |  '2026-08-04 12:00:00+00'::TIMESTAMPTZ::YAXIS AS ts_yaxis;
-          |SELECT '2026-08-04 12:00:00+00'::TIMESTAMPTZ AS standalone_tz;
-          |SELECT '2026-08-04 12:00:00+00'::TIMESTAMPTZ::DATEPICKER AS dp;
-          |SELECT '2026-08-04 12:00:00+00'::TIMESTAMPTZ::RELOAD;""".stripMargin
-      val r = Dashboard.run(s, content,
+      val r = Dashboard.run(s, goldenContent,
         RunConfig(dashboardId = "golden", prepare = ss => Tables.registerAll(ss, d)))
       val qs = r.sections.flatMap(_.queries)
       val line = qs.find(_.render.renderType == "linechart")

@@ -8,15 +8,46 @@ import scala.util.matching.Regex
   * `spark.sql`. Token-level (quote-aware), mirroring the reference's own
   * string-matching level of rigor (SURVEY.md §7).
   *
-  * Rewrites:
-  *  - `expr::NAME` for the 48 shaper types → `NAME(expr)` (the functions
-  *    are injected by graft.GraftExtensions); cast chains like
-  *    `'x'::TIMESTAMP::XAXIS` resolve outside-in.
-  *  - `::TIMESTAMPTZ` → `::TIMESTAMP` (Spark TIMESTAMP is tz-aware).
-  *  - zero-arg `count()` → `count(*)` (README.md:16 uses it).
-  *  - FROM-first statements (`FROM t ...`) → `SELECT * FROM t ...`.
-  *  - `getvariable('x')` → stored literal (shaper prefixes SET VARIABLE
-  *    statements instead — same observable semantics, ref app.go:574-595).
+  * [[rewrite]] runs 23 structural passes, in this order, then binds the
+  * statement's variables:
+  *  1. `[expr FOR x IN list IF cond]` list comprehensions →
+  *     `transform(filter(...))`;
+  *  2. `[a, b]` list literals → `array(a, b)`;
+  *  3. `{k: v}` struct and `MAP {k: v}` literals → `named_struct` / `map`;
+  *  4. `expr::NAME` for the 48 shaper types → `NAME(expr)` (the functions
+  *     are injected by graft.GraftExtensions); cast chains like
+  *     `'x'::TIMESTAMP::XAXIS` resolve outside-in;
+  *  5. `TIMESTAMPTZ` → `TIMESTAMP` (Spark TIMESTAMP is tz-aware);
+  *  6. zero-arg `count()` → `count(*)` (README.md:16 uses it);
+  *  7. `duckdb_tables()` and the other zero-arg catalog table functions →
+  *     their session views;
+  *  8. `BOXPLOT(x, outlier_info := y)` → `boxplot_info(x, y)`;
+  *  9. `BOXPLOT(x)` → a struct of built-in aggregates;
+  *  10. `list_unique(l)` → `size(array_distinct(array_compact(l)))`;
+  *  11. `list_slice(l, a, b)` → a `slice` expression;
+  *  12. 1:1 function renames (`list_max` → `array_max`, ...);
+  *  13. `strftime(ts, '%Y')` → `date_format(ts, 'yyyy')`;
+  *  14. trailing commas before `FROM` or `)` dropped;
+  *  15. a bare `(VALUES ...)` subquery named `__v(col0, ...)`;
+  *  16. interval shorthand (`INTERVAL '1h'`) → long units;
+  *  17. `FETCH FIRST n ROWS ONLY` → `LIMIT n`;
+  *  18. `USING SAMPLE` → `TABLESAMPLE`;
+  *  19. FROM-first statements (`FROM t ...`) → `SELECT * FROM t ...`;
+  *  20. `* EXCLUDE (cols)` → `* EXCEPT (cols)`;
+  *  21. `* REPLACE (expr AS col)` → `* EXCEPT (col), expr AS col`;
+  *  22. `SELECT DISTINCT ON (keys)` → a `row_number` filter;
+  *  23. `QUALIFY pred` → a wrapped window-filter subquery.
+  *
+  * The passes read only the text, so their output is computed once per
+  * statement text: a [[Template]] holds it, cut at each
+  * `getvariable('x')` call into fixed pieces and variable slots, in a
+  * process-wide [[Templates]] memo keyed on the exact text. A rewrite is
+  * the template's [[Template.bind]]: the pieces, and for each slot the
+  * variable's stored literal in parentheses, `(NULL)` when unset (shaper
+  * prefixes SET VARIABLE statements instead — same observable semantics,
+  * ref app.go:574-595). A bound literal never passes through a rewrite.
+  * The memo entry also records the variables the key text names, for
+  * the unset-variable scan ([[referencedVariables]]).
   */
 object Dialect {
 
@@ -504,27 +535,108 @@ object Dialect {
     spans.result()
   }
 
-  /** Variable names referenced via getvariable(...) in statement text.
-    * (ref: get_dashboard.go:26-28,88-98) */
-  def referencedVariables(sql: String): Seq[String] =
-    getVariableSpans(tokenize(sql)).map(_._3)
+  /** Variable names referenced via getvariable(...) in statement text,
+    * from the text's [[Templates]] entry. (ref: get_dashboard.go:26-28,88-98) */
+  def referencedVariables(sql: String): Seq[String] = templates(sql).names
 
   /** Substitute getvariable('x') with the rendered SQL literal from the
-    * variable store (NULL when unset — DuckDB's behavior for unset vars). */
-  def substituteVariables(sql: String, vars: String => Option[String]): String = {
-    val toks = tokenize(sql)
-    val spans = getVariableSpans(toks)
-    if (spans.isEmpty) return sql
-    val sb = new StringBuilder
-    var pos = 0
-    spans.foreach { case (s, e, name) =>
-      toks.slice(pos, s).foreach(t => sb.append(t.text))
-      sb.append("(").append(vars(name).getOrElse("NULL")).append(")")
-      pos = e
-    }
-    toks.drop(pos).foreach(t => sb.append(t.text))
-    sb.toString
+    * variable store (NULL when unset — DuckDB's behavior for unset vars),
+    * with no structural pass. */
+  def substituteVariables(sql: String, vars: String => Option[String]): String =
+    Template(sql).bind(vars)
+
+  /** A statement text cut at its `getvariable('x')` calls: `pieces` are
+    * the text around the calls, `slots` the variable each call reads
+    * (one fewer than the pieces). Immutable. */
+  final class Template private (pieces: Array[String], slots: Array[String]) {
+
+    /** Characters held by the pieces. */
+    val chars: Int = pieces.iterator.map(_.length).sum
+
+    /** The text with each call replaced by `(literal)`, or `(NULL)` when
+      * `vars` holds no value. */
+    def bind(vars: String => Option[String]): String =
+      if (slots.isEmpty) pieces(0)
+      else {
+        val sb = new java.lang.StringBuilder(chars + 16 * slots.length)
+        sb.append(pieces(0))
+        var i = 0
+        while (i < slots.length) {
+          sb.append('(').append(vars(slots(i)).getOrElse("NULL")).append(')').append(pieces(i + 1))
+          i += 1
+        }
+        sb.toString
+      }
   }
+
+  object Template {
+    /** `text` cut at its `getvariable('x')` calls. */
+    def apply(text: String): Template = {
+      val toks = tokenize(text)
+      val spans = getVariableSpans(toks)
+      val offset = toks.iterator.scanLeft(0)(_ + _.text.length).toArray
+      val pieces = new Array[String](spans.length + 1)
+      var pos = 0
+      for (((start, end, _), i) <- spans.zipWithIndex) {
+        pieces(i) = text.substring(pos, offset(start))
+        pos = offset(end)
+      }
+      pieces(spans.length) = text.substring(pos)
+      new Template(pieces, spans.map(_._3).toArray)
+    }
+  }
+
+  /** A statement text's [[Template]] after the structural passes, and
+    * the variables the text itself names (the passes may copy a call, as
+    * `DISTINCT ON` copies its ORDER BY). `chars` counts the key text and
+    * the pieces. */
+  private[graft] final class Entry private[Dialect] (val names: Seq[String], val template: Template,
+      private[Dialect] val chars: Long)
+
+  /** The memo of [[Entry]]s by exact statement text, least recently
+    * used first out past `maxChars` characters; `passes` makes a text's
+    * template text on a miss. A text whose passes throw leaves no entry:
+    * the next call runs them again and throws the same. */
+  private[graft] final class Templates private[graft] (maxChars: Long, passes: String => String) {
+    private val entries = new java.util.LinkedHashMap[String, Entry](16, 0.75f, true)
+    private var usedChars = 0L
+
+    /** Statement texts whose structural passes ran: one per miss. */
+    val rewrites = new java.util.concurrent.atomic.AtomicLong
+
+    def apply(sql: String): Entry = {
+      val held = synchronized(entries.get(sql))
+      if (held != null) held
+      else {
+        rewrites.incrementAndGet()
+        val template = Template(passes(sql))
+        val e = new Entry(getVariableSpans(tokenize(sql)).map(_._3), template,
+          sql.length.toLong + template.chars)
+        if (e.chars <= maxChars) synchronized {
+          Option(entries.put(sql, e)).foreach(old => usedChars -= old.chars)
+          usedChars += e.chars
+          val lru = entries.values.iterator
+          while (usedChars > maxChars) {
+            usedChars -= lru.next().chars
+            lru.remove()
+          }
+        }
+        e
+      }
+    }
+
+    /** Characters held by keys and pieces. */
+    def chars: Long = synchronized(usedChars)
+
+    /** Statement texts with an entry. */
+    def size: Int = synchronized(entries.size)
+  }
+
+  /** Budget of the process-wide memo: about 8 MB of string data. */
+  private val TemplateChars: Long = 4L << 20
+
+  /** The memo every rewrite shares. */
+  private[graft] val templates = new Templates(TemplateChars, passes)
 
   /** Apply a text rewrite only to the stretches of a statement outside
     * single/double-quoted literals (for regex rewrites whose pattern never
@@ -1302,8 +1414,8 @@ object Dialect {
       s"SELECT * EXCEPT (__qualify) FROM ($selectList, ($pred) AS __qualify $fromToQualify) __q WHERE __qualify $tail").trim
   }
 
-  /** Full rewrite pipeline for one statement. */
-  def rewrite(sql: String, vars: String => Option[String] = _ => None): String = {
+  /** The structural passes, in order (see the object's doc). */
+  private[graft] def passes(sql: String): String = {
     var s = sql
     s = rewriteListComprehension(s)
     s = rewriteArrayLiterals(s)
@@ -1328,7 +1440,10 @@ object Dialect {
     s = rewriteStarReplace(s)
     s = rewriteDistinctOn(s)
     s = rewriteQualify(s)
-    s = substituteVariables(s, vars)
     s
   }
+
+  /** Full rewrite of one statement: its memoized template bound to `vars`. */
+  def rewrite(sql: String, vars: String => Option[String] = _ => None): String =
+    templates(sql).template.bind(vars)
 }

@@ -851,7 +851,8 @@ class HttpApiSpec extends AnyFunSuite {
     Seq("graft_result_cache_hits_total counter", "graft_result_cache_text_hits_total counter",
       "graft_result_cache_misses_total counter",
       "graft_result_cache_incremental_total counter", "graft_result_cache_bytes gauge",
-      "graft_result_cache_entries gauge", "graft_request_session_states_total counter").foreach(t => assert(body.contains(s"# TYPE $t"), body))
+      "graft_result_cache_entries gauge", "graft_request_session_states_total counter",
+      "graft_dialect_rewrites_total counter").foreach(t => assert(body.contains(s"# TYPE $t"), body))
     // two aggregate statements over the ingest table, each answered from
     // its cached state plus the new file after an ingest
     liveDashboard("cachelive", "http_cache_live",
@@ -891,6 +892,7 @@ class HttpApiSpec extends AnyFunSuite {
     val plainPort = plain.start()
     def textHits() = metric(metricsKey, "graft_result_cache_text_hits_total")
     def statesBuilt() = metric(metricsKey, "graft_request_session_states_total")
+    def rewrites() = metric(metricsKey, "graft_dialect_rewrites_total")
     def renderPlain(): String = {
       val r = client.send(HttpRequest.newBuilder(
           URI.create(s"http://127.0.0.1:$plainPort/api/dashboards/cachelive"))
@@ -903,11 +905,13 @@ class HttpApiSpec extends AnyFunSuite {
       val (h4, i4, m4) = counters()
       val t4 = textHits()
       val s4 = statesBuilt()
+      val r4 = rewrites()
       assert(renderPlain() == first)
       val (h5, i5, m5) = counters()
       assert((h5 - h4, i5 - i4, m5 - m4) == (3, 0, 0), "unchanged render: (hits, incremental, misses)")
       assert(textHits() - t4 == 3, "unchanged render: text hits")
       assert(statesBuilt() - s4 == 0, "unchanged render: session states built")
+      assert(rewrites() - r4 == 0, "unchanged render: statement texts rewritten")
     } finally plain.stop()
   }
 

@@ -1,7 +1,12 @@
 package graft
 
+import graft.interp.{Dashboard, Statements}
 import graft.sqlfront.{Dialect, Gate, SqlText}
 import org.scalatest.funsuite.AnyFunSuite
+
+import java.util.concurrent.atomic.AtomicInteger
+import scala.util.Random
+import scala.util.matching.Regex
 
 /** Gate + text-utility tests transliterated from the reference suites
   * (server/core/sql_validation_test.go:12-150, server/util/util_test.go). */
@@ -415,5 +420,174 @@ class SqlFrontSpec extends AnyFunSuite {
     val nested = Dialect.rewriteBoxplotPlain(
       "SELECT BOXPLOT(coalesce(v, least(a, b))) AS bp FROM t GROUP BY 1")
     assert(nested.contains("percentile(CAST((coalesce(v, least(a, b))) AS DOUBLE), 0.25D)"), nested)
+  }
+
+  /** Every input the pass tests above rewrite. */
+  private val passInputs = Seq(
+    "SELECT count(*)::BARCHART FROM t",
+    "SELECT date_trunc('week', ts)::XAXIS AS w",
+    "SELECT 'x'::TIMESTAMP::XAXIS",
+    "SELECT category::CATEGORY, t.c::COLOR FROM t",
+    "SELECT x::INT",
+    "SELECT '::BARCHART'",
+    "SELECT count() FROM t",
+    "SELECT count(x) FROM t",
+    "FROM t SELECT 1",
+    "FROM lineitem",
+    "SELECT list_max(a), string_split(s, ' ')",
+    "SELECT list_max FROM t",
+    "SELECT list_transform(l, x -> x + 1), list_filter(l, x -> x > 0)",
+    "SELECT regexp_matches(s, 'a+')",
+    "SELECT to_timestamp(1704067200)",
+    "SELECT array_length(l)",
+    "SELECT list_prepend(1, l), list_concat(a, b)",
+    "SELECT 1 FETCH FIRST 5 ROWS ONLY",
+    "SELECT 1 FETCH NEXT 1 ROW ONLY",
+    "SELECT a, b, FROM t",
+    "SELECT x::XAXIS, y::BARCHART, FROM (SELECT 1, FROM t)",
+    "SELECT a, b FROM t",
+    "SELECT ', FROM x' AS s FROM t",
+    "SELECT col0 FROM (VALUES (1, 10), (2, 20))",
+    "SELECT a FROM (VALUES (1)) v(a)",
+    "SELECT a FROM (VALUES (1)) AS v(a)",
+    "SELECT a FROM (SELECT 1 AS a)",
+    "SELECT INTERVAL '1h'",
+    "SELECT ts + INTERVAL '25h' FROM t",
+    "SELECT INTERVAL '7days 1hour'",
+    "SELECT INTERVAL '1 banana'",
+    "SELECT '1h' AS s",
+    "SELECT [x * 2 FOR x IN l]",
+    "SELECT [x * 2 FOR x IN l IF x > 1]",
+    "SELECT [upper(w) FOR w IN string_split(s, ' ') IF length(w) > 2] FROM t",
+    "SELECT [1, 2, 3]",
+    "SELECT 'FOR x IN y' AS s",
+    "SELECT strftime(ts, '%Y-%m-%d') FROM t",
+    "SELECT strftime(ts, '%H:%M:%S') FROM t",
+    "SELECT strftime(ts, '%Yw%m')",
+    "SELECT strftime(ts, '%d%%')",
+    "SELECT strftime(ts, '%V') FROM t",
+    "SELECT strftime(date_trunc('day', ts), '%Y')",
+    "SELECT * EXCLUDE (a, b) FROM t",
+    "SELECT exclude FROM t",
+    "SELECT * REPLACE (id * 2 AS id) FROM t",
+    "SELECT * REPLACE (x + 1 AS x, lower(k) AS k) FROM t",
+    "SELECT replace(s, 'a', 'b') FROM t",
+    "SELECT * REPLACE (cast(a AS int) AS a) FROM t",
+    "SELECT t.* REPLACE (id * 2 AS id) FROM t",
+    "SELECT list_position(l, 2), list_indexof(l, 3)",
+    "SELECT list_unique(tags) AS n FROM t",
+    "SELECT list_unique(split(s, ','))",
+    "SELECT epoch_ms(ts) FROM t",
+    "SELECT epoch_ms FROM t",
+    "SELECT * FROM t USING SAMPLE 100",
+    "SELECT * FROM t USING SAMPLE 10 ROWS",
+    "SELECT * FROM t USING SAMPLE 5%",
+    "SELECT * FROM t USING SAMPLE 5 PERCENT (bernoulli, 42)",
+    "SELECT * FROM a JOIN b USING (k)",
+    "SELECT {'a': 1, 'b': 'x'} AS s",
+    "SELECT {name: 'n', value: 4 + 2}",
+    "SELECT MAP {'k': 1, 'j': n}",
+    "SELECT {'o': {'i': 1}}",
+    "SELECT {a: {b: 1}, c: 2}",
+    "SELECT {a: MAP {'k': 1}, c: {d: 2}}",
+    "SELECT { 'q3': quantile(v, 0.75), }",
+    "SELECT '{not: a struct}' AS s",
+    "SELECT '{\"json\": 1}'::VARCHAR",
+    "SELECT DISTINCT ON (k) id, k FROM t ORDER BY k, id",
+    "SELECT DISTINCT ON (k) id FROM t",
+    "SELECT DISTINCT k FROM t",
+    "SELECT a FROM t",
+    "SELECT 'QUALIFY x' AS s FROM t",
+    "SELECT a FROM t1 UNION ALL SELECT a FROM t2 QUALIFY row_number() OVER (ORDER BY a) = 1",
+    "SELECT getvariable('a'), GETVARIABLE( 'b' )",
+    "SELECT getvariable('a')",
+    "SELECT getvariable('x')",
+    "SELECT 'call getvariable(''x'') here' AS doc, getvariable('x')",
+    "SELECT 'getvariable(''a'')'",
+    "SELECT getvariable('a''b')",
+    "SELECT g, BOXPLOT(v) AS bp FROM t GROUP BY g",
+    "SELECT 'BOXPLOT(v)' AS s FROM t",
+    "SELECT boxplot FROM t",
+    "SELECT BOXPLOT(v, outlier_info := x) FROM t",
+    "SELECT BOXPLOT(coalesce(v, least(a, b))) AS bp FROM t GROUP BY 1",
+    "SELECT 'use FETCH FIRST 5 ROWS ONLY here' AS doc FETCH FIRST 2 ROWS ONLY",
+    "SELECT x * replace(cast(a AS int), cast(b AS int)) FROM t",
+    "SELECT * FROM (VALUES (1, 'a'), (2, 'b')) PIVOT (count(*) FOR col1 IN ('a'))",
+    "SELECT col0 FROM (VALUES (1)) TABLESAMPLE (1 ROWS)",
+    "SELECT a, b FROM t QUALIFY row_number() OVER (PARTITION BY a ORDER BY b) = 1 ORDER BY a LIMIT 5"
+  )
+
+  /** Statements whose `getvariable` calls sit where a pass moves, copies
+    * or wraps them. */
+  private val variableInputs = Seq(
+    "SELECT getvariable('a')::XAXIS, count()::BARCHART FROM t WHERE k = getvariable('b')",
+    "SELECT DISTINCT ON (k) id FROM t WHERE v > getvariable('a') ORDER BY k, getvariable('b')",
+    "SELECT [x || getvariable('a') FOR x IN l IF x <> getvariable('b')] FROM t",
+    "SELECT {k: getvariable('a'), 'm': [getvariable('b'), 2]} AS s",
+    "FROM t WHERE kind IN (SELECT unnest(getvariable('multi'))) QUALIFY row_number() OVER (ORDER BY getvariable('a')) = 1",
+    "SELECT strftime(ts, '%Y') AS y, 'getvariable(''a'')' AS doc FROM t WHERE ts > getvariable('a') FETCH FIRST 5 ROWS ONLY",
+    "SELECT getvariable('a''b'), GETVARIABLE( 'never_set' ), getvariable('y')")
+
+  test("template memo: a warm rewrite equals a fresh memo's, values bound only as literals") {
+    val statements = (passInputs ++ variableInputs ++
+      graft.queries.Dashboards.contents.flatMap(c => Statements.split(c).toOption.get))
+      .filter(_.nonEmpty).distinct
+    val names = (statements.flatMap(Dialect.referencedVariables) :+ "y").distinct
+    val values: Seq[Any] = Seq("click", "it's", "getvariable('y')", "x::XAXIS", "count()", "''",
+      Seq("a", "b'c", "getvariable('y')"), Seq("x::XAXIS", "count()"))
+    val slot = "\u0000([^\u0000]*)\u0000".r
+    val rnd = new Random(12)
+    val misses = Dialect.templates.rewrites.get
+    for (sql <- statements; _ <- 1 to 4) {
+      // some names stay unset
+      val vars = Dashboard.tokenVars(names.filter(_ => rnd.nextBoolean())
+        .map(_ -> values(rnd.nextInt(values.length))).toMap).render _
+      val warm = Dialect.rewrite(sql, vars)
+      assert(warm == new Dialect.Templates(1 << 20, Dialect.passes)(sql).template.bind(vars), sql)
+      // the same text with a marker in each slot: a value appears where
+      // its call was, as its literal, and changes nothing else
+      val marked = Dialect.rewrite(sql, n => Some("\u0000" + n + "\u0000"))
+      assert(slot.replaceAllIn(marked, m => Regex.quoteReplacement(vars(m.group(1)).getOrElse("NULL"))) == warm, sql)
+    }
+    // referencedVariables above made every entry: the rewrites all hit
+    assert(Dialect.templates.rewrites.get == misses)
+  }
+
+  test("template memo: distinct statements past the budget keep it within it") {
+    val memo = new Dialect.Templates(2000, Dialect.passes)
+    val statements = (1 to 200).map(i => s"SELECT count() AS n$i FROM t WHERE k = getvariable('k$i')")
+    statements.foreach { sql =>
+      memo(sql)
+      assert(memo.chars <= 2000)
+    }
+    assert(memo.size > 0 && memo.size < statements.length)
+    // least recently used first out: the last text is held, the first is not
+    val misses = memo.rewrites.get
+    memo(statements.last)
+    assert(memo.rewrites.get == misses)
+    memo(statements.head)
+    assert(memo.rewrites.get == misses + 1 && memo.chars <= 2000)
+    // a text over the whole budget is rewritten but not held
+    val huge = "SELECT " + "count() + " * 300 + "1"
+    assert(memo(huge).template.bind(_ => None) == Dialect.rewrite(huge))
+    memo(huge)
+    assert(memo.rewrites.get == misses + 3 && memo.chars <= 2000)
+  }
+
+  test("template memo: a text whose rewrite throws throws the same again and leaves no entry") {
+    val runs = new AtomicInteger
+    val memo = new Dialect.Templates(1 << 20, sql => {
+      runs.incrementAndGet()
+      if (sql.contains("boom")) throw new IllegalArgumentException(s"cannot rewrite: $sql")
+      Dialect.passes(sql)
+    })
+    val first = intercept[IllegalArgumentException](memo("SELECT boom FROM t"))
+    assert(memo.size == 0)
+    val second = intercept[IllegalArgumentException](memo("SELECT boom FROM t"))
+    assert(second.getMessage == first.getMessage)
+    assert(runs.get == 2 && memo.size == 0 && memo.chars == 0)
+    memo("SELECT count() FROM t")
+    memo("SELECT count() FROM t")
+    assert(runs.get == 3 && memo.size == 1)
   }
 }

@@ -19,7 +19,10 @@ first bucket, in the order below, that has a frame anywhere on its stack:
     listing       listing a table's files outside analysis (the text check's
                   FileListing, or its InMemoryFileIndex fallback)
     cache         the result cache's own work (keys, sizes, lookups)
-    rewrite       the dialect and macro rewrite
+    gate          the statement gate and the text utilities (comment strip,
+                  statement split, escaping)
+    rewrite       the dialect rewrite (its template memo and bind) and
+                  macro expansion
     json          rendering the response
     other         anything else
 
@@ -79,6 +82,10 @@ BUCKETS = [
     ("cache", (
         "graft.interp.ResultCache",
         "graft.interp.IncrementalAggregate",
+    )),
+    ("gate", (
+        "graft.sqlfront.Gate",
+        "graft.sqlfront.SqlText",
     )),
     ("rewrite", (
         "graft.sqlfront.",
