@@ -142,8 +142,7 @@ object Dashboard {
 
     for ((sqlString, queryIndex) <- sqls.zipWithIndex) {
       if (sqlString.nonEmpty) {
-        // unset-variable detection before substitution (from the
-        // statement text's memoized entry)
+        // unset-variable detection before substitution
         Dialect.referencedVariables(sqlString).foreach { name =>
           if (!definedVars.contains(name) && !unsetVarsSeen.contains(name)) {
             unsetVarsSeen += name

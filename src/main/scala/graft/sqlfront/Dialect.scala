@@ -548,10 +548,10 @@ object Dialect {
   /** A statement text cut at its `getvariable('x')` calls: `pieces` are
     * the text around the calls, `slots` the variable each call reads
     * (one fewer than the pieces). Immutable. */
-  final class Template private (pieces: Array[String], slots: Array[String]) {
+  private[graft] final class Template private (pieces: Array[String], slots: Array[String]) {
 
     /** Characters held by the pieces. */
-    val chars: Int = pieces.iterator.map(_.length).sum
+    private[Dialect] val chars: Int = pieces.iterator.map(_.length).sum
 
     /** The text with each call replaced by `(literal)`, or `(NULL)` when
       * `vars` holds no value. */
@@ -569,7 +569,7 @@ object Dialect {
       }
   }
 
-  object Template {
+  private[graft] object Template {
     /** `text` cut at its `getvariable('x')` calls. */
     def apply(text: String): Template = {
       val toks = tokenize(text)
